@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** The round a bench run belongs to (for the per-round archive name).
     * The driver's PROGRESS.jsonl stamps the LIVE round on every
@@ -40,6 +39,36 @@ object Bench {
     }
   }
 
+  /** Min-of-`n` wall seconds per query, query by query. A query that
+    * throws on any run is FAILED: it gets no time, only its name in the
+    * second result — a fast throw must never fold in as a fast query. */
+  def measure(names: Seq[String], n: Int)(run: String => Unit): (Map[String, Double], Seq[String]) = {
+    def once(name: String): Option[Double] = {
+      val t0 = System.nanoTime()
+      try { run(name); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); None }
+    }
+    val (ok, failed) = names
+      .map(name => name -> Iterator.fill(n)(once(name)).takeWhile(_.isDefined).flatten.toSeq)
+      .partition(_._2.size == n)
+    (ok.map { case (name, ts) => name -> ts.min }.toMap, failed.map(_._1))
+  }
+
+  /** The measured per-query map of one BENCH_FULL archive, if it ran at
+    * `sfDir`. Our own writer's shape: the measured map is the object after
+    * the FIRST "queries": (the warmup map comes later); archives written
+    * before the `failed` list existed read the same way. */
+  def parseArchive(json: String, sfDir: String): Option[Map[String, Double]] = {
+    val qRx = "\"([^\"]+)\":([0-9][0-9.Ee+-]*)".r
+    val sfRx = "\"sf\":\"([^\"]*)\"".r
+    val start = json.indexOf("\"queries\":{")
+    val sfOk = sfRx.findFirstMatchIn(json).exists(_.group(1) == sfDir)
+    if (start < 0 || !sfOk) None else {
+      val body = json.substring(start + "\"queries\":{".length, json.indexOf('}', start))
+      Some(qRx.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble).toMap)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
     val nonDefaultSf = sfDir != DefaultSfDir
@@ -67,80 +96,36 @@ object Bench {
         SparkEntry.queries.view.filterKeys(names).toMap
       case None => SparkEntry.queries
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder0 = SparkSession.builder()
-      // the 100-entry default evicts across 153 queries, so every measured
-      // run re-pays janino compilation — see Graft.CodegenCacheMaxEntries
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.core.Graft.CodegenCacheMaxEntries)
-    // local-mode shuffle scratch on the fastest local storage (tmpfs when
-    // available) — see Graft.localScratchDir for the measurement and the
-    // cluster-safety reasoning; SPARK_GRAFT_LOCAL_DIR / SPARK_LOCAL_DIRS
-    // override.
-    graft.core.Graft.localScratchDir.foreach(d => builder0.config("spark.local.dir", d))
-    // stream-copy shuffle concat when scratch is tmpfs — see
-    // Graft.localShuffleConf for the measurement and cluster-safety pairing
-    graft.core.Graft.localShuffleConf.foreach { case (k, v) => builder0.config(k, v) }
-    val spark = builder0
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Coalesce small shuffle outputs by SIZE, not parallelism: the
-      // default parallelismFirst=true keeps ~2x-cores tiny partitions
-      // after every shuffle, which at bench scale means per-task
-      // overhead dominates multi-stage compositions (Spark's own docs
-      // recommend false). At 100 TB partitions exceed the advisory size
-      // and this setting is a no-op.
-      // (SPARK_GRAFT_PARALLELISM_FIRST=true is the dev A/B knob for
-      // re-measuring this trade; the driver never sets it)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      // ObjectHashAggregate falls back to SORT-based aggregation at 128
-      // distinct keys per partition — for the dedup UDAF passes (millions
-      // of shingle keys, buffers bounded at cap+1 longs by construction)
-      // that means a full sort of the exploded rows. Raise the threshold
-      // so the bounded-buffer aggregation stays hash-based; worst-case
-      // memory = groups/partition x ~100B, well inside executor budgets.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.TopKRewrite.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
+    val spark = graft.core.Graft.session("graft-bench")
+    def run(name: String): Unit = {
       // noop sink: forces full evaluation of every output column (count()
       // would let Catalyst prune the projections being measured).
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-      // Each timed run is self-contained (the next run rebuilds its plan),
-      // so blocks pinned by this run's localCheckpoints/caches are dead
-      // weight; drop them eagerly instead of letting them squeeze the
-      // storage pool (and force shuffle spills) for the queries that follow.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      try queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      finally {
+        // Each timed run is self-contained (the next run rebuilds its plan),
+        // so blocks pinned by this run's localCheckpoints/caches are dead
+        // weight; drop them eagerly instead of letting them squeeze the
+        // storage pool (and force shuffle spills) for the queries that follow.
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      }
     }
     // Warmup pass: JIT + whole-stage-codegen compilation dominates first
     // executions (measured 6.7s -> 0.8s on a 0.75s query). Then two
     // measured passes, min per query — C2 compilation keeps running in the
     // background after warmup and single measurements catch multi-second
     // spikes that vanish on the next run.
-    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      run(name, fn)
-      (System.nanoTime() - t0) / 1e9
-    }
+    //
     // The warmup pass is ALSO the artifact build pass: run-scoped memos
     // (ANN codebooks, pair tower, band index, LM/DSIR models, HLL
     // registers) build on first invocation, so each query's warmup time
     // carries its family's one-time build cost while the measured min-of-N
     // is the recurring read path. Timing the warmup per query makes that
     // split visible in the artifact instead of only in NOTES.
-    val warmups = queries.map { case (name, fn) => name -> timed(name, fn) }
-    val results = queries.map { case (name, fn) =>
-      name -> (1 to minOf).map(_ => timed(name, fn)).min
-    }
+    val names = queries.keys.toSeq
+    val (warmed, warmFailed) = measure(names, 1)(run)
+    val (results, runFailed) = measure(names.filterNot(warmFailed.contains), minOf)(run)
+    val failed = warmFailed ++ runFailed
+    val warmups = warmed -- runFailed
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val warmupTotal = if (warmups.nonEmpty) warmups.values.sum else 0.0
     // Contention canary: the mins of trivial, code-stable queries whose
@@ -172,11 +157,12 @@ object Bench {
     // overflow that — a single printed line can never carry the whole map.
     def jmap(m: Map[String, Double]): String =
       m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def jlist(names: Seq[String]): String = names.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullPath = java.nio.file.Paths.get("BENCH_FULL.json").toAbsolutePath
     val fullJson =
       (s"""{"metric":"total","value":$total,"unit":"sec","canary":${jmap(canaryOf(results))},""" +
         s""""scale_canary":${jmap(scaleCanaryOf(results))},"nondefault_sf":$nonDefaultSf,""" +
-        s""""queries":${jmap(results)},""" +
+        s""""failed":${jlist(failed)},"queries":${jmap(results)},""" +
         s""""warmup_total":$warmupTotal,"warmup":${jmap(warmups)},"sf":"$sfDir"}""" + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
     java.nio.file.Files.write(fullPath, fullJson)
@@ -219,22 +205,10 @@ object Bench {
       // that ran at THIS run's scale factor — a round mixing sf dirs must
       // not produce a best-of map corresponding to no real configuration
       val archiveRx = s"${java.util.regex.Pattern.quote(base)}(_\\d+)?\\.json".r
-      val qRx = "\"([^\"]+)\":([0-9][0-9.Ee+-]*)".r
-      val sfRx = "\"sf\":\"([^\"]*)\"".r
       val runs = Option(dir.toFile.list()).getOrElse(Array.empty[String])
         .filter(n => archiveRx.pattern.matcher(n).matches).sorted
-        .flatMap { n =>
-          val s = new String(java.nio.file.Files.readAllBytes(dir.resolve(n)),
-            java.nio.charset.StandardCharsets.UTF_8)
-          // our own writer's shape: the measured map is the object after
-          // the FIRST "queries": (warmup map comes later)
-          val start = s.indexOf("\"queries\":{")
-          val sfOk = sfRx.findFirstMatchIn(s).exists(_.group(1) == sfDir)
-          if (start < 0 || !sfOk) None else {
-            val body = s.substring(start + "\"queries\":{".length, s.indexOf('}', start))
-            Some(qRx.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble).toMap)
-          }
-        }
+        .flatMap(n => parseArchive(new String(java.nio.file.Files.readAllBytes(dir.resolve(n)),
+          java.nio.charset.StandardCharsets.UTF_8), sfDir))
       if (runs.nonEmpty) {
         val names = runs.flatMap(_.keys).distinct.sorted
         val best = names.map(n => n -> runs.flatMap(_.get(n)).min).toMap
@@ -269,7 +243,7 @@ object Bench {
     val scalePart = scaleCanaryOf(results).values.headOption
       .map(v => s""""scale_canary":${d3(v)},""").getOrElse("")
     val sfFlag = if (nonDefaultSf) s""""nondefault_sf":true,""" else ""
-    val head = s"""{"metric":"total","value":${d3(total)},"unit":"sec","n_queries":${results.size},$bestPart$scalePart$sfFlag"warmup_total":${d3(warmupTotal)},"build_warmup_top":$buildHeavy,"full":"$fullPath","sf":"$sfDir","queries":{"""
+    val head = s"""{"metric":"total","value":${d3(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"failed":${jlist(failed.take(10))},$bestPart$scalePart$sfFlag"warmup_total":${d3(warmupTotal)},"build_warmup_top":$buildHeavy,"full":"$fullPath","sf":"$sfDir","queries":{"""
     val tailStr = "}}"
     val budget = 1800 - head.length - tailStr.length
     val entries = scala.collection.mutable.ListBuffer.empty[String]

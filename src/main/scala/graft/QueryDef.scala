@@ -17,9 +17,4 @@ object QueryDef {
   def apply(name: String, doc: String, oracle: String)(
       run: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, run, Some(oracle), doc)
-
-  /** Non-SQL-expressible op: driver records a weaker rows-only check. */
-  def rowsOnly(name: String, doc: String)(
-      run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, run, None, doc)
 }

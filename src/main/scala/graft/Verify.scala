@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,23 +11,7 @@ object Verify {
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
     }
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder0 = SparkSession.builder()
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.core.Graft.CodegenCacheMaxEntries)
-    graft.core.Graft.localScratchDir.foreach(d => builder0.config("spark.local.dir", d))
-    graft.core.Graft.localShuffleConf.foreach { case (k, v) => builder0.config(k, v) }
-    val spark = builder0
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.TopKRewrite.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Session factory + table registry for the graft engine.
   *
   * Scale posture: sessions default to AQE on (runtime shuffle coalescing +
-  * skew-join splitting), 32 shuffle partitions for local[32] testing — on a
+  * skew-join splitting) and one shuffle partition per local core — on a
   * real cluster this knob comes from the submitter, everything else in the
   * engine is partition-count agnostic.
   */
@@ -86,11 +86,15 @@ object Graft {
     * default heap while covering the whole query surface. */
   final val CodegenCacheMaxEntries = "4096"
 
-  /** Build a local session wired the way the engine expects.
+  /** Build a local session wired the way the engine expects — the ONE
+    * session builder: the CLI, Verify, Bench, the dev tools and the test
+    * suite all come through here, so they all run the same config.
     * (Reference keeps engine config in `etl/db.py:13-22`; ours is Spark conf.)
+    * Cores default to the machine's; SPARK_GRAFT_CPUS overrides.
     */
   def session(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
     val builder0 = SparkSession.builder()
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries)
     localScratchDir.foreach(d => builder0.config("spark.local.dir", d))
@@ -118,6 +122,7 @@ object Graft {
     // cosine_sim, word_gram_hashes, scrub_spans, nfc_normalize, ...).
     graft.plans.TopKRewrite.install(spark)
     graft.plans.GraftFunctions.register(spark)
+    spark.sparkContext.setLogLevel("WARN")
     spark
   }
 }

@@ -2,31 +2,20 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions installer: wires the native expressions into any
   * session at build time —
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` — so SQL-only
-  * users (thriftserver, notebooks) get `format_money`/`cosine_sim` without
-  * calling GraftFunctions.register. This is also the registration point
-  * for future optimizer rules/strategies (SURVEY.md §4: none required for
-  * reference parity).
+  * users (thriftserver, notebooks) get every function of
+  * [[GraftFunctions.sqlFunctions]] without calling GraftFunctions.register.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("format_money"),
-      new ExpressionInfo(classOf[FormatMoney].getName, "format_money"),
-      (exprs: Seq[Expression]) => FormatMoney(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("word_gram_hashes"),
-      new ExpressionInfo(classOf[WordGramHashSet].getName, "word_gram_hashes"),
-      (exprs: Seq[Expression]) =>
-        WordGramHashSet(exprs(0), GraftFunctions.litInt(exprs(1), "word_gram_hashes(text, n)"))))
+    GraftFunctions.sqlFunctions.foreach { case (name, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(GraftFunctions.getClass.getName, name), build))
+    }
     // the custom bounded-heap top-k-per-key physical operator plans itself
     // for sessions built with this extension (same effect as
     // TopKPerKey.install on a programmatic session), and the optimizer

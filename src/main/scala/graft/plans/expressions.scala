@@ -1531,61 +1531,45 @@ object GraftFunctions {
       s"$usage requires a constant ARRAY<STRING>, got $other")
   }
 
-  /** Expose as SQL functions (`SELECT format_money(c), cosine_sim(a,b)`). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "format_money", exprs => FormatMoney(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_gram_hashes",
-      exprs => WordGramHashSet(exprs(0), litInt(exprs(1), "word_gram_hashes(text, n)")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => MinhashSigExpr(exprs(0), litInt(exprs(1), "minhash_sig(text, k)")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gate_stats",
+  /** The SQL-callable native functions, as (name, builder) pairs — the
+    * one table both install paths read: [[register]] (every
+    * `Graft.session`) and [[GraftExtensions]] (`spark.sql.extensions`). */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("format_money", exprs => FormatMoney(exprs.head)),
+    ("cosine_sim", exprs => CosineSim(exprs(0), exprs(1))),
+    ("word_gram_hashes",
+      exprs => WordGramHashSet(exprs(0), litInt(exprs(1), "word_gram_hashes(text, n)"))),
+    ("minhash_sig",
+      exprs => MinhashSigExpr(exprs(0), litInt(exprs(1), "minhash_sig(text, k)"))),
+    ("gate_stats",
       exprs => GateStatsExpr(exprs(0),
-        litStringSeq(exprs(1), "gate_stats(text, stopwords)")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_gram_pos_hashes",
-      exprs => WordGramPosHashes(exprs(0), litInt(exprs(1), "word_gram_pos_hashes(text, n)")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_gram_set",
-      exprs => WordGramSet(exprs(0), litInt(exprs(1), "word_gram_set(text, n)")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "scrub_spans",
-      exprs => ScrubSpans(exprs(0), exprs(1), litInt(exprs(2), "scrub_spans(text, starts, n)")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "strip_accents", exprs => StripAccents(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmin_cell",
-      exprs => ArgminCellExpr(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_codes",
+        litStringSeq(exprs(1), "gate_stats(text, stopwords)"))),
+    ("word_gram_pos_hashes",
+      exprs => WordGramPosHashes(exprs(0), litInt(exprs(1), "word_gram_pos_hashes(text, n)"))),
+    ("word_gram_set",
+      exprs => WordGramSet(exprs(0), litInt(exprs(1), "word_gram_set(text, n)"))),
+    ("scrub_spans",
+      exprs => ScrubSpans(exprs(0), exprs(1), litInt(exprs(2), "scrub_spans(text, starts, n)"))),
+    ("nfc_normalize", exprs => NfcNormalize(exprs.head)),
+    ("strip_accents", exprs => StripAccents(exprs.head)),
+    ("argmin_cell", exprs => ArgminCellExpr(exprs(0), exprs(1))),
+    ("pq_codes",
       exprs => PqCodesExpr(exprs(0), exprs(1),
-        litInt(exprs(2), "pq_codes(v, codebook, m)")), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_gram_hits",
+        litInt(exprs(2), "pq_codes(v, codebook, m)"))),
+    ("bloom_gram_hits",
       exprs => BloomGramHits(exprs(0),
         litLongSeq(exprs(1), "bloom_gram_hits(grams, words, mBits, k)"),
         litInt(exprs(2), "bloom_gram_hits(grams, words, mBits, k)"),
-        litInt(exprs(3), "bloom_gram_hits(grams, words, mBits, k)")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_encode",
+        litInt(exprs(3), "bloom_gram_hits(grams, words, mBits, k)"))),
+    ("bpe_encode",
       exprs => BpeEncodeExpr(exprs(0), litStringSeq(exprs(1), "bpe_encode(text, merges)"),
-        marker = exprs.lift(2).exists(litBool(_, "bpe_encode(text, merges, marker)"))),
-      "built-in")
-  }
+        marker = exprs.lift(2).exists(litBool(_, "bpe_encode(text, merges, marker)")))))
+
+  /** Expose as SQL functions (`SELECT format_money(c), cosine_sim(a,b)`). */
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
+    }
 
   /** Argument that must be a foldable BOOLEAN literal. */
   private[plans] def litBool(e: Expression, usage: String): Boolean = e match {

@@ -13,6 +13,12 @@ private[queries] object Memo {
   private val written =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[String])]
 
+  /** Directory leaf of the artifacts built from sf dir `dir`: the path
+    * with every char outside [A-Za-z0-9.] mangled to `_`, behind an `sf`
+    * prefix — an absolute path would otherwise mangle to a leading `_`,
+    * and Spark's file index treats `_`/`.`-prefixed names as hidden. */
+  def leaf(dir: String): String = "sf" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+
   /** Build-once path accessor — for consumers that read the artifact by
     * PATH (the partition-pruned index probes), with optional partition
     * columns so the persisted layout is the production one (e.g. the
@@ -41,8 +47,7 @@ private[queries] object Memo {
         val again = written.get(key) // double-checked under the monitor
         if (again != null) again
         else {
-          val p = s"${VectorQueries.annArtifactRoot}/$name/" +
-            dir.replaceAll("[^A-Za-z0-9.]", "_")
+          val p = s"${VectorQueries.annArtifactRoot}/$name/${leaf(dir)}"
           // Artifact files are sized for READERS (guide §6): an
           // unbalanced build writes one tiny file per writer partition
           // (x per partition dir when partitioned) and every recurring

@@ -24,7 +24,6 @@ object EtlCli {
 
   def main(args: Array[String]): Unit = {
     val spark = Graft.session("graft-etl")
-    spark.sparkContext.setLogLevel("WARN")
     try run(spark, args.toSeq)
     finally spark.stop()
   }

@@ -68,10 +68,35 @@ object ProfileListener {
   final val BarrierDesc = "__profile_drain_barrier"
 }
 
+/** Census of the physical plan a query actually ran — the FINAL plan,
+  * with AQE query stages and subqueries walked (the pre-execution plan of
+  * an adaptive query has no codegen stages yet): shuffles, broadcasts,
+  * sorts and whole-stage-codegen stages, so structural regressions show up
+  * as numbers. Holds the plan of the session's last successful execution;
+  * its events ride the same listener queue as [[ProfileListener]]'s, so
+  * after a [[ProfileListener.drain]] it is the measured run's. */
+class PlanCensus extends org.apache.spark.sql.util.QueryExecutionListener
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  import org.apache.spark.sql.execution._
+  import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+  @volatile private var last: Option[SparkPlan] = None
+  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+    last = Some(qe.executedPlan)
+  override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+  def summary: String = last.fold("plan=?") { plan =>
+    def n(pf: PartialFunction[SparkPlan, Unit]): Int = collectWithSubqueries(plan)(pf).size
+    s"shuffles=${n { case _: ShuffleExchangeLike => }} " +
+      s"bcasts=${n { case _: BroadcastExchangeLike => }} " +
+      s"sorts=${n { case _: SortExec => }} " +
+      s"codegen=${n { case _: WholeStageCodegenExec => }}"
+  }
+}
+
 /** Dev profiler: time one or more named queries and print/dump the formatted
-  * plan. The session is wired EXACTLY like graft.Bench's (shuffle partitions,
-  * AQE coalescing mode, object-hash threshold, TopKRewrite) so a plan or a
-  * timing read here transfers to the bench.
+  * plan. The session is graft.core.Graft.session — the one Bench and every
+  * other entry point build — so a plan or a timing read here transfers to
+  * the bench. Each measured run prints one line: wall time, the task-metric
+  * rollup and the [[PlanCensus]] of the plan it ran.
   *
   * Usage: runMain graft.tools.Profile <sfDir> <q1> [q2 ...]
   *   PROFILE_EXPLAIN=1      print each query's formatted plan to stdout
@@ -83,35 +108,13 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // A/B experiment knobs: PROFILE_CONF="spark.x=1;spark.y=2"
-    val extraConf = sys.env.get("PROFILE_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val builder0 = SparkSession.builder()
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.core.Graft.CodegenCacheMaxEntries)
-    graft.core.Graft.localScratchDir.foreach(d => builder0.config("spark.local.dir", d))
-    graft.core.Graft.localShuffleConf.foreach { case (k, v) => builder0.config(k, v) }
-    extraConf.foreach { case (k, v) => builder0.config(k, v) }
-    val spark = builder0
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.TopKRewrite.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session("graft-profile")
     // Where a query's wall-clock goes: scheduling+driver (wall - maxConcurrentTaskTime),
     // executor compute, shuffle. Aggregated per measured run via a listener.
     val metrics = new ProfileListener
     spark.sparkContext.addSparkListener(metrics)
+    val census = new PlanCensus
+    spark.listenerManager.register(census)
     val runs = sys.env.get("PROFILE_RUNS").map(_.toInt).getOrElse(3)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
@@ -131,7 +134,7 @@ object Profile {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
         metrics.drain(spark) // deterministic bus drain (barrier job)
-        println(f"[profile] $name run$i $wall%.2f s  ${metrics.summary}")
+        println(f"[profile] $name run$i $wall%.2f s  ${metrics.summary}  ${census.summary}")
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       }
     }

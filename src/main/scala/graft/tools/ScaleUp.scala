@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only corpus scale-up for scale-proof measurements (r16 verdict
@@ -39,15 +39,7 @@ object ScaleUp {
     val factor = factorS.toInt
     require(factor >= 1 && factor <= 100, s"factor must be in [1,100], got $factor")
     require(!dst.startsWith("/root/testdata"), "testdata is read-only")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-    graft.core.Graft.localScratchDir.foreach(d => b.config("spark.local.dir", d))
-    val spark = b.master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session("graft-scaleup")
 
     def rd(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def wr(df: DataFrame, name: String): Unit =

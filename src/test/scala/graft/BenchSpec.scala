@@ -63,4 +63,36 @@ class BenchSpec extends AnyFunSuite {
     assert(name == "BENCH_BEST_r15_sf_0.01_x.json")
     assert(!name.exists(c => c == ' ' || c == '$' || c == '/'))
   }
+
+  // --- failures are honest: a query that throws is listed, never timed
+
+  test("a query that throws is reported as failed, not as a time") {
+    val (times, failed) = Bench.measure(Seq("q_ok", "q_boom"), 2) {
+      case "q_boom" => throw new IllegalStateException("injected")
+      case _ => ()
+    }
+    assert(failed == Seq("q_boom"))
+    assert(times.keySet == Set("q_ok"))
+  }
+
+  test("a query that throws on a later run is failed too: no partial min") {
+    var calls = 0
+    val (times, failed) = Bench.measure(Seq("q_flaky"), 3) { _ =>
+      calls += 1
+      if (calls == 2) sys.error("injected")
+    }
+    assert(times.isEmpty && failed == Seq("q_flaky"))
+    assert(calls == 2, "a failed query is not re-run")
+  }
+
+  test("the archive fold reads archives with and without the failed list") {
+    val old = """{"metric":"total","value":1.5,"unit":"sec","canary":{},""" +
+      """"scale_canary":{},"nondefault_sf":false,"queries":{"q_a":0.5,"q_b":1.0},""" +
+      """"warmup_total":3.0,"warmup":{"q_a":2.0,"q_b":1.0},"sf":"/d/sf0.1"}"""
+    val withFailed = old.replace(""""queries":""", """"failed":["q_c"],"queries":""")
+    Seq(old, withFailed).foreach { json =>
+      assert(Bench.parseArchive(json, "/d/sf0.1") == Some(Map("q_a" -> 0.5, "q_b" -> 1.0)))
+      assert(Bench.parseArchive(json, "/d/sf0.01").isEmpty)
+    }
+  }
 }

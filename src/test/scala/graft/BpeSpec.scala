@@ -36,7 +36,6 @@ class BpeSpec extends SparkSpec {
     assert(edges == Seq("", "word"))
     // SQL surface: optional third arg
     Seq("lower").toDF("text").createOrReplaceTempView("bpe_rt")
-    graft.plans.GraftFunctions.register(spark)
     val sql = spark.sql(
       "SELECT bpe_encode(text, array('l o','lo w','e r'), true) AS t FROM bpe_rt")
       .as[Seq[String]].head()
@@ -120,7 +119,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("SQL surface: bpe_encode with an array literal") {
-    graft.plans.GraftFunctions.register(spark)
     Seq(("lower", 1L)).toDF("text", "id").createOrReplaceTempView("bpe_in")
     val got = spark.sql(
       "SELECT bpe_encode(text, array('l o', 'lo w', 'e r')) AS t FROM bpe_in")
@@ -129,7 +127,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("SQL surface: bpe_encode rejects NULL merge elements with a clear error") {
-    graft.plans.GraftFunctions.register(spark)
     Seq(("lower", 1L)).toDF("text", "id").createOrReplaceTempView("bpe_in_null")
     val e = intercept[Exception] {
       spark.sql("SELECT bpe_encode(text, array('l o', NULL)) AS t FROM bpe_in_null")

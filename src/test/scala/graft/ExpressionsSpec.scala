@@ -42,7 +42,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("SQL registration exposes format_money and cosine_sim") {
-    GraftFunctions.register(spark)
     Seq((250L, Array(3.0f, 4.0f))).toDF("c", "v").createOrReplaceTempView("m")
     val row = spark.sql("SELECT format_money(c) AS s, cosine_sim(v, v) AS cos FROM m")
       .as[(String, Double)].head()
@@ -63,7 +62,6 @@ class ExpressionsSpec extends SparkSpec {
     }
     assert(e2.getMessage.toLowerCase.contains("format_money"))
     // ...and the same contract holds through the SQL registration path.
-    GraftFunctions.register(spark)
     Seq(Array(1.0, 2.0)).toDF("v").createOrReplaceTempView("typed_misuse")
     intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT cosine_sim(v, v) FROM typed_misuse").collect()
@@ -303,7 +301,6 @@ class ExpressionsSpec extends SparkSpec {
       .as[(String, String)].head()
     assert(fps._1 == fps._2)
     // SQL registration
-    GraftFunctions.register(spark)
     rows.createOrReplaceTempView("nrm")
     val viaSql = spark.sql(
       "SELECT nfc_normalize(d) = nfc_normalize(c) AS eq, strip_accents(accented) AS f FROM nrm")

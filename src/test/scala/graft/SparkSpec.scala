@@ -3,23 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM via Test/fork). */
+/** Shared local session for all suites (one JVM via Test/fork): the
+  * shipped `Graft.session`, so the suite tests the config users run. */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // Same optimizer surface as Graft.session (the engine installs its
-    // TopKRewrite rule as part of the session contract).
-    graft.plans.TopKRewrite.install(s)
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.core.Graft.session("graft-test")
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.core.Tables
-import graft.plans.GraftFunctions
 
 /** The reference ran its analytics as SQL text (starter:etl/etl.py:56-66);
   * the same surface works here via registered temp views + spark.sql,
@@ -38,7 +37,6 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("native functions compose with SQL over views") {
     Tables.registerAll(spark, sf)
-    GraftFunctions.register(spark)
     val got = spark.sql(
       """SELECT format_money(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS disp
          FROM orders ORDER BY o_orderkey LIMIT 1""").as[String].head()
@@ -46,7 +44,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("span-scrub pipeline is expressible in pure SQL via the native functions") {
-    GraftFunctions.register(spark)
     Seq((1L, "a b c d x y"), (2L, "a b c d p q"), (3L, "u v w z k m"))
       .toDF("doc_id", "text").createOrReplaceTempView("sd")
     // hot 4-grams (here: "a b c d", in docs 1+2) scrub out of every doc
@@ -66,7 +63,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("bloom decontamination is expressible in pure SQL via word_gram_set + bloom_gram_hits") {
-    GraftFunctions.register(spark)
     import graft.operators.Sketches
     // build a tiny filter over the "eval" doc's grams, then count each
     // train doc's member grams in SQL via the packed-words literal
@@ -91,7 +87,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("ANN kernels are SQL-callable: argmin_cell and pq_codes over one-row tables") {
-    GraftFunctions.register(spark)
     // three 4-dim vectors; centroids at the axes — nearest-cell and PQ
     // codes both resolve in SQL against collect_list-reshaped tables
     Seq((1L, Seq(1.0, 0.1, 0.0, 0.0)), (2L, Seq(0.0, 0.0, 1.0, 0.9)),
@@ -120,7 +115,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("word_gram_hashes is SQL-callable and rejects a non-constant width") {
-    GraftFunctions.register(spark)
     val n = spark.sql(
       "SELECT size(word_gram_hashes('a b c d e', 4)) AS n").as[Int].head()
     assert(n == 2)
@@ -136,7 +130,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("minhash_sig is SQL-callable and matches the declarative MIN(substr(md5)) chain") {
-    GraftFunctions.register(spark)
     Seq((1L, "the quick brown fox jumps over the lazy dog"),
         (2L, "short text"), (3L, "tiny"))
       .toDF("doc_id", "text").createOrReplaceTempView("mh_docs")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{TopKPerKey, TopKRewrite}
+import graft.plans.TopKPerKey
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
   * dropped becomes the bounded-heap TopKPerKey operator. */
 class TopKRewriteSpec extends SparkSpec {
   import spark.implicits._
-
-  TopKRewrite.install(spark)
 
   private def fixture: DataFrame =
     (1 to 400).map(i => (i % 7, i, s"v$i")).toDF("grp", "ord", "payload")

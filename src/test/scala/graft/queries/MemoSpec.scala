@@ -28,4 +28,22 @@ class MemoSpec extends graft.SparkSpec {
       "memo_spec_art_flat")(df.select(col("id")))
     assert(p3 != p1 && spark.read.parquet(p3).count() == 10)
   }
+
+  test("artifact dirs are never hidden: the sf-dir leaf starts with neither _ nor .") {
+    // Spark's file index skips `_`/`.`-prefixed names: an absolute sf dir
+    // used to mangle to `_root_..._sf0.01` and every read of it warned
+    // "All paths were ignored" before falling back to the glob
+    Seq("/data/testdata/sf0.01", ".hidden/sf0.1", "_x", "sf0.1").foreach { dir =>
+      val leaf = Memo.leaf(dir)
+      assert(!leaf.startsWith("_") && !leaf.startsWith("."), leaf)
+      assert(leaf.forall(c => c.isLetterOrDigit || c == '.' || c == '_'), leaf)
+    }
+    assert(Memo.leaf("/data/testdata/sf0.01") == "sf_data_testdata_sf0.01")
+    // distinct sf dirs stay distinct artifacts
+    assert(Memo.leaf("/a/sf0.1") != Memo.leaf("a/sf0.1"))
+    val p = Memo.parquetArtifactPath(spark, "/tmp/memo_spec_leaf/sf0.01",
+      "memo_spec_leaf")(spark.range(3).toDF("id"))
+    assert(p.endsWith("/memo_spec_leaf/sf_tmp_memo_spec_leaf_sf0.01"), p)
+    assert(spark.read.parquet(p).count() == 3)
+  }
 }
