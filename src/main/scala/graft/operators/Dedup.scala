@@ -675,27 +675,28 @@ object Dedup {
                           k: Int, numHashes: Int, bandSize: Int,
                           threshold: Double, dfCap: Int = 0): DataFrame =
     // dfCap applies BATCH-locally (document frequency within newDocs);
-    // use the same cap policy the stored corpus bands were built with
+    // use the same cap policy the stored corpus bands were built with.
+    // The bands feed BOTH sides of the probe join — pinned so the sign
+    // tower (scan+shingle+md5+min-agg) runs once, not once per side.
     incrementalNearDupsFromBands(
-      signBands(newDocs, idCol, textCol, k, numHashes, bandSize, dfCap),
+      signBands(newDocs, idCol, textCol, k, numHashes, bandSize, dfCap)
+        .transform(graft.core.Materialize.pin),
       newDocs, corpusDocs, corpusBands, idCol, textCol, k, threshold)
 
   /** The probe half of incrementalNearDups, for callers that sign the
-    * batch once and reuse the bands (the streaming sink persists them into
-    * the index AND probes with them — one signing, two uses). */
+    * batch once and reuse the bands (the streaming sinks persist them into
+    * the index AND probe with them — one signing, two uses). `newBands`
+    * must already be PINNED: it feeds both sides of the probe join, and
+    * every caller pins it once for its own reuse anyway. */
   def incrementalNearDupsFromBands(newBands: DataFrame, newDocs: DataFrame,
                                    corpusDocs: DataFrame, corpusBands: DataFrame,
                                    idCol: String, textCol: String,
                                    k: Int, threshold: Double): DataFrame = {
-    // the batch bands feed BOTH the probe side and the index union below —
-    // pin them so the batch's sign tower (scan+shingle+md5+min-agg) runs
-    // once, not once per consumer
-    val nb = newBands.transform(graft.core.Materialize.pin)
-    val allBands = corpusBands.unionByName(nb)
+    val allBands = corpusBands.unionByName(newBands)
     // probe: every candidate pair involves >= 1 new doc (new x corpus and
     // new x new); corpus x corpus pairs were already found when those
     // batches ingested
-    val cands = nb.as("a").join(allBands.as("b"),
+    val cands = newBands.as("a").join(allBands.as("b"),
         col("a.band") === col("b.band") && col("a.doc_id") =!= col("b.doc_id"))
       .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
@@ -1168,10 +1169,18 @@ object Dedup {
     * broadcast bounded by |contaminated docs| instead of |matching
     * occurrences|. */
   def decontaminate(train: DataFrame, evalDocs: DataFrame,
-                    idCol: String, textCol: String, n: Int): DataFrame = {
+                    idCol: String, textCol: String, n: Int): DataFrame =
+    train.join(broadcast(contaminatedIds(train, evalDocs, idCol, textCol, n)),
+      Seq(idCol), "left_anti")
+
+  /** The distinct ids of `train` documents sharing at least one word
+    * n-gram with `evalDocs` — [[decontaminate]]'s existence-only probe,
+    * for callers that keep the contaminated documents as a flag. */
+  def contaminatedIds(train: DataFrame, evalDocs: DataFrame,
+                      idCol: String, textCol: String, n: Int): DataFrame = {
     val evalGrams = evalDocs.select(
       explode(graft.plans.GraftFunctions.word_gram_hashes(col(textCol), n)).as("gram"))
-    val contaminated = train
+    train
       .select(col(idCol), explode(graft.plans.GraftFunctions.word_gram_hashes(col(textCol), n)).as("gram"))
       .join(broadcast(evalGrams), Seq("gram"), "left_semi")
       .select(col(idCol))
@@ -1182,6 +1191,5 @@ object Dedup {
       // copies) would inflate the driver collect far beyond the doc set.
       // One shuffle over a tiny id set caps the broadcast at |docs|.
       .distinct()
-    train.join(broadcast(contaminated), Seq(idCol), "left_anti")
   }
 }

@@ -2,8 +2,9 @@ package graft.streaming
 
 import graft.operators.Dedup
 import graft.tools.EtlCli
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Streaming composition of the incremental-dedup production shape
@@ -20,6 +21,8 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * never a corpus re-scan.
   */
 object CorpusStreams {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Start the incremental-dedup sink over a streaming `incoming` frame of
     * (idCol, textCol, ...) documents. Three EPOCH-PARTITIONED versioned
@@ -69,10 +72,9 @@ object CorpusStreams {
           batch.select(col(idCol).as("doc_id"), lit("").as("band")).limit(0))
         // replay guard: docs already committed to the corpus were fully
         // processed by a previous (possibly crashed-after-commit) attempt
-        val newDocs = batch
-          .join(corpus.select(col(idCol)), Seq(idCol), "left_anti")
-          .transform(graft.core.Materialize.pin)
-        if (newDocs.limit(1).count() > 0) {
+        val (newDocs, nNew) = pinCounted(batch
+          .join(corpus.select(col(idCol)), Seq(idCol), "left_anti"))
+        if (nNew > 0) {
           // sign ONCE; the bands both probe the index and extend it
           val newBands = Dedup.signBands(newDocs, idCol, textCol, k, numHashes,
               bandSize, dfCap)
@@ -110,13 +112,16 @@ object CorpusStreams {
     *     batch appends a bottom-kmvK hash-rank sample partial of its
     *     survivors' doc lengths — readKmvSample + sampleQuantiles over
     *     the epochs is the live length distribution for drift dashboards
-    *  3. near-dup vs committed corpus + in-batch: band-index probe; a
-    *     batch doc drops when paired with any corpus doc (corpus member
-    *     wins — it is already training data), else the least id per
-    *     in-batch duplicate component survives (exact connected
-    *     components over the batch-internal pair slice, which is tiny;
-    *     swap for a greedy smaller-id rule if micro-batches are so
-    *     frequent the CC driver iterations matter)
+    *  3. near-dup vs committed corpus + in-batch: band-index probe
+    *     (the batch signs once; its pinned bands both probe and extend
+    *     the index), then ONE driver-side resolution over the collected
+    *     verified pairs, each side flagged in-batch or corpus by a
+    *     broadcast of the batch ids: a batch doc drops when paired with
+    *     any corpus doc (corpus member wins — it is already training
+    *     data), and of each in-batch duplicate component (union-find
+    *     over the batch-internal pairs) every doc but the least id
+    *     drops. Exact, and driver memory is O(docs in this batch's
+    *     verified pairs); the drop ids go on as a local relation
     *
     * Tables: `indexPath` holds SURVIVOR bands only (future batches probe
     * the clean corpus), `corpusPath` the survivors, `droppedPath` a
@@ -170,9 +175,24 @@ object CorpusStreams {
         lazy val corpus = tableOr(corpusPath, batch.limit(0))
         lazy val corpusBands = tableOr(indexPath,
           batch.select(col(idCol).as("doc_id"), lit("").as("band")).limit(0))
-        lazy val newDocs = pin(batch
-          .join(corpus.select(col(idCol)), Seq(idCol), "left_anti"))
-        if (!replayed && newDocs.limit(1).count() > 0) {
+        // stage 1 as ONE pin: the replay anti-join, the quality gates and
+        // a `contaminated` flag (gate-passing docs sharing a word n-gram
+        // with `evalDocs`). Its row count is observed on the pin's own
+        // action; decon0 and the quality/contaminated drop rows are
+        // filters over it.
+        lazy val (stage1, nNew) = {
+          val gated = graft.operators.TextAnalysis.qualityGates(
+            batch.join(corpus.select(col(idCol)), Seq(idCol), "left_anti"),
+            textCol, cfg.stop, cfg.minWords, cfg.maxWords,
+            cfg.minMeanLen, cfg.maxMeanLen, cfg.minUniqRatio)
+          val hits = Dedup.contaminatedIds(
+              gated.filter(col("pass")).select(col(idCol), col(textCol)),
+              evalDocs, idCol, textCol, cfg.decontaminateGramN)
+            .withColumn("contaminated", lit(true))
+          pinCounted(gated.join(broadcast(hits), Seq(idCol), "left_outer")
+            .withColumn("contaminated", coalesce(col("contaminated"), lit(false))))
+        }
+        if (!replayed && nNew > 0) {
           // Resolve THIS batch's LSH signing config: when `sweepPath` is
           // wired, the picker's choice off the persisted sweep artifact
           // (lshBandSweep committed via EtlCli.writeTable) — the
@@ -235,17 +255,11 @@ object CorpusStreams {
             EtlCli.committedEpochs(spark, indexPath).nonEmpty &&
               idxCfg.getOrElse((cfg.bandSize, cfg.numHashes, cfg.shingleK)) !=
                 ((bandSize, numHashes, cfg.shingleK))
-          val gated = pin(graft.operators.TextAnalysis.qualityGates(newDocs,
-            textCol, cfg.stop, cfg.minWords, cfg.maxWords,
-            cfg.minMeanLen, cfg.maxMeanLen, cfg.minUniqRatio))
-          val passed = gated.filter(col("pass")).select(col(idCol), col(textCol))
-          val contaminated = Dedup.contaminationHits(passed, evalDocs,
-              idCol, textCol, cfg.decontaminateGramN)
-            .select(col(idCol)).distinct()
-          val decon0 = pin(passed.join(contaminated, Seq(idCol), "left_anti"))
+          val decon0 = stage1.filter(col("pass") && !col("contaminated"))
+            .select(col(idCol), col(textCol))
           // optional bloom stage: probe the GROWING seen-set filter that a
           // bloomSketchSink maintains at `bloomPath` (the scale path when
-          // the seen-set outgrows contaminationHits' exact broadcast).
+          // the seen-set outgrows stage 1's exact eval-gram broadcast).
           // The filter reads as ≤ mBits/62 words and the probe is the
           // in-row native loop — map-only over the batch. Absent/empty
           // filter table ⇒ no bits set ⇒ stage passes everything.
@@ -296,32 +310,31 @@ object CorpusStreams {
               Some(pin(Dedup.signBands(corpus, idCol, textCol,
                 cfg.shingleK, numHashes, bandSize, cfg.dfCap)))
             else None
-          val pairs = pin(Dedup.incrementalNearDupsFromBands(newBands, selected,
-            corpus, resignedCorpus.getOrElse(corpusBands), idCol, textCol,
-            cfg.shingleK, cfg.nearDupThreshold))
-          val cset = corpus.select(col(idCol).as("__cid"))
-          // corpus member wins: its batch-side partner drops
-          val corpusDrops = pairs.join(cset, col("doc_a") === col("__cid"))
-              .select(col("doc_b").as("doc_id"))
-            .unionAll(pairs.join(cset, col("doc_b") === col("__cid"))
-              .select(col("doc_a").as("doc_id")))
-            .distinct()
-          // in-batch components: least id survives
-          val internal = pairs
-            .join(cset, col("doc_a") === col("__cid"), "left_anti")
-            .join(cset, col("doc_b") === col("__cid"), "left_anti")
-          val internalDrops =
-            if (internal.limit(1).count() == 0) internal.select(col("doc_a").as("doc_id"))
-            else Dedup.connectedComponents(internal)
-              .filter(col("doc_id") =!= col("component")).select("doc_id")
-          val dupDrops = corpusDrops.unionAll(internalDrops).distinct()
-          val survivors = pin(selected
-            .join(dupDrops, selected(idCol) === dupDrops("doc_id"), "left_anti"))
+          // near-dup drops resolve ONCE, on the driver: the verified pair
+          // slice (every pair has >= 1 batch doc) collects with each
+          // side's batch membership from a broadcast of the batch ids —
+          // a side outside the batch is a committed corpus doc
+          val inBatch = broadcast(selected.select(col(idCol).as("__bid")))
+          val pairs = Dedup.incrementalNearDupsFromBands(newBands, selected,
+              corpus, resignedCorpus.getOrElse(corpusBands), idCol, textCol,
+              cfg.shingleK, cfg.nearDupThreshold)
+            .join(inBatch, col("doc_a") === col("__bid"), "left_outer")
+            .select(col("doc_a"), col("doc_b"), col("__bid").isNotNull.as("a_in_batch"))
+            .join(inBatch, col("doc_b") === col("__bid"), "left_outer")
+            .select(col("doc_a"), col("doc_b"), col("a_in_batch"),
+              col("__bid").isNotNull.as("b_in_batch"))
+          val dupIds = nearDupDrops(pairs.collect().toSeq.map(r =>
+            (r.get(0), r.get(1), r.getBoolean(2), r.getBoolean(3))))
+          val dupDrops = spark.createDataFrame(
+            java.util.Arrays.asList(dupIds.toSeq.map(Row(_)): _*),
+            StructType(Seq(StructField("doc_id", pairs.schema("doc_a").dataType))))
+          def notDup(idc: String): Column =
+            if (dupIds.isEmpty) lit(true) else !col(idc).isin(dupIds.toSeq: _*)
+          val survivors = selected.filter(notDup(idCol))
           val dropped =
-            gated.filter(!col("pass"))
-              .select(col(idCol).as("doc_id"), lit("quality").as("reason"))
-            .unionAll(contaminated
-              .select(col(idCol).as("doc_id"), lit("contaminated").as("reason")))
+            stage1.filter(!col("pass") || col("contaminated"))
+              .select(col(idCol).as("doc_id"),
+                when(!col("pass"), lit("quality")).otherwise(lit("contaminated")).as("reason"))
             .unionAll(bloomHitIds
               .select(col(idCol).as("doc_id"), lit("bloom_contaminated").as("reason")))
             .unionAll(dsirDropIds
@@ -345,8 +358,7 @@ object CorpusStreams {
               kp, batchId)
           }
           EtlCli.appendEpoch(
-            newBands.join(survivors.select(col(idCol).as("__sid")),
-              col("doc_id") === col("__sid"), "left_semi")
+            newBands.filter(notDup("doc_id"))
               // a config change folds the re-signed corpus bands into
               // this epoch: later batches then probe the whole corpus
               // under the new config (superseded old-config rows are
@@ -377,6 +389,43 @@ object CorpusStreams {
       }
       .trigger(Trigger.AvailableNow())
       .start()
+
+  /** Pin `df` and return it with its row count, observed on the pin's own
+    * action — one materialization instead of a pin plus a count job. */
+  private def pinCounted(df: DataFrame): (DataFrame, Long) = {
+    val obs = new Observation()
+    val pinned = graft.core.Materialize.pin(df.observe(obs, count(lit(1)).as("n")))
+    (pinned, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** curatedIngestSink's near-dup drop rule over the verified pair slice
+    * `(doc_a, doc_b, a_in_batch, b_in_batch)`: a side outside the batch
+    * is a committed corpus doc and wins, so its batch partner drops; of
+    * each component of the batch-internal pairs (union-find) every doc
+    * but the least id drops. Ids compare by their natural (Comparable)
+    * order. Returns the ids to drop. */
+  private[graft] def nearDupDrops(pairs: Seq[(Any, Any, Boolean, Boolean)]): Set[Any] = {
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    val corpusWins = Set.newBuilder[Any]
+    pairs.foreach { case (a, b, aIn, bIn) =>
+      if (aIn && bIn) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra.asInstanceOf[Comparable[Any]].compareTo(rb) < 0) parent(rb) = ra
+        else if (ra != rb) parent(ra) = rb
+      } else {
+        if (!aIn) corpusWins += b
+        if (!bIn) corpusWins += a
+      }
+    }
+    corpusWins.result() ++ parent.keys.toSeq.filter(x => find(x) != x)
+  }
 
   /** Streaming ANN-index sink — the ANN analog of incrementalDedupSink:
     * each micro-batch of (idCol, vecCol) embeddings encodes against the
@@ -1406,7 +1455,7 @@ object CorpusStreams {
       }
     EtlCli.appendEpoch(seenKeep.fold(seenFold)(seenFold.unionByName(_)),
       graphSeenIdsPath(graphPath), coveredN)
-    println(s"graph at $graphPath compacted: nodes_opt through epoch " +
+    log.info(s"graph at $graphPath compacted: nodes_opt through epoch " +
       s"$coveredN (bucket granularity $coarse bits), graph_opt through " +
       s"epoch $coveredE, seen-ids folded at $seenW bits")
   }
@@ -1511,7 +1560,7 @@ object CorpusStreams {
     val freed = reclaim(nodesP, _ => false) + reclaim(edgesP, _ => false) +
       reclaim(seenP, e => seenEntries.exists(en =>
         en._1 == e && en._2.contains(seenCover)))
-    println(s"graph at $graphPath vacuumed through epoch $v: " +
+    log.info(s"graph at $graphPath vacuumed through epoch $v: " +
       s"$freed bytes reclaimed")
     freed
   }

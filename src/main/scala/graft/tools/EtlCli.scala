@@ -152,11 +152,14 @@ object EtlCli {
       println(s"k-NN graph compacted to the stamped flat layout at $outPath")
     case Seq("compact-knn-graph", graphPath) =>
       graft.streaming.CorpusStreams.knnGraphCompact(spark, graphPath)
+      println(s"k-NN graph at $graphPath compacted")
     case Seq("vacuum-knn-graph", graphPath) =>
-      graft.streaming.CorpusStreams.vacuumKnnGraph(spark, graphPath)
+      val freed = graft.streaming.CorpusStreams.vacuumKnnGraph(spark, graphPath)
+      println(s"k-NN graph at $graphPath vacuumed: $freed bytes reclaimed")
     case Seq("vacuum-knn-graph", graphPath, checkpointDir) =>
-      graft.streaming.CorpusStreams.vacuumKnnGraph(spark, graphPath,
+      val freed = graft.streaming.CorpusStreams.vacuumKnnGraph(spark, graphPath,
         Some(checkpointDir))
+      println(s"k-NN graph at $graphPath vacuumed: $freed bytes reclaimed")
     case Seq("check-graph-quality", graphPath) =>
       checkGraphQuality(spark, graphPath)
     case Seq("check-graph-quality", graphPath, minRatio) =>

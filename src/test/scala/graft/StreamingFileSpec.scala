@@ -519,6 +519,164 @@ class StreamingFileSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet == Set(1L, 5L, 7L))
   }
 
+  test("curatedIngestSink near-dup drops equal connected components plus corpus-wins, batch by batch") {
+    import graft.operators.Dedup
+    import graft.streaming.CorpusStreams
+    import graft.tools.EtlCli
+    import spark.implicits._
+    // char-5-shingle Jaccard at threshold 0.6, one hash per band (every
+    // verified pair is an LSH candidate with near certainty):
+    //  b0: chain 21 ~ 11 ~ 31 (21 !~ 31) whose least id sits in the
+    //      middle; star 45 ~ {41, 42, 43} (leaves pairwise < 0.6);
+    //      50 and 60 unique
+    //  b1: 61 ~ corpus 60 AND ~ in-batch 62 (62 !~ 60); 63 unique
+    //  b2: no pairs at all
+    val (a, b, c, d) = ("the river bank ", "was quiet at dawn ", "and a heron stood ",
+      "still in the reeds ")
+    val hub = "the mountain trail climbs past a frozen lake toward the pass"
+    val market = "sells grilled corn and a sweet tea with cardamom"
+    val batches = Seq(
+      Seq(
+        (11L, a + b + c + d + "by the old mill"),
+        (21L, a + b + c + d + "near a willow"),
+        (31L, "at first light " + b + c + d + "by the old mill"),
+        (45L, hub),
+        (41L, hub + " under heavy grey skies all day long"),
+        (42L, hub + " with two tired mules and one guide"),
+        (43L, hub + " before the first winter snow falls"),
+        (50L, "a completely different text about spark query engines and shuffle behavior"),
+        (60L, "the night market " + market)),
+      Seq(
+        (61L, "the night market " + market + " near the station"),
+        (62L, market + " near the station stays open late"),
+        (63L, "a fresh unique document regarding adaptive execution and partition pruning")),
+      Seq(
+        (70L, "one more document about columnar storage and the code generation paths"),
+        (71L, "the last note covers broadcast joins and a little skew salting advice")))
+    val root = java.nio.file.Files.createTempDirectory("curated_dups")
+    val in = root.resolve("in"); java.nio.file.Files.createDirectory(in)
+    def paths(n: String) = root.resolve(n).toString
+    val cfg = graft.operators.CorpusPipeline.Config(minWords = 5, shingleK = 5,
+      numHashes = 8, bandSize = 1, nearDupThreshold = 0.6, decontaminateGramN = 4)
+    val eval = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    batches.zipWithIndex.foreach { case (rows, i) =>
+      val tmp = root.resolve(s"b${i}_tmp")
+      rows.toDF("doc_id", "text").coalesce(1).write.parquet(tmp.toString)
+      val part = new java.io.File(tmp.toString).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.copy(part.toPath, in.resolve(s"b$i.parquet"))
+      val schema = spark.read.parquet(in.toString).schema
+      CorpusStreams.curatedIngestSink(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(in.toString),
+        eval, "doc_id", "text", paths("index"), paths("corpus"), paths("dropped"),
+        paths("chk"), cfg).awaitTermination(120000)
+    }
+
+    val nearDups = batches.indices.map { e =>
+      EtlCli.readTable(spark, s"${paths("dropped")}/epoch=$e")
+        .filter($"reason" === "near_dup").select("doc_id").as[Long].collect().toSet
+    }
+    // the previous formulation, per batch: probe the committed corpus,
+    // then corpus-wins joins plus connected components of the in-batch
+    // pair slice (least id survives)
+    val expected = batches.indices.map { e =>
+      val corpus = (0 until e).map(p => EtlCli.readTable(spark, s"${paths("corpus")}/epoch=$p"))
+        .foldLeft(Seq.empty[(Long, String)].toDF("doc_id", "text"))(_ unionByName _)
+      val pairs = Dedup.incrementalNearDups(batches(e).toDF("doc_id", "text"), corpus,
+        Dedup.signBands(corpus, "doc_id", "text", cfg.shingleK, cfg.numHashes, cfg.bandSize),
+        "doc_id", "text", cfg.shingleK, cfg.numHashes, cfg.bandSize, cfg.nearDupThreshold)
+      val cset = corpus.select($"doc_id".as("__cid"))
+      val corpusDrops = pairs.join(cset, $"doc_a" === $"__cid").select($"doc_b".as("doc_id"))
+        .unionAll(pairs.join(cset, $"doc_b" === $"__cid").select($"doc_a".as("doc_id")))
+      val internal = pairs
+        .join(cset, $"doc_a" === $"__cid", "left_anti")
+        .join(cset, $"doc_b" === $"__cid", "left_anti")
+      val internalDrops =
+        if (internal.isEmpty) Set.empty[Long]
+        else Dedup.connectedComponents(internal).filter($"doc_id" =!= $"component")
+          .select("doc_id").as[Long].collect().toSet
+      corpusDrops.as[Long].collect().toSet ++ internalDrops
+    }
+    assert(nearDups == expected, s"sink drops $nearDups != connected-components drops $expected")
+    assert(nearDups == Seq(Set(21L, 31L, 42L, 43L, 45L), Set(61L, 62L), Set.empty[Long]),
+      s"fixture no longer exercises chain/star/corpus+batch/no-pair: $nearDups")
+    assert(EtlCli.readEpochTable(spark, paths("corpus")).select("doc_id").as[Long]
+      .collect().toSet == Set(11L, 41L, 50L, 60L, 63L, 70L, 71L))
+  }
+
+  test("curatedIngestSink job budget: a bounded count of jobs per micro-batch; a fencepost replay runs none") {
+    import graft.streaming.CorpusStreams
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    // the two-batch fixture of the quality/contamination/dedup test above
+    val base = "the quick brown fox jumps over the lazy dog again and again "
+    val eval = Seq((100L, "benchmark question about predicate pushdown ordering semantics today"))
+      .toDF("doc_id", "text")
+    val b1 = Seq(
+      (1L, base + "today extra tail"),
+      (2L, base + "today extra tails"),
+      (3L, "too short"),
+      (4L, "a study of benchmark question about predicate pushdown ordering semantics here"),
+      (5L, "a completely different text about spark query engines and shuffle behavior"))
+    val b2 = Seq(
+      (6L, base + "today extra tailed"),
+      (7L, "a fresh unique document regarding adaptive execution and partition pruning"))
+    val root = java.nio.file.Files.createTempDirectory("curated_jobs")
+    val in = root.resolve("in"); java.nio.file.Files.createDirectory(in)
+    def paths(n: String) = root.resolve(n).toString
+    def stage(name: String, rows: Seq[(Long, String)]): Unit = {
+      val tmp = root.resolve(name + "_tmp")
+      rows.toDF("doc_id", "text").coalesce(1).write.parquet(tmp.toString)
+      val part = new java.io.File(tmp.toString).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.copy(part.toPath, in.resolve(name + ".parquet"))
+    }
+    val cfg = graft.operators.CorpusPipeline.Config(
+      minWords = 5, shingleK = 5, nearDupThreshold = 0.5, decontaminateGramN = 4)
+    // jobs started inside micro-batches, keyed by (query id, batch id)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          for (q <- Option(p.getProperty("sql.streaming.queryId"));
+               b <- Option(p.getProperty("streaming.sql.batchId")))
+            jobs.merge((q, b.toLong), 1, Integer.sum)
+        }
+    }
+    def runStream(): Map[Long, Int] = {
+      jobs.clear()
+      val schema = spark.read.parquet(in.toString).schema
+      val q = CorpusStreams.curatedIngestSink(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(in.toString),
+        eval, "doc_id", "text", paths("index"), paths("corpus"), paths("dropped"),
+        paths("chk"), cfg)
+      q.awaitTermination(120000)
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      jobs.asScala.collect { case ((id, b), n) if id == q.id.toString => b -> n }.toMap
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      stage("b1", b1)
+      val first = runStream()
+      stage("b2", b2)
+      val second = runStream()
+      // Measured on this fixture: 20 jobs for batch 0 and 23 for batch 1
+      // (batch 1 also reads the committed corpus and index).
+      // Before the one-pin stage 1 and the driver-side drop resolution the
+      // same batches ran 43 and 42 jobs.
+      assert(first.keySet == Set(0L) && first(0L) <= 20, s"batch 0 jobs: $first")
+      assert(second.keySet == Set(1L) && second(1L) <= 23, s"batch 1 jobs: $second")
+      // checkpoint lost after a full commit: both batches redeliver and the
+      // fencepost must turn each into a no-op that starts no job at all
+      java.nio.file.Files.walk(root.resolve("chk")).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.delete)
+      val replay = runStream()
+      assert(replay.values.sum == 0, s"fencepost replay started jobs: $replay")
+      assert(graft.tools.EtlCli.readEpochTable(spark, paths("corpus"))
+        .select("doc_id").as[Long].collect().toSet == Set(1L, 5L, 7L))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("curatedIngestSink sweep wiring: the picker signs each epoch; a sweep update re-signs the corpus and still catches cross-config near-dups") {
     import graft.streaming.CorpusStreams
     import graft.tools.EtlCli
