@@ -81,7 +81,20 @@ object Similarity {
   /** (cc, cv) centroid table reshaped to one broadcastable row. */
   private def centOneRow(cent: DataFrame): DataFrame =
     cent.groupBy().agg(collect_list(
-      struct(col("cc").cast(LongType).as("cc"), col("cv").as("cv"))).as("cents"))
+      struct(col("cc").cast(LongType).as("cc"), dvec(col("cv")).as("cv"))).as("cents"))
+
+  /** The IVF family's probe ranking, in-row: each row of `q` (qid, qv,
+    * ...) becomes one row per probed cell — `cell`, and `rn` its probe
+    * rank, 1 = nearest — for its `nProbe` nearest cells of `cent`, ties
+    * (d2, cc). plans.NearestCellsExpr ranks against the same one-row
+    * broadcast the corpus side's [[argminCell]] reads, so the query side
+    * never shuffles (it replaces a per-query row_number window). */
+  private def probeCells(q: DataFrame, cent: DataFrame, nProbe: Int): DataFrame =
+    q.crossJoin(broadcast(centOneRow(cent)))
+      .select(q.columns.toSeq.map(col) :+ posexplode(pcol(graft.plans.NearestCellsExpr(
+          pexpr(col("qv")), pexpr(col("cents")), nProbe))).as(Seq("__pos", "cell")): _*)
+      .withColumn("rn", col("__pos") + 1)
+      .drop("__pos")
 
   /** Nearest-centroid id for one vector — one native fused loop per row
     * (plans.ArgminCellExpr; the HOF aggregate/least composition it
@@ -904,9 +917,13 @@ object Similarity {
     * centroids — see coarseSeeds; optional quantized-mean refinement
     * iterations), every vector assigned to its nearest cell, queries probe
     * only the `nProbe` closest cells. Metric: squared L2 with quantized
-    * sums, so assignment and ranking are bit-deterministic. At scale the
-    * cell assignment is one (vectors x cells) partial-agg groupBy and the
-    * search touches |probed cells| of the corpus.
+    * sums, so assignment and ranking are bit-deterministic.
+    *
+    * Cost shape: the centroid table reshapes to one broadcast row; each
+    * query ranks its probe cells in-row against it, and the corpus side
+    * is ONE map-only scan — in-row cell, a broadcast-hash join to the
+    * (|queries| x nProbe) probe rows on cell, the distance in-row. The
+    * only shuffle on the search path is the per-query top-k window.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
               nCells: Int, nProbe: Int, k: Int, refineIters: Int = 0): DataFrame = {
@@ -929,25 +946,27 @@ object Similarity {
         .agg(transform(array_sort(collect_list(struct(col("d"), col("cx")))),
           s => s.getField("cx")).as("cv"))
     }
-    // corpus assignment: in-row argmin — the full-corpus stage is map-only
-    val cells = vecs.crossJoin(broadcast(centOneRow(cent)))
-      .select(col("vid").as("cid"), argminCell(col("v"), col("cents")).as("cell"))
     val q = queries.select(col(idCol).as("qid"), dvec(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("d2"), col("cc"))
-    val probes = q.crossJoin(broadcast(cent))
-      .select(col("qid"), col("cc"), ql2(col("qv"), col("cv")).as("d2"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe).select(col("qid"), col("cc").as("cell"))
-    val cands = probes.join(cells, "cell")
-      .filter(col("qid") =!= col("cid")).select("qid", "cid")
-    val dists = cands
-      .join(broadcast(q), "qid")
-      .join(vecs.select(col("vid").as("cid"), col("v").as("cv2")), "cid")
-      .select(col("qid"), col("cid"), ql2(col("qv"), col("cv2")).as("dist"))
     val wK = Window.partitionBy("qid").orderBy(col("dist"), col("cid"))
-    dists.withColumn("rank", row_number().over(wK)).filter(col("rank") <= k)
+    ivfScored(vecs, cent, q, nProbe)
+      .withColumn("rank", row_number().over(wK)).filter(col("rank") <= k)
       .select(col("qid"), col("cid"), col("dist"), col("rank").cast(IntegerType).as("rank"))
   }
+
+  /** The IVF candidate skeleton shared by [[ivfTopK]] and
+    * [[ivfProbeSweep]]: (qid, cid, rn, dist) for every corpus vector in
+    * one of its query's `nProbe` nearest cells (rn = that cell's probe
+    * rank), self-matches excluded. One map-only corpus scan — the cell
+    * and the distance are computed in-row, the probe rows broadcast —
+    * with no join back to the vectors by cid. */
+  private def ivfScored(vecs: DataFrame, cent: DataFrame, q: DataFrame,
+                        nProbe: Int): DataFrame =
+    vecs.crossJoin(broadcast(centOneRow(cent)))
+      .select(col("vid").as("cid"), argminCell(col("v"), col("cents")).as("cell"),
+        col("v"))
+      .join(broadcast(probeCells(q, cent, nProbe)), "cell")
+      .filter(col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), col("rn"), ql2(col("qv"), col("v")).as("dist"))
 
   /** Exact top-k by the SAME quantized squared-L2 the IVF family ranks
     * with — the ground-truth side of recall evaluation (bruteForceTopK
@@ -993,76 +1012,122 @@ object Similarity {
           least(lit(k.toLong), col("__d"))).as("recall"))
   }
 
+  // ---- the sweep frontier tail ---------------------------------------
+  // Every sweep below reduces to one scored candidate table — one row per
+  // (qid, cid) at the DEEPEST grid point, carrying the depth that admits
+  // it — and a membership predicate per grid point. The tail is shared:
+  // ONE window per qid (a total order; cid breaks every tie) carries a
+  // running member count per grid point, which for a member row IS its
+  // row_number() within that grid point; the exact truth rides the same
+  // window as rows of its own (no truth join); ONE global aggregation
+  // counts every grid point; the one-row result explodes into the
+  // frontier rows. No per-grid-point window, no pin, no
+  // (grid x candidates) fan-out.
+
+  /** `rows` plus, per grid point i, `__m{i}` (never-null membership) and
+    * `__r{i}` (the row's running member count under `order` within its
+    * qid — its rank within grid point i when `__m{i}` holds). */
+  private def gridRanks(rows: DataFrame, order: Seq[Column],
+                        members: Seq[Column]): DataFrame = {
+    val run = Window.partitionBy("qid").orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    rows.select(col("*") +: members.zipWithIndex.map { case (m, i) =>
+        coalesce(m, lit(false)).as(s"__m$i") }: _*)
+      .select(col("*") +: members.indices.map(i =>
+        count(when(col(s"__m$i"), 1)).over(run).as(s"__r$i")): _*)
+  }
+
+  /** n_scored per grid point of a [[gridRanks]] table, as `__s{i}`. */
+  private def scoredCounts(nPoints: Int): Seq[Column] =
+    (0 until nPoints).map(i => count(when(col(s"__m$i"), 1)).as(s"__s$i"))
+
+  /** `rows` plus the exact truth, as rows of their own: (qid, cid,
+    * `__t` = true), every candidate column null — so the truth rides the
+    * frontier window's one exchange instead of a join of its own. A truth
+    * row is a member of no grid point (its depth is null). */
+  private def withTruth(rows: DataFrame, exact: DataFrame): DataFrame =
+    rows.unionByName(exact.select(col("qid"), col("cid"), lit(true).as("__t")),
+      allowMissingColumns = true)
+
+  /** The one global aggregation of an exact-recall sweep over a
+    * [[gridRanks]] table that carries [[withTruth]] rows; one row: per
+    * grid point i, `__s{i}` (members) and `__h{i}` (members ranked <= k
+    * that the truth holds, counted with the truth's multiplicity — a
+    * duplicated truth row counts twice, as an inner join with the truth
+    * counts it), `extra` aggregates, and `n_denom` (per query, its truth
+    * rows capped at k, summed: the truth rows numbered within their qid,
+    * those numbered <= k counted). Both truth windows partition within
+    * the qid partitioning the rank window already has: no exchange. */
+  private def frontierCounts(ranked: DataFrame, nPoints: Int, k: Int,
+                             extra: Seq[Column] = Nil): DataFrame = {
+    val truthNo = Window.partitionBy("qid").orderBy(col("cid"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val flagged = ranked
+      .withColumn("__xm", count(when(col("__t"), 1)).over(Window.partitionBy("qid", "cid")))
+      .withColumn("__tn", count(when(col("__t"), 1)).over(truthNo))
+    val aggs = scoredCounts(nPoints) ++ (0 until nPoints).map(i =>
+      coalesce(sum(when(col(s"__m$i") && col(s"__r$i") <= k, col("__xm"))),
+        lit(0L)).as(s"__h$i")) ++ extra :+
+      count(when(col("__t") && col("__tn") <= k, 1)).as("n_denom")
+    flagged.agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** hits / n_denom, exact integers until one final IEEE division; an
+    * empty truth reads recall 1.0. */
+  private def microRecall(hit: Column): Column =
+    when(col("n_denom") === 0, lit(1.0))
+      .otherwise(hit.cast(DoubleType) / col("n_denom"))
+
+  /** The frontier rows off a one-row counts frame: one row per entry of
+    * `rows` (each entry the output columns of one requested grid point —
+    * a duplicated request keeps its duplicate row). */
+  private def gridRows(counts: DataFrame, rows: Seq[Seq[Column]]): DataFrame =
+    counts.select(explode(array(rows.map(r => struct(r: _*)): _*)).as("__g"))
+      .select("__g.*")
+
+  /** The one-knob frontier (ivfProbeSweep, ivfPqResidualSweep,
+    * binaryShortlistSweep): grid point d admits the rows with
+    * `depthCol` <= d; output (`key`, n_scored, n_hit, n_denom,
+    * recall_micro), one row per requested depth. */
+  private def depthFrontier(scored: DataFrame, order: Seq[Column],
+                            depthCol: String, key: String, depths: Seq[Int],
+                            k: Int, exact: DataFrame): DataFrame = {
+    val ds = depths.distinct
+    val counts = frontierCounts(gridRanks(withTruth(scored, exact), order,
+      ds.map(d => col(depthCol) <= d)), ds.size, k)
+    gridRows(counts, depths.map { d =>
+      val i = ds.indexOf(d)
+      Seq(lit(d).as(key), col(s"__s$i").as("n_scored"), col(s"__h$i").as("n_hit"),
+        col("n_denom"), microRecall(col(s"__h$i")).as("recall_micro"))
+    })
+  }
+
   /** Recall/cost frontier over IVF probe depths — the config-selection
     * query annRecallAtK enables: which nProbe do I deploy? One row per
     * probe depth with the numbers the choice trades off: n_scored (the
     * candidate distance evaluations the depth triggers — IVF's cost
     * axis) and micro-averaged recall@k against the exact ground truth.
     *
-    * Cost shape: cells assign once, the query-to-centroid ranking
-    * computes once up to max(nProbes), and every candidate carries the
-    * probe rank `rn` that reaches it — so each grid point is a FILTER
-    * (rn <= nProbe) over one pinned scored-candidate table, and the
-    * prebuilt exact side is shared. Recall is micro-averaged with exact
-    * integer sums (hits / sum of per-query denominators, one final IEEE
-    * division) — order-independent, engine-portable. Returns (n_probe,
-    * n_scored, n_hit, n_denom, recall_micro), one row per depth. */
+    * Cost shape: the [[ivfTopK]] candidate skeleton runs ONCE at
+    * max(nProbes) — one map-only corpus scan, each candidate tagged with
+    * the probe rank `rn` that reaches it — and the shared frontier tail
+    * derives every depth from it: one window per qid ranks the candidates
+    * by (dist, cid) with a running count per depth, one broadcast join
+    * flags the exact rows, one aggregation counts every depth. Recall is
+    * micro-averaged with exact integer sums (hits / sum of per-query
+    * denominators, one final IEEE division) — order-independent,
+    * engine-portable. Returns (n_probe, n_scored, n_hit, n_denom,
+    * recall_micro), one row per requested depth. */
   def ivfProbeSweep(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, nCells: Int, nProbes: Seq[Int], k: Int,
                     exact: DataFrame): DataFrame = {
     require(nProbes.nonEmpty && nProbes.forall(p => p >= 1 && p <= nCells),
       s"every probe depth must lie in [1, nCells=$nCells], got $nProbes")
-    import corpus.sparkSession.implicits._
     val vecs = graft.core.Tables.ensureParallelism(corpus)
       .select(col(idCol).as("vid"), dvec(col(vecCol)).as("v"))
-    val cent = coarseSeeds(vecs, nCells)
-    val cells = vecs.crossJoin(broadcast(centOneRow(cent)))
-      .select(col("vid").as("cid"), argminCell(col("v"), col("cents")).as("cell"))
     val q = queries.select(col(idCol).as("qid"), dvec(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("d2"), col("cc"))
-    val probes = q.crossJoin(broadcast(cent))
-      .select(col("qid"), col("cc"), ql2(col("qv"), col("cv")).as("d2"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbes.max)
-      .select(col("qid"), col("cc").as("cell"), col("rn"))
-    // each corpus vector lives in exactly ONE cell, so (qid, cid) occurs
-    // once, tagged with the probe rank that reaches it
-    val cands = probes.join(cells, "cell")
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), col("rn"))
-    // pinned: every grid point below re-reads this table (top-k + cost
-    // count per config) instead of re-scoring candidates
-    val scored = cands
-      .join(broadcast(q), "qid")
-      .join(vecs.select(col("vid").as("cid"), col("v").as("cv2")), "cid")
-      .select(col("qid"), col("cid"), col("rn"), ql2(col("qv"), col("cv2")).as("dist"))
-      .transform(graft.core.Materialize.pin)
-    val cfg = nProbes.toDF("n_probe")
-    val perCfg = scored.crossJoin(broadcast(cfg)).filter(col("rn") <= col("n_probe"))
-    val wK = Window.partitionBy("n_probe", "qid").orderBy(col("dist"), col("cid"))
-    val approx = perCfg.withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= k)
-      .select(col("n_probe"), col("qid"), col("cid"))
-    val ex = exact.select(col("qid"), col("cid"))
-    val hits = ex.join(approx, Seq("qid", "cid"))
-      .groupBy("n_probe").agg(count(lit(1)).as("n_hit"))
-    val nScored = perCfg.groupBy("n_probe").agg(count(lit(1)).as("n_scored"))
-    // coalesce: sum over an EMPTY ground truth is NULL, which would turn
-    // every recall into NULL instead of firing the vacuous n_denom=0
-    // branch below (the pairRecall monitor-safety rule)
-    val denom = exact.groupBy("qid").agg(count(lit(1)).as("__d"))
-      .agg(coalesce(sum(least(lit(k.toLong), col("__d"))), lit(0L))
-        .cast(LongType).as("n_denom"))
-    cfg.join(nScored, Seq("n_probe"), "left_outer")
-      .join(hits, Seq("n_probe"), "left_outer")
-      .crossJoin(broadcast(denom))
-      .select(col("n_probe"),
-        coalesce(col("n_scored"), lit(0L)).as("n_scored"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        col("n_denom"),
-        when(col("n_denom") === 0, lit(1.0))
-          .otherwise(coalesce(col("n_hit"), lit(0L)).cast(DoubleType) / col("n_denom"))
-          .as("recall_micro"))
+    depthFrontier(ivfScored(vecs, coarseSeeds(vecs, nCells), q, nProbes.max),
+      Seq(col("dist"), col("cid")), "rn", "n_probe", nProbes, k, exact)
   }
 
   /** The CHOICE the probe sweep exists to make: the cheapest depth
@@ -1098,13 +1163,8 @@ object Similarity {
     val cells = vecs.crossJoin(broadcast(centOneRow(cent)))
       .select(col("vid").as("cid"), argminCell(col("v"), col("cents")).as("cell"))
     val q = queries.select(col(idCol).as("qid"), dvec(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("d2"), col("cc"))
-    val probes = q.crossJoin(broadcast(cent))
-      .select(col("qid"), col("cc"), ql2(col("qv"), col("cv")).as("d2"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe).select(col("qid"), col("cc").as("cell"))
     // candidates: members of probed cells only — the IVF pruning
-    val cands = probes.join(cells, "cell")
+    val cands = cells.join(broadcast(probeCells(q, cent, nProbe).select("qid", "cell")), "cell")
       .filter(col("qid") =!= col("cid")).select("qid", "cid")
     // ADC: per-query (sub, centroid) distance table broadcasts; each
     // candidate's distance is the sum of its codes' table entries
@@ -1251,15 +1311,8 @@ object Similarity {
                               codes: DataFrame, queries: DataFrame,
                               idCol: String, vecCol: String, m: Int,
                               nProbe: Int, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), dvec(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("d2"), col("cc"))
-    val probes = q.crossJoin(broadcast(
-        cent.select(col("cc"), dvec(col("cv")).as("cv"))))
-      .select(col("qid"), col("qv"), col("cc"), col("cv"),
-        ql2(col("qv"), col("cv")).as("d2"))
-      .withColumn("rn", row_number().over(wProbe)).filter(col("rn") <= nProbe)
-      .select(struct(col("qid"), col("cc").as("cell")).as("qc"),
-        zip_with(col("qv"), col("cv"), (a, b) => a - b).as("qr"))
+    val probes = residualProbes(cent, queries, idCol, vecCol, nProbe)
+      .select(struct(col("qid"), col("cell")).as("qc"), col("qr"))
     val table = subvectors(probes, "qc", "qr", m)
       .join(broadcast(codebook), "sub")
       .select(col("vid.qid").as("qid"), col("vid.cell").as("cell"),
@@ -1276,6 +1329,28 @@ object Similarity {
       .select(col("qid"), col("cid"), col("adist"),
         col("rank").cast(IntegerType).as("rank"))
   }
+
+  /** (qid, cell, rn, qr) — each query's residual against each of its
+    * `nProbe` probed cells (rn = probe rank), ranked in-row; the probed
+    * centroid vector comes in by a broadcast join on cell. */
+  private def residualProbes(cent: DataFrame, queries: DataFrame, idCol: String,
+                             vecCol: String, nProbe: Int): DataFrame =
+    probeCells(queries.select(col(idCol).as("qid"), dvec(col(vecCol)).as("qv")),
+        cent, nProbe)
+      .join(broadcast(cent.select(col("cc").cast(LongType).as("cell"),
+        dvec(col("cv")).as("cv"))), "cell")
+      .select(col("qid"), col("cell"), col("rn"),
+        zip_with(col("qv"), col("cv"), (a, b) => a - b).as("qr"))
+
+  /** The distinct cells any query probes at depth `nProbe` — the static
+    * partition filter of the probe-index read paths, bounded by
+    * min(|queries| x nProbe, nCells) and collected to the driver. */
+  private def probedCellSet(queries: DataFrame, idCol: String, vecCol: String,
+                            cent: DataFrame, nProbe: Int): Seq[Long] =
+    probeCells(queries.select(col(idCol).as("qid"), dvec(col(vecCol)).as("qv")),
+        cent, nProbe)
+      .select(col("cell")).distinct()
+      .collect().map(_.getLong(0)).sorted.toSeq
 
   /** The production read path over a cell-PARTITIONED persisted codes
     * table (CorpusStreams.annReadOptimize layout): resolve the probed
@@ -1297,15 +1372,10 @@ object Similarity {
                               idCol: String, vecCol: String, cent: DataFrame,
                               codebook: DataFrame, m: Int, nProbe: Int,
                               k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), dvec(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("d2"), col("cc"))
-    val probedCells = q.crossJoin(broadcast(
-        cent.select(col("cc"), dvec(col("cv")).as("cv"))))
-      .select(col("qid"), col("cc"), ql2(col("qv"), col("cv")).as("d2"))
-      .withColumn("rn", row_number().over(wProbe)).filter(col("rn") <= nProbe)
-      .select(col("cc").cast(LongType)).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val pruned = spark.read.parquet(codesPath)
+    val probedCells = probedCellSet(queries, idCol, vecCol, cent, nProbe)
+    // the path is a committed data_vN dir or a run-scoped artifact —
+    // immutable, so its footer schema is inferred once per JVM
+    val pruned = graft.core.Tables.parquetStableSchema(spark, codesPath)
       .filter(col("cell").isin(probedCells: _*))
     residualAdcTopK(cent, codebook,
       pruned.select(col("cid"), col("cell"), col("codes")),
@@ -1322,9 +1392,11 @@ object Similarity {
     * recall here is NOT guaranteed monotone in depth — the FINAL ranking
     * is approximate, so a far cell's candidate with an optimistic ADC
     * distance can displace a true neighbor (measure it, don't assume
-    * it). Cost shape: cells rank once to max(nProbes), the ADC distance
-    * computes ONCE per max-depth candidate on a pinned table, and each
-    * depth is a filter + one bounded top-k window over it. Output
+    * it). Cost shape: each query ranks its cells in-row once to
+    * max(nProbes), the ADC distance computes ONCE per max-depth
+    * candidate (each tagged with its probe rank), and the shared frontier
+    * tail derives every depth — one window per qid by (adist, cid), one
+    * aggregation. Output
     * (n_probe, n_scored, n_hit, n_denom, recall_micro) — the exact
     * schema [[pickIvfConfig]] chooses from. */
   def ivfPqResidualSweep(codes: DataFrame, codebook: DataFrame,
@@ -1333,59 +1405,25 @@ object Similarity {
                          exact: DataFrame): DataFrame = {
     require(nProbes.nonEmpty && nProbes.forall(_ >= 1),
       s"probe depths must be positive, got $nProbes")
-    import queries.sparkSession.implicits._
-    val q = queries.select(col(idCol).as("qid"), dvec(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("d2"), col("cc"))
-    val probes = q.crossJoin(broadcast(
-        cent.select(col("cc"), dvec(col("cv")).as("cv"))))
-      .select(col("qid"), col("qv"), col("cc"), col("cv"),
-        ql2(col("qv"), col("cv")).as("d2"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbes.max)
-    val qrs = probes.select(struct(col("qid"), col("cc").as("cell")).as("qc"),
-      col("rn"), zip_with(col("qv"), col("cv"), (a, b) => a - b).as("qr"))
-    val table = subvectors(qrs.select(col("qc"), col("qr")), "qc", "qr", m)
+    val qrs = residualProbes(cent, queries, idCol, vecCol, nProbes.max)
+      .select(struct(col("qid"), col("cell"), col("rn")).as("qc"), col("qr"))
+    val table = subvectors(qrs, "qc", "qr", m)
       .join(broadcast(codebook), "sub")
       .select(col("vid.qid").as("qid"), col("vid.cell").as("cell"),
-        col("sub"), col("cc"), ql2(col("sv"), col("cv")).as("d2"))
-    val rnOf = qrs.select(col("qc.qid").as("qid"),
-      col("qc.cell").as("cell"), col("rn"))
+        col("vid.rn").as("rn"), col("sub"), col("cc"),
+        ql2(col("sv"), col("cv")).as("d2"))
     val codesEx = codes.select(col("cid"),
       col("cell").cast(LongType).as("cell"),
       posexplode(col("codes")).as(Seq("sub", "cc")))
     // each candidate lives in ONE cell, so (qid, cid) occurs once and
-    // carries the probe rank that reaches it; ADC computes once here
+    // carries the probe rank that reaches it (rn is a function of
+    // (qid, cell), so grouping by it splits nothing); ADC computes once
     val scored = codesEx.join(broadcast(table), Seq("cell", "sub", "cc"))
       .filter(col("qid") =!= col("cid"))
-      .groupBy("qid", "cell", "cid")
+      .groupBy("qid", "cell", "rn", "cid")
       .agg(vsum(col("d2")).as("adist"))
-      .join(broadcast(rnOf), Seq("qid", "cell"))
-      .select(col("qid"), col("cid"), col("adist"), col("rn"))
-      .transform(graft.core.Materialize.pin)
-    val cfg = nProbes.toDF("n_probe")
-    val perCfg = scored.crossJoin(broadcast(cfg))
-      .filter(col("rn") <= col("n_probe"))
-    val wK = Window.partitionBy("n_probe", "qid").orderBy(col("adist"), col("cid"))
-    val approx = perCfg.withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= k)
-      .select(col("n_probe"), col("qid"), col("cid"))
-    val hits = exact.select(col("qid"), col("cid"))
-      .join(approx, Seq("qid", "cid"))
-      .groupBy("n_probe").agg(count(lit(1)).as("n_hit"))
-    val nScored = perCfg.groupBy("n_probe").agg(count(lit(1)).as("n_scored"))
-    val denom = exact.groupBy("qid").agg(count(lit(1)).as("__d"))
-      .agg(coalesce(sum(least(lit(k.toLong), col("__d"))), lit(0L))
-        .cast(LongType).as("n_denom"))
-    cfg.join(nScored, Seq("n_probe"), "left_outer")
-      .join(hits, Seq("n_probe"), "left_outer")
-      .crossJoin(broadcast(denom))
-      .select(col("n_probe"),
-        coalesce(col("n_scored"), lit(0L)).as("n_scored"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        col("n_denom"),
-        when(col("n_denom") === 0, lit(1.0))
-          .otherwise(coalesce(col("n_hit"), lit(0L)).cast(DoubleType) / col("n_denom"))
-          .as("recall_micro"))
+    depthFrontier(scored, Seq(col("adist"), col("cid")), "rn", "n_probe",
+      nProbes, k, exact)
   }
 
   // ---- semantic dedup (SemDeDup: Abbas et al., arXiv:2303.09540) -------
@@ -1850,8 +1888,9 @@ object Similarity {
   /** Recall/cost frontier over binary-Hamming shortlist depths — the
     * config-selection sweep for the binary path, same contract as
     * ivfProbeSweep: Hamming ranks compute ONCE (they are depth-
-    * independent), the shortlist-capped candidates rerank per grid point
-    * off one pinned scored table, and each config reports
+    * independent), the exact cosine computes once per row of the
+    * deepest shortlist, and the shared frontier tail (one window per qid
+    * by (cosine desc, cid), one aggregation) gives each config
     * (n_scored, n_hit, n_denom, recall_micro) against the given exact
     * top-k. n_scored is the rerank work the config buys; on isotropic
     * data the frontier is shallow and the picker deepens the shortlist —
@@ -1863,7 +1902,6 @@ object Similarity {
                            exact: DataFrame): DataFrame = {
     require(shortlists.nonEmpty && shortlists.forall(_ >= 1),
       s"shortlist depths must be positive, got $shortlists")
-    import queries.sparkSession.implicits._
     val cw = codes.select(col(idCol).as("cid"), col("words").as("cw"))
     val qw = binaryQuantize(queries, idCol, vecCol, dims)
       .select(col(idCol).as("qid"), col("words").as("qw"))
@@ -1879,29 +1917,8 @@ object Similarity {
       .select(col("qid"), col("cid"), col("srn"),
         (qdot(col("qv"), col("cv")) / (qnorm(col("qv")) * qnorm(col("cv"))))
           .as("cosine"))
-      .transform(graft.core.Materialize.pin)
-    val cfg = shortlists.toDF("shortlist")
-    val perCfg = scored.crossJoin(broadcast(cfg)).filter(col("srn") <= col("shortlist"))
-    val wK = Window.partitionBy("shortlist", "qid").orderBy(desc("cosine"), col("cid"))
-    val approx = perCfg.withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= k)
-      .select(col("shortlist"), col("qid"), col("cid"))
-    val hits = exact.select(col("qid"), col("cid")).join(approx, Seq("qid", "cid"))
-      .groupBy("shortlist").agg(count(lit(1)).as("n_hit"))
-    val nScored = perCfg.groupBy("shortlist").agg(count(lit(1)).as("n_scored"))
-    val denom = exact.groupBy("qid").agg(count(lit(1)).as("__d"))
-      .agg(coalesce(sum(least(lit(k.toLong), col("__d"))), lit(0L))
-        .cast(LongType).as("n_denom"))
-    cfg.join(nScored, Seq("shortlist"), "left_outer")
-      .join(hits, Seq("shortlist"), "left_outer")
-      .crossJoin(broadcast(denom))
-      .select(col("shortlist"),
-        coalesce(col("n_scored"), lit(0L)).as("n_scored"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        col("n_denom"),
-        when(col("n_denom") === 0, lit(1.0))
-          .otherwise(coalesce(col("n_hit"), lit(0L)).cast(DoubleType) / col("n_denom"))
-          .as("recall_micro"))
+    depthFrontier(scored, Seq(desc("cosine"), col("cid")), "srn", "shortlist",
+      shortlists, k, exact)
   }
 
   /** The CHOICE the shortlist sweep exists to make: the cheapest depth
@@ -1960,23 +1977,31 @@ object Similarity {
                           vecCol: String, dims: Int, cent: DataFrame,
                           nProbe: Int): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
+    binaryIvfScored(codes, queries, idCol, vecCol, dims, cent, nProbe)
+      .select("qid", "cid", "hamming")
+  }
+
+  /** The binary-IVF candidate skeleton: (qid, cid, rn, hamming) over the
+    * codes of each query's `nProbe` nearest LEAF cells (rn = the cell's
+    * probe rank). Queries rank cells in-row; the probe rows — bounded at
+    * |queries| x nProbe, each carrying the query's packed words —
+    * broadcast against the codes on cell, and Hamming computes in-row:
+    * the codes side is one map-only scan. */
+  private def binaryIvfScored(codes: DataFrame, queries: DataFrame, idCol: String,
+                              vecCol: String, dims: Int, cent: DataFrame,
+                              nProbe: Int): DataFrame = {
     // probes rank LEAF cells only: after a hot-cell split the parent row
     // routes appends but stores nothing live — probing it would resurrect
     // the stale pre-split copies in old epochs as duplicate candidates
-    val leaves = leafCells(cent).select(col("cc"), col("cv"))
     val q = queries.select(col(idCol).as("qid"), dvec(col(vecCol)).as("qv"),
       packWords(col(vecCol), dims).as("qw"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("d2"), col("cc"))
-    val probes = q.crossJoin(broadcast(leaves))
-      .select(col("qid"), col("qw"), col("cc"), ql2(col("qv"), col("cv")).as("d2"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("qid"), col("qw"), col("cc").cast(LongType).as("cell"))
+    val probes = probeCells(q, leafCells(cent).select(col("cc"), col("cv")), nProbe)
+      .select(col("qid"), col("qw"), col("cell"), col("rn"))
     val cw = codes.select(col(idCol).as("cid"),
       col("cell").cast(LongType).as("cell"), col("words").as("cw"))
     broadcast(probes).join(cw, Seq("cell"))
       .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
+      .select(col("qid"), col("cid"), col("rn"),
         hammingDist(col("qw"), col("cw")).as("hamming"))
   }
 
@@ -2022,75 +2047,15 @@ object Similarity {
     * exact reranks the shortlist buys — the rerank-cost axis), and
     * micro recall@k against the given exact truth.
     *
-    * Cost shape: cells rank once up to max(nProbes), every candidate
-    * carries the probe rank `rn` that reaches it, Hamming AND rerank
-    * cosine compute ONCE on the pinned candidate table (the sweep
-    * evaluates sampled queries, so scoring the max-depth candidate set
-    * once beats rescoring per grid point), and each grid point is a
-    * filter + two bounded windows over that table. Returns (n_probe,
-    * shortlist, n_cand, n_scored, n_hit, n_denom, recall_micro). */
-  /** Shared grid-scoring tail of the binary-IVF sweeps ([[binaryIvfSweep]],
-    * [[fusedRrfSweep]]): from the pinned max-depth candidate table
-    * (qid, cid, rn, hamming) — rn = the probe rank that reaches the
-    * candidate's cell — derive every (n_probe, shortlist) grid point's
-    * shortlist rows WITHOUT re-sorting or re-scoring per grid point
-    * (r16; previously the candidate set exploded |nProbes|-way, each copy
-    * was window-sorted separately and the rerank cosine recomputed per
-    * copy — 3x the sort and cosine work for identical numbers).
-    *
-    *  - ONE sort per qid by (hamming, cid) — a total order: each
-    *    (qid, cid) occurs once, so cid breaks every tie — with, per probe
-    *    depth p, a running count of rn <= p rows. For a row with rn <= p
-    *    that running count IS row_number() within the rn <= p subset
-    *    under the same order, i.e. exactly the per-depth shortlist rank
-    *    the per-copy windows computed.
-    *  - the exact rerank cosine computes ONCE per (qid, cid) that enters
-    *    ANY grid point (before: once per probe depth reaching it).
-    *  - the grid explode happens on the <= |queries| x max(shortlist)
-    *    shortlist rows per depth, never on the candidate set.
-    *
-    * Returns (perPS, nCand): perPS = one row per (n_probe, shortlist,
-    * qid, cid) inside the grid point, with srn (the depth's shortlist
-    * rank) and the rerank cosine; nCand = (n_probe, n_cand) with the
-    * FULL stage-1 candidate count per depth (the scan-cost axis —
-    * counted off the candidate table's rn histogram, not the exploded
-    * copies). Row sets and values are bit-identical to the per-copy
-    * formulation; only the physical shape changed. */
-  private def sweepGridScores(cand: DataFrame, cv: DataFrame, qv: DataFrame,
-                              nProbes: Seq[Int], shortlists: Seq[Int])
-      : (DataFrame, DataFrame) = {
-    import cand.sparkSession.implicits._
-    val cfgP = nProbes.toDF("n_probe")
-    val cfgS = shortlists.toDF("shortlist")
-    val wQ = Window.partitionBy("qid").orderBy(col("hamming"), col("cid"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val srnCols = nProbes.map(p =>
-      sum(when(col("rn") <= p, 1L).otherwise(0L)).over(wQ).as(s"__srn_$p"))
-    val shortMax = shortlists.max
-    val kept = cand
-      .select(Seq(col("qid"), col("cid"), col("rn")) ++ srnCols: _*)
-      .filter(nProbes.map(p => col("rn") <= p && col(s"__srn_$p") <= shortMax)
-        .reduce(_ || _))
-    val scoredOnce = kept.join(cv, "cid").join(broadcast(qv), "qid")
-      .select(Seq(col("qid"), col("cid"), col("rn"),
-        (qdot(col("qv"), col("cv")) / (qnorm(col("qv")) * qnorm(col("cv"))))
-          .as("cosine")) ++ nProbes.map(p => col(s"__srn_$p")): _*)
-    val srnAt = nProbes.tail.foldLeft(
-      when(col("n_probe") === nProbes.head, col(s"__srn_${nProbes.head}"))) {
-      (acc, p) => acc.when(col("n_probe") === p, col(s"__srn_$p"))
-    }
-    val perPS = scoredOnce.crossJoin(broadcast(cfgP))
-      .filter(col("rn") <= col("n_probe"))
-      .select(col("n_probe"), col("qid"), col("cid"),
-        srnAt.as("srn"), col("cosine"))
-      .crossJoin(broadcast(cfgS))
-      .filter(col("srn") <= col("shortlist"))
-    val nCand = cand.groupBy("rn").agg(count(lit(1)).as("__c"))
-      .crossJoin(broadcast(cfgP)).filter(col("rn") <= col("n_probe"))
-      .groupBy("n_probe").agg(sum(col("__c")).as("n_cand"))
-    (perPS, nCand)
-  }
-
+    * Cost shape: the [[binaryIvfCandidates]] skeleton runs ONCE at
+    * max(nProbes) — Hamming in-row on one map-only codes scan, every
+    * candidate tagged with the probe rank `rn` that reaches it — and
+    * [[binaryIvfGrid]] derives the whole grid from it: one window per
+    * qid for the shortlist ranks, the rerank cosine once per row inside
+    * some grid point, one window per qid for the rerank ranks, then the
+    * shared frontier tail's one aggregation. Returns (n_probe,
+    * shortlist, n_cand, n_scored, n_hit, n_denom, recall_micro), one row
+    * per requested (n_probe, shortlist) pair. */
   def binaryIvfSweep(codes: DataFrame, vecs: DataFrame, queries: DataFrame,
                      idCol: String, vecCol: String, dims: Int, cent: DataFrame,
                      nProbes: Seq[Int], shortlists: Seq[Int], k: Int,
@@ -2099,63 +2064,75 @@ object Similarity {
       s"probe depths must be positive, got $nProbes")
     require(shortlists.nonEmpty && shortlists.forall(_ >= k),
       s"every shortlist must cover k=$k, got $shortlists")
-    import queries.sparkSession.implicits._
-    val leaves = leafCells(cent).select(col("cc"), col("cv"))
-    val q = queries.select(col(idCol).as("qid"), dvec(col(vecCol)).as("qv"),
-      packWords(col(vecCol), dims).as("qw"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("d2"), col("cc"))
-    val probes = q.crossJoin(broadcast(leaves))
-      .select(col("qid"), col("qw"), col("qv"), col("cc"),
-        ql2(col("qv"), col("cv")).as("d2"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbes.max)
-      .select(col("qid"), col("qw"), col("qv"),
-        col("cc").cast(LongType).as("cell"), col("rn"))
-    val cw = codes.select(col(idCol).as("cid"),
-      col("cell").cast(LongType).as("cell"), col("words").as("cw"))
+    val g = binaryIvfGrid(codes, vecs, queries, idCol, vecCol, dims, cent,
+      nProbes, shortlists, Some(exact))
+    gridRows(frontierCounts(g.ranked, g.points.size, k, g.nCand),
+      for (p <- nProbes; s <- shortlists) yield {
+        val i = g.points.indexOf((p, s))
+        Seq(lit(p).as("n_probe"), lit(s).as("shortlist"),
+          col(s"__c${g.depths.indexOf(p)}").as("n_cand"),
+          col(s"__s$i").as("n_scored"), col(s"__h$i").as("n_hit"),
+          col("n_denom"), microRecall(col(s"__h$i")).as("recall_micro"))
+      })
+  }
+
+  /** [[binaryIvfGrid]]'s result. `ranked` holds the candidate rows inside
+    * some grid point, with `__m{i}`/`__r{i}` ([[gridRanks]]) for entry i
+    * of `points`; `nCand` aggregates n_cand over it as `__c{j}` for probe
+    * depth `depths(j)`. */
+  private case class BinaryIvfGrid(ranked: DataFrame, depths: Seq[Int],
+                                   points: Seq[(Int, Int)], nCand: Seq[Column])
+
+  /** The (nProbe, shortlist) grid of the binary-IVF sweeps
+    * ([[binaryIvfSweep]], [[fusedRrfSweep]]) off ONE candidate pass at
+    * max(nProbes):
+    *  - stage 1: one window per qid by (hamming, cid) — a total order:
+    *    each (qid, cid) occurs once, so cid breaks every tie — carries,
+    *    per probe depth p, the running count of rn <= p rows (for a row
+    *    with rn <= p that IS its shortlist rank at depth p) and the
+    *    query's total rn <= p count (its n_cand, summed off each query's
+    *    first row). Rows outside every depth's deepest shortlist drop;
+    *  - the exact rerank cosine computes ONCE per surviving row. The
+    *    vectors join LEFT: a code id missing from `vecs` keeps its
+    *    shortlist slot and its n_cand count but is never reranked (and a
+    *    truth row of a query outside `queries` still counts in n_denom);
+    *  - stage 2: [[gridRanks]] by (cosine desc, cid), grid point (p, s)
+    *    = rows with rn <= p, shortlist rank at p <= s, and a cosine.
+    * `truth` rows ([[withTruth]]) join at the stage-1 input, so they
+    * share its exchange; they pass both stages as members of nothing. */
+  private def binaryIvfGrid(codes: DataFrame, vecs: DataFrame, queries: DataFrame,
+                            idCol: String, vecCol: String, dims: Int,
+                            cent: DataFrame, nProbes: Seq[Int],
+                            shortlists: Seq[Int],
+                            truth: Option[DataFrame]): BinaryIvfGrid = {
+    val ps = nProbes.distinct
+    val points = for (p <- ps; s <- shortlists.distinct) yield (p, s)
+    val w1 = Window.partitionBy("qid").orderBy(col("hamming"), col("cid"))
+    val run = w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val whole = w1.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    def inDepth(j: Int): Column = when(col("rn") <= ps(j), 1)
+    val cand = binaryIvfScored(codes, queries, idCol, vecCol, dims, cent, ps.max)
+    val stage1 = truth.fold(cand)(withTruth(cand, _))
+      .select(Seq(col("*"), (count(lit(1)).over(run) === 1).as("__first")) ++
+        ps.indices.flatMap(j => Seq(count(inDepth(j)).over(run).as(s"__srn$j"),
+          count(inDepth(j)).over(whole).as(s"__qc$j"))): _*)
+      // kept: each query's first row (it carries n_cand), every truth row
+      // (null rn), and the rows inside some depth's deepest shortlist
+      .filter(ps.indices.map(j => col("rn") <= ps(j) && col(s"__srn$j") <= shortlists.max)
+        .foldLeft(col("__first") || col("rn").isNull)(_ || _))
     val cv = vecs.select(col(idCol).as("cid"), dvec(col(vecCol)).as("cv"))
-    // each corpus vector lives in ONE cell, so (qid, cid) occurs once,
-    // tagged with the probe rank that reaches it; hamming (cheap integer
-    // fold) computes here for every candidate — that IS n_cand — but
-    // the exact rerank cosine is deferred until after the shortlist
-    // windows, because only rows inside SOME (n_probe, shortlist) grid
-    // point ever need one: at most |nProbes| x max(shortlists) x
-    // |queries| rows rerank, not the max-depth candidate set (the same
-    // prune-before-cosine shape as binaryShortlistSweep)
-    val cand = broadcast(probes.drop("qv")).join(cw, Seq("cell"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), col("rn"),
-        hammingDist(col("qw"), col("cw")).as("hamming"))
-      .transform(graft.core.Materialize.pin)
-    val cfgP = nProbes.toDF("n_probe")
-    val cfgS = shortlists.toDF("shortlist")
     val qv = queries.select(col(idCol).as("qid"), dvec(col(vecCol)).as("qv"))
-    val (perPS, nCand) = sweepGridScores(cand, cv, qv, nProbes, shortlists)
-    val wK = Window.partitionBy("n_probe", "shortlist", "qid")
-      .orderBy(desc("cosine"), col("cid"))
-    val approx = perPS.withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= k)
-      .select(col("n_probe"), col("shortlist"), col("qid"), col("cid"))
-    val nScored = perPS.groupBy("n_probe", "shortlist").agg(count(lit(1)).as("n_scored"))
-    val hits = exact.select(col("qid"), col("cid"))
-      .join(approx, Seq("qid", "cid"))
-      .groupBy("n_probe", "shortlist").agg(count(lit(1)).as("n_hit"))
-    val denom = exact.groupBy("qid").agg(count(lit(1)).as("__d"))
-      .agg(coalesce(sum(least(lit(k.toLong), col("__d"))), lit(0L))
-        .cast(LongType).as("n_denom"))
-    cfgP.crossJoin(cfgS)
-      .join(nCand, Seq("n_probe"), "left_outer")
-      .join(nScored, Seq("n_probe", "shortlist"), "left_outer")
-      .join(hits, Seq("n_probe", "shortlist"), "left_outer")
-      .crossJoin(broadcast(denom))
-      .select(col("n_probe"), col("shortlist"),
-        coalesce(col("n_cand"), lit(0L)).as("n_cand"),
-        coalesce(col("n_scored"), lit(0L)).as("n_scored"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        col("n_denom"),
-        when(col("n_denom") === 0, lit(1.0))
-          .otherwise(coalesce(col("n_hit"), lit(0L)).cast(DoubleType) / col("n_denom"))
-          .as("recall_micro"))
+    val scored = stage1.join(cv, Seq("cid"), "left_outer")
+      .join(broadcast(qv), Seq("qid"), "left_outer")
+      .withColumn("cosine",
+        qdot(col("qv"), col("cv")) / (qnorm(col("qv")) * qnorm(col("cv"))))
+      .drop("qv", "cv")
+    val ranked = gridRanks(scored, Seq(desc("cosine"), col("cid")),
+      points.map { case (p, s) =>
+        col("rn") <= p && col(s"__srn${ps.indexOf(p)}") <= s && col("cosine").isNotNull
+      })
+    BinaryIvfGrid(ranked, ps, points, ps.indices.map(j =>
+      coalesce(sum(when(col("__first"), col(s"__qc$j"))), lit(0L)).as(s"__c$j")))
   }
 
   /** The CHOICE the 2D sweep exists to make: the cheapest grid point
@@ -2164,6 +2141,11 @@ object Similarity {
     * corpus scale), then stage-2 reranks, then (n_probe, shortlist) for
     * determinism. One row, or none when nothing qualifies (re-sweep
     * deeper/wider — never deploy the best loser). */
+  def pickBinaryIvfConfig(sweep: DataFrame, minRecall: Double): DataFrame =
+    sweep.filter(col("recall_micro") >= minRecall)
+      .orderBy(col("n_cand"), col("n_scored"), col("n_probe"), col("shortlist"))
+      .limit(1)
+
   /** Fused-recall sweep over the binary-IVF (nProbe, shortlist) grid —
     * the calibration the hybrid-RRF consumer deploys from. The round-13
     * measurement showed a sweep's PER-ARM recall floor does not survive
@@ -2197,49 +2179,25 @@ object Similarity {
     require(armK >= 1 && kRrf >= 1 && topK >= 1,
       s"armK/kRrf/topK must be positive, got $armK/$kRrf/$topK")
     import queries.sparkSession.implicits._
-    // ---- the arm per grid point: binaryIvfSweep's pinned-candidate
-    // shape (cells rank once, Hamming once, rerank cosine only inside
-    // some grid point)
-    val leaves = leafCells(cent).select(col("cc"), col("cv"))
-    val q = queries.select(col(idCol).as("qid"), dvec(col(vecCol)).as("qv"),
-      packWords(col(vecCol), dims).as("qw"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("d2"), col("cc"))
-    val probes = q.crossJoin(broadcast(leaves))
-      .select(col("qid"), col("qw"), col("cc"),
-        ql2(col("qv"), col("cv")).as("d2"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbes.max)
-      .select(col("qid"), col("qw"),
-        col("cc").cast(LongType).as("cell"), col("rn"))
-    val cw = codes.select(col(idCol).as("cid"),
-      col("cell").cast(LongType).as("cell"), col("words").as("cw"))
-    val cv = vecs.select(col(idCol).as("cid"), dvec(col(vecCol)).as("cv"))
-    val cand = broadcast(probes).join(cw, Seq("cell"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), col("rn"),
-        hammingDist(col("qw"), col("cw")).as("hamming"))
-      .transform(graft.core.Materialize.pin)
-    val cfgP = nProbes.toDF("n_probe")
-    val cfgS = shortlists.toDF("shortlist")
-    val qv = queries.select(col(idCol).as("qid"), dvec(col(vecCol)).as("qv"))
-    val (perPS, nCand) = sweepGridScores(cand, cv, qv, nProbes, shortlists)
-    val wA = Window.partitionBy("n_probe", "shortlist", "qid")
-      .orderBy(desc("cosine"), col("cid"))
-    // pinned: configs x queries x armK rows — and the pin keeps the
-    // fusion layers below from stacking Catalyst recursion on top of the
-    // whole sweep plan (the unpinned composition overflowed the driver
-    // stack at analysis time)
-    val arm = graft.core.Materialize.pin(
-      perPS.withColumn("rank", row_number().over(wA).cast(IntegerType))
-        .filter(col("rank") <= armK)
-        .select(col("n_probe"), col("shortlist"), col("qid"),
-          col("cid").as("doc_id"), col("rank")))
+    // ---- the arm per grid point: binaryIvfSweep's grid, its rows ranked
+    // <= armK read off the same windowed table
+    val g = binaryIvfGrid(codes, vecs, queries, idCol, vecCol, dims, cent,
+      nProbes, shortlists, None)
+    val arm = g.ranked
+      .select(col("qid"), col("cid"), explode(array(g.points.zipWithIndex.map {
+        case ((p, s), i) => when(col(s"__m$i") && col(s"__r$i") <= armK,
+          struct(lit(p).as("n_probe"), lit(s).as("shortlist"),
+            col(s"__r$i").cast(IntegerType).as("rank")))
+      }: _*)).as("__a"))
+      .filter(col("__a").isNotNull)
+      .select(col("__a.n_probe").as("n_probe"), col("__a.shortlist").as("shortlist"),
+        col("qid"), col("cid").as("doc_id"), col("__a.rank").as("rank"))
     // ---- fusion per (grid point, query): quantized rrf sum, ties
     // (rrf desc, doc_id) — the rrfFuse arithmetic inlined so one plan
     // fuses every grid point
     def contrib(rank: Column): Column =
       lit(1.0) / (lit(kRrf).cast(DoubleType) + rank.cast(DoubleType))
-    val cq = cfgP.crossJoin(cfgS)
+    val cq = g.points.toDF("n_probe", "shortlist")
       .crossJoin(queries.select(col(idCol).as("qid")))
     val fc = cq.join(broadcast(lex.select(col("doc_id"),
           contrib(col("rank")).as("contrib"))), // shared lex arm, every (cfg, qid)
@@ -2250,13 +2208,12 @@ object Similarity {
         col("doc_id"), contrib(col("rank")).as("contrib")))
     val wF = Window.partitionBy("n_probe", "shortlist", "qid")
       .orderBy(desc("rrf"), col("doc_id"))
-    val ftop = graft.core.Materialize.pin(
-      fc.groupBy(col("n_probe"), col("shortlist"), col("qid"),
+    val ftop = fc.groupBy(col("n_probe"), col("shortlist"), col("qid"),
           col("doc_id"))
         .agg(vsum(col("contrib")).as("rrf"))
         .withColumn("rk", row_number().over(wF))
         .filter(col("rk") <= topK)
-        .select(col("n_probe"), col("shortlist"), col("qid"), col("doc_id")))
+        .select(col("n_probe"), col("shortlist"), col("qid"), col("doc_id"))
     // ---- the exact-dense fusion truth per query
     val xc = queries.select(col(idCol).as("qid"))
       .join(broadcast(lex.select(col("doc_id"),
@@ -2265,33 +2222,28 @@ object Similarity {
       .unionByName(exactArm.select(col("qid"), col("cid").as("doc_id"),
         contrib(col("rank")).as("contrib")))
     val wX = Window.partitionBy("qid").orderBy(desc("rrf"), col("doc_id"))
-    val xtop = graft.core.Materialize.pin(
-      xc.groupBy(col("qid"), col("doc_id"))
+    val xtop = xc.groupBy(col("qid"), col("doc_id"))
         .agg(vsum(col("contrib")).as("rrf"))
         .withColumn("rk", row_number().over(wX))
         .filter(col("rk") <= topK)
-        .select(col("qid"), col("doc_id")))
-    // ---- frontier
-    val nScored = perPS.groupBy("n_probe", "shortlist")
-      .agg(count(lit(1)).as("n_scored"))
+        .select(col("qid"), col("doc_id"))
+    // ---- frontier: the cost axes from one aggregation over the grid,
+    // the fused hits from the overlap of the two fusions
     val hits = ftop.join(xtop, Seq("qid", "doc_id"))
       .groupBy("n_probe", "shortlist").agg(count(lit(1)).as("n_hit"))
-    val denom = xtop.groupBy(col("qid")).agg(count(lit(1)).as("__d"))
-      .agg(coalesce(sum(least(lit(topK.toLong), col("__d"))), lit(0L))
-        .cast(LongType).as("n_denom"))
-    cfgP.crossJoin(cfgS)
-      .join(nCand, Seq("n_probe"), "left_outer")
-      .join(nScored, Seq("n_probe", "shortlist"), "left_outer")
+    val counts = g.ranked.agg(g.nCand.head,
+      g.nCand.tail ++ scoredCounts(g.points.size): _*)
+    gridRows(counts, for (p <- nProbes; s <- shortlists) yield
+        Seq(lit(p).as("n_probe"), lit(s).as("shortlist"),
+          col(s"__c${g.depths.indexOf(p)}").as("n_cand"),
+          col(s"__s${g.points.indexOf((p, s))}").as("n_scored")))
       .join(hits, Seq("n_probe", "shortlist"), "left_outer")
-      .crossJoin(broadcast(denom))
-      .select(col("n_probe"), col("shortlist"),
-        coalesce(col("n_cand"), lit(0L)).as("n_cand"),
-        coalesce(col("n_scored"), lit(0L)).as("n_scored"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        col("n_denom"),
-        when(col("n_denom") === 0, lit(1.0))
-          .otherwise(coalesce(col("n_hit"), lit(0L)).cast(DoubleType) / col("n_denom"))
-          .as("fused_recall"))
+      .crossJoin(broadcast(xtop.groupBy("qid").agg(count(lit(1)).as("__d"))
+        .agg(coalesce(sum(least(lit(topK.toLong), col("__d"))), lit(0L))
+          .cast(LongType).as("n_denom"))))
+      .select(col("n_probe"), col("shortlist"), col("n_cand"), col("n_scored"),
+        coalesce(col("n_hit"), lit(0L)).as("n_hit"), col("n_denom"),
+        microRecall(coalesce(col("n_hit"), lit(0L))).as("fused_recall"))
   }
 
   /** The CHOICE the fused sweep exists to make: the cheapest grid point
@@ -2302,11 +2254,6 @@ object Similarity {
     * the best loser). */
   def pickFusedRrfConfig(sweep: DataFrame, minFusedRecall: Double): DataFrame =
     sweep.filter(col("fused_recall") >= minFusedRecall)
-      .orderBy(col("n_cand"), col("n_scored"), col("n_probe"), col("shortlist"))
-      .limit(1)
-
-  def pickBinaryIvfConfig(sweep: DataFrame, minRecall: Double): DataFrame =
-    sweep.filter(col("recall_micro") >= minRecall)
       .orderBy(col("n_cand"), col("n_scored"), col("n_probe"), col("shortlist"))
       .limit(1)
 
@@ -2327,15 +2274,11 @@ object Similarity {
                           idCol: String, vecCol: String, dims: Int,
                           cent: DataFrame, nProbe: Int, shortlist: Int,
                           k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), dvec(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("d2"), col("cc"))
-    val probedCells = q.crossJoin(broadcast(leafCells(cent).select(col("cc"), col("cv"))))
-      .select(col("qid"), col("cc"), ql2(col("qv"), col("cv")).as("d2"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("cc").cast(LongType)).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val pruned = spark.read.parquet(indexPath)
+    val probedCells = probedCellSet(queries, idCol, vecCol,
+      leafCells(cent).select(col("cc"), col("cv")), nProbe)
+    // the path is a committed data_vN dir or a run-scoped artifact —
+    // immutable, so its footer schema is inferred once per JVM
+    val pruned = graft.core.Tables.parquetStableSchema(spark, indexPath)
       .filter(col("cell").isin(probedCells: _*))
     binaryIvfProbeTopK(
       pruned.select(col(idCol), col("cell"), col("words")),

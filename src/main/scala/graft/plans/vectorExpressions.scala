@@ -112,9 +112,7 @@ case class SignLshBucketExpr(child: Expression, nBits: Int)
 case class ArgminCellExpr(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
-  override def inputTypes = Seq[DataType](ArrayType(DoubleType),
-    ArrayType(StructType(Seq(StructField("cc", LongType),
-      StructField("cv", ArrayType(DoubleType))))))
+  override def inputTypes = ArgminCellExpr.InputTypes
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "argmin_cell"
 
@@ -129,6 +127,11 @@ case class ArgminCellExpr(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 object ArgminCellExpr {
+  /** (vector, one-row centroid array) — shared with [[NearestCellsExpr]]. */
+  val InputTypes: Seq[DataType] = Seq(ArrayType(DoubleType),
+    ArrayType(StructType(Seq(StructField("cc", LongType),
+      StructField("cv", ArrayType(DoubleType))))))
+
   def argmin(v: ArrayData, cents: ArrayData): Long = {
     val n = cents.numElements()
     var bestD2 = Double.MaxValue
@@ -142,6 +145,51 @@ object ArgminCellExpr {
       i += 1
     }
     bestCc
+  }
+}
+
+/** The `n` nearest centroid ids for one vector, nearest first — the IVF
+  * probe-ranking kernel. Same one-row centroid array and the same
+  * (d2, cc) order as [[ArgminCellExpr]] (d2 the DIVIDED double), so
+  * element 0 is the argmin cell and element i-1 is the cell a
+  * `row_number() OVER (PARTITION BY query ORDER BY d2, cc)` window ranks
+  * i-th. Ranking in-row replaces that per-query window — and its
+  * shuffle — on the query side of every probe. */
+case class NearestCellsExpr(left: Expression, right: Expression, n: Int)
+    extends BinaryExpression with ExpectsInputTypes {
+  require(n >= 1, "n nearest cells must be >= 1")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def inputTypes = ArgminCellExpr.InputTypes
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "nearest_cells"
+
+  override protected def nullSafeEval(v: Any, cents: Any): Any =
+    NearestCellsExpr.nearest(v.asInstanceOf[ArrayData], cents.asInstanceOf[ArrayData], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (v, c) =>
+      "graft.plans.NearestCellsExpr$.MODULE$.nearest(" + v + ", " + c + ", " + n + ")")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): NearestCellsExpr =
+    copy(left = l, right = r)
+}
+object NearestCellsExpr {
+  def nearest(v: ArrayData, cents: ArrayData, n: Int):
+      org.apache.spark.sql.catalyst.util.GenericArrayData = {
+    val c = cents.numElements()
+    val d2 = new Array[Double](c)
+    val cc = new Array[Long](c)
+    var i = 0
+    while (i < c) {
+      val row = cents.getStruct(i, 2)
+      cc(i) = row.getLong(0)
+      d2(i) = QuantizedVec.l2Sum(v, row.getArray(1)) / QuantizedVec.Scale
+      i += 1
+    }
+    val order = (0 until c).sortWith((a, b) =>
+      d2(a) < d2(b) || (d2(a) == d2(b) && cc(a) < cc(b)))
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      order.take(n).map(j => cc(j): Any).toArray)
   }
 }
 

@@ -1206,10 +1206,10 @@ object VectorQueries {
     // The 2D config sweep for the cell-pruned family — (nProbe,
     // shortlist) trade stage-1 Hamming evaluations (n_cand, the
     // scan-cost axis) and stage-2 exact reranks (n_scored) against
-    // recall@10; cells rank once, hamming and rerank cosine compute once
-    // on the pinned max-depth candidate table, and each grid point is a
-    // filter + two bounded windows. Completes the sweep->floor->choice
-    // loop every other index family carries.
+    // recall@10; cells rank once (in-row), hamming and rerank cosine
+    // compute once per max-depth candidate, and one aggregation counts
+    // every grid point (Similarity's shared frontier tail). Completes the
+    // sweep->floor->choice loop every other index family carries.
     QueryDef(
       "q_binary_ivf_sweep",
       "binary-IVF 2D sweep: stage-1/stage-2 cost and recall@10 over probes 2/4/8 x shortlists 25/50",
@@ -1439,8 +1439,9 @@ object VectorQueries {
     // Recall/cost frontier over binary-Hamming shortlist depths — the
     // binary path's config-selection sweep, completing the same
     // sweep->floor->choice loop as LSH bands and IVF probes: Hamming
-    // ranks are depth-independent and compute once; each grid point is a
-    // filter + rerank over one pinned scored table.
+    // ranks are depth-independent and compute once; the rerank cosine
+    // computes once per max-depth shortlist row, and one aggregation
+    // counts every depth.
     QueryDef(
       "q_binary_sweep",
       "binary ANN shortlist sweep: rerank cost and recall@10 at depths 25/50/100/200",
@@ -1817,8 +1818,8 @@ object VectorQueries {
     // the frontier a config choice reads (candidate distance
     // evaluations vs micro-averaged recall@10 against the persisted
     // exact truth). Cells assign once, the probe ranking computes once
-    // to max depth, and every grid point is a filter over one pinned
-    // scored-candidate table.
+    // (in-row) to max depth, and one window + one aggregation over the
+    // max-depth candidates give every grid point.
     QueryDef(
       "q_ivf_sweep",
       "IVF probe-depth recall/cost frontier: scored candidates + micro recall@10 per nProbe",

@@ -64,8 +64,11 @@ object CorpusStreams {
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val spark = batch0.sparkSession
-        def tableOr(path: String, empty: => DataFrame): DataFrame =
-          scala.util.Try(EtlCli.readEpochTable(spark, path)).getOrElse(empty)
+        // the sink reads back tables it writes, so `empty` carries their
+        // schema: the read skips footer inference (one job per table)
+        def tableOr(path: String, empty: DataFrame): DataFrame =
+          scala.util.Try(EtlCli.readEpochTable(spark, path, schema = Some(empty.schema)))
+            .getOrElse(empty)
         val batch = batch0.select(col(idCol), col(textCol))
         val corpus = tableOr(corpusPath, batch.limit(0))
         val corpusBands = tableOr(indexPath,
@@ -164,8 +167,11 @@ object CorpusStreams {
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val spark = batch0.sparkSession
         import graft.core.Materialize.pin
-        def tableOr(path: String, empty: => DataFrame): DataFrame =
-          scala.util.Try(EtlCli.readEpochTable(spark, path)).getOrElse(empty)
+        // the sink reads back tables it writes, so `empty` carries their
+        // schema: the read skips footer inference (one job per table)
+        def tableOr(path: String, empty: DataFrame): DataFrame =
+          scala.util.Try(EtlCli.readEpochTable(spark, path, schema = Some(empty.schema)))
+            .getOrElse(empty)
         // fencepost guard: corpus epoch=batchId committed ⇒ this batch
         // fully committed on a previous attempt — replay is a no-op (see
         // the scaladoc; recomputing here would overwrite the epoch with

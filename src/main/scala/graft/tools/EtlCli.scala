@@ -4,7 +4,7 @@ import graft.core.Graft
 import graft.operators.{Audit, CorpusPipeline, Export, MarvelTransform, Relational}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** The reference's ETL CLI (`python -m etl.etl {initdb,marvel,quality,
   * stats}` — starter:etl/etl.py:70-93) rebuilt on the Spark engine over a
@@ -1568,9 +1568,12 @@ object EtlCli {
   /** Read the union of every committed epoch of the table at `path` (the
     * epoch-partitioned analog of readTable): the newest compaction's
     * folded data, plus every epoch appended after it. Errors when no epoch
-    * has ever committed. */
+    * has ever committed. A caller that knows the table's `schema` (a sink
+    * reading back what it writes) passes it: the read then skips Spark's
+    * footer schema inference, which is a job of its own. */
   def readEpochTable(spark: SparkSession, path: String,
-                     mergeSchema: Boolean = false): DataFrame = {
+                     mergeSchema: Boolean = false,
+                     schema: Option[StructType] = None): DataFrame = {
     val compacted = epochsCompactedThrough(spark, path).map { e =>
       val p = s"$path/compact=$e"
       s"$p/data_v${committedVersion(spark, p).get}"
@@ -1584,8 +1587,9 @@ object EtlCli {
     // max_cell_share mid-stream) where the default pick-one-footer schema
     // would make column visibility depend on which epoch's file wins;
     // indexes stay on the cheap path — their schema never evolves
-    spark.read.format(sniffFormat(spark, dirs.head))
-      .option("mergeSchema", mergeSchema.toString).load(dirs: _*)
+    val reader = spark.read.format(sniffFormat(spark, dirs.head))
+      .option("mergeSchema", mergeSchema.toString)
+    schema.fold(reader)(reader.schema).load(dirs: _*)
   }
 
   /** [[readEpochTable]] with each row tagged by the ingest epoch it
