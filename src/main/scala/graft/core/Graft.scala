@@ -177,9 +177,9 @@ object Tables {
 
   /** Read a parquet path whose SCHEMA is stable for the life of this JVM
     * (the immutable test corpus; run-scoped artifacts that rewrite bytes
-    * but never shape). Epoch logs and other schema-EVOLVING tables must
-    * not come through here — they read with mergeSchema in their own
-    * families. */
+    * but never shape). Epoch logs, whose file set grows with every
+    * commit, must not come through here — they read through
+    * `EtlCli.readEpochTable`. */
   def parquetStableSchema(spark: SparkSession, path: String): DataFrame = {
     val schema = schemaMemo.computeIfAbsent(path,
       p => spark.read.parquet(p).schema)

@@ -241,22 +241,19 @@ object CorpusStreams {
           // re-signs the committed corpus under the new config — one
           // O(corpus) pass, amortized over the config's lifetime — probes
           // against the re-signed bands, and appends them with its own
-          // epoch so later batches probe the refreshed index. A legacy
-          // index without a marker is treated as signed under `cfg`.
+          // epoch so later batches probe the refreshed index. An index
+          // without a marker (only a sweep-wired sink writes one) is
+          // treated as signed under `cfg`.
           val cfgMarkerPath = s"$indexPath/_signcfg"
           // the marker carries shingle k too: bands signed at a different
           // k can never collide with the index's, exactly like a
           // band-size change — a k change must trigger the same corpus
-          // re-sign (legacy markers without the column read as cfg's k)
+          // re-sign
           val idxCfg: Option[(Int, Int, Int)] =
             scala.util.Try(EtlCli.readTable(spark, cfgMarkerPath)).toOption
-              .flatMap { m =>
-                val kc = if (m.columns.contains("shingle_k"))
-                  col("shingle_k").cast("int") else lit(cfg.shingleK)
-                m.select(col("band_size").cast("int"),
-                    col("num_hashes").cast("int"), kc)
-                  .collect().headOption.map(r => (r.getInt(0), r.getInt(1), r.getInt(2)))
-              }
+              .flatMap(_.select(col("band_size").cast("int"),
+                  col("num_hashes").cast("int"), col("shingle_k").cast("int"))
+                .collect().headOption.map(r => (r.getInt(0), r.getInt(1), r.getInt(2))))
           val configChanged =
             EtlCli.committedEpochs(spark, indexPath).nonEmpty &&
               idxCfg.getOrElse((cfg.bandSize, cfg.numHashes, cfg.shingleK)) !=
@@ -433,32 +430,6 @@ object CorpusStreams {
     corpusWins.result() ++ parent.keys.toSeq.filter(x => find(x) != x)
   }
 
-  /** Streaming ANN-index sink — the ANN analog of incrementalDedupSink:
-    * each micro-batch of (idCol, vecCol) embeddings encodes against the
-    * PERSISTED coarse centroids + residual PQ codebook (map-only: in-row
-    * argmin cell assignment + in-row code argmin — no retraining, no
-    * shuffle) and appends its (cid, cell, codes) as its own epoch
-    * partition of the codes table: O(|batch|) compute AND commit I/O per
-    * increment.
-    *
-    * `centroidsPath`/`codebookPath` hold the day-0 artifacts
-    * (Similarity.coarseCentroids + ivfPqResidualBuild's codebook,
-    * committed via EtlCli.writeTable). They are pinned by design:
-    * re-deriving hash-rank seeds over the grown corpus would shift the
-    * seed set and silently invalidate every stored cell assignment —
-    * retrain and re-encode explicitly when the quantizer should move.
-    * "When" is a measurement, not a guess: quantizerDriftStats against
-    * the day-0 baseline instruments this family's pinned centroids the
-    * same way binaryIvfIndexSinkWithDrift instruments the binary one.
-    *
-    * Replay safety: codes are a pure function of (centroids, codebook,
-    * vector), so a replayed batch re-appends ITS OWN epoch idempotently
-    * (appendEpoch replaces that one epoch) — at-least-once delivery
-    * yields exactly-once table state with no replay anti-join. Vector
-    * ids are assumed unique across batches (the embedding pipeline's
-    * contract); a violation yields duplicate rows with IDENTICAL codes,
-    * never divergent ones.
-    */
   /** Streaming BINARY index maintenance — the trained-artifact-free
     * sibling of annIndexSink: each micro-batch sign-packs its vectors
     * (binaryIndexBuild — map-only, no quantizer to couple to) and
@@ -819,6 +790,32 @@ object CorpusStreams {
       "retrain-ivfpq moves centroids and codebook together; encoding " +
         "against a mismatched pair would store garbage codes silently")
 
+  /** Streaming ANN-index sink — the ANN analog of incrementalDedupSink:
+    * each micro-batch of (idCol, vecCol) embeddings encodes against the
+    * PERSISTED coarse centroids + residual PQ codebook (map-only: in-row
+    * argmin cell assignment + in-row code argmin — no retraining, no
+    * shuffle) and appends its (cid, cell, codes) as its own epoch
+    * partition of the codes table: O(|batch|) compute AND commit I/O per
+    * increment.
+    *
+    * `centroidsPath`/`codebookPath` hold the day-0 artifacts
+    * (Similarity.coarseCentroids + ivfPqResidualBuild's codebook,
+    * committed via EtlCli.writeTable). They are pinned by design:
+    * re-deriving hash-rank seeds over the grown corpus would shift the
+    * seed set and silently invalidate every stored cell assignment —
+    * retrain and re-encode explicitly when the quantizer should move.
+    * "When" is a measurement, not a guess: quantizerDriftStats against
+    * the day-0 baseline instruments this family's pinned centroids the
+    * same way binaryIvfIndexSinkWithDrift instruments the binary one.
+    *
+    * Replay safety: codes are a pure function of (centroids, codebook,
+    * vector), so a replayed batch re-appends ITS OWN epoch idempotently
+    * (appendEpoch replaces that one epoch) — at-least-once delivery
+    * yields exactly-once table state with no replay anti-join. Vector
+    * ids are assumed unique across batches (the embedding pipeline's
+    * contract); a violation yields duplicate rows with IDENTICAL codes,
+    * never divergent ones.
+    */
   def annIndexSink(incoming: DataFrame, idCol: String, vecCol: String,
                    centroidsPath: String, codebookPath: String, codesPath: String,
                    checkpointDir: String, m: Int): StreamingQuery =
@@ -1083,9 +1080,12 @@ object CorpusStreams {
   //             ring_version) — the stale-graph guard, maintained by
   //             O(batch) XOR fold; the build knobs and ring formula
   //             version are graph-lifetime identity
-  //   quality/  epoch log (epoch, n_nodes, n_edges, mean_cosine,
-  //             max_bucket_members_fine/_coarse) — the monitor's trend
-  //             instrument + the candidate-bound skew axis
+  //   quality/  epoch log (n_edges, n_nodes, mean_cosine,
+  //             max_bucket_members_fine, epoch) — the monitor's trend
+  //             instrument + the per-batch candidate-bound skew axis
+  //   occupancy/ epoch log (epoch, max_bucket_members_fine,
+  //             max_bucket_members_coarse) — the full-corpus skew axes,
+  //             one row per [[knnGraphCompact]]
   //   nodes_opt/ graph_opt/ — the sink's READ-OPTIMIZED layouts
   //             ([[knnGraphCompact]]): self-describing latest-copy folds
   //             of nodes/ and graph/, partitioned so the per-batch reads
@@ -1159,36 +1159,24 @@ object CorpusStreams {
     * between the two left a permanent per-epoch gap the old
     * epochs-exist check never saw.
     *
-    * Entry model: each epoch slot holds rows (word, bits, m_bits
-    * [, covers_through]); covers_through null = a partial covering
+    * Entry model: each epoch slot holds rows (word, bits, m_bits,
+    * covers_through); covers_through null = a partial covering
     * exactly its own epoch, C = a compaction fold covering ALL node
     * epochs <= C (knnGraphCompact writes it, sharing the slot with the
     * original partial so neither width loses coverage). Width choice is
     * the newest fold's width (corpus-fit by construction), else the
-    * newest entry's, else derived from the committed corpus (a legacy
-    * graph with no sidecar pays one O(corpus) heal and gets the fast
-    * path for life). Entries from epochs/folds AHEAD of batchId (an
-    * async compaction seen by a replay) are safe to fold in: extra bits
-    * only add false POSITIVES, which cost a pruned lookup of ids the
-    * committed-state join then drops. */
+    * newest entry's, else derived from the committed corpus (a graph
+    * that crashed before its first sidecar append pays one O(corpus)
+    * heal and gets the fast path for life). Entries from epochs/folds
+    * AHEAD of batchId (an async compaction seen by a replay) are safe to
+    * fold in: extra bits only add false POSITIVES, which cost a pruned
+    * lookup of ids the committed-state join then drops. */
   private[graft] def seenIdsState(spark: org.apache.spark.sql.SparkSession,
                                   graphPath: String, idCol: String,
                                   prior: Seq[Long], batchId: Long,
                                   bootstrap: Boolean,
                                   bootstrapN: => Long): (Int, Option[Array[Long]]) = {
     val seenP = graphSeenIdsPath(graphPath)
-    def withCovers(t: DataFrame): DataFrame =
-      if (t.columns.contains("covers_through")) t
-      else t.withColumn("covers_through", lit(null).cast("long"))
-    // bounded metadata: one (epoch, m_bits, covers_through) row per entry
-    def entries(): Seq[(Long, Long, Option[Long])] = scala.util.Try {
-      withCovers(EtlCli.readEpochTableTagged(spark, seenP))
-        .select(col("__epoch"), col("m_bits").cast("long"),
-          col("covers_through").cast("long"))
-        .distinct().collect()
-        .map(r => (r.getLong(0), r.getLong(1),
-          if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSeq
-    }.getOrElse(Seq.empty)
     // a true bootstrap (nothing committed) starts a fresh zero filter; an
     // empty PRIOR alone does not — a fully-vacuumed graph has no raw
     // epochs but its fold entries below are the committed membership
@@ -1196,7 +1184,7 @@ object CorpusStreams {
       val w = graphSeenIdsBitsFor(bootstrapN)
       return (w, Some(new Array[Long](w / 62)))
     }
-    val es0 = entries()
+    val es0 = seenIdsEntries(spark, graphPath)
     val w: Long = es0.filter(_._3.isDefined)
       .sortBy(e => (e._3.get, e._2)).lastOption.map(_._2)
       .orElse(es0.sortBy(e => (e._1, e._2)).lastOption.map(_._2))
@@ -1223,20 +1211,30 @@ object CorpusStreams {
       // preserve the slot's rows at OTHER widths (coverage per width)
       val keep = scala.util.Try(
           EtlCli.readTable(spark, s"$seenP/epoch=$e")).toOption
-        .map(t => withCovers(t)
-          .select(col("word"), col("bits"), col("m_bits").cast("long"),
-            col("covers_through").cast("long"))
-          .filter(col("m_bits") =!= lit(w)))
+        .map(_.filter(col("m_bits") =!= lit(w)))
       EtlCli.appendEpoch(keep.fold(part)(part.unionByName(_)), seenP, e)
     }
-    val es1 = if (missing.isEmpty) es0 else entries()
+    val es1 = if (missing.isEmpty) es0 else seenIdsEntries(spark, graphPath)
     if ((need -- covered(es1)).nonEmpty) (w.toInt, None)
     else (w.toInt, Some(graft.operators.Sketches.bloomWords(
-      withCovers(EtlCli.readEpochTableTagged(spark, seenP))
+      EtlCli.readEpochTableTagged(spark, seenP)
         .filter(col("m_bits").cast("long") === lit(w))
         .groupBy(col("word")).agg(expr("bit_or(bits)").as("bits")),
       w.toInt)))
   }
+
+  /** The committed seen-ids entries as (epoch, m_bits, covers_through),
+    * one row per entry (bounded metadata); empty before the first sidecar
+    * append. */
+  private def seenIdsEntries(spark: org.apache.spark.sql.SparkSession,
+                             graphPath: String): Seq[(Long, Long, Option[Long])] =
+    scala.util.Try(EtlCli.readEpochTableTagged(spark, graphSeenIdsPath(graphPath)))
+      .toOption.toSeq
+      .flatMap(_.select(col("__epoch"), col("m_bits").cast("long"),
+          col("covers_through").cast("long"))
+        .distinct().collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          if (r.isNullAt(2)) None else Some(r.getLong(2)))))
 
   /** RAW node rows of epochs < `before`, `__epoch`-tagged, possibly
     * several copies of a re-ingested id — deliberately NOT deduped: a
@@ -1332,8 +1330,9 @@ object CorpusStreams {
       EtlCli.readTable(spark, graphNodesOptPath(graphPath))
         .select(col(idCol), col(vecCol), col("epoch").as("__epoch"))))
     // pinned: the plan reads the PREVIOUS nodes fold, and writing the new
-    // fold prunes that version — every later re-execution (legacy fill,
-    // seen-ids fold) must run off materialized rows, not the deleted files
+    // fold prunes that version — every later re-execution (the occupancy
+    // stats, the seen-ids fold) must run off materialized rows, not the
+    // deleted files
     val latestNodes = graft.core.Materialize.pin(nodesRaw.groupBy(col(idCol))
       .agg(max_by(struct(col(vecCol).as("v"), col("__epoch").as("e")),
         struct(col("__epoch"), col(vecCol))).as("__s"))
@@ -1391,48 +1390,13 @@ object CorpusStreams {
         col("__epoch") > prevE.getOrElse(Long.MinValue))
     val edgesRaw = prevE.fold(rawEdges)(_ => rawEdges.unionByName(
       EtlCli.readTable(spark, graphEdgesOptPath(graphPath))
-        .drop("covered_epoch").withColumnRenamed("epoch", "__epoch"),
-      allowMissingColumns = true))
+        .drop("covered_epoch").withColumnRenamed("epoch", "__epoch")))
     val w = Window.partitionBy(col(idCol))
-    val latestEdges0 = edgesRaw
+    val latestEdges = edgesRaw
       .withColumn("__m", max(col("__epoch")).over(w))
       .filter(col("__epoch") === col("__m")).drop("__m")
       .withColumnRenamed("__epoch", "epoch")
       .withColumn("covered_epoch", lit(coveredE))
-    // Legacy-graph repair: edge epochs committed before the bucket
-    // columns existed carry null nid_bucket/src_bucket (the union pads
-    // them). Recompute from the folded nodes' latest vectors — src_bucket
-    // by the layout invariant (a hood lives under its source's
-    // current-vector bucket; a fold row whose source re-ingested after
-    // coveredE is superseded through the raw tail, so the coveredN-fresh
-    // bucket is safe), nid_bucket as a fresh hint (hints tolerate
-    // staleness by the documented monitor contract; fresher-than-stored
-    // only narrows the accepted class). Gated on nulls actually existing
-    // so a modern graph's compaction pays one column-pruned existence
-    // probe, never the two corpus joins.
-    val latestEdges = {
-      val ensured = Seq("nid_bucket", "src_bucket").foldLeft(latestEdges0)(
-        (d, c) => if (d.columns.contains(c)) d
-                  else d.withColumn(c, lit(null).cast("long")))
-      val hasLegacy = !ensured
-        .filter(col("src_bucket").isNull || col("nid_bucket").isNull)
-        .isEmpty
-      if (!hasLegacy) ensured
-      else {
-        val nb = latestNodes.select(col(idCol),
-          Similarity.signLshBucketCol(col(vecCol), coarse).as("__b"))
-        ensured
-          .join(nb.select(col(idCol), col("__b").as("__sb")), Seq(idCol), "left")
-          .join(nb.select(col(idCol).as("nid"), col("__b").as("__nb")),
-            Seq("nid"), "left")
-          .withColumn("src_bucket",
-            coalesce(col("src_bucket"), col("__sb")).cast("long"))
-          .withColumn("nid_bucket",
-            coalesce(col("nid_bucket"), col("__nb")).cast("long"))
-          .drop("__sb", "__nb")
-          .select(ensured.columns.map(col): _*)
-      }
-    }
     EtlCli.writeTable(latestEdges, graphEdgesOptPath(graphPath),
       partitionBy = Seq("src_bucket"))
     // Re-choose the seen-ids sidecar width from the ACTUAL corpus and
@@ -1452,13 +1416,7 @@ object CorpusStreams {
       .withColumn("covers_through", lit(coveredN))
     val seenKeep = scala.util.Try(
         EtlCli.readTable(spark, s"${graphSeenIdsPath(graphPath)}/epoch=$coveredN"))
-      .toOption.map { t =>
-        val tc = if (t.columns.contains("covers_through")) t
-                 else t.withColumn("covers_through", lit(null).cast("long"))
-        tc.select(col("word"), col("bits"), col("m_bits").cast("long"),
-            col("covers_through").cast("long"))
-          .filter(col("m_bits") =!= lit(seenW.toLong))
-      }
+      .toOption.map(_.filter(col("m_bits") =!= lit(seenW.toLong)))
     EtlCli.appendEpoch(seenKeep.fold(seenFold)(seenFold.unionByName(_)),
       graphSeenIdsPath(graphPath), coveredN)
     log.info(s"graph at $graphPath compacted: nodes_opt through epoch " +
@@ -1503,20 +1461,12 @@ object CorpusStreams {
       "fold-covered epochs"))
     val coveredE = prevE.getOrElse(sys.error(s"graph at $graphPath has " +
       "no edges fold — run compact-knn-graph first"))
-    val seenEntries: Seq[(Long, Option[Long])] = scala.util.Try {
-      val t0 = EtlCli.readEpochTableTagged(spark, seenP)
-      val t = if (t0.columns.contains("covers_through")) t0
-              else t0.withColumn("covers_through", lit(null).cast("long"))
-      t.select(col("__epoch"), col("covers_through").cast("long"))
-        .distinct().collect()
-        .map(r => (r.getLong(0),
-          if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSeq
-    }.getOrElse(Seq.empty)
-    val seenCover = seenEntries.flatMap(_._2).maxOption.getOrElse(
+    val seenEntries = seenIdsEntries(spark, graphPath)
+    val seenCover = seenEntries.flatMap(_._3).maxOption.getOrElse(
       sys.error(s"graph at $graphPath has no folded seen-ids sidecar — " +
-        "re-run compact-knn-graph (an older fold predates the sidecar " +
-        "fold); vacuuming the partials without it would blind the " +
-        "superseded-copy fast path"))
+        "re-run compact-knn-graph (a compaction that crashed before its " +
+        "sidecar fold leaves none); vacuuming the partials without it " +
+        "would blind the superseded-copy fast path"))
     // a half-committed max epoch is the one epoch the CLI itself replays
     EtlCli.committedEpochs(spark, nodesP).maxOption.foreach { n =>
       val graphDone =
@@ -1565,7 +1515,7 @@ object CorpusStreams {
     // epoch number; superseded folds and covered partials go
     val freed = reclaim(nodesP, _ => false) + reclaim(edgesP, _ => false) +
       reclaim(seenP, e => seenEntries.exists(en =>
-        en._1 == e && en._2.contains(seenCover)))
+        en._1 == e && en._3.contains(seenCover)))
     log.info(s"graph at $graphPath vacuumed through epoch $v: " +
       s"$freed bytes reclaimed")
     freed
@@ -1591,14 +1541,9 @@ object CorpusStreams {
         t.select((col("covered_epoch").cast("long") +: extra.map(c =>
           col(c).cast("long"))): _*).limit(1).collect().headOption.map(t -> _)
       }.toOption.flatten
-    // null partition values are KEPT under any filter: a legacy fold row
-    // whose bucket could not be recomputed must degrade to "read it"
-    // (superset semantics), never to "silently dropped" — isin(null) is
-    // null, which filter() would drop
     def pruned(df: DataFrame, c: String, f: Option[Seq[Long]]): DataFrame =
       f.fold(df)(vs =>
-        if (vs.isEmpty) df.filter(col(c).isNull)
-        else df.filter(col(c).isNull || col(c).isin(vs: _*)))
+        if (vs.isEmpty) df.limit(0) else df.filter(col(c).isin(vs: _*)))
     // the raw tail may be EMPTY once vacuum-knn-graph has reclaimed every
     // fold-covered epoch — an empty log is then complete state, not an
     // error, and the fold alone serves the read (schema borrowed from the
@@ -1613,13 +1558,9 @@ object CorpusStreams {
           case Some((t, r)) if r.getLong(0) < before =>
             val idHashOk = r.getLong(1) == GraphStateReaders.IdHashBuckets
             // fine_bucket is the layout's SORT-ORDER second level — a
-            // data filter parquet turns into row-group skips; a
-            // pre-upgrade fold without the column reads unpruned
-            // (superset), never wrong
-            val withFine = if (t.columns.contains("fine_bucket"))
-              pruned(t, "fine_bucket", fineF) else t
-            val opt = pruned(pruned(withFine, "bucket", bucketF),
-                "id_bucket", if (idHashOk) idHashF else None)
+            // data filter parquet turns into row-group skips
+            val opt = pruned(pruned(pruned(t, "fine_bucket", fineF),
+                "bucket", bucketF), "id_bucket", if (idHashOk) idHashF else None)
               .drop("bucket", "fine_bucket", "id_bucket", "covered_epoch",
                 "id_hash_buckets")
               .withColumnRenamed("epoch", "__epoch")
@@ -1904,13 +1845,10 @@ object CorpusStreams {
     // records a version, every later commit (and a sink restarted with a
     // different default) must keep it — the version exists so rebuilds
     // and replays use the formula that actually built the committed graph
-    val storedRing = scala.util.Try {
-        val t = EtlCli.readTable(spark, graphIdentityPath(graphPath))
-        if (t.columns.contains("ring_version"))
-          t.select(col("ring_version").cast("int")).collect()
-            .headOption.map(_.getInt(0))
-        else Some(1) // pre-versioning identity rows committed under v1
-      }.toOption.flatten
+    val storedRing = scala.util.Try(
+        EtlCli.readTable(spark, graphIdentityPath(graphPath))).toOption
+      .flatMap(_.select(col("ring_version").cast("int")).collect()
+        .headOption.map(_.getInt(0)))
     val ring = storedRing.getOrElse(ringVersion)
     // --- superseded-copy lookup, SHARED by the extension's hood filter
     // and the identity fold (one id-hash-pruned point read serves both,
@@ -2020,10 +1958,7 @@ object CorpusStreams {
       .withColumn("covers_through", lit(null).cast("long"))
     val seenKeep = scala.util.Try(EtlCli.readTable(spark,
         s"${graphSeenIdsPath(graphPath)}/epoch=$batchId")).toOption
-      .filter(_.columns.contains("covers_through"))
-      .map(_.select(col("word"), col("bits"), col("m_bits").cast("long"),
-          col("covers_through").cast("long"))
-        .filter(col("covers_through").isNotNull))
+      .map(_.filter(col("covers_through").isNotNull))
     EtlCli.appendEpoch(seenKeep.fold(seenPart)(seenPart.unionByName(_)),
       graphSeenIdsPath(graphPath), batchId)
     // quality trend: one bounded row per epoch (exact-integer mean,

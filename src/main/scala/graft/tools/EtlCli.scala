@@ -268,10 +268,7 @@ object EtlCli {
                  maxCellShare: Double = 1.0): Unit = {
     require(maxCellShare > 0 && maxCellShare <= 1,
       s"maxCellShare must be in (0,1], got $maxCellShare")
-    // merge schemas: a log whose early epochs predate the skew column
-    // must still expose it (nulls for the old rows), not flap on which
-    // file supplies the footer
-    val log = readEpochTable(spark, driftLog, mergeSchema = true)
+    val log = readEpochTable(spark, driftLog)
     val alarmed = log.filter(col("drift_alarm"))
       .select(col("epoch").cast("long")).collect().map(_.getLong(0)).sorted
     if (alarmed.nonEmpty)
@@ -280,9 +277,6 @@ object EtlCli {
         "corpus; retrain them and re-encode the index (probe recall decays " +
         "silently otherwise)")
     if (maxCellShare < 1.0) {
-      require(log.columns.contains("max_cell_share"),
-        s"drift log at $driftLog has no max_cell_share column — it predates " +
-          "the skew axis; bound skew on logs a current sink wrote")
       val skewed = log.filter(col("max_cell_share") > maxCellShare)
         .select(col("epoch").cast("long")).collect().map(_.getLong(0)).sorted
       if (skewed.nonEmpty)
@@ -739,14 +733,10 @@ object EtlCli {
     if (missing.nonEmpty)
       sys.error(s"vectors at $vecsTable lack column(s) ${missing.mkString(", ")} " +
         s"— pass the id/vector column names (got: ${vecs.columns.mkString(", ")})")
-    val stored = scala.util.Try {
-        val t = readTable(spark, s"$graphPath/identity")
-        val withRing = if (t.columns.contains("ring_version")) t
-          else t.withColumn("ring_version", lit(1)) // pre-versioning = v1
-        withRing.select(col("k").cast("int"), col("n_bits").cast("int"),
-          col("ring_version").cast("int"))
-          .collect().headOption
-      }.toOption.flatten
+    val stored = scala.util.Try(readTable(spark, s"$graphPath/identity"))
+      .toOption.flatMap(_.select(col("k").cast("int"),
+          col("n_bits").cast("int"), col("ring_version").cast("int"))
+        .collect().headOption)
     val (kk, bits, ring) = stored match {
       case Some(r) =>
         val (k0, b0, rv0) = (r.getInt(0), r.getInt(1), r.getInt(2))
@@ -837,7 +827,7 @@ object EtlCli {
     // a low row is STALENESS, not a merely more diverse corpus
     minRecall.foreach { floor =>
       val probed = scala.util.Try(
-          readEpochTable(spark, s"$graphPath/recall", mergeSchema = true))
+          readEpochTable(spark, s"$graphPath/recall"))
         .toOption
       probed match {
         case None => println(s"no recall probe log at $graphPath — run " +
@@ -857,10 +847,7 @@ object EtlCli {
               "resume the sink")
       }
     }
-    // mergeSchema: the quality log EVOLVES (the occupancy columns arrived
-    // mid-family) — the default pick-one-footer schema would make column
-    // visibility depend on which epoch's file wins
-    val log = readEpochTable(spark, s"$graphPath/quality", mergeSchema = true)
+    val log = readEpochTable(spark, s"$graphPath/quality")
     // bucket-skew axis first: the candidate bound the extension's
     // broadcast mate set rides is ~occupancy of the batch's buckets —
     // a near-dup-heavy corpus piles into one bucket, and the per-batch
@@ -869,31 +856,26 @@ object EtlCli {
     // thin the pile), or split/dedup the near-identical mass first.
     maxOccupancy.foreach { cap =>
       // axes live in two logs: quality/ carries the per-batch FINE ring
-      // (what the fine-first extension pays; legacy rows may also carry
-      // a coarse column), occupancy/ carries the compact-cadence
-      // full-corpus stats at both granularities
+      // (what the fine-first extension pays), occupancy/ carries the
+      // compact-cadence full-corpus stats at both granularities
       val occLog = scala.util.Try(
-          readEpochTable(spark, s"$graphPath/occupancy", mergeSchema = true))
-        .toOption
-      val axes = (Seq(log) ++ occLog).flatMap { t =>
-        Seq("max_bucket_members_fine", "max_bucket_members_coarse")
-          .filter(t.columns.contains)
-          .map(c => t.select(col("epoch").cast("long"),
-            col(c).cast("long").as("__m")).filter(col("__m").isNotNull))
-      }
-      if (axes.nonEmpty) {
-        val hot = axes.reduce(_ unionByName _).filter(col("__m") > cap)
-          .groupBy(col("epoch")).agg(max(col("__m")).as("__m"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-        if (hot.nonEmpty)
-          sys.error(s"graph ring-bucket occupancy blew past $cap in epoch(s) " +
-            hot.map { case (e, m) => s"$e (max $m)" }.mkString(", ") +
-            s" at $graphPath — the extension's per-batch candidate bound is " +
-            "occupancy-linear, so batches touching the hot bucket pay it in " +
-            "full. Rebuild the graph at a FINER derived nBits (knn-graph; " +
-            "nnDescentNBits with a smaller targetBucketSize), or near-dup " +
-            "the piled mass away before it enters the corpus")
-      }
+        readEpochTable(spark, s"$graphPath/occupancy")).toOption
+      val axes = (Seq(log -> Seq("max_bucket_members_fine")) ++
+          occLog.map(_ -> Seq("max_bucket_members_fine",
+            "max_bucket_members_coarse")))
+        .flatMap { case (t, cs) => cs.map(c =>
+          t.select(col("epoch").cast("long"), col(c).cast("long").as("__m"))) }
+      val hot = axes.reduce(_ unionByName _).filter(col("__m") > cap)
+        .groupBy(col("epoch")).agg(max(col("__m")).as("__m"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      if (hot.nonEmpty)
+        sys.error(s"graph ring-bucket occupancy blew past $cap in epoch(s) " +
+          hot.map { case (e, m) => s"$e (max $m)" }.mkString(", ") +
+          s" at $graphPath — the extension's per-batch candidate bound is " +
+          "occupancy-linear, so batches touching the hot bucket pay it in " +
+          "full. Rebuild the graph at a FINER derived nBits (knn-graph; " +
+          "nnDescentNBits with a smaller targetBucketSize), or near-dup " +
+          "the piled mass away before it enters the corpus")
     }
     // an EMPTY micro-batch logs a null mean (no edges to average — the
     // empty-frame guard, not a signal): skip those epochs rather than
@@ -1076,11 +1058,11 @@ object EtlCli {
   /** Create empty tables with the canonical schemas. */
   def init(spark: SparkSession, wh: String): Unit = {
     import spark.implicits._
-    writeBack(Seq.empty[(Long, String, String, java.sql.Date, Long, Boolean)]
+    writeTable(Seq.empty[(Long, String, String, java.sql.Date, Long, Boolean)]
       .toDF("marvel_comic_id", "title", "issue_number", "onsale_date",
         "price_cents", "is_variant"), issuesPath(wh))
-    writeBack(Seq.empty[String].toDF("creator_name"), creatorsPath(wh))
-    writeBack(Seq.empty[(Long, String, String)]
+    writeTable(Seq.empty[String].toDF("creator_name"), creatorsPath(wh))
+    writeTable(Seq.empty[(Long, String, String)]
       .toDF("marvel_comic_id", "creator_name", "role"), bridgePath(wh))
   }
 
@@ -1114,19 +1096,19 @@ object EtlCli {
         mutableCols = Seq("title", "onsale_date", "price_cents", "is_variant"),
         incomingOrder = Seq(col("marvel_comic_id")))
       val loaded = Audit.observed(merged, loadObs)
-      writeBack(loaded, issuesPath(wh))
+      writeTable(loaded, issuesPath(wh))
 
       // creators dimension + M:N bridge (J5), insert-if-absent
       val credits = MarvelTransform.explodeCreators(raw)
       val existingCreators = readTable(spark, creatorsPath(wh))
       val newCreators = credits.select(col("creator_name")).distinct()
         .join(existingCreators, Seq("creator_name"), "left_anti")
-      writeBack(existingCreators.unionByName(newCreators), creatorsPath(wh))
+      writeTable(existingCreators.unionByName(newCreators), creatorsPath(wh))
 
       val existingBridge = readTable(spark, bridgePath(wh))
       val newLinks = credits.select("marvel_comic_id", "creator_name", "role").distinct()
         .join(existingBridge, Seq("marvel_comic_id", "creator_name", "role"), "left_anti")
-      writeBack(existingBridge.unionByName(newLinks), bridgePath(wh))
+      writeTable(existingBridge.unionByName(newLinks), bridgePath(wh))
     }
 
   /** Training-data EXPORT: the full corpus pipeline composed end-to-end on
@@ -1373,7 +1355,7 @@ object EtlCli {
   }
 
   /** Stage the next version's data dir WITHOUT committing it (the spec's
-    * crash-simulation seam; writeBack = stage + commit + prune). */
+    * crash-simulation seam; writeTable = stage + commit + prune). */
   private[graft] def stage(df: DataFrame, path: String,
                            format: String = "parquet",
                            partitionBy: Seq[String] = Nil): Long = {
@@ -1572,7 +1554,6 @@ object EtlCli {
     * reading back what it writes) passes it: the read then skips Spark's
     * footer schema inference, which is a job of its own. */
   def readEpochTable(spark: SparkSession, path: String,
-                     mergeSchema: Boolean = false,
                      schema: Option[StructType] = None): DataFrame = {
     val compacted = epochsCompactedThrough(spark, path).map { e =>
       val p = s"$path/compact=$e"
@@ -1583,12 +1564,7 @@ object EtlCli {
       s"$p/data_v${committedVersion(spark, p).get}"
     }
     if (dirs.isEmpty) sys.error(s"no committed epochs at $path — nothing ingested yet")
-    // mergeSchema: for SMALL evolving tables (the drift log grew
-    // max_cell_share mid-stream) where the default pick-one-footer schema
-    // would make column visibility depend on which epoch's file wins;
-    // indexes stay on the cheap path — their schema never evolves
     val reader = spark.read.format(sniffFormat(spark, dirs.head))
-      .option("mergeSchema", mergeSchema.toString)
     schema.fold(reader)(reader.schema).load(dirs: _*)
   }
 
@@ -1610,18 +1586,10 @@ object EtlCli {
       (e, s"$p/data_v${committedVersion(spark, p).get}")
     }
     if (dirs.isEmpty) sys.error(s"no committed epochs at $path — nothing ingested yet")
-    // allowMissingColumns: epoch logs evolve (the graph's edge log grew
-    // nid_bucket/src_bucket mid-life) and a log is immutable history — a
-    // strict union would make every read of a pre-evolution table throw
-    // the moment one new-schema epoch lands, bricking the incremental
-    // path for exactly the graphs that predate the upgrade. Rows from
-    // pre-evolution epochs carry null in the new columns; every consumer
-    // of an evolved column treats null as "absent" (the pruning hints'
-    // unpruned fallback, the compactor's recompute-from-nodes fill).
     dirs.map { case (e, d) =>
       spark.read.format(sniffFormat(spark, d)).load(d)
         .withColumn("__epoch", lit(e))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    }.reduce(_.unionByName(_))
   }
 
   /** Fold every visible epoch (plus any prior compaction) of the table at
@@ -1729,8 +1697,6 @@ object EtlCli {
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     writeTable(readTable(spark, path).coalesce(nFiles), path)
   }
-
-  private def writeBack(df: DataFrame, path: String): Unit = writeTable(df, path)
 
   /** The reference `quality` command: null counts + orphan bridge rows. */
   def quality(spark: SparkSession, wh: String): DataFrame = {

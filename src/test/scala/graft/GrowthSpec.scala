@@ -965,7 +965,7 @@ class GrowthSpec extends SparkSpec {
     // the instrument read the pile — at bootstrap, before the batch paid
     import spark.implicits._
     val occ = graft.tools.EtlCli
-      .readEpochTable(spark, s"$root/hot/quality", mergeSchema = true)
+      .readEpochTable(spark, s"$root/hot/quality")
       .agg(max(col("max_bucket_members_fine"))).as[Long].head()
     assert(occ >= 300, s"occupancy instrument missed the planted pile: $occ")
     // ...and the monitor names the remedial while the uniform graph passes

@@ -1428,8 +1428,24 @@ class StreamingFileSpec extends SparkSpec {
       extend(gp, parts(1), bootstrap = false)
       extend(gp, parts(2), bootstrap = false)
     }
-    // A compacts to the partitioned read layouts; B stays raw
-    EtlCli.run(spark, Seq("compact-knn-graph", gA))
+    // A compacts to the partitioned read layouts; B stays raw. The
+    // call's job budget is counted by a SparkListener, with the listener
+    // bus drained through ListenerBridge on both sides of the call.
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      jobs.set(0)
+      CorpusStreams.knnGraphCompact(spark, gA)
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    info(s"jobs: knnGraphCompact=${jobs.get()}")
+    // Measured on this fixture: 28 jobs.
+    assert(jobs.get() <= 28, s"knnGraphCompact jobs: ${jobs.get()}")
     def edgeRows(gp: String, epoch: Long) = EtlCli
       .readTable(spark, s"$gp/graph/epoch=$epoch")
       .select(col("vec_id").cast("long"), col("nid").cast("long"),
@@ -1483,6 +1499,26 @@ class StreamingFileSpec extends SparkSpec {
     assert(CorpusStreams.knnGraphIdentity(spark, gA) ==
       CorpusStreams.knnGraphIdentity(spark, gB),
       "mixed-generation folds corrupted the identity fold")
+    // schema pin: each committed artifact has the one schema its writer
+    // produces, so a writer that drops a column fails here rather than
+    // in a later reader
+    def nulls(t: org.apache.spark.sql.DataFrame, cs: String*): Long = {
+      assert(cs.forall(t.columns.contains), t.columns.mkString(", "))
+      t.filter(cs.map(c => col(c).isNull).reduce(_ || _)).count()
+    }
+    Seq(gA, gB).foreach { gp =>
+      EtlCli.committedEpochs(spark, s"$gp/graph").foreach { e =>
+        assert(nulls(EtlCli.readTable(spark, s"$gp/graph/epoch=$e"),
+          "nid_bucket", "src_bucket") == 0, s"$gp/graph epoch $e")
+      }
+      assert(EtlCli.readEpochTable(spark, s"$gp/seen_ids").columns
+        .contains("covers_through"), gp)
+      assert(nulls(EtlCli.readTable(spark, s"$gp/identity"), "ring_version") == 0, gp)
+    }
+    assert(nulls(EtlCli.readTable(spark, s"$gA/graph_opt"),
+      "nid_bucket", "src_bucket") == 0, "graph_opt")
+    assert(nulls(EtlCli.readTable(spark, s"$gA/nodes_opt"), "fine_bucket") == 0,
+      "nodes_opt")
     // the skew instrument: the per-batch FINE axis rides the quality log
     // (what the fine-first extension pays), the full-corpus COARSE axis
     // rides the compact-cadence occupancy log
@@ -1502,80 +1538,6 @@ class StreamingFileSpec extends SparkSpec {
       val ex = intercept[RuntimeException] { EtlCli.compactEpochs(spark, p) }
       assert(ex.getMessage.contains("compaction-unsafe"), ex.getMessage)
     }
-  }
-
-  test("legacy graph (pre-bucket-column edge epochs): extension, compaction, and pruned reads survive mixed schemas") {
-    import graft.streaming.CorpusStreams
-    import graft.tools.EtlCli
-    import spark.implicits._
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val bits = graft.operators.Similarity.nnDescentNBits(emb.count())
-    val root = java.nio.file.Files.createTempDirectory("knn_legacy")
-    def vecs(name: String, df: org.apache.spark.sql.DataFrame): String = {
-      val p = s"$root/$name"; df.write.parquet(p); p
-    }
-    val parts = (0 to 3).map(i =>
-      vecs(s"p$i", emb.filter(col("vec_id") % 4 === i)))
-    val (gA, gB) = (s"$root/gA", s"$root/gB")
-    def extend(gp: String, vecsPath: String, bootstrap: Boolean): Unit =
-      if (bootstrap)
-        EtlCli.extendKnnGraph(spark, vecsPath, gp, Some(5), 2, Some(bits))
-      else EtlCli.extendKnnGraph(spark, vecsPath, gp)
-    Seq(gA, gB).foreach { gp =>
-      extend(gp, parts(0), bootstrap = true)
-      extend(gp, parts(1), bootstrap = false)
-      // simulate a pre-upgrade graph: strip the bucket columns from every
-      // committed edge epoch (they did not exist before the
-      // read-optimized layouts landed; the epoch-replace rewrite stands
-      // in for a graph whose whole history predates them)
-      Seq(0L, 1L).foreach { e =>
-        val legacy = EtlCli.readTable(spark, s"$gp/graph/epoch=$e")
-          .drop("nid_bucket", "src_bucket")
-        EtlCli.appendEpoch(legacy, s"$gp/graph", e)
-      }
-      // a post-upgrade extension appends a NEW-schema epoch: the log is
-      // now mixed-schema — this call threw AnalysisException under the
-      // strict unionByName read
-      extend(gp, parts(2), bootstrap = false)
-    }
-    // compaction folds the mixed log; legacy rows get their buckets
-    // recomputed from the folded nodes' latest vectors
-    EtlCli.run(spark, Seq("compact-knn-graph", gA))
-    val optNulls = EtlCli.readTable(spark, s"$gA/graph_opt")
-      .filter(col("src_bucket").isNull || col("nid_bucket").isNull).count()
-    assert(optNulls == 0,
-      s"compaction left $optNulls legacy fold rows without recomputed buckets")
-    // pruned extension over the legacy-derived fold equals the raw twin
-    extend(gA, parts(3), bootstrap = false)
-    extend(gB, parts(3), bootstrap = false)
-    def edgeRows(gp: String, epoch: Long) = EtlCli
-      .readTable(spark, s"$gp/graph/epoch=$epoch")
-      .select(col("vec_id").cast("long"), col("nid").cast("long"),
-        col("cosine"), col("rank"))
-      .as[(Long, Long, Double, Int)].collect().toSet
-    assert(edgeRows(gA, 3) == edgeRows(gB, 3),
-      "pruned extension over a legacy-derived fold diverged from the raw twin")
-    assert(CorpusStreams.knnGraphIdentity(spark, gA) ==
-      CorpusStreams.knnGraphIdentity(spark, gB),
-      "legacy mixed-schema epochs corrupted the identity fold")
-    // the live view reads the mixed log and still covers every id
-    val viewIds = CorpusStreams.readKnnGraph(spark, gA, "vec_id")
-      .select(col("vec_id")).distinct().count()
-    assert(viewIds == emb.count(),
-      s"live view covers $viewIds of ${emb.count()} ids over the mixed-schema log")
-    // a PRE-UPGRADE nodes fold (no fine_bucket sort-order level): the
-    // reader must skip fine pruning (superset) instead of filtering a
-    // missing column — extension still equals the raw twin
-    val stripped = EtlCli.readTable(spark, s"$gA/nodes_opt").drop("fine_bucket")
-    EtlCli.writeTable(stripped, s"$gA/nodes_opt",
-      partitionBy = Seq("bucket", "id_bucket"))
-    val p4b = vecs("p4", emb.filter(col("vec_id") < 12)
-      .withColumn("vec_id", col("vec_id") + lit(500000)))
-    extend(gA, p4b, bootstrap = false)
-    extend(gB, p4b, bootstrap = false)
-    assert(edgeRows(gA, 4) == edgeRows(gB, 4),
-      "extension over a pre-upgrade fold (no fine_bucket) diverged from the raw twin")
   }
 
   test("seen-ids crash gap heals: a lost sidecar partial (crash between identity write and bloom append) is rebuilt from the node log, never a false negative") {
