@@ -99,6 +99,7 @@ object Graft {
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries)
     localScratchDir.foreach(d => builder0.config("spark.local.dir", d))
     localShuffleConf.foreach { case (k, v) => builder0.config(k, v) }
+    NioLocalFs.sessionConf.foreach { case (k, v) => builder0.config(k, v) }
     val spark = builder0
       .master(s"local[$cpus]")
       .appName(appName)
@@ -127,29 +128,21 @@ object Graft {
   }
 }
 
-/** Materialization strategy for eagerly-reused intermediates (LSH candidate
-  * sets, verification shingle slices, connected-components rounds).
-  *
-  * Default `localCheckpoint`: truncates lineage (no optimizer blow-up on
+/** Materialization of eagerly-reused intermediates (LSH candidate sets,
+  * verification shingle slices, connected-components rounds): an eager
+  * `localCheckpoint`. It truncates lineage (no optimizer blow-up on
   * iteration), hands AQE the exact materialized size (tiny candidate sets
-  * then broadcast in every downstream join), and blocks are GC'd with the
-  * plan instead of pinned in the CacheManager. CAVEAT (cluster mode): a
-  * localCheckpoint is NOT recomputable — losing an executor (or a
-  * dynamic-allocation decommission) fails the job instead of recomputing
-  * the lost blocks. On clusters with dynamic allocation set
-  * `spark.graft.materialization=cache` (recomputable, pinned until GC) or
-  * `=checkpoint` (reliable storage; requires `setCheckpointDir`).
+  * then broadcast in every downstream join), and its blocks are GC'd with
+  * the plan instead of pinned in the CacheManager. The cost is cluster
+  * mode: a localCheckpoint is not recomputable, so losing an executor (or
+  * a dynamic-allocation decommission) fails the job instead of recomputing
+  * the lost blocks. That trade holds here because every pin is a small
+  * intermediate of one query: a lost executor costs a re-run of that
+  * query, while recomputable pins would cost lineage or CacheManager
+  * memory on every run.
   */
 object Materialize {
-  def pin(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("spark.graft.materialization", "localCheckpoint") match {
-      case "cache" =>
-        df.persist(); df.count(); df // eager, like localCheckpoint(true)
-      case "checkpoint" => df.checkpoint(eager = true)
-      case "localCheckpoint" => df.localCheckpoint(true)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.materialization must be cache|checkpoint|localCheckpoint, got $other")
-    }
+  def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 }
 
 /** Loaders for the driver-generated star schema (TESTDATA.md).

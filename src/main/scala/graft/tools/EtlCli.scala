@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.core.Graft
 import graft.operators.{Audit, CorpusPipeline, Export, MarvelTransform, Relational}
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -1195,7 +1196,8 @@ object EtlCli {
       val out = toPack.join(packed.select(key, "n_tokens", "pack"), key)
       val loaded = Audit.observed(out, loadObs)
       val path = s"$wh/export"
-      val next = committedVersion(spark, path).getOrElse(0L) + 1
+      val f = fs(spark, path)
+      val next = committedVersion(f, path).getOrElse(0L) + 1
       format match {
         case "parquet" | "orc" =>
           graft.core.Store.writeShards(loaded, s"$path/data_v$next", key,
@@ -1215,10 +1217,10 @@ object EtlCli {
       // schema to infer) — it commits with no manifest, and verifyExport
       // treats manifest-less empty versions as trivially verified.
       val stagedDir = s"$path/data_v$next"
-      if (hasShardFiles(spark, stagedDir)) {
+      if (hasShardFiles(f, stagedDir)) {
         val staged = format match {
           case "jsonl" => spark.read.text(stagedDir)
-          case f       => spark.read.format(f).load(stagedDir)
+          case fmt     => spark.read.format(fmt).load(stagedDir)
         }
         graft.core.Store.shardManifest(staged).orderBy("shard").coalesce(1)
           .write.parquet(s"$stagedDir/_manifest")
@@ -1228,8 +1230,8 @@ object EtlCli {
 
   /** Cheap FS check: does the dir hold any non-hidden shard data file?
     * (A zero-row export stages only _SUCCESS — no schema to read back.) */
-  private def hasShardFiles(spark: SparkSession, dir: String): Boolean = {
-    val it = fs(spark, dir).listFiles(new org.apache.hadoop.fs.Path(dir), true)
+  private def hasShardFiles(f: FileSystem, dir: String): Boolean = {
+    val it = f.listFiles(new org.apache.hadoop.fs.Path(dir), true)
     var found = false
     while (it.hasNext && !found) {
       val n = it.next().getPath.getName
@@ -1247,22 +1249,22 @@ object EtlCli {
     * columnar and jsonl exports alike (the manifest was computed from the
     * same read shape at commit time). */
   def verifyExport(spark: SparkSession, path: String): Seq[String] = {
-    val v = committedVersion(spark, path).getOrElse(
+    val f = fs(spark, path)
+    val v = committedVersion(f, path).getOrElse(
       sys.error(s"no committed export at $path"))
     val dir = s"$path/data_v$v"
-    val hasManifest = fs(spark, dir)
-      .exists(new org.apache.hadoop.fs.Path(s"$dir/_manifest"))
+    val hasManifest = f.exists(new org.apache.hadoop.fs.Path(s"$dir/_manifest"))
     if (!hasManifest) {
       // a zero-row export commits with no manifest (nothing to receipt);
       // a version with SHARDS but no manifest is a broken commit
-      if (hasShardFiles(spark, dir))
+      if (hasShardFiles(f, dir))
         sys.error(s"export version $v at $path holds shards but no _manifest receipt")
       return Seq.empty
     }
     // sniffFormat deliberately errors on text shards (jsonl exports are
     // not columnar tables) — here that same signal routes to the text read
-    val landed = scala.util.Try(sniffFormat(spark, dir)) match {
-      case scala.util.Success(f) => spark.read.format(f).load(dir)
+    val landed = scala.util.Try(sniffFormat(f, dir)) match {
+      case scala.util.Success(fmt) => spark.read.format(fmt).load(dir)
       case scala.util.Failure(_) => spark.read.text(dir)
     }
     val exp = spark.read.parquet(s"$dir/_manifest")
@@ -1293,13 +1295,13 @@ object EtlCli {
   // barrier (the new version is a DIFFERENT directory than the one the
   // plan reads), and halves the write volume (one data write, not two).
 
-  private def fs(spark: SparkSession, path: String) =
+  // resolved once per public call: each resolve builds a Hadoop conf
+  private def fs(spark: SparkSession, path: String): FileSystem =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
 
-  private def committedVersion(spark: SparkSession, path: String): Option[Long] = {
+  private def committedVersion(f: FileSystem, path: String): Option[Long] = {
     val dir = new org.apache.hadoop.fs.Path(path)
-    val f = fs(spark, path)
     if (!f.exists(dir)) None
     else f.listStatus(dir).toSeq
       .map(_.getPath.getName)
@@ -1311,16 +1313,15 @@ object EtlCli {
     * format is self-describing: the reader sniffs the staged files'
     * extension (.orc vs .parquet), so a table can be written in either
     * format — or migrate between them across versions — with no catalog. */
-  def readTable(spark: SparkSession, path: String): DataFrame =
-    committedVersion(spark, path) match {
-      case Some(v) =>
-        val dir = s"$path/data_v$v"
-        spark.read.format(sniffFormat(spark, dir)).load(dir)
-      case None => sys.error(s"no committed version at $path — run `init` first")
-    }
+  def readTable(spark: SparkSession, path: String): DataFrame = {
+    val f = fs(spark, path)
+    val v = committedVersion(f, path)
+      .getOrElse(sys.error(s"no committed version at $path — run `init` first"))
+    spark.read.format(sniffFormat(f, s"$path/data_v$v")).load(s"$path/data_v$v")
+  }
 
-  private def sniffFormat(spark: SparkSession, dataDir: String): String = {
-    val it = fs(spark, dataDir).listFiles(new org.apache.hadoop.fs.Path(dataDir), true)
+  private def sniffFormat(f: FileSystem, dataDir: String): String = {
+    val it = f.listFiles(new org.apache.hadoop.fs.Path(dataDir), true)
     var fmt = "parquet"
     var found = false
     // hidden = any path segment BELOW dataDir starting with _ or .
@@ -1333,8 +1334,7 @@ object EtlCli {
     // RELATIVE dataDir still strips — otherwise every ancestor segment
     // would be re-included in the hidden check (a cwd under /x/.cache/
     // would classify all files hidden and silently fall back to parquet)
-    val base = fs(spark, dataDir)
-      .makeQualified(new org.apache.hadoop.fs.Path(dataDir))
+    val base = f.makeQualified(new org.apache.hadoop.fs.Path(dataDir))
       .toUri.getPath.stripSuffix("/")
     def hiddenBelowBase(p: org.apache.hadoop.fs.Path): Boolean = {
       val rel = p.toUri.getPath.stripPrefix(base).stripPrefix("/")
@@ -1359,7 +1359,7 @@ object EtlCli {
   private[graft] def stage(df: DataFrame, path: String,
                            format: String = "parquet",
                            partitionBy: Seq[String] = Nil): Long = {
-    val next = committedVersion(df.sparkSession, path).getOrElse(0L) + 1
+    val next = committedVersion(fs(df.sparkSession, path), path).getOrElse(0L) + 1
     df.write.mode(SaveMode.Overwrite).format(format)
       .partitionBy(partitionBy: _*).save(s"$path/data_v$next")
     next
@@ -1371,15 +1371,16 @@ object EtlCli {
     * no commit marker resolves to ITSELF, so raw directory layouts (run-
     * scoped memo artifacts, legacy indexes) keep working unchanged. */
   def resolveDataDir(spark: SparkSession, path: String): String =
-    committedVersion(spark, path) match {
+    committedVersion(fs(spark, path), path) match {
       case Some(v) => s"$path/data_v$v"
       case None    => path
     }
 
   /** All committed versions at `path`, ascending. */
-  def versions(spark: SparkSession, path: String): Seq[Long] = {
+  def versions(spark: SparkSession, path: String): Seq[Long] = versions(fs(spark, path), path)
+
+  private def versions(f: FileSystem, path: String): Seq[Long] = {
     val dir = new org.apache.hadoop.fs.Path(path)
-    val f = fs(spark, path)
     if (!f.exists(dir)) Seq.empty
     else f.listStatus(dir).toSeq.map(_.getPath.getName)
       .collect { case n if n.startsWith("_committed_v") => n.drop("_committed_v".length).toLong }
@@ -1396,9 +1397,9 @@ object EtlCli {
     val f = fs(spark, path)
     if (!f.exists(new org.apache.hadoop.fs.Path(s"$path/_committed_v$version")))
       sys.error(s"version $version at $path is not committed (vacuumed or never " +
-        s"written; committed: ${versions(spark, path).mkString(",")})")
+        s"written; committed: ${versions(f, path).mkString(",")})")
     val dir = s"$path/data_v$version"
-    spark.read.format(sniffFormat(spark, dir)).load(dir)
+    spark.read.format(sniffFormat(f, dir)).load(dir)
   }
 
   /** Version diff — the "what changed since the last export" audit over a
@@ -1435,13 +1436,13 @@ object EtlCli {
     * assumption as compact: don't vacuum while a writer is staging. */
   def vacuum(spark: SparkSession, path: String, retain: Int = 1): Unit = {
     require(retain >= 1, s"retain must be >= 1, got $retain")
-    val keep = versions(spark, path).takeRight(retain).toSet
+    val f = fs(spark, path)
+    val keep = versions(f, path).takeRight(retain).toSet
     if (keep.isEmpty) sys.error(s"no committed version at $path — nothing to vacuum")
-    prune(spark, path, keep)
+    prune(f, path, keep)
   }
 
-  private def prune(spark: SparkSession, path: String, keep: Set[Long]): Unit = {
-    val f = fs(spark, path)
+  private def prune(f: FileSystem, path: String, keep: Set[Long]): Unit =
     f.listStatus(new org.apache.hadoop.fs.Path(path)).foreach { st =>
       val n = st.getPath.getName
       val stale =
@@ -1449,7 +1450,6 @@ object EtlCli {
         (n.startsWith("data_v") && !keep(n.drop("data_v".length).toLong))
       if (stale) f.delete(st.getPath, true)
     }
-  }
 
   private[graft] def commit(spark: SparkSession, path: String, version: Long,
                             retain: Int = 1): Unit = {
@@ -1458,7 +1458,7 @@ object EtlCli {
     f.create(new org.apache.hadoop.fs.Path(s"$path/_committed_v$version"), true).close()
     // keep the newest `retain` committed versions (the one just committed
     // included); prune the rest + abandoned stage dirs
-    prune(spark, path, versions(spark, path).takeRight(retain).toSet + version)
+    prune(f, path, versions(f, path).takeRight(retain).toSet + version)
   }
 
   /** Atomically replace the table at `path` with `df` (stage + commit +
@@ -1511,9 +1511,8 @@ object EtlCli {
 
   /** Epoch ceiling covered by the newest epoch-compaction fencepost, if
     * any (`_epochs_compacted_E` top-level marker — see compactEpochs). */
-  private def epochsCompactedThrough(spark: SparkSession, path: String): Option[Long] = {
+  private def epochsCompactedThrough(f: FileSystem, path: String): Option[Long] = {
     val dir = new org.apache.hadoop.fs.Path(path)
-    val f = fs(spark, path)
     if (!f.exists(dir)) None
     else f.listStatus(dir).toSeq.map(_.getPath.getName)
       .collect { case n if n.startsWith("_epochs_compacted_") =>
@@ -1524,16 +1523,28 @@ object EtlCli {
   /** Epochs of `path` that have a committed version AND are not superseded
     * by an epoch compaction, ascending. Driver-side metadata listing only
     * (one dir list + one marker probe per epoch). */
-  def committedEpochs(spark: SparkSession, path: String): Seq[Long] = {
+  def committedEpochs(spark: SparkSession, path: String): Seq[Long] =
+    committedEpochs(fs(spark, path), path).map(_._1)
+
+  /** (epoch, its committed version), ascending by epoch. */
+  private def committedEpochs(f: FileSystem, path: String): Seq[(Long, Long)] = {
     val dir = new org.apache.hadoop.fs.Path(path)
-    val f = fs(spark, path)
-    val floor = epochsCompactedThrough(spark, path).getOrElse(Long.MinValue)
+    val floor = epochsCompactedThrough(f, path).getOrElse(Long.MinValue)
     if (!f.exists(dir)) Nil
     else f.listStatus(dir).toSeq.map(_.getPath.getName)
       .collect { case n if n.startsWith("epoch=") => n.drop("epoch=".length).toLong }
-      .filter(e => e > floor && committedVersion(spark, s"$path/epoch=$e").isDefined)
-      .sorted
+      .filter(_ > floor)
+      .flatMap(e => committedVersion(f, s"$path/epoch=$e").map(e -> _))
+      .sortBy(_._1)
   }
+
+  /** (epoch, committed data dir) of each visible part of the epoch table:
+    * the newest fold (tagged with its fencepost), then later epochs. */
+  private def epochDataDirs(f: FileSystem, path: String): Seq[(Long, String)] =
+    epochsCompactedThrough(f, path).map { e =>
+      val p = s"$path/compact=$e"
+      (e, s"$p/data_v${committedVersion(f, p).get}")
+    }.toSeq ++ committedEpochs(f, path).map { case (e, v) => (e, s"$path/epoch=$e/data_v$v") }
 
   /** Has ingest epoch `epoch` of the table at `path` already committed —
     * either directly (its own version marker) or by being folded behind a
@@ -1543,9 +1554,11 @@ object EtlCli {
     * epoch exists" and no-op, because recomputing from `input minus
     * committed-output` would see only the previously-dropped rows and
     * overwrite the epoch with garbage. */
-  def epochCommitted(spark: SparkSession, path: String, epoch: Long): Boolean =
-    epochsCompactedThrough(spark, path).exists(_ >= epoch) ||
-      committedVersion(spark, s"$path/epoch=$epoch").isDefined
+  def epochCommitted(spark: SparkSession, path: String, epoch: Long): Boolean = {
+    val f = fs(spark, path)
+    epochsCompactedThrough(f, path).exists(_ >= epoch) ||
+      committedVersion(f, s"$path/epoch=$epoch").isDefined
+  }
 
   /** Read the union of every committed epoch of the table at `path` (the
     * epoch-partitioned analog of readTable): the newest compaction's
@@ -1555,16 +1568,10 @@ object EtlCli {
     * footer schema inference, which is a job of its own. */
   def readEpochTable(spark: SparkSession, path: String,
                      schema: Option[StructType] = None): DataFrame = {
-    val compacted = epochsCompactedThrough(spark, path).map { e =>
-      val p = s"$path/compact=$e"
-      s"$p/data_v${committedVersion(spark, p).get}"
-    }
-    val dirs = compacted.toSeq ++ committedEpochs(spark, path).map { e =>
-      val p = s"$path/epoch=$e"
-      s"$p/data_v${committedVersion(spark, p).get}"
-    }
+    val f = fs(spark, path)
+    val dirs = epochDataDirs(f, path).map(_._2)
     if (dirs.isEmpty) sys.error(s"no committed epochs at $path — nothing ingested yet")
-    val reader = spark.read.format(sniffFormat(spark, dirs.head))
+    val reader = spark.read.format(sniffFormat(f, dirs.head))
     schema.fold(reader)(reader.schema).load(dirs: _*)
   }
 
@@ -1578,16 +1585,11 @@ object EtlCli {
     * cross-fold ordering is exact and only same-fold duplicates fall
     * back to the caller's tiebreak. */
   private[graft] def readEpochTableTagged(spark: SparkSession, path: String): DataFrame = {
-    val dirs = epochsCompactedThrough(spark, path).map { e =>
-      val p = s"$path/compact=$e"
-      (e, s"$p/data_v${committedVersion(spark, p).get}")
-    }.toSeq ++ committedEpochs(spark, path).map { e =>
-      val p = s"$path/epoch=$e"
-      (e, s"$p/data_v${committedVersion(spark, p).get}")
-    }
+    val f = fs(spark, path)
+    val dirs = epochDataDirs(f, path)
     if (dirs.isEmpty) sys.error(s"no committed epochs at $path — nothing ingested yet")
     dirs.map { case (e, d) =>
-      spark.read.format(sniffFormat(spark, d)).load(d)
+      spark.read.format(sniffFormat(f, d)).load(d)
         .withColumn("__epoch", lit(e))
     }.reduce(_.unionByName(_))
   }
@@ -1635,42 +1637,40 @@ object EtlCli {
   def compactEpochs(spark: SparkSession, path: String,
                     format: String = "parquet",
                     targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
+    val f = fs(spark, path)
     val marker = new org.apache.hadoop.fs.Path(s"$path/$CompactionUnsafeMarker")
-    if (fs(spark, path).exists(marker)) {
-      val in = fs(spark, path).open(marker)
+    if (f.exists(marker)) {
+      val in = f.open(marker)
       val reason = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
                    finally in.close()
       sys.error(s"epoch table at $path is marked compaction-unsafe: $reason")
     }
-    val live = committedEpochs(spark, path)
+    val parts = epochDataDirs(f, path)
+    val live = parts.filter { case (_, d) => d.startsWith(s"$path/epoch=") }
     if (live.isEmpty) return // nothing appended since the last fold
-    val upTo = live.max
+    val upTo = live.last._1
     // ONE consistent snapshot: resolve every source data dir from the same
-    // `live` listing that defined upTo, and build the union from those
+    // listing that defined upTo, and build the union from those
     // paths directly. (Calling readEpochTable here would re-list the
     // directory — a sink committing epoch upTo+1 between the two listings
     // would fold its rows into compact=upTo while epoch=upTo+1 stays
     // visible past the fencepost, double-counting them in every read.)
-    val dataDirs = (epochsCompactedThrough(spark, path).map(e => s"$path/compact=$e").toSeq ++
-      live.map(e => s"$path/epoch=$e"))
-      .map(d => s"$d/data_v${committedVersion(spark, d).get}")
-    val union = spark.read.format(sniffFormat(spark, dataDirs.head)).load(dataDirs: _*)
+    val dataDirs = parts.map(_._2)
+    val union = spark.read.format(sniffFormat(f, dataDirs.head)).load(dataDirs: _*)
     val bytes = dataDirs.map { p =>
-      fs(spark, path).getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength
+      f.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength
     }.sum
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     writeTable(union.coalesce(nFiles), s"$path/compact=$upTo", format)
-    fs(spark, path)
-      .create(new org.apache.hadoop.fs.Path(s"$path/_epochs_compacted_$upTo"), true)
-      .close()
+    f.create(new org.apache.hadoop.fs.Path(s"$path/_epochs_compacted_$upTo"), true).close()
   }
 
   /** Reclaim epoch/compact dirs superseded by the newest compaction
     * fencepost (the epoch-table vacuum; run it when no reader still holds
     * a pre-compaction plan). */
-  def vacuumEpochs(spark: SparkSession, path: String): Unit =
-    epochsCompactedThrough(spark, path).foreach { e =>
-      val f = fs(spark, path)
+  def vacuumEpochs(spark: SparkSession, path: String): Unit = {
+    val f = fs(spark, path)
+    epochsCompactedThrough(f, path).foreach { e =>
       f.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq.foreach { st =>
         val n = st.getPath.getName
         val stale =
@@ -1681,6 +1681,7 @@ object EtlCli {
         if (stale) f.delete(st.getPath, true)
       }
     }
+  }
 
   /** Small-files compaction (the OPTIMIZE of this warehouse): rewrite the
     * current version into ceil(bytes / targetFileBytes) files via the same
@@ -1690,10 +1691,11 @@ object EtlCli {
     * scan planning and open-cost; compaction restores a healthy layout. */
   def compact(spark: SparkSession, path: String,
               targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    val v = committedVersion(spark, path)
+    val f = fs(spark, path)
+    val v = committedVersion(f, path)
       .getOrElse(sys.error(s"no committed version at $path"))
     val dataDir = new org.apache.hadoop.fs.Path(s"$path/data_v$v")
-    val bytes = fs(spark, path).getContentSummary(dataDir).getLength
+    val bytes = f.getContentSummary(dataDir).getLength
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     writeTable(readTable(spark, path).coalesce(nFiles), path)
   }

@@ -656,10 +656,16 @@ class StreamingFileSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      stage("b1", b1)
-      val first = runStream()
-      stage("b2", b2)
-      val second = runStream()
+      // graft's `file:` binding makes every metadata call of the commit
+      // protocol and the checkpoint log in-process; stock Hadoop without
+      // libhadoop started a chmod/readlink/ls for each (~80 per batch)
+      val ((first, second), starts) = graft.LocalFsSpec.processStarts {
+        stage("b1", b1)
+        val first = runStream()
+        stage("b2", b2)
+        (first, runStream())
+      }
+      assert(starts.isEmpty, s"process starts in the stream: ${starts.mkString("; ")}")
       // Measured on this fixture: 20 jobs for batch 0 and 21 for batch 1
       // (batch 1 also reads the committed corpus and index; with their
       // schemas given, those reads infer no footer schema — 23 before).

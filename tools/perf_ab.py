@@ -10,9 +10,13 @@ Each pair runs `python3 perfbench/run.py --workload W --seed S --seconds T
 first flips from pair to pair, so a host that slows down or speeds up over
 the series does not favour one side. Seeds count up from --seed, one per
 pair. The script only runs perfbench from outside and reads its output:
-the last stdout line (the JSON result) and the `# op_median_ms` line.
+the last stdout line (the JSON result), the `# op_median_ms` line and the
+`# meta` line.
 
-It prints, per end-to-end metric, each side's median and quartiles
+Each pair's line shows, per side, wall_s next to that run's session_s and
+canary_ms before/after from `# meta`: a pair run in a slow host period
+shows there, and perfbench/README.md asks for such a comparison to be
+re-run. It then prints, per end-to-end metric, each side's median and quartiles
 (IQR = q3 - q1), the relative change of the medians, how many pairs B won
 (lower is better for every metric perfbench gates) and whether the median
 gap exceeds A's IQR; then each query's op_median_ms median per side. Runs
@@ -50,7 +54,21 @@ def run_once(checkout, workload, seed, seconds, timeout):
     for ln in lines:
         if ln.startswith("# op_median_ms "):
             res["op_median_ms"] = json.loads(ln[len("# op_median_ms "):])
+        elif ln.startswith("# meta "):
+            res["meta"] = json.loads(ln[len("# meta "):])
     return res
+
+
+def run_line(r):
+    """wall_s of one run, with the host diagnostics of its `# meta` line."""
+    if not ok(r):
+        return "FAILED"
+    meta = r.get("meta", {})
+    canary = meta.get("canary_ms", {})
+    nan = float("nan")
+    return (f"wall_s={r['metrics']['wall_s']['value']:.2f}"
+            f" [session_s={meta.get('session_s', nan):.2f}"
+            f" canary_ms={canary.get('before', nan):.1f}/{canary.get('after', nan):.1f}]")
 
 
 def ok(r):
@@ -78,8 +96,7 @@ def main():
         for side in order:
             pair[side] = run_once(sides[side], args.workload, seed, args.seconds, args.timeout)
         print(f"pair {i + 1}/{args.pairs} seed={seed} order={pair['order']} "
-              + " ".join(f"{s}:" + (f"wall_s={pair[s]['metrics']['wall_s']['value']:.2f}"
-                                    if ok(pair[s]) else "FAILED") for s in "AB"),
+              + " ".join(f"{s}:{run_line(pair[s])}" for s in "AB"),
               flush=True)
         pairs.append(pair)
     if args.json:
