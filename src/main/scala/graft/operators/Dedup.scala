@@ -786,16 +786,6 @@ object Dedup {
           .as("recall"))
   }
 
-  /** The CHOICE the sweep exists to make: the cheapest config (fewest
-    * candidate verifications) whose recall clears the floor — one row,
-    * or no rows when nothing qualifies (a monitor should treat that as
-    * "re-sweep with more hashes", not silently deploy the best loser).
-    * Deterministic tie-break: (n_candidates, band_size). */
-  def pickLshConfig(sweep: DataFrame, minRecall: Double): DataFrame =
-    sweep.filter(col("recall") >= minRecall)
-      .orderBy(col("n_candidates"), col("band_size"))
-      .limit(1)
-
   /** End-to-end near-dup deduplication: LSH near-dup pairs -> duplicate
     * components -> keep the least doc id per component, drop the rest.
     * Returns the deduplicated corpus (docs schema unchanged). */

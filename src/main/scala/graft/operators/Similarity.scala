@@ -1130,16 +1130,6 @@ object Similarity {
       Seq(col("dist"), col("cid")), "rn", "n_probe", nProbes, k, exact)
   }
 
-  /** The CHOICE the probe sweep exists to make: the cheapest depth
-    * (fewest scored candidates) whose micro recall clears the floor —
-    * one row, or none when no depth qualifies (treat as "re-sweep with
-    * more cells/probes", not silently deploy the best loser).
-    * Deterministic tie-break: (n_scored, n_probe). */
-  def pickIvfConfig(sweep: DataFrame, minRecall: Double): DataFrame =
-    sweep.filter(col("recall_micro") >= minRecall)
-      .orderBy(col("n_scored"), col("n_probe"))
-      .limit(1)
-
   /** IVF-PQ composition (the FAISS-style full scale path, Jegou et al.
     * TPAMI'11 §V): the coarse quantizer restricts the search to `nProbe`
     * probed cells, and within them distances come from the PQ codes via
@@ -1398,7 +1388,7 @@ object Similarity {
     * tail derives every depth — one window per qid by (adist, cid), one
     * aggregation. Output
     * (n_probe, n_scored, n_hit, n_denom, recall_micro) — the exact
-    * schema [[pickIvfConfig]] chooses from. */
+    * schema [[SweepFamily.ivf]] picks from. */
   def ivfPqResidualSweep(codes: DataFrame, codebook: DataFrame,
                          cent: DataFrame, queries: DataFrame, idCol: String,
                          vecCol: String, m: Int, nProbes: Seq[Int], k: Int,
@@ -1921,15 +1911,6 @@ object Similarity {
       shortlists, k, exact)
   }
 
-  /** The CHOICE the shortlist sweep exists to make: the cheapest depth
-    * (fewest reranked candidates) whose micro recall clears the floor —
-    * one row, or none when no depth qualifies (re-sweep deeper, never
-    * deploy the best loser). Tie-break (n_scored, shortlist). */
-  def pickBinaryConfig(sweep: DataFrame, minRecall: Double): DataFrame =
-    sweep.filter(col("recall_micro") >= minRecall)
-      .orderBy(col("n_scored"), col("shortlist"))
-      .limit(1)
-
   // ---- cell-pruned binary ANN (the FAISS IndexBinaryIVF shape) --------
   // The flat binary probe's one scale asymmetry closed: stage 1 above
   // Hamming-scores EVERY corpus code per query batch — 1/32 the bytes of
@@ -2135,17 +2116,6 @@ object Similarity {
       coalesce(sum(when(col("__first"), col(s"__qc$j"))), lit(0L)).as(s"__c$j")))
   }
 
-  /** The CHOICE the 2D sweep exists to make: the cheapest grid point
-    * clearing the recall floor — cost-ordered by stage-1 work first
-    * (n_cand: the scan-side Hamming evaluations, which dominate at
-    * corpus scale), then stage-2 reranks, then (n_probe, shortlist) for
-    * determinism. One row, or none when nothing qualifies (re-sweep
-    * deeper/wider — never deploy the best loser). */
-  def pickBinaryIvfConfig(sweep: DataFrame, minRecall: Double): DataFrame =
-    sweep.filter(col("recall_micro") >= minRecall)
-      .orderBy(col("n_cand"), col("n_scored"), col("n_probe"), col("shortlist"))
-      .limit(1)
-
   /** Fused-recall sweep over the binary-IVF (nProbe, shortlist) grid —
     * the calibration the hybrid-RRF consumer deploys from. The round-13
     * measurement showed a sweep's PER-ARM recall floor does not survive
@@ -2245,17 +2215,6 @@ object Similarity {
         coalesce(col("n_hit"), lit(0L)).as("n_hit"), col("n_denom"),
         microRecall(coalesce(col("n_hit"), lit(0L))).as("fused_recall"))
   }
-
-  /** The CHOICE the fused sweep exists to make: the cheapest grid point
-    * clearing the FUSED-recall floor — the same cost ordering as
-    * [[pickBinaryIvfConfig]] (stage-1 Hamming evals dominate at corpus
-    * scale, then reranks, then the knobs for determinism). One row, or
-    * none when nothing qualifies (re-sweep deeper/wider — never deploy
-    * the best loser). */
-  def pickFusedRrfConfig(sweep: DataFrame, minFusedRecall: Double): DataFrame =
-    sweep.filter(col("fused_recall") >= minFusedRecall)
-      .orderBy(col("n_cand"), col("n_scored"), col("n_probe"), col("shortlist"))
-      .limit(1)
 
   /** The production read path over a cell-PARTITIONED persisted index
     * (binaryIvfIndexBuild written with .partitionBy("cell")): resolve

@@ -376,6 +376,21 @@ object TextAnalysis {
       .limit(topK)
   }
 
+  /** [[bm25]] as a rank-fusion arm: (doc_id, rank) by (score desc,
+    * doc_id). The window's pmod key is the constant 0 (md5 hex is always
+    * 32 chars): one bounded partition over the topK rows, which keeps
+    * Spark from warning about a global window without changing the
+    * ranking. */
+  def bm25Ranks(docs: org.apache.spark.sql.DataFrame, idCol: String,
+                textCol: String, terms: Seq[String],
+                topK: Int): org.apache.spark.sql.DataFrame =
+    bm25(docs, idCol, textCol, terms, topK = topK)
+      .withColumn("rank", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(pmod(length(md5(col("doc_id").cast("string"))), lit(32)))
+          .orderBy(desc("score"), col("doc_id"))))
+      .select(col("doc_id"), col("rank"))
+
   /** Per-group word-n-gram diversity: (n_grams, n_distinct, type-token
     * ratio) — the corpus-health metric that catches template farms and
     * synthetic loops (a source whose TTR collapses is repeating itself).

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.QueryDef
 import graft.core.Tables.t
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{Dedup, SweepFamily, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis + dedup surface over the `documents` table: token
@@ -1064,12 +1064,12 @@ object TextQueries {
           $lshSweepRowsSql
           ) WHERE recall >= 0.9e0
           ORDER BY n_candidates, band_size LIMIT 1""") { (s, dir) =>
-      Dedup.pickLshConfig(
+      SweepFamily.lsh.pick(
         Memo.parquetArtifact(s, dir, "lsh_sweep_result") {
           Dedup.lshBandSweepFromSignatures(lshSweepSigs(s, dir), numHashes = 8,
             bandSizes = lshSweepCfgs, truth = dedupRecallTruth(s, dir))
         },
-        minRecall = 0.9)
+        floor = 0.9)
     },
 
     // SimHash recall vs the SAME Jaccard ground truth the MinHash

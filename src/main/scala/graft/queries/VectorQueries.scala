@@ -2,8 +2,7 @@ package graft.queries
 
 import graft.QueryDef
 import graft.core.Tables.t
-import graft.operators.{Similarity, TextAnalysis}
-import org.apache.spark.sql.expressions.Window
+import graft.operators.{Similarity, SweepFamily, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 /** Similarity-search surface over the `embeddings` table (Array[Float],
@@ -243,29 +242,26 @@ object VectorQueries {
         k = KnnK, rounds = KnnRounds)
     }
 
+  /** The lexical arm every hybrid query fuses with: BM25 top-20 for the
+    * terms (vector, spark, filter). */
+  private def lexArm(s: org.apache.spark.sql.SparkSession,
+                     dir: String): org.apache.spark.sql.DataFrame =
+    TextAnalysis.bm25Ranks(t(s, dir, "documents"), "doc_id", "text",
+      Seq("vector", "spark", "filter"), topK = 20)
+
   /** The persisted fused-recall sweep both fusion-picker queries read
     * (one build per JVM run + sf dir, the binary_ivf_sweep pattern). */
   private def fusedSweepArtifact(s: org.apache.spark.sql.SparkSession,
                                  dir: String): org.apache.spark.sql.DataFrame =
     Memo.parquetArtifact(s, dir, "fused_sweep") {
       val emb = t(s, dir, "embeddings")
-      def cent = Memo.parquetArtifact(s, dir, "binary_ivf_cent") {
-        Similarity.coarseCentroids(emb, "vec_id", "embedding", nCells = 16)
-      }
-      def index = rp(s, Memo.parquetArtifactPath(s, dir,
-        "binary_ivf_index", partitionBy = Seq("cell")) {
-        Similarity.binaryIvfIndexBuild(emb, "vec_id", "embedding", dims = 64, cent)
-      })
+      def cent = binaryIvfCent(s, dir)
+      def index = rp(s, binaryIvfIndexPath(s, dir))
       val queries = emb.filter(col("vec_id") < 5)
       val exactArm = Similarity.bruteForceTopK(emb, queries, "vec_id",
           "embedding", k = 20)
         .select(col("qid"), col("cid"), col("rank"))
-      val lex = TextAnalysis.bm25(t(s, dir, "documents"), "doc_id", "text",
-          Seq("vector", "spark", "filter"), k1 = 1.2, b = 0.75, topK = 20)
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(pmod(length(md5(col("doc_id").cast("string"))), lit(32)))
-            .orderBy(desc("score"), col("doc_id"))))
-        .select(col("doc_id"), col("rank"))
+      val lex = lexArm(s, dir)
       Similarity.fusedRrfSweep(index, index, queries, "vec_id", "embedding",
         dims = 64, cent, lex, exactArm, nProbes = Seq(2, 4, 8),
         shortlists = Seq(25, 50), armK = 20, kRrf = 60, topK = 10)
@@ -413,6 +409,70 @@ object VectorQueries {
           "vec_id", "embedding", k = 10)
         .select(col("qid"), col("cid"))
     }
+
+  // Each shared artifact below has ONE declaring def: the memo keys on
+  // the name alone and keeps whichever build runs first, so a second
+  // copy of a build body could drift and silently change other queries'
+  // inputs.
+
+  /** The 16-cell hash-rank coarse quantizer every binary-IVF query, both
+    * drift reports and the cell split encode against. */
+  private def binaryIvfCent(s: org.apache.spark.sql.SparkSession,
+                            dir: String): org.apache.spark.sql.DataFrame =
+    Memo.parquetArtifact(s, dir, "binary_ivf_cent") {
+      Similarity.coarseCentroids(t(s, dir, "embeddings"), "vec_id", "embedding",
+        nCells = 16)
+    }
+
+  /** Path of the binary-IVF index (id, cell, words, vec) under
+    * [[binaryIvfCent]], persisted PARTITIONED BY cell — the layout the
+    * probes prune and the sweeps scan. */
+  private def binaryIvfIndexPath(s: org.apache.spark.sql.SparkSession,
+                                 dir: String): String =
+    Memo.parquetArtifactPath(s, dir, "binary_ivf_index", partitionBy = Seq("cell")) {
+      Similarity.binaryIvfIndexBuild(t(s, dir, "embeddings"), "vec_id", "embedding",
+        dims = 64, binaryIvfCent(s, dir))
+    }
+
+  /** The flat binary index (id, words, vec) the Hamming-shortlist queries
+    * probe; two reads per probe, so stage 1's scan prunes to (id, words). */
+  private def binaryIndex(s: org.apache.spark.sql.SparkSession,
+                          dir: String): org.apache.spark.sql.DataFrame =
+    Memo.parquetArtifact(s, dir, "binary_index") {
+      Similarity.binaryIndexBuild(t(s, dir, "embeddings"), "vec_id", "embedding",
+        dims = 64)
+    }
+
+  // The sweep bodies a sweep query computes live (it measures the sweep)
+  // and its pick query memoizes (it measures the recurring choice).
+
+  private def ivfSweepFrontier(s: org.apache.spark.sql.SparkSession,
+                               dir: String): org.apache.spark.sql.DataFrame = {
+    val emb = t(s, dir, "embeddings")
+    Similarity.ivfProbeSweep(emb, emb.filter(col("vec_id") < 5), "vec_id",
+      "embedding", nCells = 16, nProbes = Seq(1, 2, 4, 8), k = 10,
+      exact = annRecallTruth(s, dir))
+  }
+
+  private def binarySweepFrontier(s: org.apache.spark.sql.SparkSession,
+                                  dir: String): org.apache.spark.sql.DataFrame = {
+    val queries = t(s, dir, "embeddings").filter(col("vec_id") < 5)
+    def index = binaryIndex(s, dir)
+    Similarity.binaryShortlistSweep(index, index, queries, "vec_id", "embedding",
+      dims = 64, shortlists = Seq(25, 50, 100, 200), k = 10,
+      exact = binaryTruth(s, dir))
+  }
+
+  private def binaryIvfSweepFrontier(s: org.apache.spark.sql.SparkSession,
+                                     dir: String): org.apache.spark.sql.DataFrame = {
+    val emb = t(s, dir, "embeddings")
+    // the SAME cell-partitioned persisted index the probe queries scan
+    def index = rp(s, binaryIvfIndexPath(s, dir))
+    Similarity.binaryIvfSweep(index, index, emb.filter(col("vec_id") < 5),
+      "vec_id", "embedding", dims = 64, binaryIvfCent(s, dir),
+      nProbes = Seq(2, 4, 8), shortlists = Seq(25, 50), k = 10,
+      exact = binaryTruth(s, dir))
+  }
 
   /** Shared oracle CTE chain for the binary-Hamming shortlist sweep
     * (queries vec_id < 5, k=10, depths 25/50/100/200) ending in the
@@ -1042,9 +1102,7 @@ object VectorQueries {
       // claim is a ReadSchema property asserted in PlanSpec. The oracle
       // recomputes sign bits from the embeddings, so hash-match proves
       // the artifact derivation.
-      def index = Memo.parquetArtifact(s, dir, "binary_index") {
-        Similarity.binaryIndexBuild(emb, "vec_id", "embedding", dims = 64)
-      }
+      def index = binaryIndex(s, dir)
       Similarity.binaryProbeTopK(index, index, emb.filter(col("vec_id") < 5),
           "vec_id", "embedding", dims = 64, shortlist = 50, k = 5)
         .orderBy(col("qid"), col("rank"))
@@ -1108,15 +1166,10 @@ object VectorQueries {
                    CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, cid) AS INT) AS rank
             FROM scored) WHERE rank <= 5 ORDER BY qid, rank""") { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      def cent = Memo.parquetArtifact(s, dir, "binary_ivf_cent") {
-        Similarity.coarseCentroids(emb, "vec_id", "embedding", nCells = 16)
-      }
-      val idxPath = Memo.parquetArtifactPath(s, dir, "binary_ivf_index",
-        partitionBy = Seq("cell")) {
-        Similarity.binaryIvfIndexBuild(emb, "vec_id", "embedding", dims = 64, cent)
-      }
+      val idxPath = binaryIvfIndexPath(s, dir)
       Similarity.binaryIvfProbeIndex(s, idxPath, emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", dims = 64, cent, nProbe = 4, shortlist = 50, k = 5)
+          "vec_id", "embedding", dims = 64, binaryIvfCent(s, dir), nProbe = 4,
+          shortlist = 50, k = 5)
         .orderBy(col("qid"), col("rank"))
     },
 
@@ -1189,16 +1242,10 @@ object VectorQueries {
           FROM den LEFT JOIN hits ON hits.qid = den.qid
           ORDER BY den.qid""") { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      def cent = Memo.parquetArtifact(s, dir, "binary_ivf_cent") {
-        Similarity.coarseCentroids(emb, "vec_id", "embedding", nCells = 16)
-      }
-      val idxPath = Memo.parquetArtifactPath(s, dir, "binary_ivf_index",
-        partitionBy = Seq("cell")) {
-        Similarity.binaryIvfIndexBuild(emb, "vec_id", "embedding", dims = 64, cent)
-      }
+      val idxPath = binaryIvfIndexPath(s, dir)
       val approx = Similarity.binaryIvfProbeIndex(s, idxPath,
         emb.filter(col("vec_id") < 5), "vec_id", "embedding", dims = 64,
-        cent, nProbe = 4, shortlist = 50, k = 10)
+        binaryIvfCent(s, dir), nProbe = 4, shortlist = 50, k = 10)
       Similarity.annRecallAtK(approx, binaryTruth(s, dir), k = 10)
         .orderBy(col("qid"))
     },
@@ -1216,19 +1263,7 @@ object VectorQueries {
       s"""$binaryIvfSweepCtesSql
           SELECT n_probe, shortlist, n_cand, n_scored, n_hit, n_denom, recall_micro
           FROM frontier ORDER BY n_probe, shortlist""") { (s, dir) =>
-      val emb = t(s, dir, "embeddings")
-      def cent = Memo.parquetArtifact(s, dir, "binary_ivf_cent") {
-        Similarity.coarseCentroids(emb, "vec_id", "embedding", nCells = 16)
-      }
-      // the SAME cell-partitioned persisted index the probe queries scan
-      def index = rp(s, Memo.parquetArtifactPath(s, dir,
-        "binary_ivf_index", partitionBy = Seq("cell")) {
-        Similarity.binaryIvfIndexBuild(emb, "vec_id", "embedding", dims = 64, cent)
-      })
-      Similarity.binaryIvfSweep(index, index, emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", dims = 64, cent, nProbes = Seq(2, 4, 8),
-          shortlists = Seq(25, 50), k = 10, exact = binaryTruth(s, dir))
-        .orderBy(col("n_probe"), col("shortlist"))
+      binaryIvfSweepFrontier(s, dir).orderBy(col("n_probe"), col("shortlist"))
     },
 
     // The CHOICE read off the 2D sweep (floor 0.5; cost order: stage-1
@@ -1243,20 +1278,9 @@ object VectorQueries {
           SELECT n_probe, shortlist, n_cand, n_scored, n_hit, n_denom, recall_micro
           FROM frontier WHERE recall_micro >= 0.5
           ORDER BY n_cand, n_scored, n_probe, shortlist LIMIT 1""") { (s, dir) =>
-      val sweep = Memo.parquetArtifact(s, dir, "binary_ivf_sweep") {
-        val emb = t(s, dir, "embeddings")
-        def cent = Memo.parquetArtifact(s, dir, "binary_ivf_cent") {
-          Similarity.coarseCentroids(emb, "vec_id", "embedding", nCells = 16)
-        }
-        def index = rp(s, Memo.parquetArtifactPath(s, dir,
-          "binary_ivf_index", partitionBy = Seq("cell")) {
-          Similarity.binaryIvfIndexBuild(emb, "vec_id", "embedding", dims = 64, cent)
-        })
-        Similarity.binaryIvfSweep(index, index, emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", dims = 64, cent, nProbes = Seq(2, 4, 8),
-          shortlists = Seq(25, 50), k = 10, exact = binaryTruth(s, dir))
-      }
-      Similarity.pickBinaryIvfConfig(sweep, minRecall = 0.5)
+      SweepFamily.binaryIvf.pick(
+        Memo.parquetArtifact(s, dir, "binary_ivf_sweep")(binaryIvfSweepFrontier(s, dir)),
+        floor = 0.5)
     },
 
     // The FUSED-recall sweep (r13's measured lesson operationalized): a
@@ -1285,8 +1309,7 @@ object VectorQueries {
           SELECT n_probe, shortlist, n_cand, n_scored, n_hit, n_denom, fused_recall
           FROM ffrontier WHERE fused_recall >= 0.5
           ORDER BY n_cand, n_scored, n_probe, shortlist LIMIT 1""") { (s, dir) =>
-      Similarity.pickFusedRrfConfig(fusedSweepArtifact(s, dir),
-        minFusedRecall = 0.5)
+      SweepFamily.fusedRrf.pick(fusedSweepArtifact(s, dir), floor = 0.5)
     },
 
     // Drift monitor for the PINNED coarse quantizer every IVF-shaped
@@ -1307,9 +1330,6 @@ object VectorQueries {
       "pinned-quantizer drift report: occupancy TVD + quantization-error ratio, iid halves vs shifted corpus",
       quantizerDriftSql) { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      def cent = Memo.parquetArtifact(s, dir, "binary_ivf_cent") {
-        Similarity.coarseCentroids(emb, "vec_id", "embedding", nCells = 16)
-      }
       // shift in DOUBLE space (the quantized kernels widen floats to
       // double before any arithmetic, so the oracle's `x + 0.5e0` over
       // its double dims view matches bit-for-bit)
@@ -1325,7 +1345,7 @@ object VectorQueries {
               emb.filter(col("vec_id") % 2 === 0),
               emb.filter(col("vec_id") % 2 === 1)),
             ("shifted", emb, shifted)),
-          "embedding", cent,
+          "embedding", binaryIvfCent(s, dir),
           maxTvd = DriftMaxTvd, maxQerrRatio = DriftMaxQerrRatio)
         .orderBy(col("scenario"))
     },
@@ -1346,9 +1366,7 @@ object VectorQueries {
       "pinned-codebook drift report: occupancy TVD + coarse-error + residual-ADC-error ratios, iid halves vs residual scale-up",
       codebookDriftSql) { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      def cent = Memo.parquetArtifact(s, dir, "binary_ivf_cent") {
-        Similarity.coarseCentroids(emb, "vec_id", "embedding", nCells = 16)
-      }
+      def cent = binaryIvfCent(s, dir)
       val cb = rp(s, s"${ensureResidualShared(s, dir)}/codebook")
       // residual scale-up around the ASSIGNED day-0 centroid, in DOUBLE
       // space (v' = 2v - cv elementwise — same multiply-then-subtract
@@ -1428,9 +1446,7 @@ object VectorQueries {
           ORDER BY den.qid""") { (s, dir) =>
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 5)
-      def index = Memo.parquetArtifact(s, dir, "binary_index") {
-        Similarity.binaryIndexBuild(emb, "vec_id", "embedding", dims = 64)
-      }
+      def index = binaryIndex(s, dir)
       val approx = Similarity.binaryProbeTopK(index, index, queries,
         "vec_id", "embedding", dims = 64, shortlist = 50, k = 10)
       Similarity.annRecallAtK(approx, binaryTruth(s, dir), k = 10).orderBy(col("qid"))
@@ -1448,15 +1464,7 @@ object VectorQueries {
       s"""$binarySweepCtesSql
           SELECT shortlist, n_scored, n_hit, n_denom, recall_micro
           FROM frontier ORDER BY shortlist""") { (s, dir) =>
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-      def index = Memo.parquetArtifact(s, dir, "binary_index") {
-        Similarity.binaryIndexBuild(emb, "vec_id", "embedding", dims = 64)
-      }
-      Similarity.binaryShortlistSweep(index, index, queries, "vec_id", "embedding",
-          dims = 64, shortlists = Seq(25, 50, 100, 200), k = 10,
-          exact = binaryTruth(s, dir))
-        .orderBy(col("shortlist"))
+      binarySweepFrontier(s, dir).orderBy(col("shortlist"))
     },
 
     // The CHOICE read off the binary sweep (floor 0.5, tie
@@ -1470,17 +1478,9 @@ object VectorQueries {
           SELECT shortlist, n_scored, n_hit, n_denom, recall_micro
           FROM frontier WHERE recall_micro >= 0.5
           ORDER BY n_scored, shortlist LIMIT 1""") { (s, dir) =>
-      val sweep = Memo.parquetArtifact(s, dir, "binary_sweep") {
-        val emb = t(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 5)
-        def index = Memo.parquetArtifact(s, dir, "binary_index") {
-          Similarity.binaryIndexBuild(emb, "vec_id", "embedding", dims = 64)
-        }
-        Similarity.binaryShortlistSweep(index, index, queries, "vec_id", "embedding",
-          dims = 64, shortlists = Seq(25, 50, 100, 200), k = 10,
-          exact = binaryTruth(s, dir))
-      }
-      Similarity.pickBinaryConfig(sweep, minRecall = 0.5)
+      SweepFamily.binary.pick(
+        Memo.parquetArtifact(s, dir, "binary_sweep")(binarySweepFrontier(s, dir)),
+        floor = 0.5)
     },
 
     // Hybrid retrieval via Reciprocal Rank Fusion (Cormack et al. 2009):
@@ -1521,16 +1521,7 @@ object VectorQueries {
                    CAST(ROW_NUMBER() OVER (ORDER BY rrf DESC, doc_id) AS INT) AS rank
             FROM agg)
           WHERE rank <= 10 ORDER BY rank""") { (s, dir) =>
-      val lex = TextAnalysis.bm25(t(s, dir, "documents"), "doc_id", "text",
-          Seq("vector", "spark", "filter"), k1 = 1.2, b = 0.75, topK = 20)
-        // bounded single-partition window over the topK=20 rows; the pmod
-        // key is the constant 0 (md5 hex is always 32 chars) — silences
-        // the global-WindowExec WARN without changing the global ranking
-        .withColumn("rank",
-          row_number().over(
-            Window.partitionBy(pmod(length(md5(col("doc_id").cast("string"))), lit(32)))
-              .orderBy(desc("score"), col("doc_id"))))
-        .select(col("doc_id"), col("rank"))
+      val lex = lexArm(s, dir)
       val emb = t(s, dir, "embeddings")
       val dense = Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") === 0),
           "vec_id", "embedding", k = 20)
@@ -1606,24 +1597,12 @@ object VectorQueries {
                    CAST(ROW_NUMBER() OVER (ORDER BY rrf DESC, doc_id) AS INT) AS rank
             FROM agg)
           WHERE rank <= 10 ORDER BY rank""") { (s, dir) =>
-      val lex = TextAnalysis.bm25(t(s, dir, "documents"), "doc_id", "text",
-          Seq("vector", "spark", "filter"), k1 = 1.2, b = 0.75, topK = 20)
-        .withColumn("rank",
-          row_number().over(
-            Window.partitionBy(pmod(length(md5(col("doc_id").cast("string"))), lit(32)))
-              .orderBy(desc("score"), col("doc_id"))))
-        .select(col("doc_id"), col("rank"))
+      val lex = lexArm(s, dir)
       val emb = t(s, dir, "embeddings")
-      def cent = Memo.parquetArtifact(s, dir, "binary_ivf_cent") {
-        Similarity.coarseCentroids(emb, "vec_id", "embedding", nCells = 16)
-      }
-      val idxPath = Memo.parquetArtifactPath(s, dir, "binary_ivf_index",
-        partitionBy = Seq("cell")) {
-        Similarity.binaryIvfIndexBuild(emb, "vec_id", "embedding", dims = 64, cent)
-      }
+      val idxPath = binaryIvfIndexPath(s, dir)
       val dense = Similarity.binaryIvfProbeIndex(s, idxPath,
           emb.filter(col("vec_id") === 0), "vec_id", "embedding", dims = 64,
-          cent, nProbe = 4, shortlist = 50, k = 20)
+          binaryIvfCent(s, dir), nProbe = 4, shortlist = 50, k = 20)
         .select(col("cid").as("doc_id"), col("rank"))
       Similarity.rrfFuse(Seq(lex, dense), "doc_id", "rank", kRrf = 60, topK = 10)
         .orderBy(col("rank"))
@@ -1826,11 +1805,7 @@ object VectorQueries {
       s"""$ivfSweepCtesSql
           $ivfSweepSelectSql
           ORDER BY cfg.n_probe""") { (s, dir) =>
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 5)
-      Similarity.ivfProbeSweep(emb, q, "vec_id", "embedding", nCells = 16,
-          nProbes = Seq(1, 2, 4, 8), k = 10, exact = annRecallTruth(s, dir))
-        .orderBy(col("n_probe"))
+      ivfSweepFrontier(s, dir).orderBy(col("n_probe"))
     },
 
     // The CHOICE the probe sweep exists to make, closed at the oracle
@@ -1851,14 +1826,9 @@ object VectorQueries {
       // shape (a deployment probes the stored frontier, not a re-sweep);
       // q_ivf_sweep above measures the sweep computation itself. The
       // oracle recomputes the whole grid from scratch.
-      Similarity.pickIvfConfig(
-        Memo.parquetArtifact(s, dir, "ivf_sweep_result") {
-          val emb = t(s, dir, "embeddings")
-          Similarity.ivfProbeSweep(emb, emb.filter(col("vec_id") < 5),
-            "vec_id", "embedding", nCells = 16,
-            nProbes = Seq(1, 2, 4, 8), k = 10, exact = annRecallTruth(s, dir))
-        },
-        minRecall = 0.5)
+      SweepFamily.ivf.pick(
+        Memo.parquetArtifact(s, dir, "ivf_sweep_result")(ivfSweepFrontier(s, dir)),
+        floor = 0.5)
     },
 
     // Cluster-balanced sampling — the topic-diversity retention policy a
@@ -2184,7 +2154,7 @@ object VectorQueries {
           SELECT n_probe, n_scored, n_hit, n_denom, recall_micro
           FROM frontier WHERE recall_micro >= 0.05
           ORDER BY n_scored, n_probe LIMIT 1""") { (s, dir) =>
-      Similarity.pickIvfConfig(ivfPqSweepArtifact(s, dir), minRecall = 0.05)
+      SweepFamily.ivf.pick(ivfPqSweepArtifact(s, dir), floor = 0.05)
         .select(col("n_probe"), col("n_scored"), col("n_hit"), col("n_denom"),
           col("recall_micro"))
     },
@@ -2455,10 +2425,7 @@ object VectorQueries {
   private def cellSplitTree(s: org.apache.spark.sql.SparkSession,
                             dir: String): org.apache.spark.sql.DataFrame =
     Memo.parquetArtifact(s, dir, "cell_split_tree") {
-      val emb = t(s, dir, "embeddings")
-      val cent = Memo.parquetArtifact(s, dir, "binary_ivf_cent") {
-        Similarity.coarseCentroids(emb, "vec_id", "embedding", nCells = 16)
-      }
+      val cent = binaryIvfCent(s, dir)
       val index = Similarity.binaryIvfIndexBuild(
         concentratedCorpus(s, dir), "vec_id", "embedding", dims = 64, cent)
       Similarity.splitHotCells(index, "vec_id", "embedding", cent,

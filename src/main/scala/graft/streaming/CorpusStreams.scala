@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, SweepFamily}
 import graft.tools.EtlCli
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
@@ -23,6 +23,18 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 object CorpusStreams {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Every sink below: run `body` once per micro-batch of `incoming`
+    * (at-least-once, keyed by batchId) until the input available at
+    * start is drained, checkpointing under `checkpointDir`. */
+  private def eachBatch(incoming: DataFrame, checkpointDir: String)
+                       (body: (DataFrame, Long) => Unit): StreamingQuery =
+    incoming.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(OutputMode.Update())
+      .foreachBatch(body)
+      .trigger(Trigger.AvailableNow())
+      .start()
 
   /** Start the incremental-dedup sink over a streaming `incoming` frame of
     * (idCol, textCol, ...) documents. Three EPOCH-PARTITIONED versioned
@@ -59,39 +71,33 @@ object CorpusStreams {
                            checkpointDir: String, k: Int, numHashes: Int,
                            bandSize: Int, threshold: Double, dfCap: Int = 0)
       : StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val spark = batch0.sparkSession
-        // the sink reads back tables it writes, so `empty` carries their
-        // schema: the read skips footer inference (one job per table)
-        def tableOr(path: String, empty: DataFrame): DataFrame =
-          scala.util.Try(EtlCli.readEpochTable(spark, path, schema = Some(empty.schema)))
-            .getOrElse(empty)
-        val batch = batch0.select(col(idCol), col(textCol))
-        val corpus = tableOr(corpusPath, batch.limit(0))
-        val corpusBands = tableOr(indexPath,
-          batch.select(col(idCol).as("doc_id"), lit("").as("band")).limit(0))
-        // replay guard: docs already committed to the corpus were fully
-        // processed by a previous (possibly crashed-after-commit) attempt
-        val (newDocs, nNew) = pinCounted(batch
-          .join(corpus.select(col(idCol)), Seq(idCol), "left_anti"))
-        if (nNew > 0) {
-          // sign ONCE; the bands both probe the index and extend it
-          val newBands = Dedup.signBands(newDocs, idCol, textCol, k, numHashes,
-              bandSize, dfCap)
-            .transform(graft.core.Materialize.pin)
-          val pairs = Dedup.incrementalNearDupsFromBands(newBands, newDocs,
-            corpus, corpusBands, idCol, textCol, k, threshold)
-          EtlCli.appendEpoch(pairs, pairsPath, batchId)
-          EtlCli.appendEpoch(newBands, indexPath, batchId)
-          EtlCli.appendEpoch(newDocs, corpusPath, batchId)
-        }
-        ()
+    eachBatch(incoming, checkpointDir) { (batch0, batchId) =>
+      val spark = batch0.sparkSession
+      // the sink reads back tables it writes, so `empty` carries their
+      // schema: the read skips footer inference (one job per table)
+      def tableOr(path: String, empty: DataFrame): DataFrame =
+        scala.util.Try(EtlCli.readEpochTable(spark, path, schema = Some(empty.schema)))
+          .getOrElse(empty)
+      val batch = batch0.select(col(idCol), col(textCol))
+      val corpus = tableOr(corpusPath, batch.limit(0))
+      val corpusBands = tableOr(indexPath,
+        batch.select(col(idCol).as("doc_id"), lit("").as("band")).limit(0))
+      // replay guard: docs already committed to the corpus were fully
+      // processed by a previous (possibly crashed-after-commit) attempt
+      val (newDocs, nNew) = pinCounted(batch
+        .join(corpus.select(col(idCol)), Seq(idCol), "left_anti"))
+      if (nNew > 0) {
+        // sign ONCE; the bands both probe the index and extend it
+        val newBands = Dedup.signBands(newDocs, idCol, textCol, k, numHashes,
+            bandSize, dfCap)
+          .transform(graft.core.Materialize.pin)
+        val pairs = Dedup.incrementalNearDupsFromBands(newBands, newDocs,
+          corpus, corpusBands, idCol, textCol, k, threshold)
+        EtlCli.appendEpoch(pairs, pairsPath, batchId)
+        EtlCli.appendEpoch(newBands, indexPath, batchId)
+        EtlCli.appendEpoch(newDocs, corpusPath, batchId)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
 
   /** The full streaming CURATION loop — quality gates → benchmark
     * decontamination → incremental near-dup dedup — composed into one
@@ -161,237 +167,215 @@ object CorpusStreams {
                         sweepPath: Option[String] = None,
                         sweepMinRecall: Double = 0.9)
       : StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val spark = batch0.sparkSession
-        import graft.core.Materialize.pin
-        // the sink reads back tables it writes, so `empty` carries their
-        // schema: the read skips footer inference (one job per table)
-        def tableOr(path: String, empty: DataFrame): DataFrame =
-          scala.util.Try(EtlCli.readEpochTable(spark, path, schema = Some(empty.schema)))
-            .getOrElse(empty)
-        // fencepost guard: corpus epoch=batchId committed ⇒ this batch
-        // fully committed on a previous attempt — replay is a no-op (see
-        // the scaladoc; recomputing here would overwrite the epoch with
-        // the re-dropped remainder)
-        val replayed = EtlCli.epochCommitted(spark, corpusPath, batchId)
-        lazy val batch = batch0.select(col(idCol), col(textCol))
-        lazy val corpus = tableOr(corpusPath, batch.limit(0))
-        lazy val corpusBands = tableOr(indexPath,
-          batch.select(col(idCol).as("doc_id"), lit("").as("band")).limit(0))
-        // stage 1 as ONE pin: the replay anti-join, the quality gates and
-        // a `contaminated` flag (gate-passing docs sharing a word n-gram
-        // with `evalDocs`). Its row count is observed on the pin's own
-        // action; decon0 and the quality/contaminated drop rows are
-        // filters over it.
-        lazy val (stage1, nNew) = {
-          val gated = graft.operators.TextAnalysis.qualityGates(
-            batch.join(corpus.select(col(idCol)), Seq(idCol), "left_anti"),
-            textCol, cfg.stop, cfg.minWords, cfg.maxWords,
-            cfg.minMeanLen, cfg.maxMeanLen, cfg.minUniqRatio)
-          val hits = Dedup.contaminatedIds(
-              gated.filter(col("pass")).select(col(idCol), col(textCol)),
-              evalDocs, idCol, textCol, cfg.decontaminateGramN)
-            .withColumn("contaminated", lit(true))
-          pinCounted(gated.join(broadcast(hits), Seq(idCol), "left_outer")
-            .withColumn("contaminated", coalesce(col("contaminated"), lit(false))))
-        }
-        if (!replayed && nNew > 0) {
-          // Resolve THIS batch's LSH signing config: when `sweepPath` is
-          // wired, the picker's choice off the persisted sweep artifact
-          // (lshBandSweep committed via EtlCli.writeTable) — the
-          // sweep -> choice -> deploy loop's last mile; a sweep update
-          // changes the signing config on the NEXT epoch. No qualifying
-          // config fails the batch loudly: silently deploying the best
-          // loser is the one move a recall monitor exists to prevent.
-          val (bandSize, numHashes) = sweepPath match {
-            case Some(sp) =>
-              val sweep = EtlCli.readTable(spark, sp)
-              // The frontier's recall was measured at the sweep's OWN
-              // shingle k (recorded by EtlCli.sweepLsh); signing here uses
-              // cfg.shingleK — a mismatch means the deployed config's
-              // recall floor was never actually measured, so fail loudly
-              // instead of deploying an unmeasured claim. Legacy artifacts
-              // without the column predate the stamp and pass unchecked.
-              if (sweep.columns.contains("shingle_k")) {
-                val ks = sweep.select(col("shingle_k").cast("int"))
-                  .distinct().collect().map(_.getInt(0)).toSeq
-                require(ks == Seq(cfg.shingleK),
-                  s"sweep at $sp was measured at shingle k=${ks.mkString(",")} " +
-                    s"but this sink signs at k=${cfg.shingleK} — re-sweep at " +
-                    "the deployment's shingle k before ingesting")
-              }
-              val pick = Dedup.pickLshConfig(sweep, sweepMinRecall)
-                .select(col("band_size").cast("int"), col("n_bands").cast("int"))
-                .collect()
-              require(pick.nonEmpty,
-                s"no sweep config at $sp clears recall >= $sweepMinRecall — " +
-                  "re-sweep with more hashes before ingesting")
-              (pick.head.getInt(0), pick.head.getInt(0) * pick.head.getInt(1))
-            case None => (cfg.bandSize, cfg.numHashes)
-          }
-          // Config consistency with the persisted index: bands signed
-          // under different configs can never collide, so probing an
-          // old-config index with new-config batch bands would silently
-          // miss every cross-epoch near-dup. The index carries its
-          // signing config in a `_signcfg` marker table (hidden from the
-          // epoch listing); when the resolved config differs, THIS batch
-          // re-signs the committed corpus under the new config — one
-          // O(corpus) pass, amortized over the config's lifetime — probes
-          // against the re-signed bands, and appends them with its own
-          // epoch so later batches probe the refreshed index. An index
-          // without a marker (only a sweep-wired sink writes one) is
-          // treated as signed under `cfg`.
-          val cfgMarkerPath = s"$indexPath/_signcfg"
-          // the marker carries shingle k too: bands signed at a different
-          // k can never collide with the index's, exactly like a
-          // band-size change — a k change must trigger the same corpus
-          // re-sign
-          val idxCfg: Option[(Int, Int, Int)] =
-            scala.util.Try(EtlCli.readTable(spark, cfgMarkerPath)).toOption
-              .flatMap(_.select(col("band_size").cast("int"),
-                  col("num_hashes").cast("int"), col("shingle_k").cast("int"))
-                .collect().headOption.map(r => (r.getInt(0), r.getInt(1), r.getInt(2))))
-          val configChanged =
-            EtlCli.committedEpochs(spark, indexPath).nonEmpty &&
-              idxCfg.getOrElse((cfg.bandSize, cfg.numHashes, cfg.shingleK)) !=
-                ((bandSize, numHashes, cfg.shingleK))
-          val decon0 = stage1.filter(col("pass") && !col("contaminated"))
-            .select(col(idCol), col(textCol))
-          // optional bloom stage: probe the GROWING seen-set filter that a
-          // bloomSketchSink maintains at `bloomPath` (the scale path when
-          // the seen-set outgrows stage 1's exact eval-gram broadcast).
-          // The filter reads as ≤ mBits/62 words and the probe is the
-          // in-row native loop — map-only over the batch. Absent/empty
-          // filter table ⇒ no bits set ⇒ stage passes everything.
-          val (bloomHitIds, decon) = bloomPath match {
-            case Some(bp) if cfg.bloomMBits > 0 =>
-              // Only "no committed epochs yet" means the zero filter; a
-              // readable-but-mismatched filter (different mBits → word
-              // index out of range, checked in bloomWords) or a corrupt
-              // epoch table must FAIL the batch — silently probing an
-              // empty filter would disable the safety gate with no signal.
-              val words =
-                if (EtlCli.committedEpochs(spark, bp).isEmpty)
-                  new Array[Long](cfg.bloomMBits / 62)
-                else graft.operators.Sketches.bloomWords(
-                  readBloomFilter(spark, bp), cfg.bloomMBits)
-              val hits = decon0.filter(graft.operators.Sketches.bloomCountHits(
-                graft.plans.GraftFunctions.word_gram_set(col(textCol), cfg.decontaminateGramN),
-                words, cfg.bloomMBits, cfg.bloomK) > 0)
-                .select(col(idCol)).distinct()
-              (hits, pin(decon0.join(hits, Seq(idCol), "left_anti")))
-            case _ => (decon0.select(col(idCol)).limit(0), decon0)
-          }
-          // optional DSIR selection (stage 2c): score the batch against
-          // the PERSISTED day-0 model (TextAnalysis.dsirModel committed
-          // via EtlCli.writeTable — same pinned-artifact contract as the
-          // ANN centroids) and keep docs whose hash-uniform u < mean_pref.
-          // Deterministic (u = md5(doc_id)), so replay re-derives the
-          // identical sample; docs with no bigram features score nothing
-          // and are rejected (single-token docs — the quality gates
-          // normally drop them first). Map-only: the model broadcasts.
-          val (dsirDropIds, selected) = dsirModelPath match {
-            case Some(mp) =>
-              val model = EtlCli.readTable(spark, mp)
-              // pin: the scoring aggregation feeds BOTH the reject log
-              // (anti) and the survivor set (semi) — unpinned it would
-              // run twice per micro-batch
-              val kept = pin(graft.operators.TextAnalysis
-                .dsirResampleFromModel(decon, model, idCol, textCol)
-                .select(col("doc_id").as(idCol)))
-              (decon.join(kept, Seq(idCol), "left_anti").select(col(idCol)),
-                pin(decon.join(kept, Seq(idCol), "left_semi")))
-            case None => (decon.select(col(idCol)).limit(0), decon)
-          }
-          val newBands = pin(Dedup.signBands(selected, idCol, textCol,
-            cfg.shingleK, numHashes, bandSize, cfg.dfCap))
-          val resignedCorpus: Option[DataFrame] =
-            if (configChanged)
-              Some(pin(Dedup.signBands(corpus, idCol, textCol,
-                cfg.shingleK, numHashes, bandSize, cfg.dfCap)))
-            else None
-          // near-dup drops resolve ONCE, on the driver: the verified pair
-          // slice (every pair has >= 1 batch doc) collects with each
-          // side's batch membership from a broadcast of the batch ids —
-          // a side outside the batch is a committed corpus doc
-          val inBatch = broadcast(selected.select(col(idCol).as("__bid")))
-          val pairs = Dedup.incrementalNearDupsFromBands(newBands, selected,
-              corpus, resignedCorpus.getOrElse(corpusBands), idCol, textCol,
-              cfg.shingleK, cfg.nearDupThreshold)
-            .join(inBatch, col("doc_a") === col("__bid"), "left_outer")
-            .select(col("doc_a"), col("doc_b"), col("__bid").isNotNull.as("a_in_batch"))
-            .join(inBatch, col("doc_b") === col("__bid"), "left_outer")
-            .select(col("doc_a"), col("doc_b"), col("a_in_batch"),
-              col("__bid").isNotNull.as("b_in_batch"))
-          val dupIds = nearDupDrops(pairs.collect().toSeq.map(r =>
-            (r.get(0), r.get(1), r.getBoolean(2), r.getBoolean(3))))
-          val dupDrops = spark.createDataFrame(
-            java.util.Arrays.asList(dupIds.toSeq.map(Row(_)): _*),
-            StructType(Seq(StructField("doc_id", pairs.schema("doc_a").dataType))))
-          def notDup(idc: String): Column =
-            if (dupIds.isEmpty) lit(true) else !col(idc).isin(dupIds.toSeq: _*)
-          val survivors = selected.filter(notDup(idCol))
-          val dropped =
-            stage1.filter(!col("pass") || col("contaminated"))
-              .select(col(idCol).as("doc_id"),
-                when(!col("pass"), lit("quality")).otherwise(lit("contaminated")).as("reason"))
-            .unionAll(bloomHitIds
-              .select(col(idCol).as("doc_id"), lit("bloom_contaminated").as("reason")))
-            .unionAll(dsirDropIds
-              .select(col(idCol).as("doc_id"), lit("dsir_rejected").as("reason")))
-            .unionAll(dupDrops.select(col("doc_id"), lit("near_dup").as("reason")))
-          EtlCli.appendEpoch(dropped, droppedPath, batchId)
-          // optional accepted-length monitor: a bottom-kmvK hash-rank
-          // sample partial of THIS batch's survivors (doc-length value) —
-          // readKmvSample over the epochs is the live distribution a
-          // drift dashboard quantiles against (Sketches.sampleQuantiles).
-          // Pure function of the survivors, so replay re-appends its own
-          // epoch idempotently; committed before the corpus fencepost
-          // like the other side tables.
-          kmvSamplePath.foreach { kp =>
-            EtlCli.appendEpoch(
-              graft.operators.Sketches.bottomKSample(
-                survivors.select(col(idCol),
-                  length(col(textCol)).cast("long").as("n_chars"),
-                  lit("all").as("g")),
-                idCol, "n_chars", Seq("g"), kmvK),
-              kp, batchId)
-          }
-          EtlCli.appendEpoch(
-            newBands.filter(notDup("doc_id"))
-              // a config change folds the re-signed corpus bands into
-              // this epoch: later batches then probe the whole corpus
-              // under the new config (superseded old-config rows are
-              // dead weight — they can't match any new-config probe —
-              // until compactEpochs folds them away)
-              .unionByName(resignedCorpus.getOrElse(newBands.limit(0))),
-            indexPath, batchId)
-          EtlCli.appendEpoch(survivors, corpusPath, batchId)
-          // marker strictly AFTER the corpus fencepost: a crash anywhere
-          // before this line leaves the OLD marker, so the replay
-          // recomputes configChanged=true and deterministically re-signs
-          // again — safe (duplicate new-config bands are absorbed by the
-          // candidate distinct, and the epoch append is idempotent). The
-          // previously-committed ordering (marker between index and
-          // corpus) had a hole: a crash after the marker but before the
-          // corpus fencepost made the replay read configChanged=false and
-          // overwrite the index epoch WITHOUT the re-signed corpus bands —
-          // silently missing every cross-epoch near-dup thereafter. A
-          // crash after the fencepost but before the marker merely costs
-          // the NEXT batch one more amortized O(corpus) re-sign.
-          if (sweepPath.isDefined && (idxCfg.isEmpty || configChanged))
-            EtlCli.writeTable(
-              spark.createDataFrame(Seq((bandSize, numHashes, cfg.shingleK)))
-                .toDF("band_size", "num_hashes", "shingle_k"),
-              cfgMarkerPath)
-        }
-        ()
+    eachBatch(incoming, checkpointDir) { (batch0, batchId) =>
+      val spark = batch0.sparkSession
+      import graft.core.Materialize.pin
+      // the sink reads back tables it writes, so `empty` carries their
+      // schema: the read skips footer inference (one job per table)
+      def tableOr(path: String, empty: DataFrame): DataFrame =
+        scala.util.Try(EtlCli.readEpochTable(spark, path, schema = Some(empty.schema)))
+          .getOrElse(empty)
+      // fencepost guard: corpus epoch=batchId committed ⇒ this batch
+      // fully committed on a previous attempt — replay is a no-op (see
+      // the scaladoc; recomputing here would overwrite the epoch with
+      // the re-dropped remainder)
+      val replayed = EtlCli.epochCommitted(spark, corpusPath, batchId)
+      lazy val batch = batch0.select(col(idCol), col(textCol))
+      lazy val corpus = tableOr(corpusPath, batch.limit(0))
+      lazy val corpusBands = tableOr(indexPath,
+        batch.select(col(idCol).as("doc_id"), lit("").as("band")).limit(0))
+      // stage 1 as ONE pin: the replay anti-join, the quality gates and
+      // a `contaminated` flag (gate-passing docs sharing a word n-gram
+      // with `evalDocs`). Its row count is observed on the pin's own
+      // action; decon0 and the quality/contaminated drop rows are
+      // filters over it.
+      lazy val (stage1, nNew) = {
+        val gated = graft.operators.TextAnalysis.qualityGates(
+          batch.join(corpus.select(col(idCol)), Seq(idCol), "left_anti"),
+          textCol, cfg.stop, cfg.minWords, cfg.maxWords,
+          cfg.minMeanLen, cfg.maxMeanLen, cfg.minUniqRatio)
+        val hits = Dedup.contaminatedIds(
+            gated.filter(col("pass")).select(col(idCol), col(textCol)),
+            evalDocs, idCol, textCol, cfg.decontaminateGramN)
+          .withColumn("contaminated", lit(true))
+        pinCounted(gated.join(broadcast(hits), Seq(idCol), "left_outer")
+          .withColumn("contaminated", coalesce(col("contaminated"), lit(false))))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      if (!replayed && nNew > 0) {
+        // Resolve THIS batch's LSH signing config: when `sweepPath` is
+        // wired, the picker's choice off the persisted sweep artifact
+        // (lshBandSweep committed via EtlCli.writeTable) — the
+        // sweep -> choice -> deploy loop's last mile; a sweep update
+        // changes the signing config on the NEXT epoch. No qualifying
+        // config fails the batch loudly: silently deploying the best
+        // loser is the one move a recall monitor exists to prevent.
+        val (bandSize, numHashes) = sweepPath match {
+          case Some(sp) =>
+            // The frontier's recall was measured at the sweep's OWN
+            // shingle k (stamped by EtlCli.sweepLsh); signing at another
+            // cfg.shingleK would deploy a floor nobody measured.
+            val Seq(band, nBands) = deployedKnobs(spark, SweepFamily.lsh, sp,
+              sweepMinRecall, cfg.shingleK.toLong -> "this sink's signing shingle k")
+            (band, band * nBands)
+          case None => (cfg.bandSize, cfg.numHashes)
+        }
+        // Config consistency with the persisted index: bands signed
+        // under different configs can never collide, so probing an
+        // old-config index with new-config batch bands would silently
+        // miss every cross-epoch near-dup. The index carries its
+        // signing config in a `_signcfg` marker table (hidden from the
+        // epoch listing); when the resolved config differs, THIS batch
+        // re-signs the committed corpus under the new config — one
+        // O(corpus) pass, amortized over the config's lifetime — probes
+        // against the re-signed bands, and appends them with its own
+        // epoch so later batches probe the refreshed index. An index
+        // without a marker (only a sweep-wired sink writes one) is
+        // treated as signed under `cfg`.
+        val cfgMarkerPath = s"$indexPath/_signcfg"
+        // the marker carries shingle k too: bands signed at a different
+        // k can never collide with the index's, exactly like a
+        // band-size change — a k change must trigger the same corpus
+        // re-sign
+        val idxCfg: Option[(Int, Int, Int)] =
+          scala.util.Try(EtlCli.readTable(spark, cfgMarkerPath)).toOption
+            .flatMap(_.select(col("band_size").cast("int"),
+                col("num_hashes").cast("int"), col("shingle_k").cast("int"))
+              .collect().headOption.map(r => (r.getInt(0), r.getInt(1), r.getInt(2))))
+        val configChanged =
+          EtlCli.committedEpochs(spark, indexPath).nonEmpty &&
+            idxCfg.getOrElse((cfg.bandSize, cfg.numHashes, cfg.shingleK)) !=
+              ((bandSize, numHashes, cfg.shingleK))
+        val decon0 = stage1.filter(col("pass") && !col("contaminated"))
+          .select(col(idCol), col(textCol))
+        // optional bloom stage: probe the GROWING seen-set filter that a
+        // bloomSketchSink maintains at `bloomPath` (the scale path when
+        // the seen-set outgrows stage 1's exact eval-gram broadcast).
+        // The filter reads as ≤ mBits/62 words and the probe is the
+        // in-row native loop — map-only over the batch. Absent/empty
+        // filter table ⇒ no bits set ⇒ stage passes everything.
+        val (bloomHitIds, decon) = bloomPath match {
+          case Some(bp) if cfg.bloomMBits > 0 =>
+            // Only "no committed epochs yet" means the zero filter; a
+            // readable-but-mismatched filter (different mBits → word
+            // index out of range, checked in bloomWords) or a corrupt
+            // epoch table must FAIL the batch — silently probing an
+            // empty filter would disable the safety gate with no signal.
+            val words =
+              if (EtlCli.committedEpochs(spark, bp).isEmpty)
+                new Array[Long](cfg.bloomMBits / 62)
+              else graft.operators.Sketches.bloomWords(
+                readBloomFilter(spark, bp), cfg.bloomMBits)
+            val hits = decon0.filter(graft.operators.Sketches.bloomCountHits(
+              graft.plans.GraftFunctions.word_gram_set(col(textCol), cfg.decontaminateGramN),
+              words, cfg.bloomMBits, cfg.bloomK) > 0)
+              .select(col(idCol)).distinct()
+            (hits, pin(decon0.join(hits, Seq(idCol), "left_anti")))
+          case _ => (decon0.select(col(idCol)).limit(0), decon0)
+        }
+        // optional DSIR selection (stage 2c): score the batch against
+        // the PERSISTED day-0 model (TextAnalysis.dsirModel committed
+        // via EtlCli.writeTable — same pinned-artifact contract as the
+        // ANN centroids) and keep docs whose hash-uniform u < mean_pref.
+        // Deterministic (u = md5(doc_id)), so replay re-derives the
+        // identical sample; docs with no bigram features score nothing
+        // and are rejected (single-token docs — the quality gates
+        // normally drop them first). Map-only: the model broadcasts.
+        val (dsirDropIds, selected) = dsirModelPath match {
+          case Some(mp) =>
+            val model = EtlCli.readTable(spark, mp)
+            // pin: the scoring aggregation feeds BOTH the reject log
+            // (anti) and the survivor set (semi) — unpinned it would
+            // run twice per micro-batch
+            val kept = pin(graft.operators.TextAnalysis
+              .dsirResampleFromModel(decon, model, idCol, textCol)
+              .select(col("doc_id").as(idCol)))
+            (decon.join(kept, Seq(idCol), "left_anti").select(col(idCol)),
+              pin(decon.join(kept, Seq(idCol), "left_semi")))
+          case None => (decon.select(col(idCol)).limit(0), decon)
+        }
+        val newBands = pin(Dedup.signBands(selected, idCol, textCol,
+          cfg.shingleK, numHashes, bandSize, cfg.dfCap))
+        val resignedCorpus: Option[DataFrame] =
+          if (configChanged)
+            Some(pin(Dedup.signBands(corpus, idCol, textCol,
+              cfg.shingleK, numHashes, bandSize, cfg.dfCap)))
+          else None
+        // near-dup drops resolve ONCE, on the driver: the verified pair
+        // slice (every pair has >= 1 batch doc) collects with each
+        // side's batch membership from a broadcast of the batch ids —
+        // a side outside the batch is a committed corpus doc
+        val inBatch = broadcast(selected.select(col(idCol).as("__bid")))
+        val pairs = Dedup.incrementalNearDupsFromBands(newBands, selected,
+            corpus, resignedCorpus.getOrElse(corpusBands), idCol, textCol,
+            cfg.shingleK, cfg.nearDupThreshold)
+          .join(inBatch, col("doc_a") === col("__bid"), "left_outer")
+          .select(col("doc_a"), col("doc_b"), col("__bid").isNotNull.as("a_in_batch"))
+          .join(inBatch, col("doc_b") === col("__bid"), "left_outer")
+          .select(col("doc_a"), col("doc_b"), col("a_in_batch"),
+            col("__bid").isNotNull.as("b_in_batch"))
+        val dupIds = nearDupDrops(pairs.collect().toSeq.map(r =>
+          (r.get(0), r.get(1), r.getBoolean(2), r.getBoolean(3))))
+        val dupDrops = spark.createDataFrame(
+          java.util.Arrays.asList(dupIds.toSeq.map(Row(_)): _*),
+          StructType(Seq(StructField("doc_id", pairs.schema("doc_a").dataType))))
+        def notDup(idc: String): Column =
+          if (dupIds.isEmpty) lit(true) else !col(idc).isin(dupIds.toSeq: _*)
+        val survivors = selected.filter(notDup(idCol))
+        val dropped =
+          stage1.filter(!col("pass") || col("contaminated"))
+            .select(col(idCol).as("doc_id"),
+              when(!col("pass"), lit("quality")).otherwise(lit("contaminated")).as("reason"))
+          .unionAll(bloomHitIds
+            .select(col(idCol).as("doc_id"), lit("bloom_contaminated").as("reason")))
+          .unionAll(dsirDropIds
+            .select(col(idCol).as("doc_id"), lit("dsir_rejected").as("reason")))
+          .unionAll(dupDrops.select(col("doc_id"), lit("near_dup").as("reason")))
+        EtlCli.appendEpoch(dropped, droppedPath, batchId)
+        // optional accepted-length monitor: a bottom-kmvK hash-rank
+        // sample partial of THIS batch's survivors (doc-length value) —
+        // readKmvSample over the epochs is the live distribution a
+        // drift dashboard quantiles against (Sketches.sampleQuantiles).
+        // Pure function of the survivors, so replay re-appends its own
+        // epoch idempotently; committed before the corpus fencepost
+        // like the other side tables.
+        kmvSamplePath.foreach { kp =>
+          EtlCli.appendEpoch(
+            graft.operators.Sketches.bottomKSample(
+              survivors.select(col(idCol),
+                length(col(textCol)).cast("long").as("n_chars"),
+                lit("all").as("g")),
+              idCol, "n_chars", Seq("g"), kmvK),
+            kp, batchId)
+        }
+        EtlCli.appendEpoch(
+          newBands.filter(notDup("doc_id"))
+            // a config change folds the re-signed corpus bands into
+            // this epoch: later batches then probe the whole corpus
+            // under the new config (superseded old-config rows are
+            // dead weight — they can't match any new-config probe —
+            // until compactEpochs folds them away)
+            .unionByName(resignedCorpus.getOrElse(newBands.limit(0))),
+          indexPath, batchId)
+        EtlCli.appendEpoch(survivors, corpusPath, batchId)
+        // marker strictly AFTER the corpus fencepost: a crash anywhere
+        // before this line leaves the OLD marker, so the replay
+        // recomputes configChanged=true and deterministically re-signs
+        // again — safe (duplicate new-config bands are absorbed by the
+        // candidate distinct, and the epoch append is idempotent). The
+        // previously-committed ordering (marker between index and
+        // corpus) had a hole: a crash after the marker but before the
+        // corpus fencepost made the replay read configChanged=false and
+        // overwrite the index epoch WITHOUT the re-signed corpus bands —
+        // silently missing every cross-epoch near-dup thereafter. A
+        // crash after the fencepost but before the marker merely costs
+        // the NEXT batch one more amortized O(corpus) re-sign.
+        if (sweepPath.isDefined && (idxCfg.isEmpty || configChanged))
+          EtlCli.writeTable(
+            spark.createDataFrame(Seq((bandSize, numHashes, cfg.shingleK)))
+              .toDF("band_size", "num_hashes", "shingle_k"),
+            cfgMarkerPath)
+      }
+    }
 
   /** Pin `df` and return it with its row count, observed on the pin's own
     * action — one materialization instead of a pin plus a count job. */
@@ -444,18 +428,12 @@ object CorpusStreams {
   def binaryIndexSink(incoming: DataFrame, idCol: String, vecCol: String,
                       indexPath: String, checkpointDir: String,
                       dims: Int): StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        EtlCli.appendEpoch(
-          graft.operators.Similarity.binaryIndexBuild(
-            batch.select(col(idCol), col(vecCol)), idCol, vecCol, dims),
-          indexPath, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(incoming, checkpointDir) { (batch, batchId) =>
+      EtlCli.appendEpoch(
+        graft.operators.Similarity.binaryIndexBuild(
+          batch.select(col(idCol), col(vecCol)), idCol, vecCol, dims),
+        indexPath, batchId)
+    }
 
   /** Streaming CELL-PRUNED binary index maintenance — binaryIndexSink's
     * IVF-shaped sibling: each micro-batch encodes against the PERSISTED
@@ -475,19 +453,25 @@ object CorpusStreams {
   def binaryIvfIndexSink(incoming: DataFrame, idCol: String, vecCol: String,
                          indexPath: String, checkpointDir: String,
                          dims: Int, centroidsPath: String): StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cent = EtlCli.readTable(batch.sparkSession, centroidsPath)
-        EtlCli.appendEpoch(
-          graft.operators.Similarity.binaryIvfIndexBuild(
-            batch.select(col(idCol), col(vecCol)), idCol, vecCol, dims, cent),
-          indexPath, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(incoming, checkpointDir) { (batch, batchId) =>
+      encodeBinaryIvfEpoch(batch, batchId, idCol, vecCol, indexPath, dims,
+        centroidsPath)
+    }
+
+  /** binaryIvfIndexSink's encode body: one map-only pass of the batch
+    * against the persisted centroids, appended as epoch `batchId`.
+    * Returns the centroids and the batch vectors it encoded. */
+  private def encodeBinaryIvfEpoch(batch: DataFrame, batchId: Long,
+                                   idCol: String, vecCol: String,
+                                   indexPath: String, dims: Int,
+                                   centroidsPath: String): (DataFrame, DataFrame) = {
+    val cent = EtlCli.readTable(batch.sparkSession, centroidsPath)
+    val vecs = batch.select(col(idCol), col(vecCol))
+    EtlCli.appendEpoch(
+      graft.operators.Similarity.binaryIvfIndexBuild(vecs, idCol, vecCol, dims, cent),
+      indexPath, batchId)
+    (cent, vecs)
+  }
 
   /** binaryIvfIndexSink plus the decay instrument the pinned-quantizer
     * contract demands: the centroids deliberately never retrain (moving
@@ -509,26 +493,16 @@ object CorpusStreams {
                                   centroidsPath: String, baselinePath: String,
                                   driftLogPath: String, maxTvd: Double,
                                   maxQerrRatio: Double): StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cent = EtlCli.readTable(batch.sparkSession, centroidsPath)
-        val vecs = batch.select(col(idCol), col(vecCol))
-        EtlCli.appendEpoch(
-          graft.operators.Similarity.binaryIvfIndexBuild(
-            vecs, idCol, vecCol, dims, cent),
-          indexPath, batchId)
-        EtlCli.appendEpoch(
-          graft.operators.Similarity.quantizerDriftStats(
-              EtlCli.readTable(batch.sparkSession, baselinePath), vecs,
-              vecCol, cent, maxTvd, maxQerrRatio)
-            .withColumn("epoch", lit(batchId)),
-          driftLogPath, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(incoming, checkpointDir) { (batch, batchId) =>
+      val (cent, vecs) = encodeBinaryIvfEpoch(batch, batchId, idCol, vecCol,
+        indexPath, dims, centroidsPath)
+      EtlCli.appendEpoch(
+        graft.operators.Similarity.quantizerDriftStats(
+            EtlCli.readTable(batch.sparkSession, baselinePath), vecs,
+            vecCol, cent, maxTvd, maxQerrRatio)
+          .withColumn("epoch", lit(batchId)),
+        driftLogPath, batchId)
+    }
 
   /** Rewrite the accreted epoch union into the read-optimized layout the
     * cell-pruned probe scans: one table PARTITIONED BY cell at
@@ -599,29 +573,52 @@ object CorpusStreams {
       outPath, partitionBy = Seq("cell"))
   }
 
+  /** THE deploy read of every sweep-wired path: read the committed sweep
+    * at `sweepPath` PER CALL (a re-sweep moves the deployment on the next
+    * call), refuse it when it is stamped under other artifacts than the
+    * live ones — `live` gives, per stamp column of `family`, the live
+    * identity and where it was read — and return the pick's knobs in
+    * `family.knobs` order. Below the floor it refuses too, naming the
+    * re-sweep command: silently deploying the best loser is the one move
+    * the floor exists to prevent. */
+  private def deployedKnobs(spark: org.apache.spark.sql.SparkSession,
+                            family: SweepFamily, sweepPath: String,
+                            floor: Double, live: (Long, String)*): Seq[Int] = {
+    require(live.size == family.stamps.size,
+      s"${family.command} stamps ${family.stamps.mkString(", ")}: pass one live identity each")
+    val sweep = EtlCli.readTable(spark, sweepPath)
+    family.stamps.zip(live).foreach { case (stamp, (id, liveDesc)) =>
+      EtlCli.requireStamp(sweep, stamp, id,
+        s"sweep at $sweepPath was measured under " +
+          stamp.stripSuffix("_id").replace('_', ' '),
+        liveDesc, s"a retrain or config change invalidates every older " +
+          s"sweep; run ${family.command} against the deployed artifacts first")
+    }
+    val pick = family.pick(sweep, floor)
+      .select(family.knobs.map(col(_).cast("int")): _*).collect()
+    require(pick.nonEmpty,
+      s"no (${family.knobs.mkString(", ")}) at $sweepPath clears " +
+        s"${family.recall} >= $floor — re-sweep deeper/wider " +
+        s"(${family.command}) before serving")
+    family.knobs.indices.map(pick.head.getInt)
+  }
+
+  private def centroidIdentity(cent: DataFrame, centroidsPath: String): (Long, String) =
+    graft.operators.Similarity.quantizerIdentity(cent) -> s"the centroids at $centroidsPath"
+
   /** Probe the streamed binary index at the SWEEP-CHOSEN shortlist depth
     * — the read-side last mile of the binary sweep→pick→deploy loop,
     * mirroring curatedIngestSink's sweepPath wiring on the LSH side (and
     * simpler by construction: sign codes are config-independent, so a
     * depth change needs no re-sign, no marker, no migration — only the
-    * probe's shortlist moves). Reads the persisted sweep artifact
-    * (EtlCli.sweepBinary's committed frontier) PER CALL, so a re-sweep
-    * changes the deployed depth on the next probe; no qualifying depth
-    * fails loudly — silently deploying the best loser is the one move
-    * the recall floor exists to prevent. The chosen depth rides the
-    * output as a `shortlist` column so monitors can see which config
-    * served each result. */
+    * probe's shortlist moves). The chosen depth rides the output as a
+    * `shortlist` column so monitors can see which config served each
+    * result. */
   def binaryProbeWithSweep(spark: org.apache.spark.sql.SparkSession,
                            indexPath: String, sweepPath: String,
                            queries: DataFrame, idCol: String, vecCol: String,
                            minRecall: Double, k: Int): DataFrame = {
-    val pick = graft.operators.Similarity.pickBinaryConfig(
-        EtlCli.readTable(spark, sweepPath), minRecall)
-      .select(col("shortlist").cast("int")).collect()
-    require(pick.nonEmpty,
-      s"no shortlist depth at $sweepPath clears recall >= $minRecall — " +
-        "re-sweep deeper before probing")
-    val shortlist = pick.head.getInt(0)
+    val Seq(shortlist) = deployedKnobs(spark, SweepFamily.binary, sweepPath, minRecall)
     require(shortlist >= k,
       s"swept shortlist $shortlist cannot serve top-$k — re-sweep with " +
         "depths covering k")
@@ -638,10 +635,9 @@ object CorpusStreams {
 
   /** Probe the streamed CELL-PRUNED binary index at the 2D-sweep-chosen
     * (nProbe, shortlist) — binaryProbeWithSweep's sibling for the
-    * binary-IVF family, closing its sweep→pick→deploy loop: the choice
-    * reads off the persisted binaryIvfSweep frontier per call
-    * (fail-loud below the floor), and both deployed knobs ride the
-    * output as columns so monitors see which config served each result.
+    * binary-IVF family, closing its sweep→pick→deploy loop: both
+    * deployed knobs ride the output as columns so monitors see which
+    * config served each result.
     * `indexPath` is the READ-OPTIMIZED cell-partitioned layout
     * ([[binaryIvfReadOptimize]]) so the probe's partition pruning
     * applies; `centroidsPath` the pinned day-0 coarse quantizer. */
@@ -651,26 +647,12 @@ object CorpusStreams {
                               idCol: String, vecCol: String, dims: Int,
                               minRecall: Double, k: Int): DataFrame = {
     val cent = EtlCli.readTable(spark, centroidsPath)
-    val sweep = EtlCli.readTable(spark, sweepPath)
     // Quantizer binding: the frontier's recall was measured against ONE
-    // set of coarse centroids (EtlCli.sweepBinaryIvf stamps their
-    // identity into the artifact); deploying it against retrained
-    // centroids would claim a recall floor that was never measured —
-    // every stored cell moved. Refuse loudly, naming both identities —
-    // the same posture as the LSH pick's shingle-k refusal. Legacy
-    // artifacts without the column predate the stamp and pass unchecked.
-    EtlCli.requireStamp(sweep, "quantizer_id",
-      graft.operators.Similarity.quantizerIdentity(cent),
-      s"sweep at $sweepPath was measured against quantizer",
-      s"the centroids at $centroidsPath",
-      "a retrain invalidates every old sweep; run sweep-binary-ivf against " +
-        "the deployed centroids before probing")
-    val pick = graft.operators.Similarity.pickBinaryIvfConfig(sweep, minRecall)
-      .select(col("n_probe").cast("int"), col("shortlist").cast("int")).collect()
-    require(pick.nonEmpty,
-      s"no (n_probe, shortlist) at $sweepPath clears recall >= $minRecall — " +
-        "re-sweep deeper/wider before probing")
-    val (nProbe, shortlist) = (pick.head.getInt(0), pick.head.getInt(1))
+    // set of coarse centroids; deploying it against retrained centroids
+    // would claim a floor that was never measured — every stored cell
+    // moved.
+    val Seq(nProbe, shortlist) = deployedKnobs(spark, SweepFamily.binaryIvf,
+      sweepPath, minRecall, centroidIdentity(cent, centroidsPath))
     require(shortlist >= k,
       s"swept shortlist $shortlist cannot serve top-$k — re-sweep with " +
         "depths covering k")
@@ -685,7 +667,7 @@ object CorpusStreams {
     * the deployment arm of `EtlCli.sweepFusedRrf`, closing the loop the
     * r13 measurement opened: a per-arm recall floor does not survive
     * rank fusion, so the consumer picks the cheapest (nProbe, shortlist)
-    * clearing a floor measured ON THE FUSED RANKING (pickFusedRrfConfig)
+    * clearing a floor measured ON THE FUSED RANKING (SweepFamily.fusedRrf)
     * and serves the exact fused shape the sweep measured (arm_k / k_rrf
     * / top_k ride the artifact). Refuses a sweep stamped under a
     * different quantizer than the deployed centroids — a retrain moves
@@ -699,25 +681,9 @@ object CorpusStreams {
                               lex: DataFrame, idCol: String, vecCol: String,
                               dims: Int, minFusedRecall: Double): DataFrame = {
     val cent = EtlCli.readTable(spark, centroidsPath)
-    val sweep = EtlCli.readTable(spark, sweepPath)
-    EtlCli.requireStamp(sweep, "quantizer_id",
-      graft.operators.Similarity.quantizerIdentity(cent),
-      s"fused sweep at $sweepPath was measured against quantizer",
-      s"the centroids at $centroidsPath",
-      "a retrain invalidates every old sweep; run sweep-fused-rrf against " +
-        "the deployed centroids before serving fusion")
-    val pick = graft.operators.Similarity
-      .pickFusedRrfConfig(sweep, minFusedRecall)
-      .select(col("n_probe").cast("int"), col("shortlist").cast("int"),
-        col("arm_k").cast("int"), col("k_rrf").cast("int"),
-        col("top_k").cast("int"))
-      .collect()
-    require(pick.nonEmpty,
-      s"no (n_probe, shortlist) at $sweepPath clears FUSED recall >= " +
-        s"$minFusedRecall — re-sweep deeper/wider before serving fusion")
-    val (nProbe, shortlist, armK, kRrf, topK) =
-      (pick.head.getInt(0), pick.head.getInt(1), pick.head.getInt(2),
-        pick.head.getInt(3), pick.head.getInt(4))
+    val Seq(nProbe, shortlist, armK, kRrf, topK) = deployedKnobs(spark,
+      SweepFamily.fusedRrf, sweepPath, minFusedRecall,
+      centroidIdentity(cent, centroidsPath))
     val dense = graft.operators.Similarity.binaryIvfProbeIndex(spark,
         EtlCli.resolveDataDir(spark, indexPath), queries,
         idCol, vecCol, dims, cent, nProbe, shortlist, armK)
@@ -748,23 +714,9 @@ object CorpusStreams {
     val cent = EtlCli.readTable(spark, centroidsPath)
     val cb = EtlCli.readTable(spark, codebookPath)
     requirePairedCodebook(cent, cb, centroidsPath, codebookPath)
-    val sweep = EtlCli.readTable(spark, sweepPath)
-    val staleHint = "a retrain invalidates every old sweep; run sweep-ivfpq " +
-      "against the deployed pair before probing"
-    EtlCli.requireStamp(sweep, "quantizer_id",
-      graft.operators.Similarity.quantizerIdentity(cent),
-      s"sweep at $sweepPath was measured against quantizer",
-      s"the centroids at $centroidsPath", staleHint)
-    EtlCli.requireStamp(sweep, "codebook_id",
-      graft.operators.Similarity.codebookIdentity(cb),
-      s"sweep at $sweepPath was measured against codebook",
-      s"the codebook at $codebookPath", staleHint)
-    val pick = graft.operators.Similarity.pickIvfConfig(sweep, minRecall)
-      .select(col("n_probe").cast("int")).collect()
-    require(pick.nonEmpty,
-      s"no probe depth at $sweepPath clears recall >= $minRecall — " +
-        "re-sweep deeper (or retrain) before probing")
-    val nProbe = pick.head.getInt(0)
+    val Seq(nProbe) = deployedKnobs(spark, SweepFamily.ivf, sweepPath, minRecall,
+      centroidIdentity(cent, centroidsPath),
+      graft.operators.Similarity.codebookIdentity(cb) -> s"the codebook at $codebookPath")
     val m = cb.agg(max(col("sub").cast("int"))).collect().head.getInt(0) + 1
     graft.operators.Similarity.ivfPqResidualProbeIndex(spark,
         EtlCli.resolveDataDir(spark, codesPath), queries, idCol, vecCol,
@@ -819,22 +771,29 @@ object CorpusStreams {
   def annIndexSink(incoming: DataFrame, idCol: String, vecCol: String,
                    centroidsPath: String, codebookPath: String, codesPath: String,
                    checkpointDir: String, m: Int): StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val cent = EtlCli.readTable(spark, centroidsPath)
-        val cb = EtlCli.readTable(spark, codebookPath)
-        requirePairedCodebook(cent, cb, centroidsPath, codebookPath)
-        EtlCli.appendEpoch(
-          graft.operators.Similarity.ivfPqResidualEncode(
-            batch.select(col(idCol), col(vecCol)), idCol, vecCol, cent, cb, m),
-          codesPath, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(incoming, checkpointDir) { (batch, batchId) =>
+      encodeAnnEpoch(batch, batchId, idCol, vecCol, centroidsPath,
+        codebookPath, codesPath, m)
+    }
+
+  /** annIndexSink's encode body: refuse a mismatched (centroids,
+    * codebook) pair, then encode the batch's residual codes and append
+    * them as epoch `batchId`. Returns the centroids, the codebook and the
+    * batch vectors it encoded. */
+  private def encodeAnnEpoch(batch: DataFrame, batchId: Long, idCol: String,
+                             vecCol: String, centroidsPath: String,
+                             codebookPath: String, codesPath: String,
+                             m: Int): (DataFrame, DataFrame, DataFrame) = {
+    val spark = batch.sparkSession
+    val cent = EtlCli.readTable(spark, centroidsPath)
+    val cb = EtlCli.readTable(spark, codebookPath)
+    requirePairedCodebook(cent, cb, centroidsPath, codebookPath)
+    val vecs = batch.select(col(idCol), col(vecCol))
+    EtlCli.appendEpoch(
+      graft.operators.Similarity.ivfPqResidualEncode(vecs, idCol, vecCol, cent, cb, m),
+      codesPath, batchId)
+    (cent, cb, vecs)
+  }
 
   /** annIndexSink plus the decay instrument the pinned (centroids,
     * codebook) PAIR demands — the IVF-PQ sibling of
@@ -858,29 +817,16 @@ object CorpusStreams {
                             baselinePath: String, driftLogPath: String,
                             maxTvd: Double, maxQerrRatio: Double,
                             maxResidRatio: Double): StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val cent = EtlCli.readTable(spark, centroidsPath)
-        val cb = EtlCli.readTable(spark, codebookPath)
-        requirePairedCodebook(cent, cb, centroidsPath, codebookPath)
-        val vecs = batch.select(col(idCol), col(vecCol))
-        EtlCli.appendEpoch(
-          graft.operators.Similarity.ivfPqResidualEncode(
-            vecs, idCol, vecCol, cent, cb, m),
-          codesPath, batchId)
-        EtlCli.appendEpoch(
-          graft.operators.Similarity.codebookDriftStats(
-              EtlCli.readTable(spark, baselinePath), vecs,
-              vecCol, cent, cb, m, maxTvd, maxQerrRatio, maxResidRatio)
-            .withColumn("epoch", lit(batchId)),
-          driftLogPath, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(incoming, checkpointDir) { (batch, batchId) =>
+      val (cent, cb, vecs) = encodeAnnEpoch(batch, batchId, idCol, vecCol,
+        centroidsPath, codebookPath, codesPath, m)
+      EtlCli.appendEpoch(
+        graft.operators.Similarity.codebookDriftStats(
+            EtlCli.readTable(batch.sparkSession, baselinePath), vecs,
+            vecCol, cent, cb, m, maxTvd, maxQerrRatio, maxResidRatio)
+          .withColumn("epoch", lit(batchId)),
+        driftLogPath, batchId)
+    }
 
   /** Streaming count-min sketch maintenance: each micro-batch appends its
     * own (j, bucket, cnt) partial cells as ITS epoch partition; the live
@@ -896,18 +842,12 @@ object CorpusStreams {
     * with no replay guard needed. */
   def cmsSketchSink(incoming: DataFrame, textCol: String, sketchPath: String,
                     checkpointDir: String, depth: Int, width: Int): StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val toks = batch.select(explode(split(col(textCol), " ")).as("t"))
-        EtlCli.appendEpoch(
-          graft.operators.Sketches.cmsSketch(toks, "t", depth, width),
-          sketchPath, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(incoming, checkpointDir) { (batch, batchId) =>
+      val toks = batch.select(explode(split(col(textCol), " ")).as("t"))
+      EtlCli.appendEpoch(
+        graft.operators.Sketches.cmsSketch(toks, "t", depth, width),
+        sketchPath, batchId)
+    }
 
   /** The live sketch: cell-wise sum of every committed epoch's partials
     * (same result as one batch-mode sketch over everything ingested). */
@@ -934,19 +874,13 @@ object CorpusStreams {
   def packedExportSink(incoming: DataFrame, keyCol: String, textCol: String,
                        packPath: String, checkpointDir: String,
                        nShards: Int, budget: Int): StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        EtlCli.appendEpoch(
-          graft.operators.Export.packAssignments(
-            batch.select(col(keyCol), col(textCol)), keyCol, textCol,
-            nShards, budget),
-          packPath, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(incoming, checkpointDir) { (batch, batchId) =>
+      EtlCli.appendEpoch(
+        graft.operators.Export.packAssignments(
+          batch.select(col(keyCol), col(textCol)), keyCol, textCol,
+          nShards, budget),
+        packPath, batchId)
+    }
 
   /** Streaming HyperLogLog maintenance — the distinct-count sibling of
     * cmsSketchSink/bloomSketchSink, completing the mergeable-sketch sink
@@ -961,17 +895,11 @@ object CorpusStreams {
   def hllSketchSink(incoming: DataFrame, value: org.apache.spark.sql.Column,
                     groupCols: Seq[String], hllPath: String,
                     checkpointDir: String): StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        EtlCli.appendEpoch(
-          graft.operators.Sketches.hllRegisters(batch, value, groupCols),
-          hllPath, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(incoming, checkpointDir) { (batch, batchId) =>
+      EtlCli.appendEpoch(
+        graft.operators.Sketches.hllRegisters(batch, value, groupCols),
+        hllPath, batchId)
+    }
 
   /** The live registers: per-(group, j) MAX over every committed epoch's
     * partials — feed straight into Sketches.hllEstimate /
@@ -1001,20 +929,14 @@ object CorpusStreams {
   def bloomSketchSink(incoming: DataFrame, textCol: String, bloomPath: String,
                       checkpointDir: String, mBits: Int, k: Int,
                       gramN: Int): StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val grams = batch.select(explode(
-          graft.plans.GraftFunctions.word_gram_set(col(textCol), gramN)).as("gram"))
-          .distinct()
-        EtlCli.appendEpoch(
-          graft.operators.Sketches.bloomBuild(grams, col("gram"), mBits, k),
-          bloomPath, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(incoming, checkpointDir) { (batch, batchId) =>
+      val grams = batch.select(explode(
+        graft.plans.GraftFunctions.word_gram_set(col(textCol), gramN)).as("gram"))
+        .distinct()
+      EtlCli.appendEpoch(
+        graft.operators.Sketches.bloomBuild(grams, col("gram"), mBits, k),
+        bloomPath, batchId)
+    }
 
   /** The live filter: per-word bit_or of every committed epoch's partial
     * filters (bit-identical to one batch-mode bloomBuild over everything
@@ -1039,17 +961,11 @@ object CorpusStreams {
   def kmvSampleSink(incoming: DataFrame, idCol: String, valueCol: String,
                     groupCols: Seq[String], samplePath: String,
                     checkpointDir: String, k: Int): StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        EtlCli.appendEpoch(
-          graft.operators.Sketches.bottomKSample(batch, idCol, valueCol, groupCols, k),
-          samplePath, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(incoming, checkpointDir) { (batch, batchId) =>
+      EtlCli.appendEpoch(
+        graft.operators.Sketches.bottomKSample(batch, idCol, valueCol, groupCols, k),
+        samplePath, batchId)
+    }
 
   /** The live sample: bottom-k re-rank over every committed epoch's
     * partials — feed straight into Sketches.sampleQuantiles. The
@@ -1771,24 +1687,19 @@ object CorpusStreams {
                    rounds: Int = 2, nBits: Int = 8,
                    ringVersion: Int = 2,
                    compactEvery: Int = 0): StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        knnGraphCommitBatch(batch0, batchId, graphPath, idCol, vecCol,
-          k, rounds, nBits, ringVersion)
-        // self-maintenance cadence: unlike the ANN families (whose
-        // read-optimized layouts serve only the PROBES), the graph sink
-        // consumes its own fold every batch — so it can keep the raw
-        // tail short itself. Runs AFTER the epoch commit (a crash
-        // mid-fold leaves the committed epoch intact and the
-        // self-describing tables per-generation consistent); 0 = manual
-        // compact-knn-graph only.
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          knnGraphCompact(batch0.sparkSession, graphPath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(incoming, checkpointDir) { (batch0, batchId) =>
+      knnGraphCommitBatch(batch0, batchId, graphPath, idCol, vecCol,
+        k, rounds, nBits, ringVersion)
+      // self-maintenance cadence: unlike the ANN families (whose
+      // read-optimized layouts serve only the PROBES), the graph sink
+      // consumes its own fold every batch — so it can keep the raw
+      // tail short itself. Runs AFTER the epoch commit (a crash
+      // mid-fold leaves the committed epoch intact and the
+      // self-describing tables per-generation consistent); 0 = manual
+      // compact-knn-graph only.
+      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+        knnGraphCompact(batch0.sparkSession, graphPath)
+    }
 
   /** Commit ONE epoch of the incremental graph — the shared body of
     * [[knnGraphSink]] (batchId = the stream's checkpoint batch) and

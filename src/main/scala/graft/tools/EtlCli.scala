@@ -1,7 +1,8 @@
 package graft.tools
 
 import graft.core.Graft
-import graft.operators.{Audit, CorpusPipeline, Export, MarvelTransform, Relational}
+import graft.operators.{Audit, CorpusPipeline, Export, MarvelTransform, Relational,
+  SweepFamily}
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -204,11 +205,12 @@ object EtlCli {
         idCol, vecCol)
     case other =>
       sys.error("usage: init|ingest|quality|stats|export|learn-bpe|versions|" +
-        s"vacuum|diff|verify-export|sweep-lsh|sweep-binary|sweep-binary-ivf|" +
-        s"check-drift|retrain-binary-ivf|retrain-ivfpq|sweep-ivfpq|" +
-        s"split-hot-cells|read-optimize-binary-ivf|read-optimize-ivfpq|" +
-        s"knn-graph|extend-knn-graph|compact-knn-graph|vacuum-knn-graph|" +
-        s"probe-graph-recall|check-graph-quality ... " +
+        "vacuum|diff|verify-export|sweep-lsh|sweep-binary|sweep-binary-ivf|" +
+        "sweep-fused-rrf|check-drift|retrain-binary-ivf|retrain-ivfpq|" +
+        "sweep-ivfpq|split-hot-cells|read-optimize-binary-ivf|" +
+        "read-optimize-ivfpq|knn-graph|extend-knn-graph|" +
+        "read-optimize-knn-graph|compact-knn-graph|vacuum-knn-graph|" +
+        "probe-graph-recall|check-graph-quality|hard-negatives ... " +
         s"(got $other)")
   }
 
@@ -233,27 +235,87 @@ object EtlCli {
     val truth = graft.operators.Dedup.jaccardPairsExhaustive(
       sample, "doc_id", "text", k, threshold)
     val bandSizes = (1 to numHashes).filter(numHashes % _ == 0)
-    val sweep = graft.operators.Dedup.lshBandSweep(
-      sample, "doc_id", "text", k, numHashes, bandSizes, truth)
-    // The artifact records the shingle k the frontier was MEASURED at:
-    // the ingest sink's pick resolution requires it to equal its own
-    // signing k — a frontier swept at k=9 says nothing about recall of
-    // k=5 bands, and deploying across that mismatch would claim a recall
-    // floor that was never measured.
-    writeTable(sweep.withColumn("shingle_k", lit(k)), outTable)
-    readTable(spark, outTable)
+    // stamped with the shingle k the frontier was MEASURED at: a frontier
+    // swept at k=9 says nothing about recall of k=5 bands
+    commitSweep(SweepFamily.lsh, graft.operators.Dedup.lshBandSweep(
+      sample, "doc_id", "text", k, numHashes, bandSizes, truth), outTable, Seq(k))
   }
 
-  /** Build and COMMIT the binary shortlist-sweep artifact the picker
-    * consumes (pickBinaryConfig) — the sweep-lsh sibling for the binary
-    * ANN path: sample nQueries query vectors by deterministic hash rank
-    * (the coarseSeeds idiom — no RNG, re-sweeps are reproducible), build
-    * exact cosine truth for them over the index, sweep the shortlist
-    * depths against that truth, and commit the frontier at `outTable`
-    * via the versioned-table protocol. Accepts an epoch-partitioned
-    * index (binaryIndexSink's layout) or a flat table; dims infer from
-    * the stored vectors. This is the periodic re-sweep a recall monitor
-    * triggers when the corpus distribution drifts. */
+  // ---- the sweep commands' shared preamble and tail ----------------------
+
+  /** Refuse `df` unless it has every one of `cols`; `what` names it with
+    * its verb ("vectors at t lack"). */
+  private def requireColumns(df: DataFrame, what: String, cols: String*): Unit = {
+    val missing = cols.filterNot(df.columns.contains)
+    if (missing.nonEmpty)
+      sys.error(s"$what column(s) ${missing.mkString(", ")} — pass the column " +
+        s"names it was built with (got: ${df.columns.mkString(", ")})")
+  }
+
+  /** Refuse a sweep input `df` (read from `table`) that lacks one of
+    * `cols` of the layout `command` runs over, or that is empty; returns
+    * the width of the first `arrayCol` value (the vector dims, or the PQ
+    * code width m). */
+  private def sweepInputWidth(df: DataFrame, table: String, command: String,
+                              layout: String, cols: Seq[String],
+                              arrayCol: String): Int = {
+    requireColumns(df, s"$table ($command runs over $layout) lacks", cols: _*)
+    val first = df.select(size(col(arrayCol))).limit(1).collect()
+    require(first.nonEmpty, s"$table is empty — nothing to sweep; ingest at " +
+      s"least one epoch before running $command")
+    first.head.getInt(0)
+  }
+
+  /** The sweep's query sample: the first `n` ids by deterministic hash
+    * rank (the coarseSeeds idiom — no RNG, re-sweeps are reproducible)
+    * with their vectors. */
+  private def hashRankQueries(df: DataFrame, idCol: String, vecCol: String,
+                              n: Int): DataFrame = {
+    require(n >= 1, s"need at least one query vector, got $n")
+    val qids = df.select(col(idCol))
+      .orderBy(md5(col(idCol).cast("string")), col(idCol))
+      .limit(n)
+    df.join(qids, idCol).select(col(idCol), col(vecCol))
+  }
+
+  /** The shared input of the two binary-IVF sweeps: the index's LIVE rows
+    * (after a hot-cell split the parent cell's pre-split copies remain in
+    * old epochs but probes never read them — the exact truth and the
+    * swept index must see the same single copy of every vector), the
+    * quantizer at `centroidsPath`, the dims and the query sample. Accepts
+    * the epoch layout a binaryIvf sink accretes, a versioned table (the
+    * retrain/read-optimize output), or a raw directory. */
+  private def binaryIvfSweepInput(spark: SparkSession, indexTable: String,
+                                  centroidsPath: String, command: String,
+                                  nQueries: Int, idCol: String,
+                                  vecCol: String): (DataFrame, DataFrame, Int, DataFrame) = {
+    val index = scala.util.Try(readIndexWithMaintenance(spark, indexTable))
+      .getOrElse(readAnyTable(spark, indexTable))
+    val dims = sweepInputWidth(index, s"index at $indexTable", command,
+      "a binaryIvfIndexBuild layout (id, cell, words, vec)",
+      Seq(idCol, vecCol, "cell", "words"), vecCol)
+    val cent = readTable(spark, centroidsPath)
+    val live = index.join(broadcast(graft.operators.Similarity.leafCells(cent)
+        .select(col("cc").cast("long").as("__leaf"))),
+      index("cell").cast("long") === col("__leaf"), "left_semi")
+    (live, cent, dims, hashRankQueries(live, idCol, vecCol, nQueries))
+  }
+
+  /** Commit a sweep frontier at `outTable` with `family`'s identity
+    * stamps (one value each, in `family.stamps` order) and any
+    * `provenance` columns after them, via the versioned-table protocol;
+    * returns the committed frontier as read back. */
+  private def commitSweep(family: SweepFamily, sweep: DataFrame, outTable: String,
+                          stamps: Seq[Any],
+                          provenance: Seq[(String, Any)] = Nil): DataFrame = {
+    require(stamps.size == family.stamps.size,
+      s"${family.command} stamps ${family.stamps.mkString(", ")}")
+    writeTable((family.stamps.zip(stamps) ++ provenance).foldLeft(sweep) {
+      case (df, (c, v)) => df.withColumn(c, lit(v))
+    }, outTable)
+    readTable(sweep.sparkSession, outTable)
+  }
+
   /** The drift monitor's read side: scan the per-epoch quantizer-drift
     * log a binaryIvfIndexSinkWithDrift maintains and FAIL naming every
     * alarmed epoch — the signal that the pinned day-0 centroids no
@@ -336,11 +398,7 @@ object EtlCli {
     // vector.
     val index = scala.util.Try(readEpochTableTagged(spark, indexTable))
       .getOrElse(spark.read.parquet(indexTable).withColumn("__epoch", lit(0L)))
-    val missing = Seq(idCol, vecCol).filterNot(index.columns.contains)
-    if (missing.nonEmpty)
-      sys.error(s"index at $indexTable lacks column(s) ${missing.mkString(", ")} " +
-        s"— pass the id/vector column names it was built with (got: " +
-        s"${index.columns.mkString(", ")})")
+    requireColumns(index, s"index at $indexTable lacks", idCol, vecCol)
     // one copy per id, LATEST EPOCH WINS: an id RE-INGESTED with an
     // updated vector must retrain on the newest copy (max-by-vector
     // alone would keep the lexicographically-largest — deterministic but
@@ -392,10 +450,7 @@ object EtlCli {
     require(nCells >= 1, s"nCells must be >= 1, got $nCells")
     require(samplePeriod >= 1, s"sample period must be >= 1, got $samplePeriod")
     val vecs = readAnyTable(spark, vectorsTable)
-    val missing = Seq(idCol, vecCol).filterNot(vecs.columns.contains)
-    if (missing.nonEmpty)
-      sys.error(s"vectors at $vectorsTable lack column(s) ${missing.mkString(", ")} " +
-        s"— pass the id/vector column names (got: ${vecs.columns.mkString(", ")})")
+    requireColumns(vecs, s"vectors at $vectorsTable lack", idCol, vecCol)
     val corpus = vecs.select(col(idCol), col(vecCol))
     if (corpus.isEmpty)
       sys.error(s"vectors at $vectorsTable are empty — nothing to retrain on")
@@ -531,7 +586,7 @@ object EtlCli {
 
   /** Build and COMMIT the binary-IVF 2D sweep artifact the production
     * probe consumes (`CorpusStreams.binaryIvfProbeWithSweep` /
-    * `pickBinaryIvfConfig`) — the sweep-binary sibling for the
+    * `SweepFamily.binaryIvf`) — the sweep-binary sibling for the
     * cell-pruned family, and the re-sweep step of the retrain runbook:
     * sample nQueries query vectors by deterministic hash rank, build
     * exact cosine truth for them over the index, sweep the
@@ -550,41 +605,16 @@ object EtlCli {
                      shortlists: Seq[Int] = Seq(25, 50, 100, 200),
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
-    require(nQueries >= 1, s"need at least one query vector, got $nQueries")
-    val index = scala.util.Try(readIndexWithMaintenance(spark, indexTable))
-      .getOrElse(readAnyTable(spark, indexTable))
-    Seq(idCol, vecCol, "cell", "words").foreach(c =>
-      require(index.columns.contains(c),
-        s"index at $indexTable has no '$c' column (columns: " +
-          s"${index.columns.mkString(", ")}) — sweep-binary-ivf runs over a " +
-          "binaryIvfIndexBuild layout (id, cell, words, vec)"))
-    val firstVec = index.select(size(col(vecCol)).as("d")).limit(1).collect()
-    require(firstVec.nonEmpty,
-      s"index at $indexTable is empty — nothing to sweep; ingest at least " +
-        "one epoch before calibrating the probe knobs")
-    val dims = firstVec.head.getInt(0)
-    val cent = readTable(spark, centroidsPath)
-    // sweep over LIVE rows only: after a hot-cell split the parent cell's
-    // pre-split copies remain in old epochs but probes never read them
-    // (the parent is no longer a leaf) — the exact truth and the swept
-    // index must see the same single copy of every vector
-    val live = index.join(broadcast(graft.operators.Similarity.leafCells(cent)
-        .select(col("cc").cast("long").as("__leaf"))),
-      index("cell").cast("long") === col("__leaf"), "left_semi")
-    val qids = live.select(col(idCol))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-      .limit(nQueries)
-    val queries = live.join(qids, idCol).select(col(idCol), col(vecCol))
+    val (live, cent, dims, queries) = binaryIvfSweepInput(spark, indexTable,
+      centroidsPath, SweepFamily.binaryIvf.command, nQueries, idCol, vecCol)
     val exact = graft.operators.Similarity.bruteForceTopK(
         live.select(col(idCol), col(vecCol)), queries, idCol, vecCol, k)
       .select(col("qid"), col("cid"))
-    val sweep = graft.operators.Similarity.binaryIvfSweep(
-      live.select(col(idCol), col("cell"), col("words")),
-      live.select(col(idCol), col(vecCol)),
-      queries, idCol, vecCol, dims, cent, nProbes, shortlists, k, exact)
-    writeTable(sweep.withColumn("quantizer_id",
-      lit(graft.operators.Similarity.quantizerIdentity(cent))), outTable)
-    readTable(spark, outTable)
+    commitSweep(SweepFamily.binaryIvf, graft.operators.Similarity.binaryIvfSweep(
+        live.select(col(idCol), col("cell"), col("words")),
+        live.select(col(idCol), col(vecCol)),
+        queries, idCol, vecCol, dims, cent, nProbes, shortlists, k, exact),
+      outTable, Seq(graft.operators.Similarity.quantizerIdentity(cent)))
   }
 
   /** Build and COMMIT the FUSED-recall sweep the hybrid-RRF consumer
@@ -608,41 +638,17 @@ object EtlCli {
                     shortlists: Seq[Int] = Seq(25, 50, 100, 200),
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): DataFrame = {
-    require(nQueries >= 1, s"need at least one query vector, got $nQueries")
     require(terms.nonEmpty, "the lexical arm needs at least one term")
-    val index = scala.util.Try(readIndexWithMaintenance(spark, indexTable))
-      .getOrElse(readAnyTable(spark, indexTable))
-    Seq(idCol, vecCol, "cell", "words").foreach(c =>
-      require(index.columns.contains(c),
-        s"index at $indexTable has no '$c' column (columns: " +
-          s"${index.columns.mkString(", ")}) — sweep-fused-rrf runs over a " +
-          "binaryIvfIndexBuild layout (id, cell, words, vec)"))
-    val firstVec = index.select(size(col(vecCol)).as("d")).limit(1).collect()
-    require(firstVec.nonEmpty,
-      s"index at $indexTable is empty — nothing to sweep")
-    val dims = firstVec.head.getInt(0)
-    val cent = readTable(spark, centroidsPath)
-    val live = index.join(broadcast(graft.operators.Similarity.leafCells(cent)
-        .select(col("cc").cast("long").as("__leaf"))),
-      index("cell").cast("long") === col("__leaf"), "left_semi")
-    val qids = live.select(col(idCol))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-      .limit(nQueries)
-    val queries = live.join(qids, idCol).select(col(idCol), col(vecCol))
+    val (live, cent, dims, queries) = binaryIvfSweepInput(spark, indexTable,
+      centroidsPath, SweepFamily.fusedRrf.command, nQueries, idCol, vecCol)
     val exactArm = graft.operators.Similarity.bruteForceTopK(
         live.select(col(idCol), col(vecCol)), queries, idCol, vecCol, armK)
       .select(col("qid"), col("cid"), col("rank"))
     val docs = readAnyTable(spark, docsTable)
-    // the shared lexical arm: BM25 top-armK over the docs table, ranked
-    // with the bounded constant-partition window (the hybrid query's
-    // exact shape)
-    val lex = graft.operators.TextAnalysis.bm25(docs, "doc_id", "text",
-        terms, k1 = 1.2, b = 0.75, topK = armK)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(pmod(length(md5(col("doc_id").cast("string"))), lit(32)))
-          .orderBy(desc("score"), col("doc_id"))))
-      .select(col("doc_id"), col("rank"))
+    // the shared lexical arm: BM25 top-armK over the docs table (the
+    // hybrid query's exact shape)
+    val lex = graft.operators.TextAnalysis.bm25Ranks(docs, "doc_id", "text",
+      terms, topK = armK)
     val sweep = graft.operators.Similarity.fusedRrfSweep(
       live.select(col(idCol), col("cell"), col("words")),
       live.select(col(idCol), col(vecCol)),
@@ -663,15 +669,10 @@ object EtlCli {
         "bit_xor(xxhash64(concat(cast(doc_id as string), ':', " +
           "cast(rank as string))))"), lit(0L)))
       .collect().head.getLong(0)
-    writeTable(sweep
-      .withColumn("quantizer_id",
-        lit(graft.operators.Similarity.quantizerIdentity(cent)))
-      .withColumn("arm_k", lit(armK))
-      .withColumn("k_rrf", lit(kRrf))
-      .withColumn("top_k", lit(topK))
-      .withColumn("lex_id", lit(lexId))
-      .withColumn("lex_terms", lit(terms.mkString(","))), outTable)
-    readTable(spark, outTable)
+    commitSweep(SweepFamily.fusedRrf, sweep, outTable,
+      Seq(graft.operators.Similarity.quantizerIdentity(cent)),
+      Seq("arm_k" -> armK, "k_rrf" -> kRrf, "top_k" -> topK,
+        "lex_id" -> lexId, "lex_terms" -> terms.mkString(",")))
   }
 
   /** Read a table in whatever layout it was maintained in: the epoch log
@@ -693,10 +694,7 @@ object EtlCli {
                vecCol: String = "embedding", nBits: Option[Int] = None,
                ringVersion: Int = 2): Unit = {
     val vecs = readAnyTable(spark, vecsTable)
-    val missing = Seq(idCol, vecCol).filterNot(vecs.columns.contains)
-    if (missing.nonEmpty)
-      sys.error(s"vectors at $vecsTable lack column(s) ${missing.mkString(", ")} " +
-        s"— pass the id/vector column names (got: ${vecs.columns.mkString(", ")})")
+    requireColumns(vecs, s"vectors at $vecsTable lack", idCol, vecCol)
     val corpus = vecs.select(col(idCol), col(vecCol))
     // ring-bucket knob: derived from the corpus size unless pinned — a
     // FIXED bucket count at a growing corpus turns the per-bucket ring
@@ -730,10 +728,7 @@ object EtlCli {
                      vecCol: String = "embedding",
                      ringVersion: Option[Int] = None): Unit = {
     val vecs = readAnyTable(spark, vecsTable)
-    val missing = Seq(idCol, vecCol).filterNot(vecs.columns.contains)
-    if (missing.nonEmpty)
-      sys.error(s"vectors at $vecsTable lack column(s) ${missing.mkString(", ")} " +
-        s"— pass the id/vector column names (got: ${vecs.columns.mkString(", ")})")
+    requireColumns(vecs, s"vectors at $vecsTable lack", idCol, vecCol)
     val stored = scala.util.Try(readTable(spark, s"$graphPath/identity"))
       .toOption.flatMap(_.select(col("k").cast("int"),
           col("n_bits").cast("int"), col("ring_version").cast("int"))
@@ -925,10 +920,7 @@ object EtlCli {
                         labelCol: String = "label"): Unit = {
     val graph = readAnyTable(spark, graphTable)
     val vecs = readAnyTable(spark, vecsTable)
-    val missing = Seq(idCol, vecCol, labelCol).filterNot(vecs.columns.contains)
-    if (missing.nonEmpty)
-      sys.error(s"vectors at $vecsTable lack column(s) ${missing.mkString(", ")} " +
-        s"— pass the id/vector/label column names (got: ${vecs.columns.mkString(", ")})")
+    requireColumns(vecs, s"vectors at $vecsTable lack", idCol, vecCol, labelCol)
     requireStamp(graph, "corpus_id",
       graft.operators.Similarity.corpusIdentity(vecs, idCol, vecCol),
       s"graph at $graphTable was built over corpus",
@@ -960,7 +952,7 @@ object EtlCli {
 
   /** Build and COMMIT the residual IVF-PQ probe-depth sweep the deploy
     * path consumes (`CorpusStreams.ivfPqProbeWithSweep` /
-    * `Similarity.pickIvfConfig`) — the last ANN family's
+    * `SweepFamily.ivf`) — the last ANN family's
     * sweep→floor→choice loop. The codes table carries no raw vectors
     * (that is the point of PQ), so `vectorsTable` supplies (idCol,
     * vecCol) for the hash-rank query sample and the exact-L2 truth —
@@ -979,13 +971,10 @@ object EtlCli {
                  nProbes: Seq[Int] = Seq(1, 2, 4, 8),
                  idCol: String = "vec_id",
                  vecCol: String = "embedding"): DataFrame = {
-    require(nQueries >= 1, s"need at least one query vector, got $nQueries")
     val codes = readAnyTable(spark, codesTable)
-    Seq("cid", "cell", "codes").foreach(c =>
-      require(codes.columns.contains(c),
-        s"codes at $codesTable have no '$c' column (columns: " +
-          s"${codes.columns.mkString(", ")}) — sweep-ivfpq runs over an " +
-          "ivfPqResidualEncode layout (cid, cell, codes)"))
+    val m = sweepInputWidth(codes, s"codes at $codesTable", SweepFamily.ivf.command,
+      "an ivfPqResidualEncode layout (cid, cell, codes)",
+      Seq("cid", "cell", "codes"), "codes")
     val cent = readTable(spark, centroidsPath)
     val cb = readTable(spark, codebookPath)
     requireStamp(cb, "quantizer_id",
@@ -994,62 +983,46 @@ object EtlCli {
       s"the centroids at $centroidsPath",
       "a sweep against a mismatched pair would measure recall of an index " +
         "that cannot exist")
-    val firstCode = codes.select(size(col("codes")).as("m")).limit(1).collect()
-    require(firstCode.nonEmpty,
-      s"codes at $codesTable are empty — nothing to sweep; encode at least " +
-        "one epoch before calibrating the probe depth")
-    val m = firstCode.head.getInt(0)
     val vecs = readAnyTable(spark, vectorsTable).select(col(idCol), col(vecCol))
-    val qids = vecs.select(col(idCol))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-      .limit(nQueries)
-    val queries = vecs.join(qids, idCol)
+    val queries = hashRankQueries(vecs, idCol, vecCol, nQueries)
     val exact = graft.operators.Similarity.bruteForceL2TopK(
         vecs, queries, idCol, vecCol, k)
       .select(col("qid"), col("cid"))
-    val sweep = graft.operators.Similarity.ivfPqResidualSweep(
-      codes.select(col("cid"), col("cell"), col("codes")),
-      cb.drop("quantizer_id"), cent, queries, idCol, vecCol, m, nProbes, k,
-      exact)
-    writeTable(sweep
-      .withColumn("quantizer_id",
-        lit(graft.operators.Similarity.quantizerIdentity(cent)))
-      .withColumn("codebook_id",
-        lit(graft.operators.Similarity.codebookIdentity(cb))), outTable)
-    readTable(spark, outTable)
+    commitSweep(SweepFamily.ivf, graft.operators.Similarity.ivfPqResidualSweep(
+        codes.select(col("cid"), col("cell"), col("codes")),
+        cb.drop("quantizer_id"), cent, queries, idCol, vecCol, m, nProbes, k,
+        exact),
+      outTable, Seq(graft.operators.Similarity.quantizerIdentity(cent),
+        graft.operators.Similarity.codebookIdentity(cb)))
   }
 
+  /** Build and COMMIT the binary shortlist-sweep artifact the picker
+    * consumes (SweepFamily.binary) — the sweep-lsh sibling for the binary
+    * ANN path: sample nQueries query vectors by deterministic hash rank
+    * (the coarseSeeds idiom — no RNG, re-sweeps are reproducible), build
+    * exact cosine truth for them over the index, sweep the shortlist
+    * depths against that truth, and commit the frontier at `outTable`
+    * via the versioned-table protocol. Accepts an epoch-partitioned
+    * index (binaryIndexSink's layout) or a flat table; dims infer from
+    * the stored vectors. This is the periodic re-sweep a recall monitor
+    * triggers when the corpus distribution drifts. */
   def sweepBinary(spark: SparkSession, indexTable: String, outTable: String,
                   nQueries: Int = 5, k: Int = 10,
                   shortlists: Seq[Int] = Seq(25, 50, 100, 200),
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(nQueries >= 1, s"need at least one query vector, got $nQueries")
     val index = scala.util.Try(readEpochTable(spark, indexTable))
       .getOrElse(readTable(spark, indexTable))
     // binaryIndexSink accepts arbitrary id/vec column names, so the sweep
-    // must too; precheck both shape and non-emptiness so a misnamed
-    // column or an index with no committed epochs fails with a message,
-    // not an opaque resolver/NoSuchElement error deep in the plan
-    Seq(idCol, vecCol).foreach(c => require(index.columns.contains(c),
-      s"index at $indexTable has no '$c' column (columns: " +
-        s"${index.columns.mkString(", ")}) — pass idCol/vecCol matching " +
-        "the names the index was built with"))
-    val firstVec = index.select(size(col(vecCol)).as("d")).limit(1).collect()
-    require(firstVec.nonEmpty,
-      s"index at $indexTable is empty — nothing to sweep; ingest at least " +
-        "one epoch before calibrating a shortlist depth")
-    val dims = firstVec.head.getInt(0)
-    val qids = index.select(col(idCol))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-      .limit(nQueries)
-    val queries = index.join(qids, idCol).select(col(idCol), col(vecCol))
+    // must too
+    val dims = sweepInputWidth(index, s"index at $indexTable",
+      SweepFamily.binary.command, "a binaryIndexBuild layout (id, words, vec)",
+      Seq(idCol, vecCol), vecCol)
+    val queries = hashRankQueries(index, idCol, vecCol, nQueries)
     val exact = graft.operators.Similarity.bruteForceTopK(
         index, queries, idCol, vecCol, k)
       .select(col("qid"), col("cid"))
-    val sweep = graft.operators.Similarity.binaryShortlistSweep(
-      index, index, queries, idCol, vecCol, dims, shortlists, k, exact)
-    writeTable(sweep, outTable)
-    readTable(spark, outTable)
+    commitSweep(SweepFamily.binary, graft.operators.Similarity.binaryShortlistSweep(
+      index, index, queries, idCol, vecCol, dims, shortlists, k, exact), outTable, Nil)
   }
 
   private def issuesPath(wh: String)  = s"$wh/issue"
@@ -1112,21 +1085,6 @@ object EtlCli {
       writeTable(existingBridge.unionByName(newLinks), bridgePath(wh))
     }
 
-  /** Training-data EXPORT: the full corpus pipeline composed end-to-end on
-    * the versioned warehouse —
-    *
-    *   CorpusPipeline.clean (quality gates → exact dedup → LSH near-dup →
-    *   decontaminate) → Export.mixtureSample (uniform target share per
-    *   source) → Export.packAssignments → Store.writeShards into
-    *   `wh`/export under the same atomic commit protocol as the ETL
-    *   tables, with read/loaded counters observed into the etl_run audit
-    *   row.
-    *
-    * Everything downstream of the scan is deterministic (hash bands, no
-    * RNG, md5 pseudo-shuffle row order inside each shard file), so a
-    * re-run commits a byte-identical next version — asserted in
-    * EtlCliSpec. Failure anywhere leaves the previous export version live.
-    */
   /** Learn a BPE merge table from a corpus and commit it as the versioned
     * `wh`/bpe_merges table — the tokenizer-training half of the export
     * story. `export ... bpe` then measures sequence budgets in REAL
@@ -1148,6 +1106,21 @@ object EtlCli {
       }
     }.toMap
 
+  /** Training-data EXPORT: the full corpus pipeline composed end-to-end on
+    * the versioned warehouse —
+    *
+    *   CorpusPipeline.clean (quality gates → exact dedup → LSH near-dup →
+    *   decontaminate) → Export.mixtureSample (uniform target share per
+    *   source) → Export.packAssignments → Store.writeShards into
+    *   `wh`/export under the same atomic commit protocol as the ETL
+    *   tables, with read/loaded counters observed into the etl_run audit
+    *   row.
+    *
+    * Everything downstream of the scan is deterministic (hash bands, no
+    * RNG, md5 pseudo-shuffle row order inside each shard file), so a
+    * re-run commits a byte-identical next version — asserted in
+    * EtlCliSpec. Failure anywhere leaves the previous export version live.
+    */
   def export(spark: SparkSession, wh: String, docsPath: String, evalPath: String,
              nShards: Int = 8, budget: Int = 2048,
              format: String = "parquet", bpeTokens: Boolean = false,
@@ -1583,15 +1556,32 @@ object EtlCli {
     * per-row origin is not recoverable post-fold, but every epoch still
     * visible alongside the fold is > E by the compaction protocol, so
     * cross-fold ordering is exact and only same-fold duplicates fall
-    * back to the caller's tiebreak. */
-  private[graft] def readEpochTableTagged(spark: SparkSession, path: String): DataFrame = {
+    * back to the caller's tiebreak. One load: the tag comes from each
+    * row's file path (the last `epoch=N` or `compact=E` segment above
+    * `data_vM`), so the read infers its schema once however many epochs
+    * are visible. */
+  private[graft] def readEpochTableTagged(spark: SparkSession, path: String): DataFrame =
+    readEpochTable(spark, path).withColumn("__epoch", regexp_extract(
+      col("_metadata.file_path"), ".*/(?:epoch|compact)=(-?\\d+)/data_v\\d+/", 1)
+      .cast(LongType))
+
+  /** Marker a sink plants in an epoch table whose READ semantics are
+    * latest-epoch-wins (not union-of-epochs): the generic fold below
+    * erases per-row epoch provenance, so compacting such a table keeps
+    * superseded copies alive in every read — silent corruption, refused
+    * here by reading the marker's own message. The marker's CONTENT
+    * names the table's blessed fold. */
+  private[graft] val CompactionUnsafeMarker = "_compaction_unsafe"
+
+  private[graft] def markCompactionUnsafe(spark: SparkSession, path: String,
+                                          reason: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/$CompactionUnsafeMarker")
     val f = fs(spark, path)
-    val dirs = epochDataDirs(f, path)
-    if (dirs.isEmpty) sys.error(s"no committed epochs at $path — nothing ingested yet")
-    dirs.map { case (e, d) =>
-      spark.read.format(sniffFormat(f, d)).load(d)
-        .withColumn("__epoch", lit(e))
-    }.reduce(_.unionByName(_))
+    if (!f.exists(p)) {
+      val out = f.create(p, true)
+      out.write(reason.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      out.close()
+    }
   }
 
   /** Fold every visible epoch (plus any prior compaction) of the table at
@@ -1615,25 +1605,6 @@ object EtlCli {
     * content whose rows compact=E already holds. Superseded dirs are
     * reclaimed lazily by vacuumEpochs, never inline, so concurrent readers
     * mid-plan keep their files. */
-  /** Marker a sink plants in an epoch table whose READ semantics are
-    * latest-epoch-wins (not union-of-epochs): the generic fold below
-    * erases per-row epoch provenance, so compacting such a table keeps
-    * superseded copies alive in every read — silent corruption, refused
-    * here by reading the marker's own message. The marker's CONTENT
-    * names the table's blessed fold. */
-  private[graft] val CompactionUnsafeMarker = "_compaction_unsafe"
-
-  private[graft] def markCompactionUnsafe(spark: SparkSession, path: String,
-                                          reason: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$CompactionUnsafeMarker")
-    val f = fs(spark, path)
-    if (!f.exists(p)) {
-      val out = f.create(p, true)
-      out.write(reason.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-    }
-  }
-
   def compactEpochs(spark: SparkSession, path: String,
                     format: String = "parquet",
                     targetFileBytes: Long = 128L * 1024 * 1024): Unit = {

@@ -290,14 +290,14 @@ class DedupSpec extends SparkSpec {
       bandSizes = Seq(1, 2, 4, 8), truth = truth)
     val floor = 0.9
     val qualifying = sweep.filter(_._6 >= floor)
-    val picked = Dedup.pickLshConfig(sweepDf, floor)
+    val picked = graft.operators.SweepFamily.lsh.pick(sweepDf, floor)
       .select("band_size", "n_candidates").as[(Int, Long)].collect()
     assert(qualifying.nonEmpty && picked.length == 1)
     assert(picked.head._1 == qualifying.map(_._1).max,
       s"picker must choose the cheapest qualifying config: $picked of ${sweep.toSeq}")
     assert(picked.head._2 == qualifying.map(_._3).min)
     // an unreachable floor returns NO row — never the best loser
-    assert(Dedup.pickLshConfig(sweepDf, 1.1).count() == 0)
+    assert(graft.operators.SweepFamily.lsh.pick(sweepDf, 1.1).count() == 0)
   }
 
   test("overlapFractions: every train doc reported, zero-hit and gram-less rows included") {

@@ -363,6 +363,51 @@ class EtlCliSpec extends SparkSpec {
     assert(contents() == before :+ (9L, "v9"))
   }
 
+  test("readEpochTableTagged: one load whatever the epoch count; tags equal the per-epoch union's") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val wh = Files.createTempDirectory("etlepochtagged").toFile.getAbsolutePath
+    def append(path: String, e: Long): Unit =
+      EtlCli.appendEpoch(Seq((e * 10, s"v$e"), (e * 10 + 1, s"w$e")).toDF("k", "v"), path, e)
+    // the jobs of building and collecting a tagged read, counted by a
+    // SparkListener with the listener bus drained on both sides
+    def jobsOfTaggedRead(path: String): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+        jobs.set(0)
+        EtlCli.readEpochTableTagged(spark, path).collect()
+        org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      jobs.get()
+    }
+    (0L until 3L).foreach(append(s"$wh/e3", _))
+    (0L until 6L).foreach(append(s"$wh/e6", _))
+    val (j3, j6) = (jobsOfTaggedRead(s"$wh/e3"), jobsOfTaggedRead(s"$wh/e6"))
+    assert(j3 == j6, s"a tagged read's jobs must not grow with the epochs: E=3 $j3, E=6 $j6")
+
+    // a fold behind a fencepost, later epochs and a maintenance subtable
+    val path = s"$wh/t"
+    (0L to 2L).foreach(append(path, _))
+    EtlCli.compactEpochs(spark, path)
+    (3L to 4L).foreach(append(path, _))
+    EtlCli.appendEpoch(Seq((99L, "m")).toDF("k", "v"), s"$path/maintenance", 0L)
+    def tagged(p: String, e: Long) =
+      EtlCli.readTable(spark, p).withColumn("__epoch", lit(e))
+    val perEpoch = (tagged(s"$path/compact=2", 2L) +: (3L to 4L).map(e =>
+      tagged(s"$path/epoch=$e", e))).reduce(_.unionByName(_))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v", "__epoch").as[(Long, String, Long)].collect().toSet
+    assert(rows(EtlCli.readEpochTableTagged(spark, path)) == rows(perEpoch))
+    assert(rows(EtlCli.readEpochTableTagged(spark, s"$path/maintenance")) ==
+      Set((99L, "m", 0L)))
+  }
+
   test("compact rewrites many small files into few, contents unchanged") {
     import spark.implicits._
     val wh = Files.createTempDirectory("etlcompact").toFile.getAbsolutePath
@@ -418,8 +463,8 @@ class EtlCliSpec extends SparkSpec {
     assert(rows.forall(_._3 >= 1), s"planted pair must be in the truth: ${rows.toSeq}")
     assert(rows.head._4 == 1.0, s"band size 1 is recall-exact: ${rows.toSeq}")
     // the committed frontier feeds the picker exactly as the sink reads it
-    val pick = graft.operators.Dedup.pickLshConfig(
-      EtlCli.readTable(spark, s"$root/sweep"), minRecall = 0.9)
+    val pick = graft.operators.SweepFamily.lsh.pick(
+      EtlCli.readTable(spark, s"$root/sweep"), floor = 0.9)
     assert(pick.count() <= 1)
   }
 
@@ -446,8 +491,8 @@ class EtlCliSpec extends SparkSpec {
     assert(EtlCli.readTable(spark, s"$root/sweep2").collect().toSet ==
       EtlCli.readTable(spark, s"$root/sweep").collect().toSet)
     // the committed frontier feeds the picker exactly as deployments read it
-    assert(graft.operators.Similarity.pickBinaryConfig(
-      EtlCli.readTable(spark, s"$root/sweep"), minRecall = 0.0).count() == 1)
+    assert(graft.operators.SweepFamily.binary.pick(
+      EtlCli.readTable(spark, s"$root/sweep"), floor = 0.0).count() == 1)
   }
 
   test("check-drift: quiet log prints all-clear; retrain-binary-ivf precheck errors are explicit") {
@@ -755,5 +800,14 @@ class EtlCliSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("epoch log") &&
       !ex.getMessage.contains("nothing ingested"), ex.getMessage)
+  }
+
+  test("an unknown command's usage error names every dispatched command") {
+    val src = Files.readString(java.nio.file.Paths.get("src/main/scala/graft/tools/EtlCli.scala"))
+    val dispatched = "case Seq\\(\"([a-z-]+)\"".r.findAllMatchIn(src).map(_.group(1)).toSet
+    val ex = intercept[RuntimeException] { EtlCli.run(spark, Seq("no-such-command")) }
+    val named = ex.getMessage.stripPrefix("usage: ").takeWhile(_ != ' ').split('|').toSet
+    assert(dispatched.size >= 29 && dispatched.diff(named).isEmpty,
+      s"usage omits: ${dispatched.diff(named).toSeq.sorted.mkString(", ")}")
   }
 }

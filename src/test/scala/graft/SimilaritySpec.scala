@@ -214,10 +214,10 @@ class SimilaritySpec extends SparkSpec {
     val sweepDf = Similarity.ivfProbeSweep(emb, q, "vec_id", "embedding",
       nCells = 4, nProbes = Seq(1, 2, 4), k = 5, exact = exact)
     val floor = sweep.head._5 // the shallowest depth's recall qualifies everyone above it
-    val picked = Similarity.pickIvfConfig(sweepDf, floor)
+    val picked = graft.operators.SweepFamily.ivf.pick(sweepDf, floor)
       .select("n_probe").as[Int].collect()
     assert(picked.toSeq == Seq(1), s"cheapest qualifying depth is 1: $picked")
-    assert(Similarity.pickIvfConfig(sweepDf, 1.1).count() == 0)
+    assert(graft.operators.SweepFamily.ivf.pick(sweepDf, 1.1).count() == 0)
   }
 
   test("bruteForceTopK ranks the nearest vector first") {
@@ -472,8 +472,8 @@ class SimilaritySpec extends SparkSpec {
     val sw = Similarity.binaryShortlistSweep(index, index, queries,
       "vec_id", "embedding", dims = 64, shortlists = Seq(10, 40, n), k = 5,
       exact = exact)
-    assert(Similarity.pickBinaryConfig(sw, minRecall = 1.01).count() == 0)
-    assert(Similarity.pickBinaryConfig(sw, minRecall = 0.0)
+    assert(graft.operators.SweepFamily.binary.pick(sw, floor = 1.01).count() == 0)
+    assert(graft.operators.SweepFamily.binary.pick(sw, floor = 0.0)
       .select(col("shortlist")).as[Int].head() == 10)
   }
 
@@ -604,8 +604,8 @@ class SimilaritySpec extends SparkSpec {
     }
     // picker: unreachable floor -> empty (re-sweep, never the best
     // loser); floor 0 -> cheapest stage-1 cost wins
-    assert(Similarity.pickBinaryIvfConfig(grid(), minRecall = 1.01).count() == 0)
-    val pick = Similarity.pickBinaryIvfConfig(grid(), minRecall = 0.0)
+    assert(graft.operators.SweepFamily.binaryIvf.pick(grid(), floor = 1.01).count() == 0)
+    val pick = graft.operators.SweepFamily.binaryIvf.pick(grid(), floor = 0.0)
       .select(col("n_probe"), col("shortlist")).as[(Int, Int)].head()
     assert(pick == ((2, 10)), s"picker must take the cheapest grid point: $pick")
   }
@@ -1177,10 +1177,10 @@ class SimilaritySpec extends SparkSpec {
       s"sweep full-depth hits ${sweep.last._3} != scorer hits $scoreHits")
     assert(sweep.last._4 == 50L, "5 queries x k=10 ground truth")
     // picker reads the same schema the IVF sweep emits
-    val pick = Similarity.pickIvfConfig(
+    val pick = graft.operators.SweepFamily.ivf.pick(
       Similarity.ivfPqResidualSweep(codes, cb, cent, q, "vec_id", "embedding",
         m = 8, nProbes = Seq(1, 2, 4, 16), k = 10, exact = exact),
-      minRecall = 0.0)
+      floor = 0.0)
     assert(pick.count() == 1, "a zero floor must always pick the cheapest depth")
     assert(pick.select(col("n_probe").cast("int")).as[Int].head() == 1)
   }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** In package graft.queries to reach the private[queries] artifact memo. */
 class MemoSpec extends graft.SparkSpec {
@@ -45,5 +46,21 @@ class MemoSpec extends graft.SparkSpec {
       "memo_spec_leaf")(spark.range(3).toDF("id"))
     assert(p.endsWith("/memo_spec_leaf/sf_tmp_memo_spec_leaf_sf0.01"), p)
     assert(spark.read.parquet(p).count() == 3)
+  }
+
+  test("each artifact key in src/main has exactly one declaring call site") {
+    // the memo keys on the name alone and keeps whichever build runs
+    // first, so a second build body under one name could drift and
+    // silently change other queries' inputs
+    val call = """Memo\.parquetArtifact(?:Path)?\([^"()]*"([^"]+)"""".r
+    val files = {
+      val st = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try st.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally st.close()
+    }
+    val keys = files.flatMap(p =>
+      call.findAllMatchIn(java.nio.file.Files.readString(p)).map(_.group(1)))
+    val repeated = keys.groupBy(identity).collect { case (k, v) if v.size > 1 => k -> v.size }
+    assert(keys.nonEmpty && repeated.isEmpty, s"keys declared more than once: $repeated")
   }
 }

@@ -17,11 +17,19 @@ Each pair's line shows, per side, wall_s next to that run's session_s and
 canary_ms before/after from `# meta`: a pair run in a slow host period
 shows there, and perfbench/README.md asks for such a comparison to be
 re-run. It then prints, per end-to-end metric, each side's median and quartiles
-(IQR = q3 - q1), the relative change of the medians, how many pairs B won
-(lower is better for every metric perfbench gates) and whether the median
-gap exceeds A's IQR; then each query's op_median_ms median per side. Runs
-that fail or report correct=false are listed and left out of the tables.
-`--json` also writes every pair's raw numbers to a file.
+(IQR = q3 - q1), the relative change of the medians, how many pairs B won,
+whether the median gap exceeds A's IQR and a no-regression verdict; then
+each query's op_median_ms median per side. Runs that fail or report
+correct=false are listed and left out of the tables. `--json` also writes
+every pair's raw numbers to a file.
+
+Direction and bound of each metric come from the `end_to_end` list of the
+B checkout's BENCHMARK.json: a pair is a B win when B is better in the
+declared direction, and the verdict reads `ok` when B's median is no worse
+than A's by more than the bound (relative to A's median), `WORSE` when it
+is, and `unresolved` when A's own IQR / median exceeds the bound (the runs
+spread too widely to tell). A metric BENCHMARK.json does not declare counts
+as lower-is-better and gets no verdict.
 """
 import argparse
 import json
@@ -75,6 +83,21 @@ def ok(r):
     return r.get("exit") == 0 and r.get("correct") is True and r.get("failed") == 0
 
 
+def declared_metrics(checkout):
+    """name -> (better, bound) of each end-to-end metric in BENCHMARK.json."""
+    spec = json.loads((Path(checkout) / "BENCHMARK.json").read_text())
+    return {m["name"]: (m["better"], m["bound"]) for m in spec.get("end_to_end", [])}
+
+
+def verdict(ma, a1, a3, mb, better, bound):
+    if bound is None:
+        return "-"
+    if (a3 - a1) / ma > bound:
+        return "unresolved"
+    worse_by = (mb - ma) / ma if better == "lower" else (ma - mb) / ma
+    return "WORSE" if worse_by > bound else "ok"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--a", required=True, help="baseline checkout (e.g. the parent commit)")
@@ -112,18 +135,21 @@ def main():
         print("no complete pair")
         return 1
     names = list(good[0]["A"]["metrics"])
+    declared = declared_metrics(sides["B"])
     print(f"\n{args.workload}: {len(good)} complete pairs (A={sides['A']}, B={sides['B']})")
     print(f"{'metric':18s} {'A median':>10s} {'A q1-q3':>19s} {'B median':>10s} "
-          f"{'B q1-q3':>19s} {'change':>8s} {'B wins':>7s} {'gap>IQR(A)':>10s}")
+          f"{'B q1-q3':>19s} {'change':>8s} {'B wins':>7s} {'gap>IQR(A)':>10s} {'verdict':>10s}")
     for m in names:
         a = [p["A"]["metrics"][m]["value"] for p in good]
         b = [p["B"]["metrics"][m]["value"] for p in good]
         ma, mb = statistics.median(a), statistics.median(b)
         (a1, a3), (b1, b3) = quartiles(a), quartiles(b)
-        wins = sum(1 for x, y in zip(a, b) if y < x)
+        better, bound = declared.get(m, ("lower", None))
+        wins = sum(1 for x, y in zip(a, b) if (y < x if better == "lower" else y > x))
         print(f"{m:18s} {ma:10.2f} {a1:9.2f}-{a3:<9.2f} {mb:10.2f} {b1:9.2f}-{b3:<9.2f} "
               f"{(mb - ma) / ma * 100:+7.1f}% {wins:4d}/{len(good):<2d} "
-              f"{'yes' if abs(mb - ma) > (a3 - a1) else 'no':>10s}")
+              f"{'yes' if abs(mb - ma) > (a3 - a1) else 'no':>10s} "
+              f"{verdict(ma, a1, a3, mb, better, bound):>10s}")
     queries = sorted(good[0]["A"].get("op_median_ms", {}))
     if queries:
         print(f"\n{'op_median_ms':24s} {'A median':>10s} {'B median':>10s} {'change':>8s}")
