@@ -246,9 +246,7 @@ object Similarity {
 
   /** Exploration-ring formula versions (see [[explorationBucketCol]]).
     * The version is GRAPH IDENTITY: a committed graph replays
-    * bit-identically only under the formula that built it, so the
-    * incremental family records it (identity row `ring_version`) and an
-    * extension or rebuild must reuse the committed value. */
+    * bit-identically only under the formula that built it. */
   final val RingVersions: Set[Int] = Set(1, 2)
 
   /** The per-round exploration-ring bucket of one node id.
@@ -388,8 +386,7 @@ object Similarity {
     * `k` rows — mine with a larger graph k than the training k, exactly
     * as retrieval over-fetches a shortlist). The brute operator stays as
     * the oracle cross-check; consumers of a COMMITTED graph must refuse
-    * a stale corpus first (EtlCli.requireStamp over `corpus_id` /
-    * CorpusStreams.requireKnnGraphCurrent). */
+    * a stale corpus first (EtlCli.requireStamp over `corpus_id`). */
   def hardNegativesFromGraph(graph: DataFrame, labels: DataFrame,
                              idCol: String, labelCol: String,
                              k: Int): DataFrame = {
@@ -415,10 +412,8 @@ object Similarity {
     * consumer holding a re-embedded corpus (new model, new epochs) must
     * refuse the stale graph instead of silently mining degraded
     * neighbors. XOR over disjoint row sets COMPOSES — identity(old ∪
-    * batch) = identity(old) XOR identity(batch) — which is what lets the
-    * streaming graph sink maintain the stamp in O(batch) per epoch
-    * (duplicate (id, vec) rows would XOR out, so identity is taken over
-    * one-copy-per-id views, which every caller here already maintains). */
+    * batch) = identity(old) XOR identity(batch); duplicate (id, vec) rows
+    * would XOR out, so identity is taken over one-copy-per-id views. */
   def corpusIdentity(df: DataFrame, idCol: String, vecCol: String): Long =
     df.select(xxhash64(col(idCol).cast("string"), dvec(col(vecCol))).as("h"))
       .agg(coalesce(expr("bit_xor(h)"), lit(0L)).as("id"))
@@ -439,368 +434,6 @@ object Similarity {
     val buckets = math.max(1.0, n.toDouble / targetBucketSize)
     math.min(24, math.max(2, math.ceil(math.log(buckets) / math.log(2.0)).toInt))
   }
-
-  // ---- incremental graph maintenance: pruned state readers -------------
-
-  /** Pluggable PRUNED readers over a committed graph's state — how
-    * [[nnDescentExtend]] reads the nodes and edge logs without scanning
-    * every committed byte per micro-batch.
-    *
-    *  - `nodes(coarseBuckets, idHashBuckets, fineBuckets)`: node rows
-    *    `(id, vec, __epoch)`. All filters are SUPERSET hints: the reader
-    *    may return more rows than the filter names (extra rows only add
-    *    candidates, every score runs against the latest vector), but
-    *    must never drop a row the filter covers. `coarseBuckets` names
-    *    sign-LSH buckets at [[nnDescentCoarseBits]] granularity (the
-    *    read-optimized layout's partition column); `idHashBuckets` names
-    *    [[GraphStateReaders.idHash]] partitions (the re-ingest /
-    *    superseded-copy lookup axis); `fineBuckets` names FULL-nBits
-    *    sign-LSH buckets — the layout's SECOND level, a fine_bucket
-    *    column the compactor sorts within each partition's files so the
-    *    filter prunes parquet row groups past the ~sqrt(n) coarse
-    *    occupancy (a directory level per fine bucket would be 2^nBits
-    *    leaf dirs at corpus scale — the sort order buys the same skip
-    *    without the listing bill).
-    *  - `edges(srcBuckets)`: committed edge rows
-    *    `(id, nid, cosine, rank[, nid_bucket, src_bucket], __epoch)`,
-    *    filtered by the SOURCE node's coarse bucket. The layout invariant
-    *    that makes this a lossless prune: a hood is always committed
-    *    under its source's CURRENT-vector bucket (a re-ingest recomputes
-    *    the hood in the same epoch that moves the vector), and every
-    *    lookup derives the bucket from the same current vector.
-    *
-    * [[GraphStateReaders.raw]] wraps plain frames (ad-hoc state, the raw
-    * epoch union) with filter-blind readers — correct, just unpruned;
-    * `CorpusStreams.graphStateReaders` builds the pruning pair over the
-    * bucket-partitioned read-optimized layouts + the raw epoch tail. */
-  final case class GraphStateReaders(
-      nodes: (Option[Seq[Long]], Option[Seq[Long]], Option[Seq[Long]]) => DataFrame,
-      edges: Option[Seq[Long]] => DataFrame)
-
-  object GraphStateReaders {
-    /** id-hash fan-out of the nodes layout's second partition axis — a
-      * PROTOCOL constant (the compactor writes it, readers compute filter
-      * values with it; each fold row records the fan-out it was written
-      * under, so a reader facing a foreign fan-out falls back to unpruned
-      * id lookups rather than pruning wrong). Serves only the
-      * superseded-copy lookup, which the
-      * seen-ids bloom already reduces to re-ingest batches — 16 cuts
-      * those to ~1/16 of the layout without multiplying the per-bucket
-      * file count the mate scan pays on every batch. */
-    final val IdHashBuckets = 16L
-
-    /** The id-hash partition of one id — deterministic, id-type agnostic
-      * (string cast, the hash-rank idiom). */
-    def idHash(c: Column): Column =
-      pmod(xxhash64(c.cast("string")), lit(IdHashBuckets))
-
-    /** Filter-blind readers over plain frames: every filter is ignored
-      * (a legal superset), so callers holding raw state keep the exact
-      * pre-pruning semantics. */
-    def raw(oldNodes: DataFrame, oldGraph: DataFrame): GraphStateReaders =
-      GraphStateReaders((_, _, _) => oldNodes, _ => oldGraph)
-  }
-
-  /** The SAFETY-NET ring granularity derived from the fine knob — and the
-    * partition granularity of the graph's read-optimized nodes layout.
-    * The coarse bucket is a pure bit-PROJECTION of the fine bucket (bit h
-    * tests plane h regardless of nBits), so two vectors sharing a fine
-    * bucket always share the coarse one — which is exactly why ONE
-    * coarse-partitioned layout serves the mate scan at BOTH
-    * granularities. */
-  def nnDescentCoarseBits(nBits: Int): Int = 1.max(nBits / 2)
-
-  /** The sign-LSH bucket of one vector column (the expression
-    * [[signLshBuckets]] projects), exposed for layouts that store the
-    * bucket as a partition column. */
-  def signLshBucketCol(vec: Column, nBits: Int): Column =
-    pcol(graft.plans.SignLshBucketExpr(pexpr(dvec(vec)), nBits))
-
-  /** Incrementally EXTEND a committed k-NN graph with a batch of new
-    * nodes — the O(batch) maintenance move that spares a daily-ingest
-    * corpus the from-scratch [[nnDescentGraph]] rebuild (the one
-    * remaining O(corpus) maintenance path after round 12).
-    *
-    * Candidates per new node (all bounded, no corpus-keyed shuffle):
-    *  - FINE-ring LSH bucket mates (full nBits) as the primary source:
-    *    the batch's occupied fine-bucket set broadcasts (O(batch)
-    *    values) and ALSO rides the reader as a fine-bucket filter, which
-    *    the compacted layout's sort-order second level turns into
-    *    parquet row-group skips — mate bytes track the batch's fine
-    *    buckets (~targetBucketSize each under the scaled knob), not the
-    *    ~sqrt(n) per-coarse-partition occupancy.
-    *  - a CONDITIONAL coarse ring (nBits/2) as the safety net, per batch
-    *    node, only when its fine ring cannot fill a k-neighborhood (the
-    *    bootstrap's isolation concern: a node alone in its fine bucket
-    *    would start isolated). An unconditional coarse ring would
-    *    re-read the coarse partitions every batch and add only
-    *    candidates the fine ring dominates — fine mates share every
-    *    plane coarse mates share, and more.
-    *  - the committed NEIGHBORS of those mates (probing the existing
-    *    edges — NN-descent's transitivity step, one hop): the mate set
-    *    broadcasts (O(batch x bucket occupancy), bucket occupancy held
-    *    ~targetBucketSize by [[nnDescentNBits]]), so the committed graph
-    *    is likewise a map-only filtered scan, id-hash-pruned when the
-    *    reader has the partitioned layout.
-    * Scoring joins the bounded candidate set BROADCAST against one
-    * map-only pass over the node vectors; the vector fetch is pruned to
-    * (batch buckets ∪ the hop edges' stored `nid_bucket` hints). A hint
-    * can be STALE — a neighbor re-ingested with a moved vector after its
-    * edge was written may bucket elsewhere and be skipped as a hop
-    * candidate until next touched — the same staleness class as stored
-    * cosines, watched by the same quality monitor; when ANY hop edge
-    * lacks a hint the fetch falls back to unpruned (superset, never a
-    * wrong miss).
-    *
-    * Old nodes TOUCHED by the batch (they appeared as a scored
-    * candidate of some new node) re-converge locally: their updated
-    * neighborhood is top-k over (their committed k edges ∪ the reverse
-    * scored pairs) — stored cosines are reused, nothing rescores, and on
-    * an (a, b) collision the FRESH rev score supersedes the stored one
-    * (a moved neighbor can pull an edge down; max(cosine) would let
-    * scores only ratchet upward, invisible to the falling-mean monitor).
-    *
-    * NOT pure-function-equivalent to a rebuild — insertion order matters
-    * (NN-descent is iterative refinement) — so unlike the sign/code
-    * sinks the streaming contract is a measured QUALITY RATIO vs the
-    * batch build (CorpusStreams.knnGraphSink logs it; the spec asserts
-    * the floor), not bit-equality. The arithmetic itself is
-    * deterministic: a replayed batch over the same committed state
-    * recomputes the identical epoch.
-    *
-    * A re-ingested id (present in the committed nodes AND `batch`) is
-    * treated as updated: the batch copy wins, and its neighborhood
-    * recomputes from scratch; its STALE incoming edges elsewhere in the
-    * graph keep their stored cosine until those nodes are next touched —
-    * the quality monitor is the instrument that decides when that
-    * staleness has accumulated into a rebuild.
-    *
-    * Returns FULL replacement neighborhoods (idCol, nid, cosine, rank,
-    * nid_bucket, src_bucket) for new nodes ∪ touched old nodes — exactly the rows a
-    * latest-epoch-wins read view supersedes; untouched nodes produce no
-    * rows. `nid_bucket` records each neighbor's coarse bucket AT SCORE
-    * TIME (stored edges keep their stored hint) — the hop-fetch pruning
-    * hint above. `src_bucket` is the SOURCE node's current-vector coarse
-    * bucket — the edge layout's partition axis (see
-    * [[GraphStateReaders]]): always current, because the only event that
-    * moves a node's bucket (a re-ingest) recomputes its hood in the same
-    * epoch. */
-  /** @param extraHoodBuckets additional coarse buckets the committed-hood
-    *        lookup must cover beyond the batch's own: the PRE-BATCH
-    *        current buckets of batch ids that are re-ingests. A re-ingest
-    *        whose vector moved buckets keeps its committed hood under the
-    *        OLD bucket (the hood only moves when this very epoch commits
-    *        its replacement); without the old bucket in the filter, a
-    *        fold-resident hood is pruned away and its hop candidates
-    *        silently drop relative to the raw readers. The sink derives
-    *        these from the superseded-copy lookup it already pays for the
-    *        identity fold (bloom-gated, id-hash-pruned — free on
-    *        append-mostly batches); filter-blind raw readers ignore the
-    *        hint entirely. */
-  def nnDescentExtend(readers: GraphStateReaders, batch: DataFrame,
-                      idCol: String, vecCol: String,
-                      k: Int, nBits: Int,
-                      extraHoodBuckets: Seq[Long] = Nil): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val coarse = nnDescentCoarseBits(nBits)
-    // Inputs may be RAW epoch unions carrying an `__epoch` column with
-    // multiple committed copies per id (the sink's read shape): deduping
-    // a corpus-sized table per batch would be exactly the O(corpus)
-    // shuffle this operator exists to avoid, so duplicates are resolved
-    // only where they become BOUNDED — after a broadcast filter to a
-    // candidate-sized id set. A stale copy can at worst ADD bucket
-    // candidates (its vector may bucket elsewhere); every candidate is
-    // scored against the LATEST vector, so the candidate superset never
-    // degrades the result. Un-tagged inputs mean one-copy-per-id.
-    def tagged(df: DataFrame): DataFrame =
-      if (df.columns.contains("__epoch"))
-        df.withColumn("__epoch", col("__epoch").cast(LongType))
-      else df.withColumn("__epoch", lit(0L))
-    // one copy per id in the batch (deterministic max-vec tiebreak), and
-    // the batch copy supersedes a re-ingested old one
-    val b = graft.core.Materialize.pin(batch
-      .select(col(idCol), dvec(col(vecCol)).as("__v"))
-      .groupBy(col(idCol)).agg(max(col("__v")).as("__v")))
-    // the batch's occupied COARSE buckets — a bounded driver artifact
-    // (<= |batch| values), the static filter the pruned mate scan runs on
-    val batchCoarse: Seq[Long] = b
-      .select(signLshBucketCol(col("__v"), coarse).as("bucket"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
-    val batchFine: Seq[Long] = b
-      .select(signLshBucketCol(col("__v"), nBits).as("bucket"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
-    def nodesView(bf: Option[Seq[Long]], ihf: Option[Seq[Long]],
-                  ff: Option[Seq[Long]] = None): DataFrame =
-      tagged(readers.nodes(bf, ihf, ff))
-        .select(col(idCol), dvec(col(vecCol)).as("__v"), col("__epoch"))
-        .join(broadcast(b.select(col(idCol))), Seq(idCol), "left_anti")
-        .unionByName(b.withColumn("__epoch", lit(Long.MaxValue)))
-    // latest committed neighborhood of a BOUNDED id set whose current
-    // coarse buckets are KNOWN: read the edges pruned to those source
-    // buckets (lossless — hoods commit under their source's
-    // current-vector bucket), broadcast-filter the rows (map-only),
-    // dedupe after — the latest-epoch window runs over candidate-sized
-    // rows only
-    def latestHoods(ids: DataFrame, srcBuckets: Option[Seq[Long]]): DataFrame = {
-      val e0 = tagged(readers.edges(srcBuckets))
-      val eNb = if (e0.columns.contains("nid_bucket")) e0
-                else e0.withColumn("nid_bucket", lit(null).cast(LongType))
-      val gT = eNb.select(col(idCol), col("nid"), col("cosine"),
-        col("nid_bucket").cast(LongType).as("__nb"), col("__epoch"))
-      val sub = gT.join(broadcast(ids), gT(idCol) === ids("__id")).drop("__id")
-      val w = Window.partitionBy(col(idCol))
-      sub.withColumn("__m", max(col("__epoch")).over(w))
-        .filter(col("__epoch") === col("__m"))
-        .select(col(idCol), col("nid"), col("cosine"), col("__nb"))
-    }
-    // FINE-FIRST bucket mates with a CONDITIONAL coarse safety net: the
-    // fine ring (full nBits) supplies the candidates — read through the
-    // fine-bucket filter, which the compacted layout turns into parquet
-    // row-group skips, so a batch's mate bytes track the batch's FINE
-    // buckets (~targetBucketSize each under the scaled knob), not the
-    // ~sqrt(n) coarse occupancy. The coarse ring exists for the
-    // bootstrap's isolation concern (a node alone in its fine bucket
-    // would get no mates) and fires PER BATCH NODE only when the fine
-    // ring is too sparse to fill a neighborhood — an unconditional
-    // coarse ring would re-read the coarse partitions every batch and
-    // add only candidates the fine ring already dominates (fine mates
-    // share every plane the coarse mates share, and more).
-    def buckets(df: DataFrame, bits: Int): DataFrame =
-      df.select(col(idCol), signLshBucketCol(col("__v"), bits).as("bucket"))
-    val fineMates = buckets(nodesView(Some(batchCoarse), None,
-        Some(batchFine)), nBits)
-      .join(broadcast(buckets(b, nBits).select(col(idCol).as("a"),
-        col("bucket"))), Seq("bucket"))
-      .select(col("a"), col(idCol).as("b"))
-      .filter(col("a") =!= col("b"))
-      .transform(graft.core.Materialize.pin)
-    // needy = batch nodes whose fine ring cannot fill a k-neighborhood;
-    // bounded driver artifact (<= |batch| rows)
-    val needy = b.select(col(idCol).as("a"))
-      .join(fineMates.groupBy(col("a"))
-        .agg(countDistinct(col("b")).as("__c")), Seq("a"), "left_outer")
-      .filter(coalesce(col("__c"), lit(0L)) < k)
-      .select(col("a"))
-      .transform(graft.core.Materialize.pin)
-    val needyCoarse: Seq[Long] = needy
-      .join(b, needy("a") === b(idCol))
-      .select(signLshBucketCol(col("__v"), coarse).as("bucket"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
-    val coarseMates =
-      if (needyCoarse.isEmpty) fineMates.limit(0)
-      else buckets(nodesView(Some(needyCoarse), None), coarse)
-        .join(broadcast(buckets(b, coarse)
-          .join(needy.withColumnRenamed("a", idCol), Seq(idCol))
-          .select(col(idCol).as("a"), col("bucket"))), Seq("bucket"))
-        .select(col("a"), col(idCol).as("b"))
-        .filter(col("a") =!= col("b"))
-    val mates = fineMates.unionByName(coarseMates).distinct()
-    val matesP = graft.core.Materialize.pin(mates)
-    // one transitivity hop over the COMMITTED edges: neighbors of mates.
-    // The mate set is bounded (batch x ~targetBucketSize x 2), so the
-    // committed graph scan is map-only filtered, never corpus-shuffled.
-    // Hood-filter coverage: a NON-batch mate's committed hood is always
-    // reachable — either its latest hood post-dates the fold (raw tail,
-    // unpruned) or its current fold copy bucketed into batchCoarse (that
-    // is how it became a mate) and its hood lives under that same bucket
-    // by the layout invariant. The one gap is a BATCH re-ingest whose
-    // vector moved buckets: its committed hood still sits under the
-    // pre-batch bucket, covered here by extraHoodBuckets (the sink's
-    // superseded-copy lookup supplies them; Nil + raw readers = the
-    // exact unpruned semantics).
-    val hoodBuckets = (batchCoarse ++ extraHoodBuckets).distinct.sorted
-    val hopNb = graft.core.Materialize.pin(matesP.join(
-        latestHoods(matesP.select(col("b").as("__id")).distinct(),
-          Some(hoodBuckets))
-          .select(col(idCol).as("b"), col("nid"), col("__nb")),
-        Seq("b"))
-      .select(col("a"), col("nid").as("b"), col("__nb")))
-    val cand = matesP.unionByName(hopNb.select(col("a"), col("b")))
-      .filter(col("a") =!= col("b")).distinct()
-    // vector-fetch pruning: batch buckets cover every mate (shared-bucket
-    // membership is how they became mates); hop candidates are covered by
-    // their edges' stored nid_bucket hints — unless any hint is missing
-    // (legacy edges), in which case the fetch reads unpruned
-    val nbVals = hopNb.select(col("__nb")).distinct().collect()
-      .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
-    val fetchFilter: Option[Seq[Long]] =
-      if (nbVals.exists(_.isEmpty)) None
-      else Some((batchCoarse ++ nbVals.toSeq.flatten).distinct.sorted)
-    // score: candidate pairs (with the batch-side vector attached)
-    // broadcast against the latest vector of each BOUNDED candidate id
-    // (broadcast-filter the node epochs map-only, then a bounded dedupe)
-    val candIds = cand.select(col("b").as("__id")).distinct()
-    val fetchAll = nodesView(fetchFilter, None)
-    val latestVecs = fetchAll
-      .join(broadcast(candIds), fetchAll(idCol) === candIds("__id"))
-      .groupBy(col(idCol))
-      .agg(max_by(col("__v"), struct(col("__epoch"), col("__v"))).as("__vb"))
-      .select(col(idCol).as("b"), col("__vb"),
-        qnorm(col("__vb")).as("__nvb"))
-    // per-row norms on both sides (see qnorm note): the batch side's norm
-    // rides the broadcast, the candidate side's computes once per fetched id
-    val candV = cand.join(b.select(col(idCol).as("a"), col("__v").as("__va"),
-        qnorm(col("__v")).as("__nva")),
-      Seq("a"))
-    val scored = graft.core.Materialize.pin(
-      latestVecs.join(broadcast(candV), Seq("b"))
-        .select(col("a"), col("b"),
-          (qdot(col("__va"), col("__vb"))
-            / (col("__nva") * col("__nvb"))).as("cosine"),
-          signLshBucketCol(col("__vb"), coarse).as("__nb"),
-          signLshBucketCol(col("__va"), coarse).as("__nbA")))
-    val wK = Window.partitionBy("a").orderBy(desc("cosine"), col("b"))
-    def topK(df: DataFrame): DataFrame =
-      df.withColumn("rank", row_number().over(wK).cast(IntegerType))
-        .filter(col("rank") <= k)
-    val newHoods = topK(scored.select(col("a"), col("b"), col("cosine"),
-      col("__nb"), col("__nbA").as("__sb")))
-    // touched old nodes: reverse the scored pairs, union their committed
-    // edges (stored cosines — nothing rescores), keep top-k
-    val nonBatch = scored.join(b.select(col(idCol).as("b")), Seq("b"),
-      "left_anti")
-    val rev = nonBatch
-      .select(col("b").as("a"), col("a").as("b"), col("cosine"),
-        col("__nbA").as("__nb"))
-    // a touched node's current coarse bucket is the one its fetched
-    // latest vector hashes to (scored.__nb) — deterministic per id
-    val touched = graft.core.Materialize.pin(
-      nonBatch.select(col("b").as("a"), col("__nb").as("__sb")).distinct())
-    val touchedBkts = touched.select(col("__sb")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
-    val oldEdges = latestHoods(touched.select(col("a").as("__id")),
-        Some(touchedBkts))
-      .select(col(idCol).as("a"), col("nid").as("b"), col("cosine"),
-        col("__nb"))
-    // on an (a, b) collision the FRESH rev score wins (max_by over a
-    // freshness flag), never max(cosine): a neighbor re-ingested with a
-    // moved vector must be able to pull the stored edge DOWN — under
-    // max(cosine) edge scores could only ratchet upward, and the quality
-    // monitor (which alarms on a FALLING mean) would be blind to exactly
-    // this staleness mode
-    val updated = topK(rev.withColumn("__fresh", lit(1))
-      .unionByName(oldEdges.withColumn("__fresh", lit(0)))
-      .filter(col("a") =!= col("b"))
-      .groupBy(col("a"), col("b"))
-      .agg(max_by(struct(col("cosine"), col("__nb")),
-        struct(col("__fresh"), col("cosine"))).as("__s"))
-      .select(col("a"), col("b"), col("__s.cosine").as("cosine"),
-        col("__s.__nb").as("__nb")))
-      .join(broadcast(touched), Seq("a"))
-    newHoods.unionByName(updated)
-      .select(col("a").as(idCol), col("b").as("nid"), col("cosine"),
-        col("rank"), col("__nb").as("nid_bucket"),
-        col("__sb").as("src_bucket"))
-  }
-
-  /** [[nnDescentExtend]] over plain committed-state frames (the raw epoch
-    * unions, or any ad-hoc state) — filter-blind readers, identical
-    * semantics, no pruning. */
-  def nnDescentExtend(oldNodes: DataFrame, oldGraph: DataFrame,
-                      batch: DataFrame, idCol: String, vecCol: String,
-                      k: Int, nBits: Int): DataFrame =
-    nnDescentExtend(GraphStateReaders.raw(oldNodes, oldGraph), batch,
-      idCol, vecCol, k, nBits)
 
   /** nBits-bit sign-LSH bucket id per vector: bit h = [dot(v, plane_h) > 0]
     * with deterministic hyperplane signs (the high bit of md5("h:d")'s
@@ -995,7 +628,13 @@ object Similarity {
     * broken index reads as recall 0, not as an empty result. Both sides
     * must use deterministic k-boundary tie-breaks (every operator here
     * orders by (dist, cid)) or recall itself becomes nondeterministic. */
-  def annRecallAtK(approx: DataFrame, exact: DataFrame, k: Int): DataFrame = {
+  def annRecallAtK(approx: DataFrame, exact: DataFrame, k: Int): DataFrame =
+    recallRows(approx, exact, k).drop("n_denom")
+
+  /** [[annRecallAtK]]'s rows plus each query's denominator `n_denom`
+    * (its exact row count, capped at k) — the integer a micro average
+    * over queries sums. */
+  private def recallRows(approx: DataFrame, exact: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val hits = exact.select(col("qid"), col("cid"))
       .join(approx.select(col("qid"), col("cid")), Seq("qid", "cid"), "left_semi")
@@ -1009,7 +648,27 @@ object Similarity {
       .select(col("qid"),
         coalesce(col("__n"), lit(0L)).as("n_hit"),
         (coalesce(col("__n"), lit(0L)).cast(DoubleType) /
-          least(lit(k.toLong), col("__d"))).as("recall"))
+          least(lit(k.toLong), col("__d"))).as("recall"),
+        least(lit(k.toLong), col("__d")).as("n_denom"))
+  }
+
+  /** Sampled exact-recall probe of a k-NN graph `(idCol, nid, ...)` built
+    * over `corpus`: hash-rank sample `nQueries` nodes (md5 of the id),
+    * brute-force their exact cosine top-k, and score the graph's
+    * neighborhoods of those nodes against it — [[recallRows]] per sampled
+    * node. Distribution shift moves a graph's mean cosine but not this
+    * recall; a stale graph (built over other vectors) moves recall. */
+  def graphRecall(graph: DataFrame, corpus: DataFrame, idCol: String,
+                  vecCol: String, nQueries: Int, k: Int): DataFrame = {
+    require(nQueries >= 1, s"need at least one probe query, got $nQueries")
+    val queries = corpus
+      .orderBy(md5(col(idCol).cast("string")), col(idCol)).limit(nQueries)
+    val exact = bruteForceTopK(corpus, queries, idCol, vecCol, k)
+      .select(col("qid"), col("cid"))
+    val approx = graph
+      .join(queries.select(col(idCol)), Seq(idCol), "left_semi")
+      .select(col(idCol).as("qid"), col("nid").as("cid"))
+    recallRows(approx, exact, k)
   }
 
   // ---- the sweep frontier tail ---------------------------------------

@@ -2233,13 +2233,11 @@ object VectorQueries {
         .orderBy(col("vec_id"))
     },
 
-    // The graph family's GROUND-TRUTH probe (CorpusStreams.
-    // knnGraphRecallProbe's math, oracle-checked): hash-rank sample 5
-    // nodes, exact cosine top-5 from scratch, recall of the committed
-    // neighborhoods against it. The bootstrap-relative cosine trend is
-    // distribution-sensitive; this axis is not — a falling row is
-    // staleness, full stop. Shares the ONE construction CTE body with
-    // q_knn_graph, so probe and graph can never desynchronize.
+    // The graph family's GROUND-TRUTH probe (Similarity.graphRecall, the
+    // probe-graph-recall command's math, oracle-checked): hash-rank
+    // sample 5 nodes, exact cosine top-5 from scratch, recall of the
+    // committed neighborhoods against it. Shares the ONE construction CTE
+    // body with q_knn_graph, so probe and graph can never desynchronize.
     QueryDef(
       "q_graph_recall",
       "sampled exact-recall probe of the committed k-NN graph: 5 hash-rank nodes, exact top-5 vs graph neighborhoods",
@@ -2267,16 +2265,9 @@ object VectorQueries {
                  CAST(COALESCE(n, 0) AS DOUBLE) / LEAST($KnnK, d) AS recall
           FROM den LEFT JOIN hits ON hits.qid = den.qid
           ORDER BY qid""") { (s, dir) =>
-      val emb = t(s, dir, "embeddings")
-      val queries = emb
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(5)
-      val exact = Similarity.bruteForceTopK(emb, queries, "vec_id",
-          "embedding", KnnK)
-        .select(col("qid"), col("cid"))
-      val approx = knnGraphArtifact(s, dir)
-        .join(queries.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .select(col("vec_id").as("qid"), col("nid").as("cid"))
-      Similarity.annRecallAtK(approx, exact, KnnK).orderBy(col("qid"))
+      Similarity.graphRecall(knnGraphArtifact(s, dir), t(s, dir, "embeddings"),
+          "vec_id", "embedding", nQueries = 5, k = KnnK)
+        .drop("n_denom").orderBy(col("qid"))
     },
 
     // SemDeDup (Abbas et al. 2023): coarse-quantizer cells bound the pair

@@ -138,47 +138,11 @@ object EtlCli {
     case Seq("knn-graph", vecsTable, outTable, k, rounds, nBits, idCol, vecCol) =>
       knnGraph(spark, vecsTable, outTable, k.toInt, rounds.toInt, idCol, vecCol,
         Some(nBits.toInt))
-    case Seq("extend-knn-graph", vecsTable, graphPath) =>
-      extendKnnGraph(spark, vecsTable, graphPath)
-    case Seq("extend-knn-graph", vecsTable, graphPath, k, rounds) =>
-      extendKnnGraph(spark, vecsTable, graphPath, Some(k.toInt), rounds.toInt)
-    case Seq("extend-knn-graph", vecsTable, graphPath, k, rounds, nBits) =>
-      extendKnnGraph(spark, vecsTable, graphPath, Some(k.toInt), rounds.toInt,
-        Some(nBits.toInt))
-    case Seq("extend-knn-graph", vecsTable, graphPath, k, rounds, nBits,
-             idCol, vecCol) =>
-      extendKnnGraph(spark, vecsTable, graphPath, Some(k.toInt), rounds.toInt,
-        Some(nBits.toInt), idCol, vecCol)
-    case Seq("read-optimize-knn-graph", graphPath, outPath) =>
-      graft.streaming.CorpusStreams.knnGraphReadOptimize(spark, graphPath, outPath)
-      println(s"k-NN graph compacted to the stamped flat layout at $outPath")
-    case Seq("compact-knn-graph", graphPath) =>
-      graft.streaming.CorpusStreams.knnGraphCompact(spark, graphPath)
-      println(s"k-NN graph at $graphPath compacted")
-    case Seq("vacuum-knn-graph", graphPath) =>
-      val freed = graft.streaming.CorpusStreams.vacuumKnnGraph(spark, graphPath)
-      println(s"k-NN graph at $graphPath vacuumed: $freed bytes reclaimed")
-    case Seq("vacuum-knn-graph", graphPath, checkpointDir) =>
-      val freed = graft.streaming.CorpusStreams.vacuumKnnGraph(spark, graphPath,
-        Some(checkpointDir))
-      println(s"k-NN graph at $graphPath vacuumed: $freed bytes reclaimed")
-    case Seq("check-graph-quality", graphPath) =>
-      checkGraphQuality(spark, graphPath)
-    case Seq("check-graph-quality", graphPath, minRatio) =>
-      checkGraphQuality(spark, graphPath, minRatio.toDouble)
-    case Seq("check-graph-quality", graphPath, minRatio, maxOccupancy) =>
-      checkGraphQuality(spark, graphPath, minRatio.toDouble,
-        Some(maxOccupancy.toLong))
-    case Seq("check-graph-quality", graphPath, minRatio, maxOccupancy,
-             minRecall) =>
-      checkGraphQuality(spark, graphPath, minRatio.toDouble,
-        Some(maxOccupancy.toLong), Some(minRecall.toDouble))
-    case Seq("probe-graph-recall", graphPath) =>
-      graft.streaming.CorpusStreams.knnGraphRecallProbe(spark, graphPath)
+    case Seq("probe-graph-recall", graphTable, vecsTable) =>
+      probeGraphRecall(spark, graphTable, vecsTable).show(truncate = false)
+    case Seq("probe-graph-recall", graphTable, vecsTable, nQueries) =>
+      probeGraphRecall(spark, graphTable, vecsTable, nQueries.toInt)
         .show(truncate = false)
-    case Seq("probe-graph-recall", graphPath, nQueries) =>
-      graft.streaming.CorpusStreams.knnGraphRecallProbe(spark, graphPath,
-        nQueries.toInt).show(truncate = false)
     case Seq("hard-negatives", graphTable, vecsTable, outTable, k) =>
       mineHardNegatives(spark, graphTable, vecsTable, outTable, k.toInt)
     case Seq("hard-negatives", graphTable, vecsTable, outTable, k,
@@ -208,9 +172,7 @@ object EtlCli {
         "vacuum|diff|verify-export|sweep-lsh|sweep-binary|sweep-binary-ivf|" +
         "sweep-fused-rrf|check-drift|retrain-binary-ivf|retrain-ivfpq|" +
         "sweep-ivfpq|split-hot-cells|read-optimize-binary-ivf|" +
-        "read-optimize-ivfpq|knn-graph|extend-knn-graph|" +
-        "read-optimize-knn-graph|compact-knn-graph|vacuum-knn-graph|" +
-        "probe-graph-recall|check-graph-quality|hard-negatives ... " +
+        "read-optimize-ivfpq|knn-graph|probe-graph-recall|hard-negatives ... " +
         s"(got $other)")
   }
 
@@ -684,15 +646,19 @@ object EtlCli {
       .orElse(scala.util.Try(readTable(spark, table)))
       .getOrElse(spark.read.parquet(table))
 
+  /** Exploration-ring formula the CLI builds graphs under
+    * (Similarity.RingVersions); the catalog queries replay v1. */
+  private final val KnnGraphRingVersion = 2
+
   /** Build and COMMIT the approximate k-NN graph
     * (Similarity.nnDescentGraph) over a corpus table — the batch
     * maintenance job a SemDeDup-style pipeline or graph-retrieval
-    * deployment schedules. Versioned commit, blue/green like every
+    * deployment schedules, and the one way to refresh the graph of a
+    * grown or re-embedded corpus. Versioned commit, blue/green like every
     * maintained artifact. */
   def knnGraph(spark: SparkSession, vecsTable: String, outTable: String,
                k: Int, rounds: Int, idCol: String = "vec_id",
-               vecCol: String = "embedding", nBits: Option[Int] = None,
-               ringVersion: Int = 2): Unit = {
+               vecCol: String = "embedding", nBits: Option[Int] = None): Unit = {
     val vecs = readAnyTable(spark, vecsTable)
     requireColumns(vecs, s"vectors at $vecsTable lack", idCol, vecCol)
     val corpus = vecs.select(col(idCol), col(vecCol))
@@ -706,205 +672,42 @@ object EtlCli {
     // requireStamp instead of silently mining degraded neighbors
     val cid = graft.operators.Similarity.corpusIdentity(corpus, idCol, vecCol)
     writeTable(graft.operators.Similarity.nnDescentGraph(
-        corpus, idCol, vecCol, k, rounds, bits, ringVersion)
+        corpus, idCol, vecCol, k, rounds, bits, KnnGraphRingVersion)
       .withColumn("corpus_id", lit(cid)), outTable)
     println(s"k-NN graph (k=$k, $rounds NN-descent rounds, nBits=$bits, " +
-      s"ring v$ringVersion) committed at $outTable, stamped corpus_id=$cid")
+      s"ring v$KnnGraphRingVersion) committed at $outTable, stamped corpus_id=$cid")
   }
 
-  /** Batch-mode sibling of CorpusStreams.knnGraphSink for corpora
-    * maintained by scheduled jobs rather than streams: commit ONE epoch
-    * of the incremental graph at `graphPath` from a new-vectors table —
-    * bootstrap (full NN-descent build) when no graph exists, O(batch)
-    * extension otherwise. The graph's build params are IDENTITY: `k`
-    * sizes every committed neighborhood and `nBits` keys the candidate
-    * buckets, so an extension must reuse the committed values — stored
-    * in the identity table, re-read here, and a conflicting explicit
-    * argument refuses naming both. Bootstrap requires `k`; nBits
-    * derives from the corpus size unless pinned. */
-  def extendKnnGraph(spark: SparkSession, vecsTable: String, graphPath: String,
-                     k: Option[Int] = None, rounds: Int = 2,
-                     nBits: Option[Int] = None, idCol: String = "vec_id",
-                     vecCol: String = "embedding",
-                     ringVersion: Option[Int] = None): Unit = {
+  /** Sampled exact-recall probe of a committed k-NN graph (the knn-graph
+    * output) against the vectors it was built over
+    * (Similarity.graphRecall): one row of k, n_queries, n_hit, n_denom
+    * and recall_micro = n_hit / n_denom. k is the graph's own
+    * neighborhood size (its max rank). Refuses a graph stamped for a
+    * different corpus identity than the vectors, as hard-negatives does:
+    * a stale graph needs a rebuild, not a recall figure. */
+  def probeGraphRecall(spark: SparkSession, graphTable: String,
+                       vecsTable: String, nQueries: Int = 16): DataFrame = {
+    val (idCol, vecCol) = ("vec_id", "embedding")
+    val graph = readAnyTable(spark, graphTable)
     val vecs = readAnyTable(spark, vecsTable)
     requireColumns(vecs, s"vectors at $vecsTable lack", idCol, vecCol)
-    val stored = scala.util.Try(readTable(spark, s"$graphPath/identity"))
-      .toOption.flatMap(_.select(col("k").cast("int"),
-          col("n_bits").cast("int"), col("ring_version").cast("int"))
-        .collect().headOption)
-    val (kk, bits, ring) = stored match {
-      case Some(r) =>
-        val (k0, b0, rv0) = (r.getInt(0), r.getInt(1), r.getInt(2))
-        k.filter(_ != k0).foreach(x => sys.error(
-          s"graph at $graphPath was built with k=$k0 but this extension " +
-            s"passes k=$x — mixing neighborhood sizes corrupts the view; " +
-            s"omit k (the committed value is reused) or rebuild"))
-        nBits.filter(_ != b0).foreach(x => sys.error(
-          s"graph at $graphPath was built with nBits=$b0 but this " +
-            s"extension passes nBits=$x — the knob keys the candidate " +
-            "buckets and must stay fixed for the graph's life; omit it " +
-            "or rebuild"))
-        ringVersion.filter(_ != rv0).foreach(x => sys.error(
-          s"graph at $graphPath was bootstrapped under ring formula " +
-            s"v$rv0 but this run passes v$x — the exploration-ring " +
-            "formula is graph-lifetime identity (a committed graph " +
-            "replays bit-identically only under the formula that built " +
-            "it); omit it (the committed version is reused) or rebuild"))
-        (k0, b0, rv0)
-      case None =>
-        val kk = k.getOrElse(sys.error(s"no committed graph at $graphPath " +
-          "— a bootstrap needs k (and optionally rounds / nBits)"))
-        (kk, nBits.getOrElse(
-          graft.operators.Similarity.nnDescentNBits(vecs.count())),
-          ringVersion.getOrElse(2))
+    requireColumns(graph, s"graph at $graphTable lacks", idCol, "nid", "rank")
+    requireStamp(graph, "corpus_id",
+      graft.operators.Similarity.corpusIdentity(vecs, idCol, vecCol),
+      s"graph at $graphTable was built over corpus",
+      s"the vectors at $vecsTable",
+      "the embeddings moved since the graph was built — rebuild " +
+        "(knn-graph) before probing")
+    val k = graph.agg(max(col("rank")).cast("int")).collect().head match {
+      case r if r.isNullAt(0) => sys.error(s"graph at $graphTable has no edges")
+      case r => r.getInt(0)
     }
-    // Epoch choice is correctness, not bookkeeping: a run that crashed
-    // after its nodes append but before the identity write left an epoch
-    // whose ids are in the corpus reads but not in the identity fold. A
-    // re-run at max+1 would see its own batch's prior copies as
-    // "superseded" and XOR them back out — the ids would be missing from
-    // the identity FOREVER. Detect the half-committed epoch (nodes
-    // present but graph or identity missing) and REUSE its id: the
-    // commit body recomputes from strictly-earlier state (the streaming
-    // sink's checkpoint-replay semantics) and idempotently replaces the
-    // crashed appends.
-    // fold-aware max: after vacuum-knn-graph the raw tail may start past
-    // (or be empty at) the folds' covered epochs — the next epoch must
-    // never collide with a reclaimed one
-    val (foldN, foldE) = graft.streaming.CorpusStreams
-      .knnGraphFoldCovered(spark, graphPath)
-    val next = (committedEpochs(spark, s"$graphPath/nodes").maxOption
-        ++ foldN).maxOption match {
-      case None => 0L
-      case Some(n) =>
-        val graphDone =
-          committedEpochs(spark, s"$graphPath/graph").contains(n) ||
-            foldE.exists(_ >= n)
-        val idDone = scala.util.Try(readTable(spark, s"$graphPath/identity")
-            .select(col("last_epoch").cast("long"))
-            .collect().headOption.exists(_.getLong(0) >= n))
-          .getOrElse(false)
-        if (graphDone && idDone) n + 1
-        else {
-          println(s"epoch $n at $graphPath is half-committed (a prior run " +
-            "crashed mid-commit) — replaying it instead of opening a new one")
-          n
-        }
-    }
-    graft.streaming.CorpusStreams.knnGraphCommitBatch(
-      vecs.select(col(idCol), col(vecCol)), next, graphPath, idCol, vecCol,
-      kk, rounds, bits, ring)
-    println(s"graph at $graphPath ${if (next == 0) "bootstrapped" else "extended"} " +
-      s"as epoch $next (k=$kk, nBits=$bits, ring v$ring)")
-  }
-
-  /** The graph family's monitor arm, checkDrift's sibling: read the
-    * quality trend log a knnGraphSink appends (one exact-integer
-    * mean-cosine row per epoch) and alarm when any epoch's mean falls
-    * below `minRatio` of the BOOTSTRAP epoch's — the accumulated
-    * staleness signal incremental NN-descent uniquely has (extensions
-    * are order-dependent, so no bit-equality check can see decay; the
-    * trend can). The remedial is explicit: rebuild from scratch
-    * (knn-graph over the nodes table) and resume the sink. */
-  def checkGraphQuality(spark: SparkSession, graphPath: String,
-                        minRatio: Double = 0.8,
-                        maxOccupancy: Option[Long] = None,
-                        minRecall: Option[Double] = None): Unit = {
-    require(minRatio > 0 && minRatio <= 1,
-      s"minRatio must be in (0,1], got $minRatio")
-    require(maxOccupancy.forall(_ >= 1),
-      s"maxOccupancy must be >= 1, got $maxOccupancy")
-    require(minRecall.forall(r => r > 0 && r <= 1),
-      s"minRecall must be in (0,1], got $minRecall")
-    // ground-truth axis first when asked for: the sampled exact-recall
-    // probe log (CorpusStreams.knnGraphRecallProbe) — unlike the
-    // bootstrap-relative cosine trend below it is distribution-blind, so
-    // a low row is STALENESS, not a merely more diverse corpus
-    minRecall.foreach { floor =>
-      val probed = scala.util.Try(
-          readEpochTable(spark, s"$graphPath/recall"))
-        .toOption
-      probed match {
-        case None => println(s"no recall probe log at $graphPath — run " +
-          "probe-graph-recall to add the ground-truth axis")
-        case Some(t) =>
-          val bad = t.filter(col("recall_micro") < floor)
-            .select(col("epoch").cast("long"),
-              col("recall_micro").cast("double"))
-            .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
-          if (bad.nonEmpty)
-            sys.error("graph exact-recall probe fell below " +
-              f"$floor%.2f at epoch(s) " +
-              bad.map { case (e, r) => f"$e (recall $r%.3f)" }.mkString(", ") +
-              s" of $graphPath — incremental-extension staleness against " +
-              "the EXACT ground truth, not a distribution artifact. " +
-              "Rebuild the graph from the nodes table (knn-graph) and " +
-              "resume the sink")
-      }
-    }
-    val log = readEpochTable(spark, s"$graphPath/quality")
-    // bucket-skew axis first: the candidate bound the extension's
-    // broadcast mate set rides is ~occupancy of the batch's buckets —
-    // a near-dup-heavy corpus piles into one bucket, and the per-batch
-    // cost cliff arrives LONG before the cosine trend moves. Alarm with
-    // the remedial: rebuild at a finer derived nBits (more hyperplanes
-    // thin the pile), or split/dedup the near-identical mass first.
-    maxOccupancy.foreach { cap =>
-      // axes live in two logs: quality/ carries the per-batch FINE ring
-      // (what the fine-first extension pays), occupancy/ carries the
-      // compact-cadence full-corpus stats at both granularities
-      val occLog = scala.util.Try(
-        readEpochTable(spark, s"$graphPath/occupancy")).toOption
-      val axes = (Seq(log -> Seq("max_bucket_members_fine")) ++
-          occLog.map(_ -> Seq("max_bucket_members_fine",
-            "max_bucket_members_coarse")))
-        .flatMap { case (t, cs) => cs.map(c =>
-          t.select(col("epoch").cast("long"), col(c).cast("long").as("__m"))) }
-      val hot = axes.reduce(_ unionByName _).filter(col("__m") > cap)
-        .groupBy(col("epoch")).agg(max(col("__m")).as("__m"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-      if (hot.nonEmpty)
-        sys.error(s"graph ring-bucket occupancy blew past $cap in epoch(s) " +
-          hot.map { case (e, m) => s"$e (max $m)" }.mkString(", ") +
-          s" at $graphPath — the extension's per-batch candidate bound is " +
-          "occupancy-linear, so batches touching the hot bucket pay it in " +
-          "full. Rebuild the graph at a FINER derived nBits (knn-graph; " +
-          "nnDescentNBits with a smaller targetBucketSize), or near-dup " +
-          "the piled mass away before it enters the corpus")
-    }
-    // an EMPTY micro-batch logs a null mean (no edges to average — the
-    // empty-frame guard, not a signal): skip those epochs rather than
-    // reading 0-quality into the trend
-    val rows = log
-      .filter(col("mean_cosine").isNotNull)
-      .select(col("epoch").cast("long"), col("mean_cosine").cast("double"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
-    if (rows.isEmpty) {
-      println(s"graph quality log at $graphPath holds only empty epochs — " +
-        "nothing to trend yet")
-      return
-    }
-    val base = rows.head._2
-    // cosine lives in [-1, 1]: a zero or NEGATIVE bootstrap mean makes
-    // the ratio threshold degenerate (negative base RAISES the bar above
-    // base itself, alarming on epochs that improved) — a trend needs a
-    // positive anchor, so refuse loudly instead of paging nonsense
-    if (base <= 0)
-      sys.error(f"graph quality bootstrap epoch at $graphPath has " +
-        f"non-positive mean neighbor cosine ($base%.4f) — a ratio trend " +
-        "has no meaningful anchor; the bootstrap graph itself looks " +
-        "degenerate (near-orthogonal or inverted neighborhoods). Rebuild " +
-        "the graph (knn-graph) before trending its quality")
-    val alarmed = rows.filter(_._2 < minRatio * base).map(_._1)
-    if (alarmed.nonEmpty)
-      sys.error(f"graph quality collapsed in epoch(s) ${alarmed.mkString(", ")} " +
-        f"of $graphPath — mean neighbor cosine fell below $minRatio%.2f of " +
-        f"the bootstrap epoch's ($base%.4f); incremental extension " +
-        "staleness accumulated. Rebuild the graph from the nodes table " +
-        "(knn-graph) and resume the sink")
-    println(f"graph quality steady across ${rows.length} epoch(s) at " +
-      f"$graphPath (bootstrap mean $base%.4f)")
+    graft.operators.Similarity.graphRecall(graph,
+        vecs.select(col(idCol), col(vecCol)), idCol, vecCol, nQueries, k)
+      .agg(count(lit(1)).as("n_queries"), sum(col("n_hit")).as("n_hit"),
+        sum(col("n_denom")).as("n_denom"))
+      .select(lit(k).as("k"), col("n_queries"), col("n_hit"), col("n_denom"),
+        (col("n_hit").cast("double") / col("n_denom")).as("recall_micro"))
   }
 
   /** The committed graph's first consumer — graph-powered contrastive
@@ -926,8 +729,7 @@ object EtlCli {
       s"graph at $graphTable was built over corpus",
       s"the vectors at $vecsTable",
       "the embeddings moved since the graph was built — rebuild " +
-        "(knn-graph) or re-stream the changed vectors through " +
-        "knnGraphSink before mining")
+        "(knn-graph) before mining")
     writeTable(graft.operators.Similarity.hardNegativesFromGraph(
       graph, vecs, idCol, labelCol, k), outTable)
     println(s"graph-mined hard negatives (top-$k per node) committed at $outTable")
@@ -1565,25 +1367,6 @@ object EtlCli {
       col("_metadata.file_path"), ".*/(?:epoch|compact)=(-?\\d+)/data_v\\d+/", 1)
       .cast(LongType))
 
-  /** Marker a sink plants in an epoch table whose READ semantics are
-    * latest-epoch-wins (not union-of-epochs): the generic fold below
-    * erases per-row epoch provenance, so compacting such a table keeps
-    * superseded copies alive in every read — silent corruption, refused
-    * here by reading the marker's own message. The marker's CONTENT
-    * names the table's blessed fold. */
-  private[graft] val CompactionUnsafeMarker = "_compaction_unsafe"
-
-  private[graft] def markCompactionUnsafe(spark: SparkSession, path: String,
-                                          reason: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$CompactionUnsafeMarker")
-    val f = fs(spark, path)
-    if (!f.exists(p)) {
-      val out = f.create(p, true)
-      out.write(reason.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-    }
-  }
-
   /** Fold every visible epoch (plus any prior compaction) of the table at
     * `path` into one size-targeted `compact=E` dir — the maintenance
     * counterpart of the streaming sinks' O(batch) epoch appends. A year of
@@ -1609,13 +1392,6 @@ object EtlCli {
                     format: String = "parquet",
                     targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     val f = fs(spark, path)
-    val marker = new org.apache.hadoop.fs.Path(s"$path/$CompactionUnsafeMarker")
-    if (f.exists(marker)) {
-      val in = f.open(marker)
-      val reason = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                   finally in.close()
-      sys.error(s"epoch table at $path is marked compaction-unsafe: $reason")
-    }
     val parts = epochDataDirs(f, path)
     val live = parts.filter { case (_, d) => d.startsWith(s"$path/epoch=") }
     if (live.isEmpty) return // nothing appended since the last fold

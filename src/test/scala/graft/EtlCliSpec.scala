@@ -597,108 +597,6 @@ class EtlCliSpec extends SparkSpec {
     assert(ex.getMessage.contains("lack column"), ex.getMessage)
   }
 
-  test("extend-knn-graph CLI: bootstrap then O(batch) extension; committed build params are identity; mismatched knobs refuse") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("extg_cli")
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val (s0, s1) = (emb.filter(col("vec_id") % 2 === 0),
-      emb.filter(col("vec_id") % 2 === 1))
-    graft.tools.EtlCli.writeTable(s0, s"$root/v0")
-    graft.tools.EtlCli.writeTable(s1, s"$root/v1")
-    // bootstrap (epoch 0), then extend (epoch 1)
-    graft.tools.EtlCli.run(spark,
-      Seq("extend-knn-graph", s"$root/v0", s"$root/g", "5", "2"))
-    graft.tools.EtlCli.run(spark,
-      Seq("extend-knn-graph", s"$root/v1", s"$root/g"))
-    val view = graft.streaming.CorpusStreams.readKnnGraph(spark, s"$root/g",
-      "vec_id")
-    assert(view.select(col("vec_id")).distinct().count() == emb.count(),
-      "the extended graph must cover both batches")
-    assert(graft.streaming.CorpusStreams.knnGraphIdentity(spark, s"$root/g") ==
-      graft.operators.Similarity.corpusIdentity(emb, "vec_id", "embedding"),
-      "two batch commits must fold to the full-corpus identity")
-    // build params are identity: a conflicting k or nBits refuses
-    val exK = intercept[RuntimeException] {
-      graft.tools.EtlCli.run(spark,
-        Seq("extend-knn-graph", s"$root/v1", s"$root/g", "7", "2"))
-    }
-    assert(exK.getMessage.contains("k=5"), exK.getMessage)
-    val exB = intercept[RuntimeException] {
-      graft.tools.EtlCli.run(spark,
-        Seq("extend-knn-graph", s"$root/v1", s"$root/g", "5", "2", "9"))
-    }
-    assert(exB.getMessage.contains("nBits"), exB.getMessage)
-    // ...and so is the exploration-ring formula version: a bootstrap
-    // defaults to v2 and records it; a conflicting explicit version
-    // refuses naming both (a committed graph replays bit-identically
-    // only under the formula that built it)
-    assert(graft.tools.EtlCli.readTable(spark, s"$root/g/identity")
-      .select(col("ring_version").cast("int"))
-      .as[Int].collect().toSeq == Seq(2),
-      "bootstrap must record the ring-formula version as identity")
-    val exR = intercept[RuntimeException] {
-      graft.tools.EtlCli.extendKnnGraph(spark, s"$root/v1", s"$root/g",
-        ringVersion = Some(1))
-    }
-    assert(exR.getMessage.contains("v2") && exR.getMessage.contains("v1"),
-      exR.getMessage)
-    // crash replay: a run that died after its nodes append (before the
-    // graph/identity commits) must be FINISHED at the same epoch, not
-    // skipped past — a fresh epoch would XOR the batch's own orphan
-    // copies back out of the identity and lose those ids forever
-    val s2 = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .filter(col("vec_id") < 10)
-      .withColumn("embedding", transform(col("embedding"), x => x * lit(1.5f)))
-      .select(col("vec_id"), col("embedding"))
-    graft.tools.EtlCli.writeTable(s2, s"$root/v2")
-    graft.tools.EtlCli.appendEpoch(s2, s"$root/g/nodes", 2) // simulated crash
-    graft.tools.EtlCli.run(spark,
-      Seq("extend-knn-graph", s"$root/v2", s"$root/g"))
-    assert(graft.tools.EtlCli.committedEpochs(spark, s"$root/g/graph")
-      == Seq(0L, 1L, 2L), "the half-committed epoch must be replayed, not skipped")
-    val mergedView = emb.filter(col("vec_id") >= 10).unionByName(s2)
-    assert(graft.streaming.CorpusStreams.knnGraphIdentity(spark, s"$root/g") ==
-      graft.operators.Similarity.corpusIdentity(mergedView, "vec_id", "embedding"),
-      "replaying the crashed epoch must fold the identity exactly once")
-    // the generic epoch fold REFUSES both latest-epoch-wins sub-logs —
-    // folding would keep superseded neighborhoods / stale node copies
-    // alive in every read; the marker's message names the blessed fold
-    val exC = intercept[RuntimeException] {
-      graft.tools.EtlCli.compactEpochs(spark, s"$root/g/graph")
-    }
-    assert(exC.getMessage.contains("compact-knn-graph"), exC.getMessage)
-    val exN = intercept[RuntimeException] {
-      graft.tools.EtlCli.compactEpochs(spark, s"$root/g/nodes")
-    }
-    assert(exN.getMessage.contains("vacuum-knn-graph"), exN.getMessage)
-  }
-
-  test("check-graph-quality: steady trend prints all-clear; a collapsed epoch alarms naming the rebuild") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("gq_cli")
-    val qp = s"$root/g/quality"
-    def row(e: Long, mc: Double) =
-      Seq((100L, 50L, mc, e)).toDF("n_edges", "n_nodes", "mean_cosine", "epoch")
-    graft.tools.EtlCli.appendEpoch(row(0, 0.80), qp, 0)
-    graft.tools.EtlCli.appendEpoch(row(1, 0.78), qp, 1)
-    graft.tools.EtlCli.run(spark, Seq("check-graph-quality", s"$root/g"))
-    // an epoch whose mean collapses below 0.8x the bootstrap alarms
-    graft.tools.EtlCli.appendEpoch(row(2, 0.40), qp, 2)
-    val ex = intercept[RuntimeException] {
-      graft.tools.EtlCli.run(spark, Seq("check-graph-quality", s"$root/g"))
-    }
-    assert(ex.getMessage.contains("Rebuild") &&
-      ex.getMessage.contains("2"), ex.getMessage)
-    // a tighter floor flags the mild sag too
-    val ex2 = intercept[RuntimeException] {
-      graft.tools.EtlCli.run(spark,
-        Seq("check-graph-quality", s"$root/g", "0.99"))
-    }
-    assert(ex2.getMessage.contains("1, 2"), ex2.getMessage)
-  }
-
   test("retrain-binary-ivf trains on the latest INGEST copy: a maintenance relabel cannot outrank a later re-ingest") {
     import spark.implicits._
     // Maintenance epochs number independently of ingest epochs (both
@@ -728,23 +626,6 @@ class EtlCliSpec extends SparkSpec {
       .select(col("embedding")).as[Seq[Double]].collect()
     assert(trained.toSeq == Seq(vecB),
       s"retrain corpus must hold the re-ingested vector, got $trained")
-  }
-
-  test("check-graph-quality refuses a non-positive bootstrap mean instead of trending against a degenerate anchor") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("gq_base")
-    val qp = s"$root/g/quality"
-    def row(e: Long, mc: Double) =
-      Seq((100L, 50L, mc, e)).toDF("n_edges", "n_nodes", "mean_cosine", "epoch")
-    // cosine lives in [-1, 1]: a NEGATIVE base would raise the ratio
-    // threshold above the base itself, alarming on epochs that IMPROVED
-    graft.tools.EtlCli.appendEpoch(row(0, -0.20), qp, 0)
-    graft.tools.EtlCli.appendEpoch(row(1, 0.50), qp, 1) // improved!
-    val ex = intercept[RuntimeException] {
-      graft.tools.EtlCli.run(spark, Seq("check-graph-quality", s"$root/g"))
-    }
-    assert(ex.getMessage.contains("non-positive") &&
-      ex.getMessage.contains("Rebuild"), ex.getMessage)
   }
 
   test("hard-negatives CLI: graph-mined negatives equal the operator; a re-embedded corpus refuses the stale graph") {
@@ -781,6 +662,54 @@ class EtlCliSpec extends SparkSpec {
     assert(ex.getMessage.contains("rebuild"), ex.getMessage)
   }
 
+  test("probe-graph-recall: sampled exact recall of a knn-graph table equals a brute-force recount; a stale graph reads lower; a re-embedded corpus refuses") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.operators.Similarity
+    val root = java.nio.file.Files.createTempDirectory("graph_recall")
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    EtlCli.writeTable(emb, s"$root/vecs")
+    EtlCli.run(spark, Seq("knn-graph", s"$root/vecs", s"$root/graph", "5", "2"))
+    EtlCli.run(spark, Seq("probe-graph-recall", s"$root/graph", s"$root/vecs", "8"))
+    def probe(graph: String) =
+      EtlCli.probeGraphRecall(spark, graph, s"$root/vecs", nQueries = 8)
+        .select(col("k"), col("n_queries"), col("n_hit"), col("n_denom"),
+          col("recall_micro"))
+        .as[(Int, Long, Long, Long, Double)].collect().head
+    val (k, nq, nHit, nDenom, recall) = probe(s"$root/graph")
+    // the recount: same hash-rank sample, exact top-k, graph edges
+    val sample = emb.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
+      .limit(8)
+    val exact = Similarity.bruteForceTopK(emb, sample, "vec_id", "embedding", 5)
+      .select(col("qid").cast("long"), col("cid").cast("long"))
+      .as[(Long, Long)].collect().toSeq
+    val edges = EtlCli.readTable(spark, s"$root/graph")
+      .select(col("vec_id").cast("long"), col("nid").cast("long"))
+      .as[(Long, Long)].collect().toSet
+    val wantDenom = exact.groupBy(_._1).values.map(_.size.min(5)).sum.toLong
+    assert((k, nq, nHit, nDenom) ==
+      (5, 8L, exact.count(edges.contains).toLong, wantDenom),
+      s"probe ($k, $nq, $nHit, $nDenom) diverges from the recount")
+    assert(recall == nHit.toDouble / nDenom && recall > 0, s"recall $recall")
+    // planted staleness: every neighbor id shifted to another node, the
+    // stamp untouched — only recall against exact truth can see it
+    val n = emb.count()
+    EtlCli.writeTable(EtlCli.readTable(spark, s"$root/graph")
+        .withColumn("nid", (col("nid") + lit(n / 2)) % lit(n)),
+      s"$root/stale")
+    val staleRecall = probe(s"$root/stale")._5
+    info(f"sampled exact recall@5: fresh $recall%.3f, shifted $staleRecall%.3f")
+    assert(staleRecall < recall, s"stale graph must read lower: $staleRecall")
+    // a re-embedded corpus refuses the graph before any recall is read
+    EtlCli.writeTable(emb.withColumn("embedding",
+      transform(col("embedding"), x => x * lit(1.01f))), s"$root/vecs2")
+    val ex = intercept[IllegalArgumentException] {
+      EtlCli.run(spark, Seq("probe-graph-recall", s"$root/graph", s"$root/vecs2"))
+    }
+    assert(ex.getMessage.contains("rebuild"), ex.getMessage)
+  }
+
   test("split-hot-cells refuses a versioned (non-epoch) index with the actual remedial, not a misleading error") {
     import org.apache.spark.sql.functions._
     val root = java.nio.file.Files.createTempDirectory("split_refuse")
@@ -807,7 +736,7 @@ class EtlCliSpec extends SparkSpec {
     val dispatched = "case Seq\\(\"([a-z-]+)\"".r.findAllMatchIn(src).map(_.group(1)).toSet
     val ex = intercept[RuntimeException] { EtlCli.run(spark, Seq("no-such-command")) }
     val named = ex.getMessage.stripPrefix("usage: ").takeWhile(_ != ' ').split('|').toSet
-    assert(dispatched.size >= 29 && dispatched.diff(named).isEmpty,
+    assert(dispatched.size >= 24 && dispatched.diff(named).isEmpty,
       s"usage omits: ${dispatched.diff(named).toSeq.sorted.mkString(", ")}")
   }
 }

@@ -736,249 +736,6 @@ class GrowthSpec extends SparkSpec {
       s"NN-descent round work grew superlinearly: $r1 -> $r4 records")
   }
 
-  test("(n) incremental knn-graph extension: per-batch shuffle stays ~flat as the committed corpus grows 4x with scaled buckets") {
-    // The knnGraphSink's O(batch) claim, measured: extending a committed
-    // graph with a FIXED-SIZE batch shuffles candidate-bounded records —
-    // batch x (bucket occupancy + k) — never corpus-bounded, PROVIDED the
-    // ring-bucket knob scales with the corpus (nnDescentNBits holds
-    // occupancy ~targetBucketSize). The corpus and its graph enter only
-    // as map-only broadcast-filtered scans; an extension that shuffled
-    // either would read ~4x here.
-    import graft.operators.Similarity
-    val baseEmb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-      .transform(graft.core.Materialize.pin)
-    def embAt(copies: Int): DataFrame =
-      (0 until copies).map(i => baseEmb.select(
-        (col("vec_id") + lit(i * Stride)).as("vec_id"), col("embedding")))
-        .reduce(_ unionAll _)
-        .transform(graft.core.Materialize.pin)
-    // the batch: same rows at every scale, fresh ids
-    val batch = baseEmb.select((col("vec_id") + lit(77 * Stride)).as("vec_id"),
-        col("embedding"))
-      .transform(graft.core.Materialize.pin)
-    def shuffledDuring(thunk: => Unit): Long = {
-      val acc = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          acc.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        thunk
-        var last = -1L; var same = 0
-        while (same < 5) {
-          Thread.sleep(100)
-          val cur = acc.get
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
-        acc.get
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
-    def recsAt(copies: Int): Long = {
-      val corpus = embAt(copies)
-      val bits = Similarity.nnDescentNBits(corpus.count())
-      // feed the SINK's exact read shape: raw __epoch-tagged unions, no
-      // pre-dedupe, no pre-folded view — the extension itself must keep
-      // every corpus-sized input behind a map-only broadcast filter
-      val taggedCorpus = corpus
-        .withColumn("__epoch", (col("vec_id") % 3).cast("long"))
-        .transform(graft.core.Materialize.pin)
-      val g = Similarity.nnDescentGraph(corpus, "vec_id", "embedding",
-          k = 5, rounds = 1, nBits = bits)
-        .withColumn("__epoch", lit(0L))
-        .transform(graft.core.Materialize.pin)
-      val recs = shuffledDuring {
-        Similarity.nnDescentExtend(taggedCorpus, g, batch, "vec_id",
-          "embedding", k = 5, nBits = bits).collect()
-        ()
-      }
-      info(s"${copies}x committed corpus (nBits=$bits): " +
-        s"extension shuffled=$recs records")
-      recs
-    }
-    val (r1, r4) = withConf("spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.files.maxPartitionBytes" -> "1") {
-      (recsAt(1), recsAt(4))
-    }
-    assert(r1 > 0, "the extension must shuffle candidate records")
-    assert(r4 <= (2.5 * r1).toLong + 1000,
-      s"per-batch extension shuffle grew with the corpus: $r1 -> $r4 records")
-  }
-
-  test("(p) incremental knn-graph extension: per-batch BYTES READ prune with the compacted layouts — sub-linear under 4x corpus, a fraction of the raw-scan bill") {
-    // The I/O-layout claim behind compact-knn-graph, measured in BYTES
-    // (GrowthSpec (n) measures shuffle records — the reads were O(corpus)
-    // map-only and invisible to it): after compaction a batch's commit
-    // reads the batch-occupied coarse-bucket partitions of nodes_opt, the
-    // mate ids' hash partitions of graph_opt, and the (tiny) bloom
-    // sidecar — never the whole committed byte log. Exact flatness is
-    // not the contract: the coarse safety-net granularity is nBits/2, so
-    // per-coarse-bucket occupancy grows ~sqrt(corpus) even with the
-    // scaled knob (2^(bits/2) buckets), and the fixed id-hash fan-out
-    // reads a constant FRACTION per looked-up id — both documented, both
-    // asserted sub-linear here, against the raw path's linear bill.
-    import graft.operators.Similarity
-    import graft.streaming.CorpusStreams
-    val baseEmb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-      .transform(graft.core.Materialize.pin)
-    // per-copy perturbation keeps the copies' VECTORS distinct — plain
-    // replication dictionary-encodes so well that the raw log's physical
-    // bytes barely grow, which would understate the raw-scan bill this
-    // axis compares against
-    def embAt(copies: Int): DataFrame =
-      (0 until copies).map(i => baseEmb.select(
-        (col("vec_id") + lit(i * Stride)).as("vec_id"),
-        transform(col("embedding"),
-          x => x + lit(i * 0.37f) * signum(x)).as("embedding")))
-        .reduce(_ unionAll _)
-        .transform(graft.core.Materialize.pin)
-    // 8 new ids sharing one direction (positive scaling shares every
-    // sign bucket): the batch occupies ONE coarse bucket, so the pruned
-    // mate scan reads one partition — the sharpest read of the claim
-    val batch = (1 to 8).map(i => baseEmb.filter(col("vec_id") === 0)
-        .select((col("vec_id") + lit(888 * Stride + i)).as("vec_id"),
-          transform(col("embedding"), x => x * lit(i.toFloat)).as("embedding")))
-      .reduce(_ unionAll _)
-      .transform(graft.core.Materialize.pin)
-    // bytes each committed-state scan SELECTS after partition pruning —
-    // the scan's own pruned file listing, summed over every state frame
-    // the commit builds. Deterministic (no page-cache or read-path
-    // noise), and it measures exactly the claim: which committed FILES a
-    // batch's commit touches. Non-state reads (identity row, opt meta,
-    // bloom partials) are bounded by construction and excluded.
-    def selectedBytes(df: DataFrame): Long =
-      df.queryExecution.sparkPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
-            .flatMap(_.files).map(_.getLen).sum
-      }.sum
-    val root = java.nio.file.Files.createTempDirectory("knn_bytes")
-    def commitBytes(copies: Int, compact: Boolean): Long = {
-      val corpus = embAt(copies)
-      val bits = Similarity.nnDescentNBits(corpus.count())
-      val gp = s"$root/g_${copies}_$compact"
-      CorpusStreams.knnGraphCommitBatch(corpus, 0L, gp, "vec_id",
-        "embedding", k = 5, rounds = 1, nBits = bits)
-      if (compact) graft.tools.EtlCli.run(spark, Seq("compact-knn-graph", gp))
-      val bytes = new java.util.concurrent.atomic.AtomicLong
-      CorpusStreams.knnGraphCommitBatch(batch, 1L, gp, "vec_id",
-        "embedding", k = 5, rounds = 1, nBits = bits,
-        readersWrap = base => Similarity.GraphStateReaders(
-          nodes = (bf, ihf, ff) => {
-            val df = base.nodes(bf, ihf, ff)
-            bytes.addAndGet(selectedBytes(df)); df
-          },
-          edges = ihf => {
-            val df = base.edges(ihf); bytes.addAndGet(selectedBytes(df)); df
-          }))
-      bytes.get
-    }
-    val p1 = commitBytes(1, compact = true)
-    val p4 = commitBytes(4, compact = true)
-    val r4 = commitBytes(4, compact = false)
-    info(f"per-batch bytes read: compacted 1x ${p1 / 1024}%d KiB, " +
-      f"compacted 4x ${p4 / 1024}%d KiB, raw 4x ${r4 / 1024}%d KiB " +
-      f"(pruned/raw at 4x = ${p4.toDouble / r4}%.2f)")
-    assert(p1 > 0, "the pruned commit must still read committed bytes")
-    // sub-linear: a 4x committed corpus must not cost 4x the batch reads
-    assert(p4 <= 3 * p1 + 512 * 1024,
-      s"pruned per-batch reads grew ~linearly with the corpus: $p1 -> $p4")
-    // and the fold must cut the absolute bill vs scanning the raw logs.
-    // The bound is LISTING bytes (files selected after partition
-    // pruning): the fine_bucket sort-order level costs ~12% extra here
-    // (one more column + per-partition task files at fixture scale) and
-    // pays in parquet ROW-GROUP skips, which file listing cannot see —
-    // at fixture scale every file is a single row group, so the fine
-    // filter's read-time savings only exist at production file sizes.
-    assert(p4 * 10 <= r4 * 7,
-      s"compaction failed to cut the per-batch read bill: pruned $p4 vs raw $r4")
-  }
-
-  test("(q) bucket-skew cliff: a piled corpus blows the extension's occupancy-linear candidate bound; the instrument names it before the cosine trend moves") {
-    // nnDescentExtend's broadcast mate set is bounded by the occupancy of
-    // the batch's buckets — nnDescentNBits ASSUMES ~targetBucketSize. A
-    // near-dup-heavy corpus piles into one sign bucket (scaled copies of
-    // one direction share every hyperplane side), so a batch landing
-    // there pays candidates ~ |pile|, not ~64 — measured here as the
-    // extension's shuffle bill against an equal-size uniform corpus. The
-    // quality log's max_bucket_members_fine reads the pile BEFORE any
-    // batch pays it, and check-graph-quality names the remedial.
-    import graft.operators.Similarity
-    import graft.streaming.CorpusStreams
-    val baseEmb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-      .transform(graft.core.Materialize.pin)
-    val v0 = baseEmb.filter(col("vec_id") === 0)
-    def scaledPile(n: Int, idBase: Long): DataFrame =
-      (1 to n).map(i => v0.select((lit(idBase + i)).as("vec_id"),
-        transform(col("embedding"), x => x * lit(i.toFloat)).as("embedding")))
-        .reduce(_ unionAll _)
-    val hot = baseEmb.filter(col("vec_id") < 100)
-      .unionAll(scaledPile(400, 10 * Stride))
-      .transform(graft.core.Materialize.pin) // 500 rows, 80% one bucket
-    val uni = baseEmb                        // 500 rows, fixture spread
-    val batch = scaledPile(4, 20 * Stride)
-      .transform(graft.core.Materialize.pin) // lands in the pile's bucket
-    def shuffledDuring(thunk: => Unit): Long = {
-      val acc = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          acc.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        thunk
-        var last = -1L; var same = 0
-        while (same < 5) {
-          Thread.sleep(100)
-          val cur = acc.get
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
-        acc.get
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
-    val root = java.nio.file.Files.createTempDirectory("knn_skew")
-    // a GENEROUS pinned knob, so the uniform baseline's buckets are tight
-    // — and the pile still defeats it: scaled copies of one direction
-    // share every hyperplane side at ANY nBits, which is exactly why the
-    // remedial is near-dup'ing the mass away (or a finer knob for merely
-    // CORRELATED — not identical-direction — pile-ups)
-    val bits = 12
-    def commitRecs(name: String, corpus: DataFrame): Long = {
-      val gp = s"$root/$name"
-      CorpusStreams.knnGraphCommitBatch(corpus, 0L, gp, "vec_id",
-        "embedding", k = 5, rounds = 1, nBits = bits)
-      shuffledDuring {
-        CorpusStreams.knnGraphCommitBatch(batch, 1L, gp, "vec_id",
-          "embedding", k = 5, rounds = 1, nBits = bits)
-      }
-    }
-    val (uniRecs, hotRecs) = (commitRecs("uni", uni), commitRecs("hot", hot))
-    info(s"extension shuffle records: uniform corpus $uniRecs, " +
-      s"80%-piled corpus $hotRecs (${hotRecs.toDouble / uniRecs}x)")
-    assert(hotRecs >= 3 * uniRecs,
-      s"the planted pile should blow the candidate bound: $uniRecs -> $hotRecs")
-    // the instrument read the pile — at bootstrap, before the batch paid
-    import spark.implicits._
-    val occ = graft.tools.EtlCli
-      .readEpochTable(spark, s"$root/hot/quality")
-      .agg(max(col("max_bucket_members_fine"))).as[Long].head()
-    assert(occ >= 300, s"occupancy instrument missed the planted pile: $occ")
-    // ...and the monitor names the remedial while the uniform graph passes
-    val ex = intercept[RuntimeException] {
-      graft.tools.EtlCli.run(spark,
-        Seq("check-graph-quality", s"$root/hot", "0.8", "128"))
-    }
-    assert(ex.getMessage.contains("FINER") ||
-      ex.getMessage.contains("finer"), ex.getMessage)
-    graft.tools.EtlCli.run(spark,
-      Seq("check-graph-quality", s"$root/uni", "0.8", "128"))
-  }
-
   test("(r) exploration-ring granularity: v2 tracks 2^nBits across the derived 9-15 range where v1's hex floor pins 256 buckets") {
     // The v1 formula reads hex chars of md5: 16^ceil(nBits/8) buckets, a
     // FLOOR that jumps only at multiples of 8 — so every derived nBits in
@@ -1049,103 +806,5 @@ class GrowthSpec extends SparkSpec {
       s"fixed bits should let the window bound grow: $m1 -> $m4fixed")
     assert(m4scaled <= (2.5 * m1).toLong + 10,
       s"scaled bits failed to hold the window bound: $m1 -> $m4scaled")
-  }
-
-  test("(t) vacuum-knn-graph: reclaimed bytes track the corpus while the surviving raw tail stays batch-sized — the raw log's growth is bounded by the compaction cadence, not the graph's lifetime") {
-    import graft.streaming.CorpusStreams
-    import graft.tools.EtlCli
-    val baseEmb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-      .transform(graft.core.Materialize.pin)
-    def embAt(copies: Int): DataFrame =
-      (0 until copies).map(i => baseEmb.select(
-        (col("vec_id") + lit(i * Stride)).as("vec_id"),
-        transform(col("embedding"),
-          x => x + lit(i * 0.37f) * signum(x)).as("embedding")))
-        .reduce(_ unionAll _)
-        .transform(graft.core.Materialize.pin)
-    val batch = baseEmb.filter(col("vec_id") < 8)
-      .select((col("vec_id") + lit(777 * Stride)).as("vec_id"),
-        col("embedding"))
-      .transform(graft.core.Materialize.pin)
-    def dirBytes(path: String): Long = {
-      val f = new java.io.File(path)
-      if (!f.exists) 0L
-      else {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(f.toPath).iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map(java.nio.file.Files.size).sum
-      }
-    }
-    val root = java.nio.file.Files.createTempDirectory("knn_vac_bytes")
-    def measure(copies: Int): (Long, Long) = {
-      val corpus = embAt(copies)
-      val bits = graft.operators.Similarity.nnDescentNBits(corpus.count())
-      val gp = s"$root/g$copies"
-      CorpusStreams.knnGraphCommitBatch(corpus, 0L, gp, "vec_id",
-        "embedding", k = 5, rounds = 1, nBits = bits)
-      EtlCli.run(spark, Seq("compact-knn-graph", gp)) // folds cover 0
-      CorpusStreams.knnGraphCommitBatch(batch, 1L, gp, "vec_id",
-        "embedding", k = 5, rounds = 1, nBits = bits) // the tail
-      val freed = CorpusStreams.vacuumKnnGraph(spark, gp)
-      val residual = dirBytes(s"$gp/nodes") + dirBytes(s"$gp/graph")
-      (freed, residual)
-    }
-    val (f1, r1) = measure(1)
-    val (f4, r4) = measure(4)
-    info(s"1x corpus: reclaimed $f1 B, residual tail $r1 B; " +
-      s"4x: reclaimed $f4 B, residual tail $r4 B")
-    assert(f1 > 0 && f4 > 0, "vacuum reclaimed nothing")
-    // the reclaimed bill tracks the corpus (the unbounded growth this
-    // closes); the residual is ONE tail epoch — batch-sized nodes plus
-    // the touched-node hoods (O(batch x bucket occupancy) by the
-    // extension's contract, measured per-batch by axes (n)/(p)) — and
-    // must stay a small FRACTION of the corpus-sized log the vacuum
-    // reclaimed
-    assert(f4 >= 2 * f1, s"reclaimed bytes did not track the corpus: $f1 -> $f4")
-    assert(r1 * 4 < f1 && r4 * 4 < f4,
-      s"the surviving tail is not a small fraction of the reclaimed log: " +
-        s"$r1/$f1, $r4/$f4")
-  }
-
-  test("(s) seen-ids sidecar width: corpus-derived sizing keeps the fast path alive at 10x the bootstrap estimate; the old fixed width saturates") {
-    // The knob behind graphSeenIdsBitsFor: the sidecar's whole value is
-    // skipping the superseded-copy lookup on append-mostly batches, and
-    // a saturated filter (fp -> 1) silently degrades every batch to the
-    // full lookup exactly where the corpus got big enough to care. Sized
-    // from the bootstrap batch at ~96 bits/id, a corpus 10x the estimate
-    // still probes at ~9.6 bits/id — fp a few percent, fast path alive.
-    import graft.streaming.CorpusStreams
-    import graft.operators.Sketches
-    val n = 20000L // bootstrap estimate, above the min-width clamp
-    val w = CorpusStreams.graphSeenIdsBitsFor(n)
-    assert(w % 62 == 0, s"width must pack 62-bit words, got $w")
-    assert(w >= n * CorpusStreams.GraphSeenIdsBitsPerId,
-      s"corpus-derived width $w under-sizes $n ids")
-    assert(CorpusStreams.graphSeenIdsBitsFor(1L) ==
-      CorpusStreams.GraphSeenIdsMinBits, "tiny corpora clamp to the floor")
-    assert(CorpusStreams.graphSeenIdsBitsFor(Long.MaxValue / 2) ==
-      CorpusStreams.GraphSeenIdsMaxBits, "huge corpora clamp to the cap")
-    val inserted = spark.range(10 * n)
-      .select(col("id").cast("string").as("v"))
-    val fresh = spark.range(10 * n, 10 * n + 20000)
-      .select(col("id").cast("string").as("v"))
-    def fpAt(width: Int): Double = {
-      val words = Sketches.bloomWords(
-        Sketches.bloomBuild(inserted, col("v"), width, 4), width)
-      fresh.select(Sketches.bloomHit(col("v"), words, width, 4).as("h"))
-        .agg(avg(col("h"))).head().getDouble(0)
-    }
-    val fpDerived = fpAt(w)
-    val fpFixed = fpAt(CorpusStreams.GraphSeenIdsMinBits)
-    info(f"10x the estimate: derived width $w fp=$fpDerived%.4f; " +
-      f"fixed ${CorpusStreams.GraphSeenIdsMinBits} fp=$fpFixed%.4f")
-    assert(fpDerived < 0.15,
-      f"derived width saturated at 10x the estimate: fp=$fpDerived%.3f")
-    assert(fpFixed > 0.3 && fpFixed > 10 * fpDerived,
-      f"the fixed width was expected to degrade an order of magnitude " +
-        f"past the derived one here (fixed fp=$fpFixed%.3f vs derived " +
-        f"$fpDerived%.4f) — if it no longer does, this axis needs a bigger load")
   }
 }

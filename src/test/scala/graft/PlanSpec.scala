@@ -494,65 +494,6 @@ class PlanSpec extends SparkSpec {
     assert(codeShuffles == 0, s"codes crossed a shuffle:\n$p")
   }
 
-  test("incremental knn-graph extension: every committed-state scan prunes the read-optimized partitions") {
-    import org.apache.spark.sql.functions._
-    import graft.operators.Similarity
-    // a committed + compacted graph, then one extension batch through the
-    // SINK's pruned readers — every nodes read must carry a sign-LSH
-    // `bucket` partition filter (the mate scan and the candidate vector
-    // fetch), every edge read a `src_bucket` filter (the latestHoods
-    // lookups, keyed on the looked-up nodes' current coarse buckets). At 100 TB these filters are the difference between
-    // listing the batch's bucket directories and scanning the corpus
-    // per micro-batch.
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val old = emb.filter(col("vec_id") >= 5)
-    val batch = emb.filter(col("vec_id") < 5)
-    val root = java.nio.file.Files.createTempDirectory("knn_prune")
-    old.write.parquet(s"$root/vecs")
-    val bits = Similarity.nnDescentNBits(old.count())
-    graft.tools.EtlCli.extendKnnGraph(spark, s"$root/vecs", s"$root/g",
-      Some(5), 2, Some(bits))
-    graft.tools.EtlCli.run(spark, Seq("compact-knn-graph", s"$root/g"))
-    // instrument the readers the sink hands nnDescentExtend: capture each
-    // state frame it actually builds and assert ITS executed plan (the
-    // operator pins intermediates, so the final frame's plan would not
-    // show the pruned scans)
-    val captured = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    val base = graft.streaming.CorpusStreams.graphStateReaders(
-      spark, s"$root/g", before = 1L)
-    val probing = Similarity.GraphStateReaders(
-      nodes = (bf, ihf, ff) => {
-        val df = base.nodes(bf, ihf, ff)
-        captured += (("nodes", df.queryExecution.executedPlan.toString)); df
-      },
-      edges = ihf => {
-        val df = base.edges(ihf)
-        captured += (("edges", df.queryExecution.executedPlan.toString)); df
-      })
-    Similarity.nnDescentExtend(probing, batch, "vec_id", "embedding",
-      k = 5, nBits = bits).collect()
-    val nodeScans = captured.filter(_._1 == "nodes").map(_._2)
-    val edgeScans = captured.filter(_._1 == "edges").map(_._2)
-    assert(nodeScans.size >= 2 && edgeScans.size >= 2,
-      s"expected mate+fetch node reads and 2 hood lookups: " +
-        s"${captured.map(_._1)}")
-    val bucketF = "PartitionFilters: \\[[^\\]]*(?<!id_)bucket#\\d+".r
-    val idBucketF = "PartitionFilters: \\[[^\\]]*src_bucket#\\d+".r
-    nodeScans.foreach(p => assert(bucketF.findFirstIn(p).isDefined,
-      s"a nodes_opt scan carries no bucket partition filter:\n$p"))
-    edgeScans.foreach(p => assert(idBucketF.findFirstIn(p).isDefined,
-      s"a graph_opt scan carries no src_bucket partition filter:\n$p"))
-    // the layout's SECOND level: the fine-first mate scan pushes its
-    // fine_bucket filter into the parquet scan (row-group skipping
-    // within the sorted partition files) — both levels asserted inside
-    // the plan the sink actually executes
-    assert(nodeScans.exists(p =>
-      "PushedFilters: \\[[^\\]]*fine_bucket".r.findFirstIn(p).isDefined),
-      s"no nodes_opt scan pushes the fine_bucket data filter:\n" +
-        nodeScans.mkString("\n----\n"))
-  }
-
   test("hybrid RRF: retrievers keep their bounded shapes inside the fused plan") {
     val p = plan("q_hybrid_rrf")
     // lexical side: global top-20 stays TakeOrderedAndProject (never a

@@ -889,152 +889,6 @@ class SimilaritySpec extends SparkSpec {
     assert(bad.getMessage.contains("version"), bad.getMessage)
   }
 
-  test("nnDescentExtend: incremental batches reach a measured quality floor of the batch build; touched nodes never lose quality") {
-    val dir = "/root/testdata/sf0.001"
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val n = emb.count()
-    val bits = Similarity.nnDescentNBits(n)
-    val parts = (0 to 2).map(i => emb.filter(col("vec_id") % 3 === i))
-    def quality(g: org.apache.spark.sql.DataFrame): Map[Long, Double] = g
-      .groupBy(col("vec_id").cast("long").as("id"))
-      .agg(sum(col("cosine")).as("q"))
-      .as[(Long, Double)].collect().toMap
-    // bootstrap = batch build over the first slice; then extend per batch
-    var nodes = parts(0)
-    var g = Similarity.nnDescentGraph(parts(0), "vec_id", "embedding",
-      k = 5, rounds = 2, nBits = bits)
-    for (b <- parts.drop(1)) {
-      val before = quality(g)
-      val updated = graft.core.Materialize.pin(Similarity.nnDescentExtend(
-        nodes, g, b, "vec_id", "embedding", k = 5, nBits = bits))
-      // full replacement neighborhoods: latest-wins merge
-      g = graft.core.Materialize.pin(
-        g.join(updated.select(col("vec_id")).distinct(), Seq("vec_id"),
-            "left_anti")
-          .unionByName(updated.drop("nid_bucket", "src_bucket")))
-      nodes = nodes.unionByName(b)
-      // touched old nodes re-converge over (their edges ∪ reverse pairs):
-      // per-node quality is monotone by construction
-      val after = quality(g)
-      before.keys.foreach { id =>
-        assert(after.getOrElse(id, -99.0) >= before(id) - 1e-9,
-          s"node $id lost quality during an incremental extension")
-      }
-    }
-    // totality + shape of the final incremental graph
-    assert(g.select(col("vec_id")).distinct().count() == n,
-      "every node must carry neighbors after the last extension")
-    assert(g.groupBy("vec_id").count().agg(max(col("count")))
-      .as[Long].head() <= 5L, "no node may exceed k neighbors")
-    // acceptance: QUALITY RATIO vs the from-scratch batch build on the
-    // same final corpus (bit-equality is impossible — insertion order
-    // matters; same metric the batch build's exploration rings were
-    // justified with)
-    val incQ = g.agg(sum(col("cosine"))).as[Double].head()
-    val batchQ = Similarity.nnDescentGraph(emb, "vec_id", "embedding",
-        k = 5, rounds = 2, nBits = bits)
-      .agg(sum(col("cosine"))).as[Double].head()
-    info(f"incremental/batch quality ratio: ${incQ / batchQ}%.3f")
-    assert(incQ >= 0.85 * batchQ,
-      s"incremental build fell below the 0.85 quality floor: ${incQ / batchQ}")
-  }
-
-  test("nnDescentExtend: a re-ingested neighbor's FRESH score supersedes the stored edge — scores can fall, not just ratchet") {
-    // The staleness mode max(cosine) would hide: node X holds a committed
-    // edge to Y at a high stored cosine; Y re-ingests with a MOVED vector
-    // less aligned to X. The touched-node merge must keep the freshly
-    // rescored (lower) cosine — under max(cosine) the stale high score
-    // survives forever, inflating the quality trend the rebuild monitor
-    // watches (it alarms only on a FALLING mean).
-    val oldNodes = Seq(
-      (10L, Seq(1.0, 1.0)),   // X
-      (11L, Seq(1.0, 0.9)),   // Y (old vector)
-      (12L, Seq(1.0, 0.2))    // Z: same vector as Y's re-ingest, so Y' and
-    ).toDF("vec_id", "embedding") //  Z share every LSH bucket by construction
-    // committed edges: X<->Y carry an (artificially high) stored cosine;
-    // Z->X provides the transitivity hop that makes X a candidate of Y'
-    // regardless of which side of the hyperplanes the vectors land on
-    val oldGraph = Seq(
-      (10L, 11L, 0.999, 1), (11L, 10L, 0.999, 1), (12L, 10L, 0.9, 1)
-    ).toDF("vec_id", "nid", "cosine", "rank")
-    val batch = Seq((11L, Seq(1.0, 0.2))).toDF("vec_id", "embedding") // Y'
-    val out = Similarity.nnDescentExtend(oldNodes, oldGraph, batch,
-        "vec_id", "embedding", k = 1, nBits = 2)
-      .select(col("vec_id").cast("long"), col("nid").cast("long"),
-        col("cosine"))
-      .as[(Long, Long, Double)].collect()
-    val xEdge = out.filter(r => r._1 == 10L && r._2 == 11L)
-    assert(xEdge.nonEmpty, s"X must be touched and keep its edge to Y: " +
-      s"${out.toSeq}")
-    // cos((1,1), (1,0.2)) = 1.2 / (sqrt(2) * sqrt(1.04)) ~ 0.832
-    assert(xEdge.head._3 < 0.9,
-      s"stored stale cosine survived the re-ingest: ${xEdge.head._3}")
-    assert(xEdge.head._3 > 0.8, s"unexpected fresh score: ${xEdge.head._3}")
-  }
-
-  test("nnDescentExtend quality CURVE: ratio vs batch fraction (10%/50%) and under 20 accumulated small epochs") {
-    // The 0.85 floor was asserted at one point (thirds of the corpus) —
-    // this measures the curve the monitor's rebuild threshold rests on:
-    // how the incremental/batch quality ratio behaves as ONE batch grows
-    // to 10% / 50% of the committed corpus, and as MANY small epochs
-    // accumulate (20 sequential 4%-batches after a 20% bootstrap — the
-    // daily-ingest year). Guidance recorded in knnGraphSink's scaladoc.
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-      .transform(graft.core.Materialize.pin)
-    val n = emb.count()
-    val bits = Similarity.nnDescentNBits(n)
-    def q(g: org.apache.spark.sql.DataFrame): Double =
-      g.agg(sum(col("cosine"))).as[Double].head()
-    val batchQ = q(Similarity.nnDescentGraph(emb, "vec_id", "embedding",
-      k = 5, rounds = 2, nBits = bits))
-    // localCheckpoint CARRIES plan statistics, and the size-only join
-    // estimator multiplies them — with `g` reused in several join
-    // branches per extension the carried estimate exponentiates across
-    // 20 iterations until BigInteger overflows (and computing those
-    // numbers dominates wall time). The production sink never hits this
-    // (committed state re-reads from DISK each batch, stats reset to
-    // file sizes); this in-memory chain resets them explicitly.
-    def resetStats(df: org.apache.spark.sql.DataFrame) =
-      df.sparkSession.createDataFrame(df.rdd, df.schema)
-    def incremental(parts: Seq[org.apache.spark.sql.DataFrame]): Double = {
-      var nodes = parts.head
-      var g = resetStats(graft.core.Materialize.pin(Similarity.nnDescentGraph(
-        parts.head, "vec_id", "embedding", k = 5, rounds = 2, nBits = bits)))
-      parts.tail.foreach { b =>
-        val updated = graft.core.Materialize.pin(Similarity.nnDescentExtend(
-          nodes, g, b, "vec_id", "embedding", k = 5, nBits = bits))
-        g = resetStats(graft.core.Materialize.pin(
-          g.join(updated.select(col("vec_id")).distinct(), Seq("vec_id"),
-              "left_anti")
-            .unionByName(updated.drop("nid_bucket", "src_bucket"))))
-        nodes = resetStats(nodes.unionByName(b))
-      }
-      q(g) / batchQ
-    }
-    def below(t: Long) = emb.filter(col("vec_id") < t)
-    def from(t: Long) = emb.filter(col("vec_id") >= t)
-    val r10 = incremental(Seq(from(n / 10), below(n / 10)))
-    val r50 = incremental(Seq(from(n / 2), below(n / 2)))
-    val smallBatches = (0 until 20).map { i =>
-      emb.filter(col("vec_id") >= n / 5 + i * (4 * n / 100) &&
-        col("vec_id") < n / 5 + (i + 1) * (4 * n / 100))
-    }
-    val r20 = incremental(from(n / 5 + 20 * (4 * n / 100)) // the remainder tail
-      .unionByName(below(n / 5)) +: smallBatches)
-    info(f"incremental/batch quality ratio: one 10%% batch $r10%.3f, " +
-      f"one 50%% batch $r50%.3f, 20 accumulated 4%% epochs $r20%.3f")
-    // the committed monitor floor must hold across the whole curve — a
-    // regression in any regime (big batches degrade via candidate
-    // locality, many epochs via accumulated order-dependence) fails here
-    // before it fails in production
-    Seq("10%" -> r10, "50%" -> r50, "20 epochs" -> r20).foreach {
-      case (label, r) =>
-        assert(r >= 0.85, f"$label extension fell below the floor: $r%.3f")
-    }
-  }
-
   test("hybrid RRF over the production ANN arm: swept probe serves the dense side; fused recall vs exact-dense fusion measured") {
     import org.apache.spark.sql.expressions.Window
     val dir = "/root/testdata/sf0.001"

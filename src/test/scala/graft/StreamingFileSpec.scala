@@ -1286,696 +1286,6 @@ class StreamingFileSpec extends SparkSpec {
     assert(ex2.getMessage.contains("re-sweep"), ex2.getMessage)
   }
 
-  test("knnGraphSink: incremental epochs reach the quality floor of the batch build; identity tracks the corpus; replay adds nothing") {
-    import graft.streaming.CorpusStreams
-    import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val n = emb.count()
-    val bits = graft.operators.Similarity.nnDescentNBits(n)
-    val root = java.nio.file.Files.createTempDirectory("knn_sink")
-    val in = root.resolve("in"); java.nio.file.Files.createDirectory(in)
-    val graphPath = root.resolve("graph").toString
-    def stage(name: String, rows: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = root.resolve(name + "_tmp")
-      rows.coalesce(1).write.parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath, in.resolve(name + ".parquet"))
-    }
-    stage("b0", emb.filter(col("vec_id") % 3 === 0))
-    stage("b1", emb.filter(col("vec_id") % 3 === 1))
-    stage("b2", emb.filter(col("vec_id") % 3 === 2))
-    def runStream(): Unit =
-      CorpusStreams.knnGraphSink(
-        spark.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
-          .parquet(in.toString),
-        "vec_id", "embedding", graphPath, root.resolve("chk").toString,
-        k = 5, rounds = 2, nBits = bits).awaitTermination(180000)
-    runStream()
-    assert(graft.tools.EtlCli.committedEpochs(spark, s"$graphPath/nodes").size == 3)
-    assert(graft.tools.EtlCli.committedEpochs(spark, s"$graphPath/graph").size == 3)
-    // read view: every node covered, neighborhoods bounded at k
-    val view = CorpusStreams.readKnnGraph(spark, graphPath, "vec_id")
-    assert(view.select(col("vec_id")).distinct().count() == n,
-      "the live view must cover every streamed node")
-    assert(view.groupBy("vec_id").count().agg(max(col("count")))
-      .as[Long].head() <= 5L, "no node may exceed k neighbors")
-    // acceptance: measured QUALITY RATIO vs the from-scratch batch build
-    // on the same final corpus (the sink's contract — NOT bit-equality,
-    // insertion order matters in NN-descent)
-    def q(g: org.apache.spark.sql.DataFrame): Double =
-      g.agg(sum(col("cosine"))).as[Double].head()
-    val ratio = q(view) / q(graft.operators.Similarity.nnDescentGraph(
-      emb, "vec_id", "embedding", k = 5, rounds = 2, nBits = bits))
-    info(f"streamed/batch quality ratio: $ratio%.3f")
-    assert(ratio >= 0.85, s"streamed graph fell below the quality floor: $ratio")
-    // identity: the O(batch) XOR fold equals the from-scratch corpus
-    // identity — and a consumer holding a re-embedded corpus refuses
-    assert(CorpusStreams.knnGraphIdentity(spark, graphPath) ==
-      graft.operators.Similarity.corpusIdentity(emb, "vec_id", "embedding"),
-      "incrementally-maintained identity diverges from the corpus fold")
-    CorpusStreams.requireKnnGraphCurrent(spark, graphPath, emb,
-      "vec_id", "embedding")
-    val stale = intercept[IllegalArgumentException] {
-      CorpusStreams.requireKnnGraphCurrent(spark, graphPath,
-        emb.withColumn("embedding",
-          transform(col("embedding"), x => x * lit(1.01f))),
-        "vec_id", "embedding")
-    }
-    assert(stale.getMessage.contains("re-embed"), stale.getMessage)
-    // quality log: one bounded trend row per epoch
-    val qlog = graft.tools.EtlCli.readEpochTable(spark, s"$graphPath/quality")
-    assert(qlog.count() == 3 &&
-      qlog.agg(min(col("mean_cosine"))).as[Double].head() > 0.0,
-      "each epoch must log its quality trend row")
-    // replay with the same checkpoint and no new files: zero new commits
-    def walk(f: java.io.File): Seq[String] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f.getPath)
-    val before = walk(new java.io.File(graphPath)).sorted
-    runStream()
-    assert(walk(new java.io.File(graphPath)).sorted == before,
-      "a replay with nothing new must commit nothing")
-    // RE-INGEST: stream an updated copy of some existing vectors — the
-    // identity must track the superseded copies (XOR removes them), and
-    // the view must serve the re-ingested nodes' fresh neighborhoods
-    val reIng = emb.filter(col("vec_id") < 5).withColumn("embedding",
-      transform(col("embedding"), x => x * lit(1.01f)))
-    stage("b3", reIng)
-    runStream()
-    val merged = emb.filter(col("vec_id") >= 5).unionByName(reIng)
-    assert(CorpusStreams.knnGraphIdentity(spark, graphPath) ==
-      graft.operators.Similarity.corpusIdentity(merged, "vec_id", "embedding"),
-      "re-ingest must move the identity to the post-update corpus view")
-    CorpusStreams.requireKnnGraphCurrent(spark, graphPath, merged,
-      "vec_id", "embedding")
-    // EMPTY micro-batch: must commit a harmless epoch — identity
-    // unchanged (XOR with the empty fold is 0), no neighborhoods, a
-    // null-mean quality row instead of an ANSI 0/0 crash (the
-    // empty-frame class the drift guards closed in r12)
-    val idBefore = CorpusStreams.knnGraphIdentity(spark, graphPath)
-    val viewBefore = CorpusStreams.readKnnGraph(spark, graphPath, "vec_id").count()
-    stage("b4", emb.limit(0))
-    runStream()
-    assert(CorpusStreams.knnGraphIdentity(spark, graphPath) == idBefore,
-      "an empty batch must not move the corpus identity")
-    assert(CorpusStreams.readKnnGraph(spark, graphPath, "vec_id").count()
-      == viewBefore, "an empty batch must not change the view")
-    // ...and the monitor skips the null-mean epoch instead of crashing
-    // or trending it as zero quality
-    graft.tools.EtlCli.run(spark, Seq("check-graph-quality", graphPath))
-    // read-optimize: the stamped flat layout equals the live view and
-    // carries the identity, so batch consumers skip the epoch window
-    // AND refuse staleness through the ordinary requireStamp path
-    CorpusStreams.knnGraphReadOptimize(spark, graphPath,
-      root.resolve("opt").toString)
-    val opt = graft.tools.EtlCli.readTable(spark, root.resolve("opt").toString)
-    def gRows(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("vec_id").cast("long"), col("nid").cast("long"),
-        col("rank"))
-      .as[(Long, Long, Int)].collect().toSet
-    assert(gRows(opt) == gRows(
-      CorpusStreams.readKnnGraph(spark, graphPath, "vec_id")),
-      "read-optimized graph diverges from the live view")
-    graft.tools.EtlCli.requireStamp(opt, "corpus_id",
-      CorpusStreams.knnGraphIdentity(spark, graphPath),
-      "optimized graph covers corpus", "the live graph", "recompact")
-    // quality monitor: this healthy run reads quiet
-    graft.tools.EtlCli.run(spark, Seq("check-graph-quality", graphPath))
-  }
-
-  test("knnGraphCompact: pruned extension equals raw; old-epoch replay falls back; mixed-generation folds tolerated; generic fold still refused") {
-    import graft.streaming.CorpusStreams
-    import graft.tools.EtlCli
-    import spark.implicits._
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val bits = graft.operators.Similarity.nnDescentNBits(emb.count())
-    val root = java.nio.file.Files.createTempDirectory("knn_compact")
-    def vecs(name: String, df: org.apache.spark.sql.DataFrame): String = {
-      val p = s"$root/$name"; df.write.parquet(p); p
-    }
-    val parts = (0 to 2).map(i =>
-      vecs(s"p$i", emb.filter(col("vec_id") % 3 === i)))
-    // re-ingest slice: positive scaling keeps every sign-LSH projection,
-    // so stored nid_bucket hints stay valid and pruned must equal raw
-    // BIT-FOR-BIT (a moved-bucket re-ingest is the documented staleness
-    // class, monitored — not this test's claim)
-    val reIng = vecs("p3", emb.filter(col("vec_id") < 5)
-      .withColumn("embedding", transform(col("embedding"), x => x * lit(1.01f))))
-    val (gA, gB) = (s"$root/gA", s"$root/gB")
-    def extend(gp: String, vecsPath: String, bootstrap: Boolean): Unit =
-      if (bootstrap)
-        EtlCli.extendKnnGraph(spark, vecsPath, gp, Some(5), 2, Some(bits))
-      else EtlCli.extendKnnGraph(spark, vecsPath, gp)
-    Seq(gA, gB).foreach { gp =>
-      extend(gp, parts(0), bootstrap = true)
-      extend(gp, parts(1), bootstrap = false)
-      extend(gp, parts(2), bootstrap = false)
-    }
-    // A compacts to the partitioned read layouts; B stays raw. The
-    // call's job budget is counted by a SparkListener, with the listener
-    // bus drained through ListenerBridge on both sides of the call.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      jobs.set(0)
-      CorpusStreams.knnGraphCompact(spark, gA)
-      org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    info(s"jobs: knnGraphCompact=${jobs.get()}")
-    // Measured on this fixture: 24 jobs, one schema inference per
-    // tagged read of nodes/ and graph/ whatever their epoch count.
-    assert(jobs.get() <= 24, s"knnGraphCompact jobs: ${jobs.get()}")
-    def edgeRows(gp: String, epoch: Long) = EtlCli
-      .readTable(spark, s"$gp/graph/epoch=$epoch")
-      .select(col("vec_id").cast("long"), col("nid").cast("long"),
-        col("cosine"), col("rank"), col("nid_bucket").cast("long"))
-      .as[(Long, Long, Double, Int, Long)].collect().toSet
-    val a1Before = edgeRows(gA, 1)
-    // identical batch through the PRUNED path (A) and the raw path (B):
-    // with valid bucket hints the extension is the same pure function of
-    // the committed state, so epoch content must match exactly
-    extend(gA, reIng, bootstrap = false)
-    extend(gB, reIng, bootstrap = false)
-    assert(edgeRows(gA, 3) == edgeRows(gB, 3),
-      "pruned extension diverged from the raw-scan extension")
-    assert(CorpusStreams.knnGraphIdentity(spark, gA) ==
-      CorpusStreams.knnGraphIdentity(spark, gB),
-      "pruned superseded-copy lookup broke the identity fold")
-    def viewRows(gp: String) = CorpusStreams.readKnnGraph(spark, gp, "vec_id")
-      .select(col("vec_id").cast("long"), col("nid").cast("long"), col("rank"))
-      .as[(Long, Long, Int)].collect().toSet
-    assert(viewRows(gA) == viewRows(gB), "live views diverged")
-    // REPLAY of an epoch the fold already covers: readers must fall back
-    // to the raw log (the fold holds LATER state than the replay may
-    // see) and recommit byte-identical content
-    CorpusStreams.knnGraphCommitBatch(
-      spark.read.parquet(parts(1)), 1L, gA, "vec_id", "embedding",
-      k = 5, rounds = 2, nBits = bits)
-    assert(edgeRows(gA, 1) == a1Before,
-      "replaying a fold-covered epoch changed its content")
-    // CRASH INTERPLAY: a compactor that died between its two table
-    // writes leaves MIXED-GENERATION folds (here: nodes_opt from the
-    // newer compaction, graph_opt still from the older one). Each table
-    // is self-describing — its covered_epoch committed atomically WITH
-    // its data — so the readers gate per table: the older fold's gap is
-    // re-read through the raw tail (duplicates the latest-wins dedupes
-    // resolve), never a miss and never future state.
-    val gen1Edges = s"$root/gen1_edges"
-    EtlCli.readTable(spark, s"$gA/graph_opt").write.parquet(gen1Edges)
-    val p4 = vecs("p4", emb.filter(col("vec_id") % 3 === 0)
-      .withColumn("vec_id", col("vec_id") + lit(1000000)))
-    extend(gA, p4, bootstrap = false)
-    extend(gB, p4, bootstrap = false)
-    EtlCli.run(spark, Seq("compact-knn-graph", gA)) // covers through 4
-    EtlCli.writeTable(spark.read.parquet(gen1Edges), s"$gA/graph_opt",
-      partitionBy = Seq("src_bucket")) // the crash: edges fold one gen behind
-    val p5 = vecs("p5", emb.filter(col("vec_id") % 3 === 1)
-      .withColumn("vec_id", col("vec_id") + lit(2000000)))
-    extend(gA, p5, bootstrap = false)
-    extend(gB, p5, bootstrap = false)
-    assert(edgeRows(gA, 5) == edgeRows(gB, 5),
-      "mixed-generation folds (crash between the two table writes) corrupted the extension")
-    assert(CorpusStreams.knnGraphIdentity(spark, gA) ==
-      CorpusStreams.knnGraphIdentity(spark, gB),
-      "mixed-generation folds corrupted the identity fold")
-    // schema pin: each committed artifact has the one schema its writer
-    // produces, so a writer that drops a column fails here rather than
-    // in a later reader
-    def nulls(t: org.apache.spark.sql.DataFrame, cs: String*): Long = {
-      assert(cs.forall(t.columns.contains), t.columns.mkString(", "))
-      t.filter(cs.map(c => col(c).isNull).reduce(_ || _)).count()
-    }
-    Seq(gA, gB).foreach { gp =>
-      EtlCli.committedEpochs(spark, s"$gp/graph").foreach { e =>
-        assert(nulls(EtlCli.readTable(spark, s"$gp/graph/epoch=$e"),
-          "nid_bucket", "src_bucket") == 0, s"$gp/graph epoch $e")
-      }
-      assert(EtlCli.readEpochTable(spark, s"$gp/seen_ids").columns
-        .contains("covers_through"), gp)
-      assert(nulls(EtlCli.readTable(spark, s"$gp/identity"), "ring_version") == 0, gp)
-    }
-    assert(nulls(EtlCli.readTable(spark, s"$gA/graph_opt"),
-      "nid_bucket", "src_bucket") == 0, "graph_opt")
-    assert(nulls(EtlCli.readTable(spark, s"$gA/nodes_opt"), "fine_bucket") == 0,
-      "nodes_opt")
-    // the skew instrument: the per-batch FINE axis rides the quality log
-    // (what the fine-first extension pays), the full-corpus COARSE axis
-    // rides the compact-cadence occupancy log
-    val qcols = EtlCli.readEpochTable(spark, s"$gA/quality").columns.toSet
-    assert(qcols.contains("max_bucket_members_fine"), qcols.toString)
-    assert(EtlCli.readEpochTable(spark, s"$gA/quality")
-      .agg(max(col("max_bucket_members_fine"))).as[Long].head() >= 1L)
-    val ocols = EtlCli.readEpochTable(spark, s"$gA/occupancy").columns.toSet
-    assert(ocols.contains("max_bucket_members_fine") &&
-      ocols.contains("max_bucket_members_coarse"), ocols.toString)
-    assert(EtlCli.readEpochTable(spark, s"$gA/occupancy")
-      .agg(max(col("max_bucket_members_coarse"))).as[Long].head() >= 1L)
-    // the GENERIC epoch fold stays refused on both raw logs — the
-    // blessed folds are compact-knn-graph (sink layouts) and
-    // read-optimize-knn-graph (consumer artifact)
-    Seq(s"$gA/nodes", s"$gA/graph").foreach { p =>
-      val ex = intercept[RuntimeException] { EtlCli.compactEpochs(spark, p) }
-      assert(ex.getMessage.contains("compaction-unsafe"), ex.getMessage)
-    }
-  }
-
-  test("seen-ids crash gap heals: a lost sidecar partial (crash between identity write and bloom append) is rebuilt from the node log, never a false negative") {
-    import graft.streaming.CorpusStreams
-    import graft.tools.EtlCli
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val bits = graft.operators.Similarity.nnDescentNBits(emb.count())
-    val root = java.nio.file.Files.createTempDirectory("knn_seen_gap")
-    def vecs(name: String, df: org.apache.spark.sql.DataFrame): String = {
-      val p = s"$root/$name"; df.write.parquet(p); p
-    }
-    val p0 = vecs("p0", emb.filter(col("vec_id") % 2 === 0))
-    val p1 = vecs("p1", emb.filter(col("vec_id") % 2 === 1))
-    // re-ingest of epoch-1 ids with changed vectors: their old copies
-    // must be XOR-removed from the identity — exactly what a bloom
-    // false negative would silently skip
-    val reIng = vecs("p2", emb.filter(col("vec_id") % 2 === 1)
-      .filter(col("vec_id") < 40)
-      .withColumn("embedding", transform(col("embedding"), x => x * lit(1.01f))))
-    val (gA, gB) = (s"$root/gA", s"$root/gB")
-    Seq(gA, gB).foreach { gp =>
-      EtlCli.extendKnnGraph(spark, p0, gp, Some(5), 2, Some(bits))
-      EtlCli.extendKnnGraph(spark, p1, gp)
-    }
-    // the crash: gA's epoch-1 sidecar append never landed (it runs after
-    // the identity write, outside the last_epoch fencepost)
-    def rmr(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-    }
-    rmr(java.nio.file.Paths.get(s"$gA/seen_ids/epoch=1"))
-    assert(!EtlCli.committedEpochs(spark, s"$gA/seen_ids").contains(1L))
-    EtlCli.extendKnnGraph(spark, reIng, gA)
-    EtlCli.extendKnnGraph(spark, reIng, gB)
-    assert(CorpusStreams.knnGraphIdentity(spark, gA) ==
-      CorpusStreams.knnGraphIdentity(spark, gB),
-      "the seen-ids gap became a bloom false negative: the superseded " +
-        "copies were never XOR-removed and corpus_id drifted")
-    // the heal rewrote the missing partial from the node log
-    assert(EtlCli.committedEpochs(spark, s"$gA/seen_ids").contains(1L),
-      "the gap epoch's partial was not healed back into the sidecar")
-    // and a compaction folds the sidecar: the fold entry carries
-    // covers_through and subsequent state reads stay on the fast path
-    EtlCli.run(spark, Seq("compact-knn-graph", gA))
-    val folded = EtlCli.readTable(spark, s"$gA/seen_ids/epoch=2")
-    assert(folded.columns.contains("covers_through") &&
-      folded.filter(col("covers_through") === 2L).count() > 0,
-      "compaction did not fold the seen-ids sidecar")
-    val prior = EtlCli.committedEpochs(spark, s"$gA/nodes").filter(_ < 3L)
-    val (w, words) = CorpusStreams.seenIdsState(spark, gA, "vec_id",
-      prior, 3L, bootstrap = false, 0L)
-    assert(words.isDefined,
-      s"post-compaction seen-ids state degraded to the full lookup (width $w)")
-  }
-
-  test("batch re-ingest that MOVES coarse buckets: pruned extension still equals the raw twin (the old-bucket hood is covered by the superseded-copy lookup)") {
-    import graft.streaming.CorpusStreams
-    import graft.tools.EtlCli
-    import spark.implicits._
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    // a pinned, finer-than-derived knob: coarse = nBits/2 planes must be
-    // numerous enough that a mild drift crosses a boundary (the derived
-    // knob at ~600 ids gives ~2 coarse planes - moves would be rare)
-    val bits = 10
-    val root = java.nio.file.Files.createTempDirectory("knn_moved")
-    def vecs(name: String, df: org.apache.spark.sql.DataFrame): String = {
-      val p = s"$root/$name"; df.write.parquet(p); p
-    }
-    val parts = (0 to 2).map(i =>
-      vecs(s"p$i", emb.filter(col("vec_id") % 3 === i)))
-    // MILD moves: each re-ingest drifts toward one shared far direction —
-    // enough to cross coarse-bucket boundaries (so the committed hood
-    // sits in a fold partition OUTSIDE the batch's own buckets — the
-    // exact gap extraHoodBuckets covers) while staying close to its old
-    // neighborhood (so the old hood's hop candidates remain top-k
-    // RELEVANT and a dropped candidate changes the output; a wild move
-    // like negation makes the old neighbors so distant the prune is
-    // invisible in the final top-k)
-    val farVec = emb.filter(col("vec_id") === 100)
-      .select(col("embedding")).head().getSeq[Float](0)
-    val farLit = array(farVec.map(f => lit(f)): _*)
-    val reIngDf = emb.filter(col("vec_id") < 8)
-      .withColumn("embedding", zip_with(col("embedding"), farLit,
-        (a, b) => a * lit(0.8f) + b * lit(0.6f)))
-    val reIng = vecs("p3", reIngDf)
-    // fixture precondition: the drift actually moves coarse buckets
-    val coarseBits = graft.operators.Similarity.nnDescentCoarseBits(bits)
-    val movedN = graft.operators.Similarity
-      .signLshBuckets(emb.filter(col("vec_id") < 8), "vec_id", "embedding", coarseBits)
-      .withColumnRenamed("bucket", "old_b")
-      .join(graft.operators.Similarity
-        .signLshBuckets(reIngDf, "vec_id", "embedding", coarseBits)
-        .withColumnRenamed("bucket", "new_b"), Seq("vec_id"))
-      .filter(col("old_b") =!= col("new_b")).count()
-    assert(movedN >= 2, s"fixture too tame: only $movedN of 8 re-ingests moved coarse bucket")
-    val (gA, gB) = (s"$root/gA", s"$root/gB")
-    Seq(gA, gB).foreach { gp =>
-      EtlCli.extendKnnGraph(spark, parts(0), gp, Some(5), 2, Some(bits))
-      EtlCli.extendKnnGraph(spark, parts(1), gp)
-      EtlCli.extendKnnGraph(spark, parts(2), gp)
-    }
-    EtlCli.run(spark, Seq("compact-knn-graph", gA)) // A pruned, B raw
-    EtlCli.extendKnnGraph(spark, reIng, gA)
-    EtlCli.extendKnnGraph(spark, reIng, gB)
-    def edgeRows(gp: String) = EtlCli
-      .readTable(spark, s"$gp/graph/epoch=3")
-      .select(col("vec_id").cast("long"), col("nid").cast("long"),
-        col("cosine"), col("rank"))
-      .as[(Long, Long, Double, Int)].collect().toSet
-    assert(edgeRows(gA) == edgeRows(gB),
-      "moved-bucket re-ingest: pruned extension dropped the old-bucket " +
-        "hood's hop candidates relative to the raw twin")
-    assert(CorpusStreams.knnGraphIdentity(spark, gA) ==
-      CorpusStreams.knnGraphIdentity(spark, gB),
-      "moved-bucket re-ingest corrupted the identity fold")
-  }
-
-  test("vacuum-knn-graph: fold-covered raw epochs reclaimed; extension, replay, live view, probe, and identity all survive — including over an EMPTY raw tail") {
-    import graft.streaming.CorpusStreams
-    import graft.tools.EtlCli
-    import spark.implicits._
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val bits = graft.operators.Similarity.nnDescentNBits(emb.count())
-    val root = java.nio.file.Files.createTempDirectory("knn_vacuum")
-    def vecs(name: String, df: org.apache.spark.sql.DataFrame): String = {
-      val p = s"$root/$name"; df.write.parquet(p); p
-    }
-    val parts = (0 to 4).map(i =>
-      vecs(s"p$i", emb.filter(col("vec_id") % 5 === i)))
-    val (gA, gB) = (s"$root/gA", s"$root/gB")
-    Seq(gA, gB).foreach { gp =>
-      EtlCli.extendKnnGraph(spark, parts(0), gp, Some(5), 2, Some(bits))
-      EtlCli.extendKnnGraph(spark, parts(1), gp)
-      EtlCli.extendKnnGraph(spark, parts(2), gp)
-    }
-    // refusal: no fold yet
-    val ex = intercept[RuntimeException] {
-      CorpusStreams.vacuumKnnGraph(spark, gB)
-    }
-    assert(ex.getMessage.contains("compact-knn-graph"), ex.getMessage)
-    EtlCli.run(spark, Seq("compact-knn-graph", gA)) // folds cover 0..2
-    EtlCli.extendKnnGraph(spark, parts(3), gA)      // epoch 3 = the tail
-    EtlCli.extendKnnGraph(spark, parts(3), gB)
-    val freed = CorpusStreams.vacuumKnnGraph(spark, gA) // v = 2
-    assert(freed > 0, "vacuum reclaimed nothing")
-    assert(EtlCli.committedEpochs(spark, s"$gA/nodes") == Seq(3L),
-      EtlCli.committedEpochs(spark, s"$gA/nodes").toString)
-    assert(EtlCli.committedEpochs(spark, s"$gA/graph") == Seq(3L))
-    def viewRows(gp: String) = CorpusStreams.readKnnGraph(spark, gp, "vec_id")
-      .select(col("vec_id").cast("long"), col("nid").cast("long"),
-        col("cosine"), col("rank"))
-      .as[(Long, Long, Double, Int)].collect().toSet
-    assert(viewRows(gA) == viewRows(gB),
-      "live view diverged after vacuum (the fold must carry the reclaimed state)")
-    assert(CorpusStreams.knnGraphIdentity(spark, gA) ==
-      CorpusStreams.knnGraphIdentity(spark, gB))
-    // CRASH REPLAY against the vacuumed graph: the tail epoch's commit
-    // replays from fold(<=2) ∪ nothing — byte-identical content
-    def edgeRows(gp: String, epoch: Long) = EtlCli
-      .readTable(spark, s"$gp/graph/epoch=$epoch")
-      .select(col("vec_id").cast("long"), col("nid").cast("long"),
-        col("cosine"), col("rank"))
-      .as[(Long, Long, Double, Int)].collect().toSet
-    val e3 = edgeRows(gA, 3)
-    CorpusStreams.knnGraphCommitBatch(
-      spark.read.parquet(parts(3)), 3L, gA, "vec_id", "embedding",
-      k = 5, rounds = 2, nBits = bits)
-    assert(edgeRows(gA, 3) == e3,
-      "replaying the tail epoch against the vacuumed graph changed its content")
-    // extension after vacuum equals the unvacuumed twin
-    EtlCli.extendKnnGraph(spark, parts(4), gA)
-    EtlCli.extendKnnGraph(spark, parts(4), gB)
-    assert(edgeRows(gA, 4) == edgeRows(gB, 4),
-      "post-vacuum extension diverged from the unvacuumed twin")
-    // incremental re-compaction folds fold ∪ tail; a second vacuum then
-    // empties the raw tail entirely
-    EtlCli.run(spark, Seq("compact-knn-graph", gA)) // covers 0..4
-    EtlCli.run(spark, Seq("vacuum-knn-graph", gA))  // v = 4
-    assert(EtlCli.committedEpochs(spark, s"$gA/nodes").isEmpty &&
-      EtlCli.committedEpochs(spark, s"$gA/graph").isEmpty,
-      "full vacuum should empty the raw tail once the folds cover everything")
-    assert(viewRows(gA) == viewRows(gB),
-      "live view diverged over an empty raw tail")
-    // ground-truth probe runs off the folds alone
-    val rec = CorpusStreams.knnGraphRecallProbe(spark, gA, nQueries = 4)
-    assert(rec.count() == 1)
-    // extension over the EMPTY tail: bootstrap detection must NOT fire,
-    // the next epoch must not collide with a reclaimed one
-    val reIng = vecs("p5", emb.filter(col("vec_id") < 10)
-      .withColumn("embedding",
-        transform(col("embedding"), x => x * lit(1.01f))))
-    EtlCli.extendKnnGraph(spark, reIng, gA)
-    EtlCli.extendKnnGraph(spark, reIng, gB)
-    assert(EtlCli.committedEpochs(spark, s"$gA/nodes") == Seq(5L),
-      EtlCli.committedEpochs(spark, s"$gA/nodes").toString)
-    assert(edgeRows(gA, 5) == edgeRows(gB, 5),
-      "extension over the empty raw tail diverged (re-ingest included)")
-    assert(CorpusStreams.knnGraphIdentity(spark, gA) ==
-      CorpusStreams.knnGraphIdentity(spark, gB),
-      "identity fold broke over the vacuumed graph")
-    // a manual commit at a RECLAIMED epoch must refuse loudly — its raw
-    // priors are gone and a fold-covered replay reads the tail only, so
-    // proceeding would silently recompute from incomplete state
-    val exReplay = intercept[IllegalArgumentException] {
-      CorpusStreams.knnGraphCommitBatch(
-        spark.read.parquet(parts(2)), 2L, gA, "vec_id", "embedding",
-        k = 5, rounds = 2, nBits = bits)
-    }
-    assert(exReplay.getMessage.contains("fencepost"), exReplay.getMessage)
-  }
-
-  test("vacuum-knn-graph fencepost: a fold past the checkpoint's committed batch refuses; behind it, vacuums stop at the committed batch") {
-    import graft.streaming.CorpusStreams
-    import graft.tools.EtlCli
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val bits = graft.operators.Similarity.nnDescentNBits(emb.count())
-    val root = java.nio.file.Files.createTempDirectory("knn_vac_fence")
-    val gp = s"$root/g"
-    val chk = s"$root/chk"
-    val src = s"$root/src"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    def drip(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = s"$root/${name}_tmp"
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
-    drip(emb.filter(col("vec_id") % 2 === 0), "b0")
-    val stream = spark.readStream
-      .schema(emb.schema).option("maxFilesPerTrigger", "1").parquet(src)
-    val q1 = CorpusStreams.knnGraphSink(stream, "vec_id", "embedding",
-      gp, chk, k = 5, rounds = 2, nBits = bits)
-    q1.awaitTermination()
-    drip(emb.filter(col("vec_id") % 2 === 1), "b1")
-    val q2 = CorpusStreams.knnGraphSink(stream, "vec_id", "embedding",
-      gp, chk, k = 5, rounds = 2, nBits = bits)
-    q2.awaitTermination() // checkpoint committed through batch 1
-    // THE crash the fencepost exists for: batch 2's foreachBatch body
-    // committed its epoch, then died before the checkpoint commit — the
-    // stream WILL replay batch 2, and that replay reads the raw tail
-    val b2 = emb.filter(col("vec_id") < 4)
-      .withColumn("embedding", transform(col("embedding"), x => x * lit(1.02f)))
-    CorpusStreams.knnGraphCommitBatch(b2, 2L, gp, "vec_id", "embedding",
-      k = 5, rounds = 2, nBits = bits)
-    EtlCli.run(spark, Seq("compact-knn-graph", gp)) // covers epoch 2 > committed 1
-    val ex = intercept[RuntimeException] {
-      CorpusStreams.vacuumKnnGraph(spark, gp, Some(chk))
-    }
-    assert(ex.getMessage.contains("fencepost"), ex.getMessage)
-    // the restarted sink replays batch 2 (idempotent) and commits the
-    // checkpoint past the fold — vacuum then proceeds
-    drip(b2, "b2")
-    val e2 = EtlCli.readTable(spark, s"$gp/graph/epoch=2")
-      .select(col("vec_id").cast("long"), col("nid").cast("long"), col("rank"))
-      .collect().toSet
-    val q3 = CorpusStreams.knnGraphSink(stream, "vec_id", "embedding",
-      gp, chk, k = 5, rounds = 2, nBits = bits)
-    q3.awaitTermination() // replayed batch 2, committed through 2
-    assert(EtlCli.readTable(spark, s"$gp/graph/epoch=2")
-      .select(col("vec_id").cast("long"), col("nid").cast("long"), col("rank"))
-      .collect().toSet == e2,
-      "the stream's replay of the crashed batch changed its content")
-    val freed = CorpusStreams.vacuumKnnGraph(spark, gp, Some(chk))
-    assert(freed > 0)
-    assert(EtlCli.committedEpochs(spark, s"$gp/nodes").forall(_ > 1L),
-      EtlCli.committedEpochs(spark, s"$gp/nodes").toString)
-  }
-
-  test("knnGraphSink compactEvery: the sink self-maintains its read layouts on cadence; the view matches a manual-compaction twin") {
-    import graft.streaming.CorpusStreams
-    import graft.tools.EtlCli
-    import spark.implicits._
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val bits = graft.operators.Similarity.nnDescentNBits(emb.count())
-    val root = java.nio.file.Files.createTempDirectory("knn_autocompact")
-    val in = root.resolve("in"); java.nio.file.Files.createDirectory(in)
-    def stage(name: String, rows: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = root.resolve(name + "_tmp")
-      rows.coalesce(1).write.parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath, in.resolve(name + ".parquet"))
-    }
-    (0 to 3).foreach(i => stage(s"b$i", emb.filter(col("vec_id") % 4 === i)))
-    val gp = root.resolve("g").toString
-    CorpusStreams.knnGraphSink(
-      spark.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
-        .parquet(in.toString),
-      "vec_id", "embedding", gp, root.resolve("chk").toString,
-      k = 5, rounds = 2, nBits = bits, compactEvery = 2)
-      .awaitTermination(180000)
-    // the cadence ran: the fold tables exist and cover at least epoch 2
-    val covered = EtlCli.readTable(spark, s"$gp/nodes_opt")
-      .select(col("covered_epoch").cast("long")).limit(1)
-      .as[Long].collect().head
-    assert(covered >= 2L, s"cadence compaction should have covered >= 2: $covered")
-    // and the maintained graph equals an uncompacted twin fed the same
-    // batches (pruned-equals-raw, through the sink end to end)
-    val gp2 = root.resolve("g2").toString
-    CorpusStreams.knnGraphSink(
-      spark.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
-        .parquet(in.toString),
-      "vec_id", "embedding", gp2, root.resolve("chk2").toString,
-      k = 5, rounds = 2, nBits = bits)
-      .awaitTermination(180000)
-    def view(g: String) = CorpusStreams.readKnnGraph(spark, g, "vec_id")
-      .select(col("vec_id").cast("long"), col("nid").cast("long"),
-        col("cosine"), col("rank"))
-      .as[(Long, Long, Double, Int)].collect().toSet
-    assert(view(gp) == view(gp2),
-      "cadence-compacted sink diverged from the uncompacted twin")
-  }
-
-  test("knnGraphRecallProbe: sampled exact recall reads healthy on a fresh build, collapses on planted staleness, and the monitor names the rebuild") {
-    import graft.streaming.CorpusStreams
-    import graft.tools.EtlCli
-    import spark.implicits._
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val root = java.nio.file.Files.createTempDirectory("knn_recall")
-    emb.write.parquet(s"$root/vecs")
-    val gp = s"$root/g"
-    EtlCli.extendKnnGraph(spark, s"$root/vecs", gp, Some(5), 2)
-    val rec = CorpusStreams.knnGraphRecallProbe(spark, gp, nQueries = 8)
-      .select(col("epoch").cast("long"), col("n_queries").cast("long"),
-        col("recall_micro").cast("double"))
-      .as[(Long, Long, Double)].collect().head
-    info(f"fresh-build sampled exact recall: ${rec._3}%.3f")
-    assert(rec._1 == 0L && rec._2 == 8L, rec.toString)
-    // NOTE the calibration: on this near-tie-heavy synthetic fixture a
-    // healthy NN-descent build probes ~0.2-0.4 exact recall@5 (it
-    // maximizes cosine MASS; the exact top-5 SET is weakly separated) —
-    // the monitor's value is the per-epoch TREND against the build's own
-    // baseline, so the floor deploys below the healthy reading
-    assert(rec._3 > 0.15 && rec._3 <= 1.0,
-      s"fresh NN-descent build should probe healthy: ${rec._3}")
-    // healthy graph passes the full monitor (trend + occupancy + recall)
-    EtlCli.run(spark, Seq("check-graph-quality", gp, "0.8", "100000", "0.15"))
-    // PLANTED STALENESS: a garbage epoch supersedes every neighborhood
-    // (far-away neighbors with confidently wrong stored cosines) while
-    // the node vectors are untouched. The cosine trend reads the STORED
-    // scores — which lie — so only the exact-recall axis can see this.
-    val garbage = emb.select(col("vec_id"),
-        ((col("vec_id") + lit(250)) % lit(500)).as("nid"),
-        lit(0.99).as("cosine"), lit(1).as("rank"),
-        lit(0L).as("nid_bucket"), lit(0L).as("src_bucket"))
-      .filter(col("vec_id") =!= col("nid"))
-    EtlCli.appendEpoch(garbage, s"$gp/graph", 1)
-    val stale = CorpusStreams.knnGraphRecallProbe(spark, gp, nQueries = 8)
-      .select(col("recall_micro").cast("double")).as[Double].collect().head
-    info(f"post-staleness sampled exact recall: $stale%.3f")
-    assert(stale < 0.1, s"planted staleness must collapse probe recall: $stale")
-    // the cosine trend alone stays quiet (stored scores lie high)...
-    EtlCli.run(spark, Seq("check-graph-quality", gp, "0.8"))
-    // ...the ground-truth axis alarms, naming the rebuild
-    val ex = intercept[RuntimeException] {
-      EtlCli.run(spark, Seq("check-graph-quality", gp, "0.8", "100000", "0.15"))
-    }
-    assert(ex.getMessage.contains("Rebuild") &&
-      ex.getMessage.contains("staleness"), ex.getMessage)
-  }
-
-  test("graph maintenance runbook: stream -> monitor -> optimize -> mine; a re-embed refuses the stale graph; rebuild restores service") {
-    import graft.streaming.CorpusStreams
-    import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val bits = graft.operators.Similarity.nnDescentNBits(emb.count())
-    val root = java.nio.file.Files.createTempDirectory("knn_runbook")
-    val in = root.resolve("in"); java.nio.file.Files.createDirectory(in)
-    val graphPath = root.resolve("graph").toString
-    def stage(name: String, rows: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = root.resolve(name + "_tmp")
-      rows.coalesce(1).write.parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath, in.resolve(name + ".parquet"))
-    }
-    stage("b0", emb.filter(col("vec_id") % 2 === 0))
-    stage("b1", emb.filter(col("vec_id") % 2 === 1))
-    CorpusStreams.knnGraphSink(
-      spark.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
-        .parquet(in.toString),
-      "vec_id", "embedding", graphPath, root.resolve("chk").toString,
-      k = 5, rounds = 2, nBits = bits).awaitTermination(180000)
-    // 1. monitor quiet, 2. compact to the stamped flat layout
-    graft.tools.EtlCli.run(spark, Seq("check-graph-quality", graphPath))
-    graft.tools.EtlCli.run(spark,
-      Seq("read-optimize-knn-graph", graphPath, s"$root/opt"))
-    // 3. the consumer serves off the OPTIMIZED artifact (stamp matches
-    // the corpus table the training pipeline holds) and equals the
-    // operator over the live view
-    graft.tools.EtlCli.writeTable(emb, s"$root/vecs")
-    graft.tools.EtlCli.run(spark,
-      Seq("hard-negatives", s"$root/opt", s"$root/vecs", s"$root/negs", "3"))
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("qid").cast("long"), col("cid").cast("long"), col("rank"))
-      .as[(Long, Long, Int)].collect().toSet
-    assert(rows(graft.tools.EtlCli.readTable(spark, s"$root/negs")) ==
-      rows(graft.operators.Similarity.hardNegativesFromGraph(
-        CorpusStreams.readKnnGraph(spark, graphPath, "vec_id"),
-        emb, "vec_id", "label", k = 3)),
-      "optimized-artifact mining diverges from the live-view operator")
-    // 4. the corpus re-embeds: the stale graph REFUSES before one edge
-    // is read — the failure mode the stamp exists for
-    graft.tools.EtlCli.writeTable(emb.withColumn("embedding",
-      transform(col("embedding"), x => x * lit(1.01f))), s"$root/vecs2")
-    val stale = intercept[IllegalArgumentException] {
-      graft.tools.EtlCli.run(spark,
-        Seq("hard-negatives", s"$root/opt", s"$root/vecs2", s"$root/n2", "3"))
-    }
-    assert(stale.getMessage.contains("rebuild"), stale.getMessage)
-    // 5. the remedial the refusal names: rebuild over the re-embedded
-    // corpus; mining serves again
-    graft.tools.EtlCli.run(spark,
-      Seq("knn-graph", s"$root/vecs2", s"$root/g2", "5", "2"))
-    graft.tools.EtlCli.run(spark,
-      Seq("hard-negatives", s"$root/g2", s"$root/vecs2", s"$root/n3", "3"))
-    assert(graft.tools.EtlCli.readTable(spark, s"$root/n3").count() > 0,
-      "rebuilt graph must serve the miner")
-  }
-
   test("binaryIvfIndexSinkWithDrift: per-epoch drift log; shifted epoch alarms; check-drift fails naming it") {
     import graft.streaming.CorpusStreams
     import spark.implicits._
