@@ -31,13 +31,7 @@ object CorpusPipeline {
       nearDupThreshold: Double = 0.8, dfCap: Int = 0,
       scrubSpanN: Int = 0, scrubMinDocs: Int = 2,
       decontaminateGramN: Int = 4,
-      chunkLen: Int = 200, chunkOverlap: Int = 20,
-      // streaming-only: when bloomMBits > 0, curatedIngestSink also drops
-      // docs whose grams hit the GROWING bloom seen-set maintained at its
-      // bloomPath argument (the scale path when the seen-set outgrows the
-      // exact broadcast; false positives drop clean docs at the filter's
-      // FP rate — no false negatives ever)
-      bloomMBits: Int = 0, bloomK: Int = 3)
+      chunkLen: Int = 200, chunkOverlap: Int = 20)
 
   /** Clean `docs` against the held-out `evalDocs`; returns chunk rows
     * `(doc_id, chunk_idx, chunk)` (or the cleaned documents unchanged when

@@ -48,19 +48,6 @@ object Dedup {
       graft.plans.ShingleSet(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(text), k))
 
-  /** One MinHash value: min over shingles of an 8-hex-char (32-bit) slice
-    * of md5. Seeds 0-3 slice md5(g) at offsets 0/8/16/24; seeds 4-7 slice
-    * the salted md5("x:"+g) — so 8 independent permutation proxies cost
-    * TWO md5 calls per shingle, not eight. Lexicographic min over fixed-
-    * width hex = numeric min of the 32-bit value. */
-  def minhash(shingles: Column, seed: Int): Column = {
-    require(seed >= 0 && seed < 8, "minhash supports seeds 0-7")
-    val hashed =
-      if (seed < 4) transform(shingles, g => md5(g))
-      else transform(shingles, g => md5(concat(lit("x:"), g)))
-    array_min(transform(hashed, h => substring(h, (seed % 4) * 8 + 1, 8)))
-  }
-
   /** (doc_id, shingle-set) projection, spread across the cluster first —
     * shingling + hashing is the compute-heavy narrow stage. */
   def shingled(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
@@ -684,8 +671,8 @@ object Dedup {
       newDocs, corpusDocs, corpusBands, idCol, textCol, k, threshold)
 
   /** The probe half of incrementalNearDups, for callers that sign the
-    * batch once and reuse the bands (the streaming sinks persist them into
-    * the index AND probe with them — one signing, two uses). `newBands`
+    * batch once and reuse the bands (the curation sink persists them into
+    * the index AND probes with them — one signing, two uses). `newBands`
     * must already be PINNED: it feeds both sides of the probe join, and
     * every caller pins it once for its own reuse anyway. */
   def incrementalNearDupsFromBands(newBands: DataFrame, newDocs: DataFrame,

@@ -83,14 +83,6 @@ object Relational {
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Per-group top-k via rank — search-results-per-section shape
-    * (SURVEY.md §2.5 W2). */
-  def topKPerGroup(df: DataFrame, groupKeys: Seq[String], order: Seq[Column], k: Int,
-                   rankName: String = "rn"): DataFrame = {
-    val w = Window.partitionBy(groupKeys.map(col): _*).orderBy(order: _*)
-    df.withColumn(rankName, row_number().over(w)).filter(col(rankName) <= k)
-  }
-
   /** As-of join (composed from existing operators per the custom-operator
     * preference order: union + ignore-nulls window, no custom SparkPlan
     * needed): for every left row, attach the payload of the latest right

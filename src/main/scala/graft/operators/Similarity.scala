@@ -179,11 +179,6 @@ object Similarity {
       .select(col(idCol), posexplode(col(vecCol)).as(Seq("d", "x")))
       .select(col(idCol), col("d"), col("x").cast(DoubleType).as("x"))
 
-  /** L2 norm per id, computed with exact decimal accumulation. */
-  def norms(dims: DataFrame, idCol: String): DataFrame =
-    dims.groupBy(idCol)
-      .agg(sqrt(vsum(col("x") * col("x"))).as("norm"))
-
   /** Exact cosine top-k: for each query vector, the k nearest corpus
     * vectors (self-matches excluded). Query side should be small; the
     * dimension-join runs queries x corpus x dims through a partial-agg
@@ -860,7 +855,7 @@ object Similarity {
 
   /** Coarse centroid table (cc, cv) for the IVF family — the hash-rank
     * seeds over the corpus, exposed so a production index can PERSIST its
-    * coarse quantizer: incremental encode (the streaming ANN-index sink)
+    * coarse quantizer: an incremental encode ([[ivfPqResidualEncode]])
     * must assign against the ORIGINAL centroids — re-deriving seeds over
     * a grown corpus would shift the hash-rank seed set and silently
     * invalidate every stored cell assignment. */
@@ -885,8 +880,9 @@ object Similarity {
     * residual subtraction, in-row code argmin. Zero shuffles, no
     * retraining — the O(|batch|) incremental half of the ANN index
     * (codes are a pure function of (centroids, codebook, vector), so
-    * incremental equals from-scratch exactly; ScaleSpec asserts it and
-    * the streaming sink builds on it). Returns (cid, cell, codes). */
+    * incremental equals from-scratch exactly — the reference
+    * retrain-ivfpq's re-encode is checked against). Returns (cid, cell,
+    * codes). */
   def ivfPqResidualEncode(batch: DataFrame, idCol: String, vecCol: String,
                           cent: DataFrame, codebook: DataFrame, m: Int): DataFrame = {
     val vecs = graft.core.Tables.ensureParallelism(batch)
@@ -1002,7 +998,7 @@ object Similarity {
       .collect().map(_.getLong(0)).sorted.toSeq
 
   /** The production read path over a cell-PARTITIONED persisted codes
-    * table (CorpusStreams.annReadOptimize layout): resolve the probed
+    * table (written partitioned by cell): resolve the probed
     * cells first — bounded at min(|queries| x nProbe, nCells), a
     * driver-side artifact like the binary probe's — then read the codes
     * with a static cell filter, so partition pruning drops every unprobed
@@ -1481,8 +1477,8 @@ object Similarity {
     * the probe's stage 1 selects only (id, words), so a columnar store
     * prunes the scan to the 8-byte codes (the 1/32-bytes claim becomes a
     * ReadSchema property of the plan, not an argument); stage 2 re-reads
-    * (id, vec) for shortlist rows only. Map-only build — streaming
-    * epochs can append it exactly like annIndexSink's codes. */
+    * (id, vec) for shortlist rows only. Map-only build, so epochs of a
+    * growing corpus can append it independently. */
   def binaryIndexBuild(corpus: DataFrame, idCol: String, vecCol: String,
                        dims: Int): DataFrame =
     binaryQuantize(corpus, idCol, vecCol, dims)
@@ -1590,7 +1586,7 @@ object Similarity {
     * (id, cell, words), so columnar stores also prune the scan to the
     * 8-byte codes. `cent` is the persisted coarse quantizer
     * ([[coarseCentroids]]) — pinned by design, exactly like the
-    * IVF-PQ streaming sink's: re-deriving seeds over a grown corpus
+    * IVF-PQ codes': re-deriving seeds over a grown corpus
     * would shift the hash-rank seed set and silently invalidate every
     * stored cell assignment. Codes and cells are pure functions of
     * (cent, vector), so incremental epoch appends equal a from-scratch
@@ -1906,7 +1902,7 @@ object Similarity {
 
   // ---- quantizer drift monitor ----------------------------------------
   // Every IVF-shaped index here encodes against PINNED coarse centroids
-  // (binaryIvfIndexBuild, the streaming sinks): re-deriving seeds over a
+  // (binaryIvfIndexBuild, ivfPqResidualEncode): re-deriving seeds over a
   // grown corpus would silently reassign every stored cell, so the
   // quantizer deliberately never moves. The flip side is silent decay —
   // a corpus whose distribution drifts away from the day-0 centroids
@@ -1916,7 +1912,31 @@ object Similarity {
   // says so. This monitor makes the decay measurable per batch/epoch so
   // retraining is an explicit, evidenced decision instead of a guess.
 
-  /** One-row drift report for a pinned coarse quantizer: assign BOTH
+  /** Per-cell occupancy + summed quantized L2 to the assigned centroid
+    * for one frame: (cell, n, qerr_sum), nCells rows. The drift report's
+    * building block, and a cell-balance dashboard row on its own. The
+    * corpus side is map-only (in-row argmin against the one-row
+    * broadcast centroid table, centroid vector re-joined by broadcast);
+    * the single hash exchange carries per-partition aggregation
+    * PARTIALS — at most partitions x nCells rows whatever the corpus
+    * size (GrowthSpec measures this flat under 10x growth). qerr_sum is
+    * a decimal sum of the per-row quantized-L2 longs: exact,
+    * order-independent, engine-portable. */
+  def quantizerCellStats(df: DataFrame, vecCol: String,
+                         cent: DataFrame): DataFrame =
+    withTreeCell(
+        graft.core.Tables.ensureParallelism(df).select(dvec(col(vecCol)).as("v")),
+        col("v"), cent)
+      .join(broadcast(leafCells(cent).select(col("cc").cast(LongType).as("cell"),
+        col("cv"))), Seq("cell"))
+      .select(col("cell"),
+        pcol(graft.plans.QuantizedL2Sum(pexpr(col("v")), pexpr(col("cv"))))
+          .cast(DecimalType(38, 0)).as("qerr"))
+      .groupBy("cell")
+      .agg(count(lit(1)).as("n"), sum(col("qerr")).as("qerr_sum"))
+
+  /** Drift report for a pinned coarse quantizer, one row per (scenario,
+    * baseline, current) frame pair: assign BOTH
     * frames to their nearest centroid (the same in-row argmin as the
     * index build — map-only, no shuffle beyond one nCells-sized
     * aggregation per frame) and compare
@@ -1946,44 +1966,14 @@ object Similarity {
     * `max_cell_share` reports the current frame's hot-cell
     * concentration — the probe-cost skew axis. Quantizer-generic: works
     * against any (cc, cv) centroid table, so the same report
-    * instruments the IVF-PQ family's pinned quantizer too. */
-  /** Per-cell occupancy + summed quantized L2 to the assigned centroid
-    * for one frame: (cell, n, qerr_sum), nCells rows. The drift report's
-    * building block, and a cell-balance dashboard row on its own. The
-    * corpus side is map-only (in-row argmin against the one-row
-    * broadcast centroid table, centroid vector re-joined by broadcast);
-    * the single hash exchange carries per-partition aggregation
-    * PARTIALS — at most partitions x nCells rows whatever the corpus
-    * size (GrowthSpec measures this flat under 10x growth). qerr_sum is
-    * a decimal sum of the per-row quantized-L2 longs: exact,
-    * order-independent, engine-portable. */
-  def quantizerCellStats(df: DataFrame, vecCol: String,
-                         cent: DataFrame): DataFrame =
-    withTreeCell(
-        graft.core.Tables.ensureParallelism(df).select(dvec(col(vecCol)).as("v")),
-        col("v"), cent)
-      .join(broadcast(leafCells(cent).select(col("cc").cast(LongType).as("cell"),
-        col("cv"))), Seq("cell"))
-      .select(col("cell"),
-        pcol(graft.plans.QuantizedL2Sum(pexpr(col("v")), pexpr(col("cv"))))
-          .cast(DecimalType(38, 0)).as("qerr"))
-      .groupBy("cell")
-      .agg(count(lit(1)).as("n"), sum(col("qerr")).as("qerr_sum"))
-
-  def quantizerDriftStats(baseline: DataFrame, current: DataFrame,
-                          vecCol: String, cent: DataFrame,
-                          maxTvd: Double, maxQerrRatio: Double): DataFrame =
-    driftReport(Seq(("", baseline, current)), vecCol, cent,
-        maxTvd, maxQerrRatio, None)
-      .drop("scenario", "resid_base", "resid_cur", "resid_ratio")
-
-  /** [[quantizerDriftStats]] for SEVERAL (scenario, baseline, current)
-    * frame pairs in ONE corpus pass: every frame joins the same
+    * instruments the IVF-PQ family's pinned quantizer too.
+    *
+    * All scenarios run in ONE corpus pass: every frame joins the same
     * (scenario, side)-tagged union, so a two-scenario monitor (the
     * q_quantizer_drift shape) pays one assignment scan, one pinned
     * partial table and one aggregation tower instead of two of each —
     * the per-(scenario, side, cell) sums are the identical integers, so
-    * the report rows are bit-equal to per-scenario calls (r16, guide
+    * the report rows are bit-equal to one call per scenario (r16, guide
     * §2.4: two operations keyed the same way share one pass). Output =
     * the per-scenario report rows with a leading `scenario` column. */
   def quantizerDriftScenarios(scenarios: Seq[(String, DataFrame, DataFrame)],
@@ -1992,8 +1982,8 @@ object Similarity {
     driftReport(scenarios, vecCol, cent, maxTvd, maxQerrRatio, None)
       .drop("resid_base", "resid_cur", "resid_ratio")
 
-  /** The shared drift-report core behind [[quantizerDriftStats]] and
-    * [[codebookDriftStats]]: all scenarios' frames assign in ONE
+  /** The shared drift-report core behind [[quantizerDriftScenarios]] and
+    * [[codebookDriftScenarios]]: all scenarios' frames assign in ONE
     * (scenario, side)-tagged-union pass (same math as 2 x nScenarios
     * quantizerCellStats calls — the per-(scenario, side, cell) sums are
     * the identical integers — at a fraction of the corpus passes and
@@ -2086,8 +2076,7 @@ object Similarity {
         - col("nc").cast(DecimalType(38, 0)) * col("tnb"))).as("tvd_num"))
     // EMPTY-frame guards: under ANSI (Spark 4's default) EVERY division
     // by a zero count throws DIVIDE_BY_ZERO — double included — so an
-    // empty streaming batch would CRASH the drift sink, not just
-    // mis-alarm. Each metric guards on the count(s) it divides by and
+    // empty frame would CRASH the report, not just mis-alarm. Each metric guards on the count(s) it divides by and
     // reads null when a frame is empty; emptiness stays visible
     // (n_base/n_cur = 0, null metrics) and the ALARM below is guarded
     // off — reserved for measured drift. CaseWhen evaluates branches
@@ -2153,7 +2142,7 @@ object Similarity {
         col("__v"), cent)
       .select(col(idCol), col("cell"))
 
-  /** quantizerDriftStats for the RESIDUAL-PQ family — the same
+  /** [[quantizerDriftScenarios]] for the RESIDUAL-PQ family — the same
     * occupancy/coarse-error report PLUS the decay axis PQ uniquely has:
     * mean residual quantization error (each vector's residual vs the
     * NEAREST codebook entry per subspace — the ADC error an exact-argmin
@@ -2175,20 +2164,9 @@ object Similarity {
     * A retrain here must move centroids AND codebook and re-encode: the
     * codebook is trained on residuals against the OLD centroids, so
     * retraining centroids alone invalidates both (the invalidation
-    * cascade — EtlCli.retrainIvfPq is the blue/green remedial). */
-  def codebookDriftStats(baseline: DataFrame, current: DataFrame,
-                         vecCol: String, cent: DataFrame, codebook: DataFrame,
-                         m: Int, maxTvd: Double, maxQerrRatio: Double,
-                         maxResidRatio: Double): DataFrame = {
-    require(maxResidRatio > 0, s"maxResidRatio must be > 0, got $maxResidRatio")
-    driftReport(Seq(("", baseline, current)), vecCol, cent, maxTvd, maxQerrRatio,
-      Some((codebook, m, maxResidRatio))).drop("scenario")
-  }
-
-  /** [[codebookDriftStats]] for SEVERAL (scenario, baseline, current)
-    * frame pairs in one corpus pass — the same fusion as
-    * [[quantizerDriftScenarios]], with the residual-ADC axis computed in
-    * the shared projection. */
+    * cascade — EtlCli.retrainIvfPq is the blue/green remedial). All
+    * scenarios share one corpus pass, as in [[quantizerDriftScenarios]],
+    * with the residual-ADC axis computed in the shared projection. */
   def codebookDriftScenarios(scenarios: Seq[(String, DataFrame, DataFrame)],
                              vecCol: String, cent: DataFrame, codebook: DataFrame,
                              m: Int, maxTvd: Double, maxQerrRatio: Double,
@@ -2212,12 +2190,11 @@ object Similarity {
     * split root's cv + axis and the children's slab intervals, so two
     * trees with identical leaf centroids but different intervals assign
     * differently and MUST NOT share an identity (a sweep stamped under
-    * one would otherwise deploy under the other). Recall claims are
-    * measured AGAINST a quantizer: a sweep artifact stamped with this
-    * identity can refuse to deploy against centroids it never measured
-    * (the stale-sweep-after-retrain hazard — see
-    * CorpusStreams.binaryIvfProbeWithSweep). Driver-side cost is one
-    * nCells-row aggregation. */
+    * one would otherwise read as measured under the other). Recall
+    * claims are measured AGAINST a quantizer: a sweep artifact stamped
+    * with this identity names the centroids it was measured under (the
+    * stale-sweep-after-retrain hazard — see EtlCli.sweepBinaryIvf).
+    * Driver-side cost is one nCells-row aggregation. */
   def quantizerIdentity(cent: DataFrame): Long = {
     val rows =
       if (!cent.columns.contains("parent"))
@@ -2238,9 +2215,9 @@ object Similarity {
   /** [[quantizerIdentity]]'s sibling for a PQ codebook (sub, cc, cv):
     * bit-XOR of the per-entry xxhash64 — order- and layout-independent.
     * A residual sweep's recall was measured under ONE (centroids,
-    * codebook) pair; stamping both identities lets the deploy path
-    * refuse a sweep measured against artifacts that since retrained
-    * (EtlCli.sweepIvfPq / CorpusStreams.ivfPqProbeWithSweep). Ignores a
+    * codebook) pair; stamping both identities names the artifacts a
+    * sweep was measured against, and a codebook stamped with its
+    * quantizer refuses a mismatched pair (EtlCli.sweepIvfPq). Ignores a
     * `quantizer_id` stamp column if present (the stamp must not change
     * the identity it rides with). */
   def codebookIdentity(cb: DataFrame): Long =
@@ -2250,7 +2227,7 @@ object Similarity {
       .collect().head.getLong(0)
 
   // ---- hot-cell split: the skew remedial -------------------------------
-  // quantizerDriftStats.max_cell_share names the cost cliff (a corpus
+  // the drift report's max_cell_share names the cost cliff (a corpus
   // concentrating into few cells degrades the cell-pruned probe's
   // stage-1 n_cand toward the flat scan — GrowthSpec measures it); this
   // is the remedial sized to the problem. A full retrain moves EVERY
@@ -2300,8 +2277,8 @@ object Similarity {
     *    stale parent-cell rows in committed epochs become INVISIBLE
     *    without rewriting one committed file. That is the 100 TB
     *    contract: remediation cost scales with the hot mass (one
-    *    appended epoch + an nCells-row quantizer flip), and the next
-    *    read-optimize cadence reclaims the dead rows.
+    *    appended epoch + an nCells-row quantizer flip); a later rewrite
+    *    of the index can drop the dead rows.
     *
     * Returns (newTree, relabeled): the tree to commit at the quantizer
     * path — (cc, cv, parent); its [[quantizerIdentity]] covers leaves, so

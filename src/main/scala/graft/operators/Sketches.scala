@@ -259,8 +259,8 @@ object Sketches {
   /** Per-group bottom-k rows by (md5(id), id). Output keeps groupCols,
     * idCol, valueCol plus the rank hash `rk` (so downstream merges can
     * re-rank without recomputing md5) and the build-k stamp `__kmv_k`
-    * (so a later merge can enforce the downward-only merge law — see
-    * mergeBottomK). The window's row_number lowers to the bounded-heap
+    * (the merge law holds only downward: a merge of partials must not
+    * request more than their build k). The window's row_number lowers to the bounded-heap
     * TopKPerKey via TopKRewrite — map-side partial top-k, never a full
     * per-group sort. */
   def bottomKSample(df: DataFrame, idCol: String, valueCol: String,
@@ -277,50 +277,10 @@ object Sketches {
       .withColumn("__kmv_k", lit(k))
   }
 
-  /** Merge per-part/per-epoch bottom-k partials into the bottom-k of the
-    * whole input: union then re-rank (the stored `rk` makes this a sort
-    * of at most parts*k rows per group, no md5 recompute).
-    *
-    * The merge law only holds DOWNWARD: ranks past a partial's build k
-    * were discarded, so merging with a larger k would return a
-    * statistically biased union (small parts over-represented) with no
-    * error. Enforced here, at the operator: every partial carries its
-    * build k (`__kmv_k`, stamped by bottomKSample), and a requested k
-    * above the smallest build k fails loudly. The validation is one
-    * driver-side aggregation over at most parts x k rows. */
-  def mergeBottomK(partials: DataFrame, idCol: String,
-                   groupCols: Seq[String], k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    if (partials.columns.contains("__kmv_k")) {
-      val builtKRow = partials.agg(min(col("__kmv_k"))).head()
-      // all-empty partials carry no k and nothing to bias
-      if (!builtKRow.isNullAt(0)) {
-        val builtK = builtKRow.getInt(0)
-        require(k <= builtK,
-          s"requested sample size $k exceeds the partials' build k=$builtK — " +
-            "ranks past the build k were discarded per partial, so merging " +
-            "larger would bias the sample; rebuild the partials with a larger k")
-      }
-    }
-    val w = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy(col("rk"), col(idCol))
-    val merged = partials.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
-    // Re-stamp the output with the EFFECTIVE sample size: a merge at
-    // k=3 over build-k=8 partials discards ranks past 3, so rows must
-    // not keep claiming k=8 — a later union with fresh k=8 partials and
-    // re-merge at 8 would pass the guard yet under-represent this part
-    // past rank 3 (exactly the bias the stamp exists to prevent).
-    if (merged.columns.contains("__kmv_k"))
-      merged.withColumn("__kmv_k", least(lit(k), col("__kmv_k")))
-    else merged
-  }
-
   /** Drift alarm over two bottom-k samples — the alert rule of the
-    * monitoring loop (kmvSampleSink maintains the LIVE sample; the
-    * baseline is a pinned day-0 sample of the same shape): per group,
-    * one quantile from each side and a drifted flag. Drifted when the
+    * monitoring loop (the LIVE sample against a pinned day-0 baseline
+    * sample of the same shape): per group, one quantile from each side
+    * and a drifted flag. Drifted when the
     * group exists on only one side (appearing/vanishing groups ARE
     * drift) or when |cur − base| > tolerance · max(|base|, 1) — the
     * max(·,1) floor keeps a zero/near-zero baseline from alerting on

@@ -133,8 +133,8 @@ object Stats {
   /** SAMPLE-BASED gate calibration — the production path at unbounded
     * corpus size that [[thresholdForKeepRate]]'s scaladoc names: read
     * the threshold off a KMV bottom-k hash-rank sample
-    * ([[Sketches.bottomKSample]], typically the PERSISTED monitoring
-    * sample a kmvSampleSink maintains) instead of globally sorting the
+    * ([[Sketches.bottomKSample]], typically a PERSISTED monitoring
+    * sample) instead of globally sorting the
     * corpus. The sample's md5-rank rows are a uniform row sample of the
     * score distribution, so its rank-r order statistic estimates the
     * population quantile with rank error ~ n * sqrt(q(1-q)/k) (the

@@ -703,28 +703,12 @@ object TextAnalysis {
   /** DSIR importance RESAMPLING — the second half of Xie et al. 2023:
     * after scoring, DSIR samples the raw pool with probability
     * proportional to the importance weight. The deterministic analog
-    * here: accept a document iff u(doc) < mean_pref, where u = the
-    * first 48 md5 bits of its id as a uniform in [0,1) (one exact
-    * BIGINT / 2^48 IEEE division — the same hash-uniform trick as
-    * mixtureSample, so no RNG anywhere and any engine replays the
-    * identical sample). Map-only on top of dsirPreference's single
-    * shuffle; returns the kept rows with their (n_feats, mean_pref, u)
-    * so the acceptance is auditable. */
-  def dsirResample(raw: org.apache.spark.sql.DataFrame,
-                   target: org.apache.spark.sql.DataFrame,
-                   idCol: String, textCol: String,
-                   buckets: Int = 256): org.apache.spark.sql.DataFrame =
-    resampleByPreference(dsirPreference(raw, target, idCol, textCol, buckets))
-
-  /** [[dsirResample]] against a persisted [[dsirModel]]. */
-  def dsirResampleFromModel(raw: org.apache.spark.sql.DataFrame,
-                            model: org.apache.spark.sql.DataFrame,
-                            idCol: String, textCol: String,
-                            buckets: Int = 256): org.apache.spark.sql.DataFrame =
-    resampleByPreference(
-      dsirPreferenceFromModel(raw, model, idCol, textCol, buckets))
-
-  /** [[dsirResample]] against pre-quantized per-bucket scores. */
+    * here, against pre-quantized per-bucket scores: accept a document iff
+    * u(doc) < mean_pref, where u = the first 48 md5 bits of its id as a
+    * uniform in [0,1) (one exact BIGINT / 2^48 IEEE division — the same
+    * hash-uniform trick as mixtureSample, so no RNG anywhere and any
+    * engine replays the identical sample). Returns the kept rows with
+    * their (n_feats, mean_pref, u) so the acceptance is auditable. */
   def dsirResampleFromQuantized(raw: org.apache.spark.sql.DataFrame,
                                 scoreQ: Seq[Long],
                                 idCol: String, textCol: String): org.apache.spark.sql.DataFrame =

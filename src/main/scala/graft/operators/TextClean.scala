@@ -57,15 +57,4 @@ object TextClean {
     * pre-tokenization normalization. */
   def normalizeWhitespace(c: Column): Column =
     trim(regexp_replace(c, "[ \\t\\r\\n]+", " "))
-
-  /** Unicode NFC canonicalization (native NfcNormalize expression): run
-    * BEFORE any hash/shingle/dedup stage so composed and decomposed forms
-    * of the same text ("é" vs "e"+U+0301) compare equal. Idempotent. */
-  def normalizeUnicode(c: Column): Column =
-    graft.plans.GraftFunctions.nfc_normalize(c)
-
-  /** Accent folding (native StripAccents: NFD + drop combining marks) —
-    * "café" -> "cafe"; pair with lower() for accent-insensitive search. */
-  def stripAccents(c: Column): Column =
-    graft.plans.GraftFunctions.strip_accents(c)
 }

@@ -804,7 +804,7 @@ object BigramBucketScore {
   * one (doc_id, 2x32-hex) row per shingle OCCURRENCE (~20x the corpus
   * bytes) into a per-doc min aggregation; this kernel makes signing a
   * map-only projection — zero shuffle — so LSH banding, incremental
-  * index signing, and the streaming sinks all scan-and-emit. */
+  * index signing, and the curation sink all scan-and-emit. */
 case class MinhashSigExpr(child: Expression, k: Int)
     extends UnaryExpression with ExpectsInputTypes {
   require(k >= 1, "shingle width must be >= 1")

@@ -417,8 +417,8 @@ object ExtendedQueries {
     // opaque (bound-check only); this one is the artifact a 100 TB
     // pipeline persists per shard/day and max-merges — and the query
     // reads it THAT way: the register table AND the exact-audit counts
-    // each persist once per (JVM run, sf dir) (hllSketchSink's output
-    // contract, the artifact-memo pattern) and each evaluation measures
+    // each persist once per (JVM run, sf dir) (the artifact-memo
+    // pattern) and each evaluation measures
     // the probe — estimate off stored registers vs the stored audit —
     // never a fact-table re-scan. The oracle rebuilds registers and
     // exact counts from scratch, so both derivations stay hash-proven.
@@ -485,8 +485,8 @@ object ExtendedQueries {
     },
   )
 
-  /** Run-scoped persisted HLL register table (the hllSketchSink output
-    * contract): built once per (JVM run, sf dir), read by q_hll_distinct
+  /** Run-scoped persisted HLL register table: built once per (JVM run,
+    * sf dir), read by q_hll_distinct
     * so recurring evaluations measure the estimate-off-stored-registers
     * probe — the production deployment of a mergeable sketch. */
   private def hllRegistersTable(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =

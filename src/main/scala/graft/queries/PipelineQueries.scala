@@ -167,9 +167,8 @@ object PipelineQueries {
 
     // SAMPLE-BASED gate calibration — the production path of the query
     // above at unbounded corpus size: the threshold reads off the
-    // PERSISTED KMV bottom-64 hash-rank sample (the monitoring sample a
-    // kmvSampleSink maintains; run-scoped artifact here, the picker
-    // pattern), so no stage sorts more than 64 rows and the remaining
+    // PERSISTED KMV bottom-64 hash-rank sample (a monitoring sample;
+    // run-scoped artifact here, the picker pattern), so no stage sorts more than 64 rows and the remaining
     // full-corpus pass is a map-only broadcast-threshold count. Rank
     // error vs exact is the binomial quantile-sampling bound
     // ~ n * sqrt(q(1-q)/k) (StatsSpec measures it); the oracle

@@ -94,9 +94,8 @@ object TextQueries {
         "doc_id", "text", k = 9, numHashes = 8)
     }
 
-  /** Run-scoped persisted CMS sketch over the corpus tokens (the
-    * cmsSketchSink output contract; same memo pattern as the HLL register
-    * table): built once per (JVM run, sf dir), so recurring q_cms_freq
+  /** Run-scoped persisted CMS sketch over the corpus tokens (same memo
+    * pattern as the HLL register table): built once per (JVM run, sf dir), so recurring q_cms_freq
     * evaluations measure the broadcast-probe path — the production
     * deployment of a mergeable sketch. The oracle rebuilds the identical
     * cells from scratch, so hash-match still proves the sketch itself. */
@@ -1052,8 +1051,8 @@ object TextQueries {
     // treats that as "re-sweep with more hashes", never "deploy the best
     // loser"). The sweep->choice loop is now DuckDB-visible end to end.
     // The picker reads the PERSISTED sweep artifact — its production
-    // shape (curatedIngestSink consumes the same table the same way);
-    // q_lsh_sweep above measures the sweep computation itself, this
+    // shape (the sweep-lsh command commits the same table); q_lsh_sweep
+    // above measures the sweep computation itself, this
     // measures the recurring choice. The oracle recomputes the whole
     // grid from scratch, so hash-match proves the persisted frontier.
     QueryDef(
@@ -1376,7 +1375,7 @@ object TextQueries {
 
     // The monitoring ALERT RULE, oracle-checked (previously spec-only):
     // per-source p50 from a pinned "day-0" baseline sample (the even
-    // doc ids — what a prior run's kmvSampleSink would have persisted)
+    // doc ids — what a prior run would have persisted)
     // vs the live sample over the full corpus; drifted when a source
     // exists on only one side or the medians diverge past
     // tolerance * max(|base|, 1). Everything is exact rank arithmetic

@@ -536,7 +536,7 @@ object VectorQueries {
   private val DriftMaxTvd = 0.1
   private val DriftMaxQerrRatio = 1.25
 
-  /** DuckDB replay of Similarity.quantizerDriftStats for two scenarios.
+  /** DuckDB replay of Similarity.quantizerDriftScenarios for two scenarios.
     * Per scenario p with baseline frame `${p}_b` and current frame
     * `${p}_c` (both (vec_id, d, x) dims views): assign each vector to
     * its argmin-quantized-L2 seed centroid (rawd2 order == divided-d2
@@ -609,7 +609,7 @@ object VectorQueries {
   private val CodebookMaxResidRatio = 1.25
 
   /** DuckDB replay of the RESIDUAL-ADC axis of
-    * Similarity.codebookDriftStats for one scenario `p` (its occupancy/
+    * Similarity.codebookDriftScenarios for one scenario `p` (its occupancy/
     * coarse axes come from [[quantizerDriftScenarioSql]], whose
     * ${p}_${f}vd CTEs this reuses for the per-vector cell assignment).
     * Per frame f: residual vs the assigned centroid, per (vector,
@@ -1111,7 +1111,7 @@ object VectorQueries {
     // Cell-pruned binary ANN — the FAISS IndexBinaryIVF composition that
     // closes the flat probe's one scale asymmetry: the packed sign codes
     // live UNDER the 16-cell coarse quantizer (persisted centroids, the
-    // pinned-artifact contract of the IVF-PQ sink), the index persists
+    // pinned-artifact contract of the IVF-PQ codes), the index persists
     // PARTITIONED BY cell, and stage 1 Hamming-scans only the 4 probed
     // cells' codes — partition pruning drops every other cell's files
     // (PartitionFilters, PlanSpec-asserted) and column pruning drops the
@@ -1313,7 +1313,7 @@ object VectorQueries {
     },
 
     // Drift monitor for the PINNED coarse quantizer every IVF-shaped
-    // index encodes against (the sinks deliberately never retrain —
+    // index encodes against (the encodes deliberately never retrain —
     // doing so would silently reassign every stored cell). Two scenarios
     // in one report: disjoint iid halves of the corpus (the healthy
     // steady state a monitor must NOT page on — the alarm's
@@ -2105,7 +2105,7 @@ object VectorQueries {
     },
 
     // The residual family's PRODUCTION read path: the persisted codes in
-    // the cell-partitioned layout (annReadOptimize), scanned with a
+    // the cell-partitioned layout, scanned with a
     // static cell filter resolved driver-side from the PERSISTED coarse
     // quantizer — partition pruning drops every unprobed cell's files,
     // and the files carry only (cid, codes): m bytes per vector, no raw
@@ -2377,7 +2377,7 @@ object VectorQueries {
     // argmin over the level-0 roots, then argmin over the split root's
     // children — the tree the quantizer artifact became. Every corpus
     // row, so the oracle cross-checks the production path (what
-    // binaryIvfIndexBuild / the streaming sink would store) end to end.
+    // binaryIvfIndexBuild would store) end to end.
     QueryDef(
       "q_tree_assign",
       "tree-quantizer cell assignment after the hot-cell split: root argmin, then the slab interval for the split cell",

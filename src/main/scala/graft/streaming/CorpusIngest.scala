@@ -16,12 +16,12 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   *
   * Replay safety: the id anti-join makes re-delivered batches no-ops on
   * the corpus, and band rows are deduped on write, so at-least-once
-  * delivery yields exactly-once table state — same contract as
-  * EventStreams.upsertSink. Bands commit BEFORE docs: a crash between the
-  * two leaves orphan band rows, which are harmless (their candidate pairs
-  * find no corpus text and verification drops them; the replayed batch
-  * re-commits both), whereas docs-first would strand committed documents
-  * with no bands — permanently invisible to future near-dup probes.
+  * delivery yields exactly-once table state. Bands commit BEFORE docs: a
+  * crash between the two leaves orphan band rows, which are harmless
+  * (their candidate pairs find no corpus text and verification drops
+  * them; the replayed batch re-commits both), whereas docs-first would
+  * strand committed documents with no bands — permanently invisible to
+  * future near-dup probes.
   *
   * Survivorship when a near-dup pair crosses the batch boundary: the
   * already-ingested corpus document wins regardless of id; within the

@@ -6,7 +6,7 @@ import graft.operators.{Audit, CorpusPipeline, Export, MarvelTransform, Relation
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** The reference's ETL CLI (`python -m etl.etl {initdb,marvel,quality,
   * stats}` — starter:etl/etl.py:70-93) rebuilt on the Spark engine over a
@@ -89,33 +89,20 @@ object EtlCli {
       sweepFusedRrf(spark, indexTable, centPath, docsTable, outTable,
         terms.split(",").toSeq, nQueries.toInt)
         .show(numRows = 100, truncate = false)
-    case Seq("check-drift", driftLog) => checkDrift(spark, driftLog)
-    case Seq("check-drift", driftLog, maxCellShare) =>
-      checkDrift(spark, driftLog, maxCellShare.toDouble)
-    case Seq("retrain-binary-ivf", indexTable, centOut, idxOut, baseOut, nCells, dims) =>
-      retrainBinaryIvf(spark, indexTable, centOut, idxOut, baseOut,
-        nCells.toInt, dims.toInt)
-    case Seq("retrain-binary-ivf", indexTable, centOut, idxOut, baseOut, nCells, dims,
-             samplePeriod) =>
-      retrainBinaryIvf(spark, indexTable, centOut, idxOut, baseOut,
-        nCells.toInt, dims.toInt, samplePeriod.toInt)
-    case Seq("retrain-binary-ivf", indexTable, centOut, idxOut, baseOut, nCells, dims,
-             samplePeriod, idCol, vecCol) =>
-      retrainBinaryIvf(spark, indexTable, centOut, idxOut, baseOut,
-        nCells.toInt, dims.toInt, samplePeriod.toInt, idCol, vecCol)
-    case Seq("retrain-ivfpq", vecsTable, centOut, cbOut, codesOut, baseOut,
-             nCells, m, ksub, iters) =>
-      retrainIvfPq(spark, vecsTable, centOut, cbOut, codesOut, baseOut,
-        nCells.toInt, m.toInt, ksub.toInt, iters.toInt)
-    case Seq("retrain-ivfpq", vecsTable, centOut, cbOut, codesOut, baseOut,
-             nCells, m, ksub, iters, samplePeriod) =>
-      retrainIvfPq(spark, vecsTable, centOut, cbOut, codesOut, baseOut,
-        nCells.toInt, m.toInt, ksub.toInt, iters.toInt, samplePeriod.toInt)
-    case Seq("retrain-ivfpq", vecsTable, centOut, cbOut, codesOut, baseOut,
-             nCells, m, ksub, iters, samplePeriod, idCol, vecCol) =>
-      retrainIvfPq(spark, vecsTable, centOut, cbOut, codesOut, baseOut,
-        nCells.toInt, m.toInt, ksub.toInt, iters.toInt, samplePeriod.toInt,
+    case Seq("retrain-binary-ivf", indexTable, centOut, idxOut, nCells, dims) =>
+      retrainBinaryIvf(spark, indexTable, centOut, idxOut, nCells.toInt, dims.toInt)
+    case Seq("retrain-binary-ivf", indexTable, centOut, idxOut, nCells, dims,
+             idCol, vecCol) =>
+      retrainBinaryIvf(spark, indexTable, centOut, idxOut, nCells.toInt, dims.toInt,
         idCol, vecCol)
+    case Seq("retrain-ivfpq", vecsTable, centOut, cbOut, codesOut,
+             nCells, m, ksub, iters) =>
+      retrainIvfPq(spark, vecsTable, centOut, cbOut, codesOut,
+        nCells.toInt, m.toInt, ksub.toInt, iters.toInt)
+    case Seq("retrain-ivfpq", vecsTable, centOut, cbOut, codesOut,
+             nCells, m, ksub, iters, idCol, vecCol) =>
+      retrainIvfPq(spark, vecsTable, centOut, cbOut, codesOut,
+        nCells.toInt, m.toInt, ksub.toInt, iters.toInt, idCol, vecCol)
     case Seq("sweep-ivfpq", codesTable, centPath, cbPath, vecsTable, outTable) =>
       sweepIvfPq(spark, codesTable, centPath, cbPath, vecsTable, outTable)
         .show(numRows = 100, truncate = false)
@@ -149,50 +136,27 @@ object EtlCli {
              idCol, vecCol, labelCol) =>
       mineHardNegatives(spark, graphTable, vecsTable, outTable, k.toInt,
         idCol, vecCol, labelCol)
-    case Seq("read-optimize-binary-ivf", indexTable, outPath) =>
-      graft.streaming.CorpusStreams.binaryIvfReadOptimize(spark, indexTable, outPath)
-      println(s"binary-IVF index compacted to the cell-partitioned layout at $outPath")
-    case Seq("read-optimize-binary-ivf", indexTable, outPath, centPath) =>
-      graft.streaming.CorpusStreams.binaryIvfReadOptimize(spark, indexTable,
-        outPath, centPath)
-      println(s"binary-IVF index compacted (dead non-leaf rows reclaimed) at $outPath")
-    case Seq("read-optimize-ivfpq", codesTable, outPath) =>
-      graft.streaming.CorpusStreams.annReadOptimize(spark, codesTable, outPath)
-      println(s"IVF-PQ codes compacted to the cell-partitioned layout at $outPath")
-    case Seq("split-hot-cells", indexTable, centPath, maxShare) =>
-      splitHotCells(spark, indexTable, centPath, maxShare.toDouble)
-    case Seq("split-hot-cells", indexTable, centPath, maxShare, branch) =>
-      splitHotCells(spark, indexTable, centPath, maxShare.toDouble, branch.toInt)
-    case Seq("split-hot-cells", indexTable, centPath, maxShare, branch,
-             idCol, vecCol) =>
-      splitHotCells(spark, indexTable, centPath, maxShare.toDouble, branch.toInt,
-        idCol, vecCol)
     case other =>
       sys.error("usage: init|ingest|quality|stats|export|learn-bpe|versions|" +
         "vacuum|diff|verify-export|sweep-lsh|sweep-binary|sweep-binary-ivf|" +
-        "sweep-fused-rrf|check-drift|retrain-binary-ivf|retrain-ivfpq|" +
-        "sweep-ivfpq|split-hot-cells|read-optimize-binary-ivf|" +
-        "read-optimize-ivfpq|knn-graph|probe-graph-recall|hard-negatives ... " +
+        "sweep-fused-rrf|retrain-binary-ivf|retrain-ivfpq|sweep-ivfpq|" +
+        "knn-graph|probe-graph-recall|hard-negatives ... " +
         s"(got $other)")
   }
 
-  /** Build and COMMIT the LSH band-sweep artifact the streaming ingest's
-    * sweep wiring consumes (`curatedIngestSink(sweepPath = ...)`): sample
-    * the corpus 1/samplePeriod by doc id, build exhaustive exact-Jaccard
-    * truth over the sample (O(sample²) by nature — the period bounds it),
-    * sweep every band size dividing numHashes against that truth, and
-    * commit the frontier at `outTable` via the versioned-table protocol.
-    * This is the periodic RE-SWEEP a recall monitor triggers; the next
-    * ingest epoch then signs under the picker's refreshed choice. Accepts
-    * either an epoch-partitioned corpus (the streaming sink's layout) or
-    * a flat versioned table. Returns the committed frontier. */
+  /** Build and COMMIT the LSH band-sweep artifact `SweepFamily.lsh`
+    * picks from: sample the corpus 1/samplePeriod by doc id, build
+    * exhaustive exact-Jaccard truth over the sample (O(sample²) by nature
+    * — the period bounds it), sweep every band size dividing numHashes
+    * against that truth, and commit the frontier at `outTable` via the
+    * versioned-table protocol. Reads the corpus in any layout
+    * ([[readAnyTable]]: the curation sink's epoch log, a versioned table
+    * or a raw directory). Returns the committed frontier. */
   def sweepLsh(spark: SparkSession, corpusTable: String, outTable: String,
                samplePeriod: Int = 3, k: Int = 9, numHashes: Int = 8,
                threshold: Double = 0.8): DataFrame = {
     require(samplePeriod >= 1, s"sample period must be >= 1, got $samplePeriod")
-    val docs = scala.util.Try(readEpochTable(spark, corpusTable))
-      .getOrElse(readTable(spark, corpusTable))
-      .select(col("doc_id"), col("text"))
+    val docs = readAnyTable(spark, corpusTable).select(col("doc_id"), col("text"))
     val sample = docs.filter(pmod(col("doc_id"), lit(samplePeriod.toLong)) === 0)
     val truth = graft.operators.Dedup.jaccardPairsExhaustive(
       sample, "doc_id", "text", k, threshold)
@@ -240,27 +204,19 @@ object EtlCli {
     df.join(qids, idCol).select(col(idCol), col(vecCol))
   }
 
-  /** The shared input of the two binary-IVF sweeps: the index's LIVE rows
-    * (after a hot-cell split the parent cell's pre-split copies remain in
-    * old epochs but probes never read them — the exact truth and the
-    * swept index must see the same single copy of every vector), the
-    * quantizer at `centroidsPath`, the dims and the query sample. Accepts
-    * the epoch layout a binaryIvf sink accretes, a versioned table (the
-    * retrain/read-optimize output), or a raw directory. */
+  /** The shared input of the two binary-IVF sweeps: the index (any
+    * layout, [[readAnyTable]]), the quantizer at `centroidsPath`, the
+    * dims and the query sample. */
   private def binaryIvfSweepInput(spark: SparkSession, indexTable: String,
                                   centroidsPath: String, command: String,
                                   nQueries: Int, idCol: String,
                                   vecCol: String): (DataFrame, DataFrame, Int, DataFrame) = {
-    val index = scala.util.Try(readIndexWithMaintenance(spark, indexTable))
-      .getOrElse(readAnyTable(spark, indexTable))
+    val index = readAnyTable(spark, indexTable)
     val dims = sweepInputWidth(index, s"index at $indexTable", command,
       "a binaryIvfIndexBuild layout (id, cell, words, vec)",
       Seq(idCol, vecCol, "cell", "words"), vecCol)
-    val cent = readTable(spark, centroidsPath)
-    val live = index.join(broadcast(graft.operators.Similarity.leafCells(cent)
-        .select(col("cc").cast("long").as("__leaf"))),
-      index("cell").cast("long") === col("__leaf"), "left_semi")
-    (live, cent, dims, hashRankQueries(live, idCol, vecCol, nQueries))
+    (index, readTable(spark, centroidsPath), dims,
+      hashRankQueries(index, idCol, vecCol, nQueries))
   }
 
   /** Commit a sweep frontier at `outTable` with `family`'s identity
@@ -278,139 +234,55 @@ object EtlCli {
     readTable(sweep.sparkSession, outTable)
   }
 
-  /** The drift monitor's read side: scan the per-epoch quantizer-drift
-    * log a binaryIvfIndexSinkWithDrift maintains and FAIL naming every
-    * alarmed epoch — the signal that the pinned day-0 centroids no
-    * longer fit the corpus and a retrain + full re-encode is due. With
-    * `maxCellShare` set, ALSO fail on epochs whose hot-cell share
-    * crosses it, naming the cheaper remedial (split-hot-cells): skew is
-    * a COST cliff, not a recall cliff — the distribution alarm can stay
-    * quiet while one cell swallows the corpus, and the local split fixes
-    * that for O(hot mass) where the retrain pays O(corpus). Quiet logs
-    * print a one-line all-clear. Driver-side work is bounded by the
-    * epoch count (one boolean filter over an nEpochs-row table). */
-  def checkDrift(spark: SparkSession, driftLog: String,
-                 maxCellShare: Double = 1.0): Unit = {
-    require(maxCellShare > 0 && maxCellShare <= 1,
-      s"maxCellShare must be in (0,1], got $maxCellShare")
-    val log = readEpochTable(spark, driftLog)
-    val alarmed = log.filter(col("drift_alarm"))
-      .select(col("epoch").cast("long")).collect().map(_.getLong(0)).sorted
-    if (alarmed.nonEmpty)
-      sys.error(s"quantizer drift alarm in epoch(s) ${alarmed.mkString(", ")} " +
-        s"of $driftLog — the pinned coarse centroids no longer fit the " +
-        "corpus; retrain them and re-encode the index (probe recall decays " +
-        "silently otherwise)")
-    if (maxCellShare < 1.0) {
-      val skewed = log.filter(col("max_cell_share") > maxCellShare)
-        .select(col("epoch").cast("long")).collect().map(_.getLong(0)).sorted
-      if (skewed.nonEmpty)
-        sys.error(s"hot-cell share above $maxCellShare in epoch(s) " +
-          s"${skewed.mkString(", ")} of $driftLog — the corpus is " +
-          "concentrating into one probe cell (stage-1 cost degrades toward " +
-          "the flat scan long before recall moves); run split-hot-cells on " +
-          "the index, then re-sweep")
-    }
-    println(s"no drift alarms across ${log.count()} epoch(s) at $driftLog")
-  }
-
-  /** The remedial action checkDrift names: retrain the coarse quantizer
-    * on the CURRENT corpus and re-encode the whole index under it. The
-    * index itself carries the vectors (id, cell, words, vec), so the
-    * corpus needs no separate table — accepts the epoch layout a
-    * binaryIvf sink accretes or the cell-partitioned read-optimized
-    * layout. Writes three NEW artifacts (blue/green — probes keep
-    * serving the old index until the deployment switches paths):
+  /** Retrain the binary-IVF coarse quantizer on the CURRENT corpus and
+    * re-encode the whole index under it. The index itself carries the
+    * vectors (id, cell, words, vec), so the corpus needs no separate
+    * table; it is read in any layout ([[readAnyTable]]). Writes two NEW
+    * artifacts (blue/green — readers keep the old index until the
+    * deployment switches paths):
     *  - `centroidsOut`: fresh hash-rank coarse centroids over the corpus
     *  - `indexOut`: the full re-encode, committed directly in the
-    *    read-optimized cell-partitioned probe layout (a retrain is the
-    *    one event that invalidates EVERY stored cell, so there is no
-    *    epoch history worth preserving — the new index IS epoch zero)
-    *  - `baselineOut`: the new drift baseline — a deterministic
-    *    1/samplePeriod hash-rank id sample of the corpus the quantizer
-    *    now fits (xxhash64 of the id AS STRING, so arbitrary id types
-    *    sample uniformly — the bottomKSample idiom), so the monitor's
-    *    next epochs compare against the post-retrain distribution
-    *    (comparing against the stale baseline would re-alarm forever)
-    * All three commit via the versioned-marker protocol (the index in the
-    * cell-partitioned layout), so a probe reading concurrently with the
-    * retrain never sees a half-written directory. A retrain also
-    * invalidates every sweep measured against the OLD quantizer: sweeps
-    * carry the centroid identity ([[sweepBinaryIvf]]) and the probe
-    * refuses an identity mismatch, so run `sweep-binary-ivf` against the
-    * new artifacts before switching the deployment.
-    * This is deliberately a FULL O(corpus) rebuild: the pinned-centroid
-    * design trades cheap O(batch) epoch appends for exactly this
-    * explicit, monitor-evidenced re-encode when the distribution moves. */
+    *    cell-partitioned probe layout
+    * Both commit via the versioned-marker protocol, so a reader running
+    * concurrently with the retrain never sees a half-written directory.
+    * A retrain also invalidates every sweep measured against the OLD
+    * quantizer (sweeps carry its identity, [[sweepBinaryIvf]]): run
+    * `sweep-binary-ivf` against the new artifacts before switching. */
   def retrainBinaryIvf(spark: SparkSession, indexTable: String,
                        centroidsOut: String, indexOut: String,
-                       baselineOut: String, nCells: Int, dims: Int,
-                       samplePeriod: Int = 1, idCol: String = "vec_id",
+                       nCells: Int, dims: Int, idCol: String = "vec_id",
                        vecCol: String = "embedding"): Unit = {
     require(nCells >= 1, s"nCells must be >= 1, got $nCells")
-    require(samplePeriod >= 1, s"sample period must be >= 1, got $samplePeriod")
-    // INGEST epochs only — maintenance epochs (hot-cell split relabels)
-    // are deliberately EXCLUDED from the retrain corpus: every relabeled
-    // row copies an ingest row's (id, vec) verbatim (only `cell` moves,
-    // and retrain ignores the old cell entirely), so they add nothing —
-    // while their epoch numbers count in an INDEPENDENT namespace that
-    // also starts at 0. Folding both namespaces into one max_by ordering
-    // would let a relabel at maintenance epoch m outrank a GENUINE
-    // re-ingest at ingest epoch e <= m and silently train on the stale
-    // vector.
-    val index = scala.util.Try(readEpochTableTagged(spark, indexTable))
-      .getOrElse(spark.read.parquet(indexTable).withColumn("__epoch", lit(0L)))
+    val index = readAnyTable(spark, indexTable)
     requireColumns(index, s"index at $indexTable lacks", idCol, vecCol)
-    // one copy per id, LATEST EPOCH WINS: an id RE-INGESTED with an
-    // updated vector must retrain on the newest copy (max-by-vector
-    // alone would keep the lexicographically-largest — deterministic but
-    // possibly the STALE vector). The vector is the deterministic
-    // tiebreak inside one epoch. dropDuplicates would keep whichever
-    // copy a partition delivered first and break the "re-run commits
-    // the identical baseline" contract below.
-    val corpus = index.select(col(idCol), col(vecCol),
-        col("__epoch").cast(LongType).as("__epoch"))
-      .groupBy(col(idCol))
-      .agg(max_by(col(vecCol), struct(col("__epoch"), col(vecCol))).as(vecCol))
+    val corpus = index.select(col(idCol), col(vecCol))
     if (corpus.isEmpty)
       sys.error(s"index at $indexTable is empty — nothing to retrain on")
-    val cent = graft.operators.Similarity.coarseCentroids(
-      corpus, idCol, vecCol, nCells)
-    writeTable(cent, centroidsOut)
-    // hash-based 1/samplePeriod sample: id-type agnostic (string ids
-    // sample exactly like numeric ones) and deterministic, so a re-run
-    // commits the identical baseline
-    writeTable(corpus.filter(
-        pmod(xxhash64(col(idCol).cast("string")), lit(samplePeriod.toLong)) === 0),
-      baselineOut)
+    writeTable(graft.operators.Similarity.coarseCentroids(
+      corpus, idCol, vecCol, nCells), centroidsOut)
     writeTable(
       graft.operators.Similarity.binaryIvfIndexBuild(corpus, idCol, vecCol,
         dims, readTable(spark, centroidsOut)),
       indexOut, partitionBy = Seq("cell"))
   }
 
-  /** The remedial action a CODEBOOK-drift alarm names, for the residual
-    * IVF-PQ family — the invalidation-CASCADE retrain: fresh coarse
+  /** The residual IVF-PQ retrain — an invalidation CASCADE: fresh coarse
     * centroids over the current corpus, a fresh residual codebook trained
     * against them (the old codebook encodes residuals vs the OLD
     * centroids, so retraining centroids alone invalidates the codebook
     * too — both must move together), and a full re-encode — all committed
-    * blue/green via the versioned protocol, probes keep serving the old
+    * blue/green via the versioned protocol, so readers keep the old
     * artifacts until the deployment switches paths. `vectorsTable`
     * supplies (idCol, vecCol): unlike the binary index the PQ codes table
     * deliberately does NOT carry vectors (8-byte codes ARE the point), so
-    * the retrain reads the corpus table the embedding pipeline maintains
-    * (epoch-partitioned, versioned, or a raw parquet dir).
-    * `baselineOut` gets the hash-rank 1/samplePeriod sample the monitor's
-    * next epochs compare against — same contract as retrainBinaryIvf. */
+    * the retrain reads the corpus table the embedding pipeline maintains,
+    * in any layout ([[readAnyTable]]). */
   def retrainIvfPq(spark: SparkSession, vectorsTable: String,
                    centroidsOut: String, codebookOut: String,
-                   codesOut: String, baselineOut: String,
-                   nCells: Int, m: Int, ksub: Int, iters: Int,
-                   samplePeriod: Int = 1, idCol: String = "vec_id",
+                   codesOut: String, nCells: Int, m: Int, ksub: Int,
+                   iters: Int, idCol: String = "vec_id",
                    vecCol: String = "embedding"): Unit = {
     require(nCells >= 1, s"nCells must be >= 1, got $nCells")
-    require(samplePeriod >= 1, s"sample period must be >= 1, got $samplePeriod")
     val vecs = readAnyTable(spark, vectorsTable)
     requireColumns(vecs, s"vectors at $vectorsTable lack", idCol, vecCol)
     val corpus = vecs.select(col(idCol), col(vecCol))
@@ -426,140 +298,22 @@ object EtlCli {
       corpus, idCol, vecCol, nCells, m, ksub, iters)
     // stamp the codebook with the quantizer it was trained UNDER: the
     // residual codebook is meaningless against any other centroids, and
-    // the streaming encode sinks refuse a mismatched pair (deploying new
-    // centroids with a stale codebook would encode garbage silently)
+    // sweep-ivfpq refuses a mismatched pair
     writeTable(cb.withColumn("quantizer_id",
       lit(graft.operators.Similarity.quantizerIdentity(
         readTable(spark, centroidsOut)))), codebookOut)
     writeTable(codes, codesOut)
-    writeTable(corpus.filter(
-        pmod(xxhash64(col(idCol).cast("string")), lit(samplePeriod.toLong)) === 0),
-      baselineOut)
   }
 
-  /** Maintenance epochs (split relabels) live in their OWN epoch table
-    * under the index dir. They must NOT share the `epoch=` namespace:
-    * the streaming sink keys epochs by its checkpoint batchId, so a
-    * maintenance epoch at max+1 would be silently REPLACED by the
-    * stream's next batch (idempotent-replace is the sink's replay
-    * contract) — losing every relabeled row. The `maintenance` subdir is
-    * invisible to the `epoch=` lister, so no batchId can ever collide,
-    * and epoch compaction folds only the ingest epochs around it. */
-  private def maintenancePath(indexTable: String): String =
-    s"$indexTable/maintenance"
-
-  /** The committed live view of a binary-IVF epoch index: every ingest
-    * epoch plus every maintenance epoch (hot-cell split relabels), when
-    * any exist. Every full-index consumer — sweep, retrain,
-    * read-optimize, the split itself — reads THIS, never the ingest
-    * epochs alone. */
-  def readIndexWithMaintenance(spark: SparkSession, indexTable: String): DataFrame = {
-    val base = readEpochTable(spark, indexTable)
-    if (committedEpochs(spark, maintenancePath(indexTable)).isEmpty) base
-    else base.unionByName(readEpochTable(spark, maintenancePath(indexTable)))
-  }
-
-  /** The remedial action a HOT `max_cell_share` names: split the hot
-    * cells locally and flip the quantizer — O(hot mass), against
-    * retrain-binary-ivf's O(corpus) re-encode. Reads the committed epoch
-    * index and the quantizer at `centroidsPath`, appends the relabeled
-    * hot rows as a fresh epoch FIRST (child cells are not leaves of the
-    * old tree, so a crash between the two commits leaves old readers
-    * exactly correct — the orphan epoch is invisible), then commits the
-    * (cc, cv, parent) tree as the next quantizer version. The flip moves
-    * the leaf identity, so every sweep stamped against the old quantizer
-    * refuses at probe time — run sweep-binary-ivf before switching the
-    * deployment, and let the next read-optimize cadence reclaim the dead
-    * parent rows. Replay-safe twice over: a crashed run's orphan epoch is
-    * detected (the recomputed split is deterministic, so its child cells
-    * name the same fresh ids AND relabel the same (id, cell) set —
-    * content-checked, not just counted) and only the tree flip is
-    * redone; a re-run AFTER a completed split measures the post-split
-    * leaf occupancy and no-ops. */
-  def splitHotCells(spark: SparkSession, indexTable: String,
-                    centroidsPath: String, maxShare: Double,
-                    branch: Int = 2, idCol: String = "vec_id",
-                    vecCol: String = "embedding"): Unit = {
-    // the split's O(hot) story is the maintenance-epoch APPEND, and the
-    // probe's read path only unions maintenance epochs over the EPOCH
-    // layout — a versioned (retrain / read-optimize output) or raw table
-    // can't host one, so refuse with the actual remedial instead of
-    // readEpochTable's misleading "nothing ingested yet"
-    if (committedEpochs(spark, indexTable).isEmpty)
-      sys.error(s"index at $indexTable has no committed ingest epochs — " +
-        "split-hot-cells operates on the epoch log the streaming sink " +
-        "accretes (the read-optimize INPUT); run it against that index, " +
-        "then re-run read-optimize-binary-ivf so probes see the children")
-    val index = readIndexWithMaintenance(spark, indexTable)
-    val tree = readTable(spark, centroidsPath)
-    val (newTree, relabeled) = graft.operators.Similarity.splitHotCells(
-      index, idCol, vecCol, tree, maxShare, branch)
-    val rel = graft.core.Materialize.pin(relabeled)
-    if (rel.isEmpty) {
-      println(s"no splittable leaf cell above share $maxShare at $indexTable " +
-        "— nothing to do")
-      return
-    }
-    val treeP = graft.core.Materialize.pin(newTree)
-    // fresh child ids can exist in the index ONLY as the orphan epoch of a
-    // run that crashed between its two commits (they exceed every cc the
-    // old tree could have assigned) — detect and finish the flip instead
-    // of appending a duplicate copy
-    val oldCells = tree.select(col("cc").cast("long")).collect().map(_.getLong(0)).toSet
-    val childCells = treeP.select(col("cc").cast("long")).collect()
-      .map(_.getLong(0)).filterNot(oldCells).sorted
-    // content-hash of an (id, cell) assignment: order-independent XOR of
-    // per-row xxhash64 — counts alone can collide (a corpus whose shape
-    // changed between crash and re-run can make a DIFFERENT cell hot
-    // with coincidentally equal mass, and completing the flip over it
-    // would commit a tree whose intervals disagree with the rows already
-    // stored in those child cells — silent index corruption)
-    def assignHash(df: DataFrame): (Long, Long) = {
-      val r = df.agg(coalesce(expr("bit_xor(xxhash64(cast(" + idCol +
-          " as string), cast(cell as long)))"), lit(0L)).as("h"),
-        count(lit(1)).as("n")).collect().head
-      (r.getLong(0), r.getLong(1))
-    }
-    val (orphanHash, orphan) = assignHash(
-      index.filter(col("cell").cast("long").isin(childCells: _*)))
-    val (relHash, relCount) = assignHash(rel)
-    if (orphan == 0L) {
-      val maint = maintenancePath(indexTable)
-      val epoch = committedEpochs(spark, maint).maxOption.getOrElse(-1L) + 1
-      appendEpoch(rel, maint, epoch)
-      println(s"split committed as maintenance epoch $epoch: $relCount rows " +
-        s"relabeled into cell(s) ${childCells.mkString(", ")}")
-    } else if (orphan == relCount && orphanHash == relHash) {
-      println(s"found the orphan split epoch ($orphan rows already relabeled, " +
-        "(id, cell) content hash matches the deterministic replay) " +
-        "— completing the quantizer flip only")
-    } else {
-      sys.error(s"index at $indexTable holds $orphan rows in unassigned " +
-        s"cell(s) ${childCells.mkString(", ")} but this split relabels " +
-        s"$relCount (content hashes $orphanHash vs $relHash) — the orphan " +
-        "epoch does not match a deterministic replay; inspect the epoch " +
-        "log before re-running")
-    }
-    writeTable(treeP, centroidsPath)
-    println(s"quantizer flipped at $centroidsPath: ${childCells.length} child " +
-      s"cell(s); re-sweep (sweep-binary-ivf) before probing — the old sweep's " +
-      "identity stamp now refuses")
-  }
-
-  /** Build and COMMIT the binary-IVF 2D sweep artifact the production
-    * probe consumes (`CorpusStreams.binaryIvfProbeWithSweep` /
-    * `SweepFamily.binaryIvf`) — the sweep-binary sibling for the
-    * cell-pruned family, and the re-sweep step of the retrain runbook:
-    * sample nQueries query vectors by deterministic hash rank, build
-    * exact cosine truth for them over the index, sweep the
-    * (nProbe, shortlist) grid against that truth, and commit the
-    * frontier stamped with the IDENTITY of the quantizer it was measured
-    * against (Similarity.quantizerIdentity over `centroidsPath`). The
-    * stamp is the stale-sweep guard: recall was measured under THESE
-    * cells, so probing a retrained index with this artifact must refuse
-    * — exactly as the LSH pick refuses a shingle-k mismatch. Accepts the
-    * epoch layout a binaryIvf sink accretes, a versioned table (the
-    * retrain/read-optimize output), or a raw directory. */
+  /** Build and COMMIT the binary-IVF 2D sweep artifact
+    * `SweepFamily.binaryIvf` picks from — the sweep-binary sibling for the
+    * cell-pruned family, and the re-sweep step after a retrain: sample
+    * nQueries query vectors by deterministic hash rank, build exact
+    * cosine truth for them over the index, sweep the (nProbe, shortlist)
+    * grid against that truth, and commit the frontier stamped with the
+    * IDENTITY of the quantizer it was measured against
+    * (Similarity.quantizerIdentity over `centroidsPath`): recall was
+    * measured under THESE cells, and the stamp tells a reader which. */
   def sweepBinaryIvf(spark: SparkSession, indexTable: String,
                      centroidsPath: String, outTable: String,
                      nQueries: Int = 5, k: Int = 10,
@@ -567,30 +321,28 @@ object EtlCli {
                      shortlists: Seq[Int] = Seq(25, 50, 100, 200),
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
-    val (live, cent, dims, queries) = binaryIvfSweepInput(spark, indexTable,
+    val (index, cent, dims, queries) = binaryIvfSweepInput(spark, indexTable,
       centroidsPath, SweepFamily.binaryIvf.command, nQueries, idCol, vecCol)
     val exact = graft.operators.Similarity.bruteForceTopK(
-        live.select(col(idCol), col(vecCol)), queries, idCol, vecCol, k)
+        index.select(col(idCol), col(vecCol)), queries, idCol, vecCol, k)
       .select(col("qid"), col("cid"))
     commitSweep(SweepFamily.binaryIvf, graft.operators.Similarity.binaryIvfSweep(
-        live.select(col(idCol), col("cell"), col("words")),
-        live.select(col(idCol), col(vecCol)),
+        index.select(col(idCol), col("cell"), col("words")),
+        index.select(col(idCol), col(vecCol)),
         queries, idCol, vecCol, dims, cent, nProbes, shortlists, k, exact),
       outTable, Seq(graft.operators.Similarity.quantizerIdentity(cent)))
   }
 
-  /** Build and COMMIT the FUSED-recall sweep the hybrid-RRF consumer
-    * deploys from (`CorpusStreams.hybridRrfWithFusedSweep`) — the
-    * measured r13 rule ("fusion consumers must sweep against a deeper
-    * floor than their arm needs standalone") turned into an artifact +
-    * picker instead of prose. For each (nProbe, shortlist) grid point,
-    * the committed frontier carries the recall of RRF(BM25 lex,
-    * probe-arm) against RRF(BM25 lex, exact-dense) at the same fusion
-    * knobs, measured over a hash-rank query sample of the live index.
-    * Stamped with the quantizer identity (a retrain moves every stored
-    * cell, invalidating the measurement) plus the fusion knobs
-    * (arm_k / k_rrf / top_k) so the consumer serves the exact fused
-    * shape that was measured. */
+  /** Build and COMMIT the FUSED-recall sweep `SweepFamily.fusedRrf`
+    * picks from — the measured r13 rule ("fusion consumers must sweep
+    * against a deeper floor than their arm needs standalone") turned
+    * into an artifact + picker instead of prose. For each (nProbe,
+    * shortlist) grid point, the committed frontier carries the recall of
+    * RRF(BM25 lex, probe-arm) against RRF(BM25 lex, exact-dense) at the
+    * same fusion knobs, measured over a hash-rank query sample of the
+    * index. Stamped with the quantizer identity (a retrain moves every
+    * stored cell, invalidating the measurement) plus the fusion knobs
+    * (arm_k / k_rrf / top_k): the fused shape that was measured. */
   def sweepFusedRrf(spark: SparkSession, indexTable: String,
                     centroidsPath: String, docsTable: String,
                     outTable: String, terms: Seq[String],
@@ -601,10 +353,10 @@ object EtlCli {
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): DataFrame = {
     require(terms.nonEmpty, "the lexical arm needs at least one term")
-    val (live, cent, dims, queries) = binaryIvfSweepInput(spark, indexTable,
+    val (index, cent, dims, queries) = binaryIvfSweepInput(spark, indexTable,
       centroidsPath, SweepFamily.fusedRrf.command, nQueries, idCol, vecCol)
     val exactArm = graft.operators.Similarity.bruteForceTopK(
-        live.select(col(idCol), col(vecCol)), queries, idCol, vecCol, armK)
+        index.select(col(idCol), col(vecCol)), queries, idCol, vecCol, armK)
       .select(col("qid"), col("cid"), col("rank"))
     val docs = readAnyTable(spark, docsTable)
     // the shared lexical arm: BM25 top-armK over the docs table (the
@@ -612,8 +364,8 @@ object EtlCli {
     val lex = graft.operators.TextAnalysis.bm25Ranks(docs, "doc_id", "text",
       terms, topK = armK)
     val sweep = graft.operators.Similarity.fusedRrfSweep(
-      live.select(col(idCol), col("cell"), col("words")),
-      live.select(col(idCol), col(vecCol)),
+      index.select(col(idCol), col("cell"), col("words")),
+      index.select(col(idCol), col(vecCol)),
       queries, idCol, vecCol, dims, cent, lex, exactArm,
       nProbes, shortlists, armK, kRrf, topK)
     // lexical-arm provenance: the frontier was measured under ONE fixed
@@ -638,9 +390,9 @@ object EtlCli {
   }
 
   /** Read a table in whatever layout it was maintained in: the epoch log
-    * a streaming sink accretes, a versioned flat table (retrain /
-    * read-optimize output), or a raw parquet dir — the acceptance
-    * contract of every artifact-consuming CLI arm. */
+    * the curation sink accretes, a versioned flat table (writeTable
+    * output), or a raw parquet dir — the acceptance contract of every
+    * artifact-consuming CLI arm. */
   def readAnyTable(spark: SparkSession, table: String): DataFrame =
     scala.util.Try(readEpochTable(spark, table))
       .orElse(scala.util.Try(readTable(spark, table)))
@@ -735,12 +487,11 @@ object EtlCli {
     println(s"graph-mined hard negatives (top-$k per node) committed at $outTable")
   }
 
-  /** THE identity-stamp guard, shared by every deploy-time binding check
-    * (sweep↔quantizer, sweep↔codebook, codebook↔quantizer): when `df`
-    * carries the stamp column, its distinct value must equal the live
-    * identity or the deployment refuses, naming both sides and the
-    * remedial. Unstamped (legacy) artifacts pass unchecked — stamps are
-    * additive. */
+  /** THE identity-stamp guard, shared by every binding check
+    * (graph↔corpus, codebook↔quantizer): when `df` carries the stamp
+    * column, its distinct value must equal the live identity or the
+    * command refuses, naming both sides and the remedial. Unstamped
+    * artifacts pass unchecked — stamps are additive. */
   def requireStamp(df: DataFrame, column: String, live: Long,
                    stampedDesc: String, liveDesc: String,
                    hint: String): Unit =
@@ -752,20 +503,17 @@ object EtlCli {
           s"identity $live — $hint")
     }
 
-  /** Build and COMMIT the residual IVF-PQ probe-depth sweep the deploy
-    * path consumes (`CorpusStreams.ivfPqProbeWithSweep` /
-    * `SweepFamily.ivf`) — the last ANN family's
+  /** Build and COMMIT the residual IVF-PQ probe-depth sweep
+    * `SweepFamily.ivf` picks from — the last ANN family's
     * sweep→floor→choice loop. The codes table carries no raw vectors
     * (that is the point of PQ), so `vectorsTable` supplies (idCol,
     * vecCol) for the hash-rank query sample and the exact-L2 truth —
     * the corpus table the embedding pipeline maintains, exactly as
     * retrain-ivfpq reads it. The committed frontier is STAMPED with BOTH
     * identities it was measured under — the coarse quantizer's and the
-    * codebook's — because residual-ADC recall depends on the pair: after
-    * a retrain-ivfpq the probe refuses the stale sweep naming the moved
-    * identity. The codebook must itself pair with the centroids
-    * (refused otherwise, same posture as the encode sinks). m infers
-    * from the stored code width. */
+    * codebook's — because residual-ADC recall depends on the pair. The
+    * codebook must itself pair with the centroids (refused otherwise).
+    * m infers from the stored code width. */
   def sweepIvfPq(spark: SparkSession, codesTable: String,
                  centroidsPath: String, codebookPath: String,
                  vectorsTable: String, outTable: String,
@@ -798,24 +546,20 @@ object EtlCli {
         graft.operators.Similarity.codebookIdentity(cb)))
   }
 
-  /** Build and COMMIT the binary shortlist-sweep artifact the picker
-    * consumes (SweepFamily.binary) — the sweep-lsh sibling for the binary
-    * ANN path: sample nQueries query vectors by deterministic hash rank
-    * (the coarseSeeds idiom — no RNG, re-sweeps are reproducible), build
-    * exact cosine truth for them over the index, sweep the shortlist
-    * depths against that truth, and commit the frontier at `outTable`
-    * via the versioned-table protocol. Accepts an epoch-partitioned
-    * index (binaryIndexSink's layout) or a flat table; dims infer from
-    * the stored vectors. This is the periodic re-sweep a recall monitor
-    * triggers when the corpus distribution drifts. */
+  /** Build and COMMIT the binary shortlist-sweep artifact
+    * `SweepFamily.binary` picks from — the sweep-lsh sibling for the
+    * binary ANN path: sample nQueries query vectors by deterministic hash
+    * rank (the coarseSeeds idiom — no RNG, re-sweeps are reproducible),
+    * build exact cosine truth for them over the index, sweep the
+    * shortlist depths against that truth, and commit the frontier at
+    * `outTable` via the versioned-table protocol. Reads the index in any
+    * layout ([[readAnyTable]]) and under any id/vector column names; dims
+    * infer from the stored vectors. */
   def sweepBinary(spark: SparkSession, indexTable: String, outTable: String,
                   nQueries: Int = 5, k: Int = 10,
                   shortlists: Seq[Int] = Seq(25, 50, 100, 200),
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val index = scala.util.Try(readEpochTable(spark, indexTable))
-      .getOrElse(readTable(spark, indexTable))
-    // binaryIndexSink accepts arbitrary id/vec column names, so the sweep
-    // must too
+    val index = readAnyTable(spark, indexTable)
     val dims = sweepInputWidth(index, s"index at $indexTable",
       SweepFamily.binary.command, "a binaryIndexBuild layout (id, words, vec)",
       Seq(idCol, vecCol), vecCol)
@@ -1140,17 +884,6 @@ object EtlCli {
     next
   }
 
-  /** The current committed data dir of a versioned table — for consumers
-    * that must read by PATH rather than DataFrame (the cell-partitioned
-    * index probes prune partitions off a static path filter). A path with
-    * no commit marker resolves to ITSELF, so raw directory layouts (run-
-    * scoped memo artifacts, legacy indexes) keep working unchanged. */
-  def resolveDataDir(spark: SparkSession, path: String): String =
-    committedVersion(fs(spark, path), path) match {
-      case Some(v) => s"$path/data_v$v"
-      case None    => path
-    }
-
   /** All committed versions at `path`, ascending. */
   def versions(spark: SparkSession, path: String): Seq[Long] = versions(fs(spark, path), path)
 
@@ -1237,14 +970,13 @@ object EtlCli {
   }
 
   /** Atomically replace the table at `path` with `df` (stage + commit +
-    * prune). Public: the streaming upsert sink and any bespoke loader use
-    * the same commit protocol as the ETL. `format` is parquet or orc —
+    * prune). Public: the streaming sink and any bespoke loader use the
+    * same commit protocol as the ETL. `format` is parquet or orc —
     * readers sniff it back, so the choice is per-version, not per-table.
     * `retain` keeps that many committed versions readable via readTableAt
     * (time travel); the default keeps only the new current. `partitionBy`
     * lays the staged data out hive-partitioned (e.g. the binary-IVF probe
-    * layout partitioned by cell) — readTable discovers the partitions;
-    * path-based probes resolve the dir via [[resolveDataDir]]. */
+    * layout partitioned by cell) — readTable discovers the partitions. */
   def writeTable(df: DataFrame, path: String, format: String = "parquet",
                  retain: Int = 1, partitionBy: Seq[String] = Nil): Unit = {
     require(graft.core.Store.Formats(format), s"unsupported table format $format")
@@ -1268,14 +1000,6 @@ object EtlCli {
   // content) and a crash mid-append leaves every other epoch readable.
   // This is the 100 TB ingest posture: the flat-table alternative
   // (union + rewrite per batch) is O(|corpus|) per increment.
-  //
-  // NAMESPACE RULE: `epoch=N` ids belong to the INGEST stream (N = the
-  // checkpoint batchId; idempotent replace is the replay contract).
-  // Maintenance jobs (hot-cell split relabels) must never write there —
-  // the stream's next batch would silently replace them — so they get
-  // their own epoch table under `<table>/maintenance` (invisible to this
-  // lister, untouched by compaction) and full-index readers go through
-  // readIndexWithMaintenance.
 
   /** Append `df` as ingest epoch `epoch` of the table at `path` — an
     * atomic commit scoped to that one epoch's directory. Re-appending an
@@ -1323,7 +1047,7 @@ object EtlCli {
 
   /** Has ingest epoch `epoch` of the table at `path` already committed —
     * either directly (its own version marker) or by being folded behind a
-    * compaction fencepost? This is the streaming sinks' replay guard for
+    * compaction fencepost? This is the curation sink's replay guard for
     * batches whose COMMITTED output is a strict subset of their input
     * (curation drops docs): a redelivered batch must detect "my fencepost
     * epoch exists" and no-op, because recomputing from `input minus
@@ -1350,26 +1074,9 @@ object EtlCli {
     schema.fold(reader)(reader.schema).load(dirs: _*)
   }
 
-  /** [[readEpochTable]] with each row tagged by the ingest epoch it
-    * arrived in (`__epoch`) — the latest-wins ordering a retrain's
-    * one-copy-per-id dedupe needs (an id RE-INGESTED with an updated
-    * vector must retrain on the newest copy, not the lexicographically
-    * largest). Rows folded behind a compaction fencepost E carry E:
-    * per-row origin is not recoverable post-fold, but every epoch still
-    * visible alongside the fold is > E by the compaction protocol, so
-    * cross-fold ordering is exact and only same-fold duplicates fall
-    * back to the caller's tiebreak. One load: the tag comes from each
-    * row's file path (the last `epoch=N` or `compact=E` segment above
-    * `data_vM`), so the read infers its schema once however many epochs
-    * are visible. */
-  private[graft] def readEpochTableTagged(spark: SparkSession, path: String): DataFrame =
-    readEpochTable(spark, path).withColumn("__epoch", regexp_extract(
-      col("_metadata.file_path"), ".*/(?:epoch|compact)=(-?\\d+)/data_v\\d+/", 1)
-      .cast(LongType))
-
   /** Fold every visible epoch (plus any prior compaction) of the table at
     * `path` into one size-targeted `compact=E` dir — the maintenance
-    * counterpart of the streaming sinks' O(batch) epoch appends. A year of
+    * counterpart of the curation sink's O(batch) epoch appends. A year of
     * 5-minute micro-batches is ~100k epoch dirs whose per-read listing and
     * tiny files eventually dominate scan cost; compaction folds them back
     * to ~table-size/targetFileBytes files without ever blocking the

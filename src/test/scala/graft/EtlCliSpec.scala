@@ -24,7 +24,7 @@ class EtlCliSpec extends SparkSpec {
     "\n{this is not valid json at all"  // F7: malformed line -> quarantine
 
   test("init -> ingest -> re-ingest is idempotent; quality and stats read back") {
-    val dir = Files.createTempDirectory("etlcli").toFile.getAbsolutePath
+    val dir = tempDir("etlcli").toFile.getAbsolutePath
     val wh = s"$dir/wh"
     val raw = s"$dir/raw.json"
     Files.writeString(java.nio.file.Paths.get(raw), rawJson)
@@ -61,7 +61,7 @@ class EtlCliSpec extends SparkSpec {
   test("learn-bpe -> export bpe: packs measured in learned-tokenizer tokens") {
     import org.apache.spark.sql.functions.{col, size => asize}
     import graft.plans.GraftFunctions.bpe_encode
-    val wh = Files.createTempDirectory("etlbpe").toFile.getAbsolutePath
+    val wh = tempDir("etlbpe").toFile.getAbsolutePath
     val docs = "/root/testdata/sf0.001/documents.parquet"
     val eval = s"$wh/eval.parquet"
     spark.read.parquet(docs).filter(col("doc_id") < 5).write.parquet(eval)
@@ -90,7 +90,7 @@ class EtlCliSpec extends SparkSpec {
 
   test("export: clean -> mixture -> pack -> shards end-to-end; re-run is byte-identical") {
     import org.apache.spark.sql.functions.col
-    val wh = Files.createTempDirectory("etlexport").toFile.getAbsolutePath
+    val wh = tempDir("etlexport").toFile.getAbsolutePath
     val docs = "/root/testdata/sf0.001/documents.parquet"
     // held-out eval slice: doc_id < 5 — any surviving doc sharing a 4-gram
     // with these must be decontaminated away (including themselves)
@@ -220,7 +220,7 @@ class EtlCliSpec extends SparkSpec {
   test("time travel: retained versions readable at their pin; vacuum prunes") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val wh = Files.createTempDirectory("etltt").toFile.getAbsolutePath
+    val wh = tempDir("etltt").toFile.getAbsolutePath
     val path = s"$wh/t"
     // three committed versions under retain=3 — all stay readable
     (1 to 3).foreach { v =>
@@ -251,7 +251,7 @@ class EtlCliSpec extends SparkSpec {
 
   test("export with epochs: deterministic upsampled copies, byte-identical re-run") {
     import org.apache.spark.sql.functions.{col, size => asize, split, countDistinct, count => acount, min => amin, max => amax}
-    val wh = Files.createTempDirectory("etlepochs").toFile.getAbsolutePath
+    val wh = tempDir("etlepochs").toFile.getAbsolutePath
     val docs = "/root/testdata/sf0.001/documents.parquet"
     val eval = s"$wh/eval.parquet"
     spark.read.parquet(docs).filter(col("doc_id") < 5).write.parquet(eval)
@@ -304,7 +304,7 @@ class EtlCliSpec extends SparkSpec {
 
   test("epoch-partitioned tables: append is scoped to one epoch, replay idempotent") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("etlepoch").toFile.getAbsolutePath
+    val wh = tempDir("etlepoch").toFile.getAbsolutePath
     val path = s"$wh/t"
     intercept[RuntimeException] { EtlCli.readEpochTable(spark, path) }
     EtlCli.appendEpoch(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, epoch = 0)
@@ -322,7 +322,7 @@ class EtlCliSpec extends SparkSpec {
 
   test("compactEpochs folds epochs behind an atomic fencepost; appends keep flowing; vacuum reclaims") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("etlepochcompact").toFile.getAbsolutePath
+    val wh = tempDir("etlepochcompact").toFile.getAbsolutePath
     val path = s"$wh/t"
     (0L to 3L).foreach(e =>
       EtlCli.appendEpoch(Seq((e, s"v$e")).toDF("k", "v"), path, epoch = e))
@@ -363,54 +363,9 @@ class EtlCliSpec extends SparkSpec {
     assert(contents() == before :+ (9L, "v9"))
   }
 
-  test("readEpochTableTagged: one load whatever the epoch count; tags equal the per-epoch union's") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.lit
-    val wh = Files.createTempDirectory("etlepochtagged").toFile.getAbsolutePath
-    def append(path: String, e: Long): Unit =
-      EtlCli.appendEpoch(Seq((e * 10, s"v$e"), (e * 10 + 1, s"w$e")).toDF("k", "v"), path, e)
-    // the jobs of building and collecting a tagged read, counted by a
-    // SparkListener with the listener bus drained on both sides
-    def jobsOfTaggedRead(path: String): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        jobs.set(0)
-        EtlCli.readEpochTableTagged(spark, path).collect()
-        org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
-    }
-    (0L until 3L).foreach(append(s"$wh/e3", _))
-    (0L until 6L).foreach(append(s"$wh/e6", _))
-    val (j3, j6) = (jobsOfTaggedRead(s"$wh/e3"), jobsOfTaggedRead(s"$wh/e6"))
-    assert(j3 == j6, s"a tagged read's jobs must not grow with the epochs: E=3 $j3, E=6 $j6")
-
-    // a fold behind a fencepost, later epochs and a maintenance subtable
-    val path = s"$wh/t"
-    (0L to 2L).foreach(append(path, _))
-    EtlCli.compactEpochs(spark, path)
-    (3L to 4L).foreach(append(path, _))
-    EtlCli.appendEpoch(Seq((99L, "m")).toDF("k", "v"), s"$path/maintenance", 0L)
-    def tagged(p: String, e: Long) =
-      EtlCli.readTable(spark, p).withColumn("__epoch", lit(e))
-    val perEpoch = (tagged(s"$path/compact=2", 2L) +: (3L to 4L).map(e =>
-      tagged(s"$path/epoch=$e", e))).reduce(_.unionByName(_))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("k", "v", "__epoch").as[(Long, String, Long)].collect().toSet
-    assert(rows(EtlCli.readEpochTableTagged(spark, path)) == rows(perEpoch))
-    assert(rows(EtlCli.readEpochTableTagged(spark, s"$path/maintenance")) ==
-      Set((99L, "m", 0L)))
-  }
-
   test("compact rewrites many small files into few, contents unchanged") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("etlcompact").toFile.getAbsolutePath
+    val wh = tempDir("etlcompact").toFile.getAbsolutePath
     val path = s"$wh/t"
     // simulate small-batch accretion: 64 files for a few thousand rows
     EtlCli.writeTable((1 to 5000).map(i => (i.toLong, s"v$i")).toDF("k", "v")
@@ -427,7 +382,7 @@ class EtlCliSpec extends SparkSpec {
 
   test("crash between stage and commit leaves the old table intact") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("etlcrash").toFile.getAbsolutePath
+    val wh = tempDir("etlcrash").toFile.getAbsolutePath
     val path = s"$wh/t"
     EtlCli.writeTable(Seq((1L, "old")).toDF("k", "v"), path)
 
@@ -446,9 +401,9 @@ class EtlCliSpec extends SparkSpec {
     assert(names.count(_.startsWith("_committed_v")) == 1)
   }
 
-  test("sweep-lsh CLI: commits the frontier the streaming sink's picker consumes") {
+  test("sweep-lsh CLI: commits the frontier SweepFamily.lsh picks from") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("sweep_cli").toString
+    val root = tempDir("sweep_cli").toString
     // a corpus with one planted near-dup pair inside the 1/1 sample
     val base = (1 to 40).map(i => s"w$i").mkString(" ")
     val docs = ((0L until 20L).map(i => (i, s"doc number $i " + ('a' + (i % 7)).toChar.toString * 3 + " " + base)) :+
@@ -462,7 +417,7 @@ class EtlCliSpec extends SparkSpec {
     assert(rows.forall(r => r._1 * r._2 == 8))
     assert(rows.forall(_._3 >= 1), s"planted pair must be in the truth: ${rows.toSeq}")
     assert(rows.head._4 == 1.0, s"band size 1 is recall-exact: ${rows.toSeq}")
-    // the committed frontier feeds the picker exactly as the sink reads it
+    // the committed frontier feeds the picker as committed
     val pick = graft.operators.SweepFamily.lsh.pick(
       EtlCli.readTable(spark, s"$root/sweep"), floor = 0.9)
     assert(pick.count() <= 1)
@@ -471,9 +426,9 @@ class EtlCliSpec extends SparkSpec {
   test("sweep-binary CLI: commits the shortlist frontier off a streamed-layout index") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("sweep_bin").toString
+    val root = tempDir("sweep_bin").toString
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    // epoch-partitioned layout, exactly what binaryIndexSink leaves behind
+    // an index appended in two epochs
     EtlCli.appendEpoch(graft.operators.Similarity.binaryIndexBuild(
       emb.filter(col("vec_id") < 300), "vec_id", "embedding", 64), s"$root/index", 0L)
     EtlCli.appendEpoch(graft.operators.Similarity.binaryIndexBuild(
@@ -490,22 +445,16 @@ class EtlCliSpec extends SparkSpec {
     EtlCli.run(spark, Seq("sweep-binary", s"$root/index", s"$root/sweep2", "3"))
     assert(EtlCli.readTable(spark, s"$root/sweep2").collect().toSet ==
       EtlCli.readTable(spark, s"$root/sweep").collect().toSet)
-    // the committed frontier feeds the picker exactly as deployments read it
+    // the committed frontier feeds the picker as committed
     assert(graft.operators.SweepFamily.binary.pick(
       EtlCli.readTable(spark, s"$root/sweep"), floor = 0.0).count() == 1)
   }
 
-  test("check-drift: quiet log prints all-clear; retrain-binary-ivf precheck errors are explicit") {
-    import spark.implicits._
+  test("retrain-binary-ivf precheck errors are explicit") {
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("drift_cli").toString
-    // quiet drift log: no alarm row -> the monitor must NOT throw
-    EtlCli.appendEpoch(
-      Seq((0L, false, 0.01)).toDF("epoch", "drift_alarm", "tvd"),
-      s"$root/drift", 0L)
-    EtlCli.run(spark, Seq("check-drift", s"$root/drift"))
-    // retrain prechecks: a misnamed column set and an empty index both
-    // die with actionable messages, never an opaque analysis error
+    val root = tempDir("retrain_precheck").toString
+    // a misnamed column set and an empty index both die with actionable
+    // messages, never an opaque analysis error
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     EtlCli.appendEpoch(graft.operators.Similarity.binaryIvfIndexBuild(
         emb, "vec_id", "embedding", 64,
@@ -513,22 +462,192 @@ class EtlCliSpec extends SparkSpec {
       s"$root/index", 0L)
     val exCols = intercept[RuntimeException] {
       EtlCli.retrainBinaryIvf(spark, s"$root/index", s"$root/c", s"$root/i",
-        s"$root/b", nCells = 8, dims = 64, idCol = "id", vecCol = "vec")
+        nCells = 8, dims = 64, idCol = "id", vecCol = "vec")
     }
     assert(exCols.getMessage.contains("lacks column(s) id, vec"), exCols.getMessage)
     EtlCli.appendEpoch(emb.limit(0).select(col("vec_id"), col("embedding")),
       s"$root/empty", 0L)
     val exEmpty = intercept[RuntimeException] {
       EtlCli.retrainBinaryIvf(spark, s"$root/empty", s"$root/c", s"$root/i",
-        s"$root/b", nCells = 8, dims = 64)
+        nCells = 8, dims = 64)
     }
     assert(exEmpty.getMessage.contains("empty"), exEmpty.getMessage)
+  }
+
+  /** The sf0.001 embeddings plus a copy shifted along the diagonal (ids
+    * offset by 200000): a corpus whose distribution moved away from a
+    * quantizer trained on the original rows alone. */
+  private def driftedCorpus() = {
+    import org.apache.spark.sql.functions._
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val shifted = emb.select((col("vec_id") + 200000).as("vec_id"),
+      transform(col("embedding"), x => x + lit(0.5f)).as("embedding"))
+    (emb, shifted, emb.unionByName(shifted))
+  }
+
+  test("retrain-binary-ivf -> sweep-binary-ivf CLI: the re-encode equals a from-scratch build and clears the drift alarm; each sweep stamps its quantizer") {
+    import graft.operators.{Similarity, SweepFamily}
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val root = tempDir("bivf_retrain")
+    def paths(n: String) = root.resolve(n).toString
+    val (emb, shifted, corpus) = driftedCorpus()
+    // day 0: a quantizer trained on the original rows; the batch-built
+    // index over the drifted corpus encodes against it
+    val cent0 = Similarity.coarseCentroids(emb, "vec_id", "embedding", nCells = 8)
+    EtlCli.writeTable(cent0, paths("cent"))
+    EtlCli.writeTable(Similarity.binaryIvfIndexBuild(corpus, "vec_id", "embedding",
+      dims = 64, EtlCli.readTable(spark, paths("cent"))), paths("index"),
+      partitionBy = Seq("cell"))
+    def qerrRatio(base: org.apache.spark.sql.DataFrame,
+                  cent: org.apache.spark.sql.DataFrame): Double =
+      Similarity.quantizerDriftScenarios(Seq(("", base, shifted)), "embedding",
+          cent, maxTvd = 0.1, maxQerrRatio = 1.25)
+        .select(col("qerr_ratio")).as[Double].head()
+    val before = qerrRatio(emb, EtlCli.readTable(spark, paths("cent")))
+    assert(before > 1.25, s"the shifted rows must read as drift at day 0: $before")
+
+    EtlCli.run(spark, Seq("retrain-binary-ivf", paths("index"), paths("cent2"),
+      paths("index2"), "8", "64"))
+    val cent2 = EtlCli.readTable(spark, paths("cent2"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("vec_id").cast("long"), col("cell").cast("long"), col("words"))
+      .as[(Long, Long, Seq[Long])].collect().toSeq.sortBy(_._1)
+    // the new index IS the from-scratch build under the new quantizer
+    assert(rows(EtlCli.readTable(spark, paths("index2"))) ==
+      rows(Similarity.binaryIvfIndexBuild(corpus, "vec_id", "embedding",
+        dims = 64, cent2)),
+      "retrained index diverges from the from-scratch build")
+    // the retrained quantizer COVERS the drifted mode: against the
+    // corpus it was trained on, the shifted rows' error reads normal
+    val after = qerrRatio(corpus, cent2)
+    assert(after < 1.25, s"retrain must clear the error alarm: ratio $after")
+
+    // each sweep is stamped with the quantizer its recall was measured under
+    def stamp(sweep: String): Seq[Long] = EtlCli.readTable(spark, sweep)
+      .select(col("quantizer_id").cast("long")).distinct().as[Long].collect().toSeq
+    EtlCli.sweepBinaryIvf(spark, paths("index"), paths("cent"), paths("sweep_old"),
+      nQueries = 3, k = 5, nProbes = Seq(1, 2, 4), shortlists = Seq(10, 25, 50))
+    EtlCli.run(spark, Seq("sweep-binary-ivf", paths("index2"), paths("cent2"),
+      paths("sweep_new"), "3"))
+    val (oldId, newId) = (Similarity.quantizerIdentity(cent0),
+      Similarity.quantizerIdentity(cent2))
+    assert(oldId != newId, "a retrain must move the quantizer identity")
+    assert(stamp(paths("sweep_old")) == Seq(oldId) &&
+      stamp(paths("sweep_new")) == Seq(newId))
+    val sweepNew = EtlCli.readTable(spark, paths("sweep_new"))
+    assert(sweepNew.count() == 16, "one row per (nProbe, shortlist) grid point")
+    assert(SweepFamily.binaryIvf.pick(sweepNew, floor = 0.0).count() == 1 &&
+      SweepFamily.binaryIvf.pick(sweepNew, floor = 1.01).count() == 0)
+  }
+
+  // the day-0 centroids and the drifted corpus written under `root`, then
+  // the invalidation-CASCADE retrain: centroids, codebook and codes move
+  // together into cent2/cb2/codes2
+  private def retrainIvfPq(root: java.nio.file.Path) = {
+    import graft.operators.Similarity
+    def paths(n: String) = root.resolve(n).toString
+    val (emb, shifted, corpus) = driftedCorpus()
+    val cent0 = Similarity.coarseCentroids(emb, "vec_id", "embedding", 8)
+      .transform(graft.core.Materialize.pin)
+    EtlCli.writeTable(cent0, paths("cent"))
+    EtlCli.writeTable(corpus, paths("vecs"))
+    EtlCli.run(spark, Seq("retrain-ivfpq", paths("vecs"), paths("cent2"),
+      paths("cb2"), paths("codes2"), "8", "8", "8", "1"))
+    (paths _, emb, shifted, corpus, cent0)
+  }
+
+  test("retrain-ivfpq CLI: the re-encode equals a from-scratch encode and clears the drift alarm") {
+    import graft.operators.Similarity
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val (paths, emb, shifted, corpus, cent0) = retrainIvfPq(tempDir("pq_retrain"))
+    // day-0 codebook trained on the original rows alone
+    val (cb0, _) = Similarity.ivfPqResidualBuild(emb, "vec_id", "embedding",
+      nCells = 8, m = 8, ksub = 8, iters = 1)
+    def report(base: org.apache.spark.sql.DataFrame, cent: org.apache.spark.sql.DataFrame,
+               cb: org.apache.spark.sql.DataFrame) =
+      Similarity.codebookDriftScenarios(Seq(("", base, shifted)), "embedding",
+          cent, cb, m = 8, maxTvd = 0.1, maxQerrRatio = 1.25, maxResidRatio = 1.25)
+        .select(col("drift_alarm"), col("qerr_ratio"), col("resid_ratio"))
+        .as[(Boolean, Double, Double)].head()
+    val before = report(emb, cent0, cb0)
+    assert(before._1 && before._3 > 1.25,
+      s"the shifted rows must alarm the day-0 pair on the residual axis: $before")
+
+    val (cent2, cb2) = (EtlCli.readTable(spark, paths("cent2")),
+      EtlCli.readTable(spark, paths("cb2")))
+    def codesOf(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("cid").cast("long"), col("cell").cast("long"),
+        col("codes").cast("array<long>"))
+      .as[(Long, Long, Seq[Long])].collect().toSeq.sortBy(_._1)
+    assert(codesOf(EtlCli.readTable(spark, paths("codes2"))) ==
+      codesOf(Similarity.ivfPqResidualEncode(corpus, "vec_id", "embedding",
+        cent2, cb2, m = 8)),
+      "retrained codes diverge from a from-scratch encode")
+    val after = report(corpus, cent2, cb2)
+    assert(after._2 < 1.25 && after._3 < 1.25, s"retrain must clear both error axes: $after")
+  }
+
+  test("retrain-ivfpq -> sweep-ivfpq CLI: the sweep stamps both identities and picks the cheapest depth at a zero floor; a mismatched pair refuses") {
+    import graft.operators.{Similarity, SweepFamily}
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val (paths, _, _, _, _) = retrainIvfPq(tempDir("pq_resweep"))
+    val (cent2, cb2) = (EtlCli.readTable(spark, paths("cent2")),
+      EtlCli.readTable(spark, paths("cb2")))
+    // the sweep over the retrain's output stamps BOTH identities it was
+    // measured under; a zero floor picks the cheapest depth
+    EtlCli.run(spark, Seq("sweep-ivfpq", paths("codes2"), paths("cent2"),
+      paths("cb2"), paths("vecs"), paths("sweep"), "3"))
+    val sweep = EtlCli.readTable(spark, paths("sweep"))
+    assert(sweep.select(col("quantizer_id").cast("long"), col("codebook_id").cast("long"))
+      .distinct().as[(Long, Long)].collect().toSeq ==
+      Seq((Similarity.quantizerIdentity(cent2), Similarity.codebookIdentity(cb2))))
+    assert(SweepFamily.ivf.pick(sweep, floor = 0.0).select(col("n_probe").cast("int"))
+      .as[Int].collect().toSeq == Seq(1), "a zero floor must pick the cheapest depth")
+    // a half-switched pair (new codebook, old centroids) refuses
+    val exPair = intercept[IllegalArgumentException] {
+      EtlCli.sweepIvfPq(spark, paths("codes2"), paths("cent"), paths("cb2"),
+        paths("vecs"), paths("sweep_bad"), nQueries = 3)
+    }
+    assert(exPair.getMessage.contains("identity"), exPair.getMessage)
+  }
+
+  test("sweep-fused-rrf CLI: the frontier carries the quantizer stamp and the fusion knobs; its pick never settles for a loser") {
+    import graft.operators.{Similarity, SweepFamily}
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val root = tempDir("fused_cli").toString
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val cent = Similarity.coarseCentroids(emb, "vec_id", "embedding", 16)
+    EtlCli.writeTable(cent, s"$root/cent")
+    EtlCli.writeTable(Similarity.binaryIvfIndexBuild(emb, "vec_id",
+      "embedding", 64, cent), s"$root/idx", partitionBy = Seq("cell"))
+    EtlCli.writeTable(spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
+      s"$root/docs")
+    EtlCli.run(spark, Seq("sweep-fused-rrf", s"$root/idx", s"$root/cent",
+      s"$root/docs", s"$root/sweep", "vector,spark,filter", "3"))
+    val sweep = EtlCli.readTable(spark, s"$root/sweep")
+    assert(sweep.select(col("quantizer_id").cast("long")).distinct().as[Long]
+      .collect().toSeq == Seq(Similarity.quantizerIdentity(cent)))
+    assert(sweep.select(col("arm_k"), col("k_rrf"), col("top_k"), col("lex_terms"))
+      .distinct().as[(Int, Int, Int, String)].collect().toSeq ==
+      Seq((20, 60, 10, "vector,spark,filter")))
+    assert(sweep.count() == 16, "one row per (nProbe, shortlist) grid point")
+    val recalls = sweep.select(col("fused_recall")).as[Double].collect()
+    assert(recalls.forall(r => r >= 0.0 && r <= 1.0), recalls.toSeq.toString)
+    assert(SweepFamily.fusedRrf.pick(sweep, 0.0).count() == 1)
+    // a floor nothing clears picks nothing: re-sweep, never the best loser
+    assert(SweepFamily.fusedRrf.pick(sweep, recalls.max + 0.01).count() == 0)
   }
 
   test("diffVersions reports exactly the churn: added, removed, changed; unchanged dropped") {
     import graft.tools.EtlCli
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("diff_tbl").toString + "/t"
+    val path = tempDir("diff_tbl").toString + "/t"
     EtlCli.writeTable(Seq(
         (1L, "keep", 10L), (2L, "mutate", 20L), (3L, "drop", 30L),
         (4L, Option.empty[String].orNull, 40L)            // null payload column
@@ -549,7 +668,7 @@ class EtlCliSpec extends SparkSpec {
   test("knn-graph CLI: commits the NN-descent graph; equals the operator; column precheck is explicit") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("knn_cli")
+    val root = tempDir("knn_cli")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     graft.tools.EtlCli.writeTable(emb, s"$root/vecs")
@@ -597,41 +716,10 @@ class EtlCliSpec extends SparkSpec {
     assert(ex.getMessage.contains("lack column"), ex.getMessage)
   }
 
-  test("retrain-binary-ivf trains on the latest INGEST copy: a maintenance relabel cannot outrank a later re-ingest") {
-    import spark.implicits._
-    // Maintenance epochs number independently of ingest epochs (both
-    // start at 0), and a hot-cell split relabel copies (id, vec)
-    // verbatim with only `cell` moved. Folding both namespaces into one
-    // latest-epoch-wins ordering would let the relabeled STALE vector
-    // (maintenance epoch 1, vec chosen lexicographically ABOVE the fresh
-    // one) outrank a genuine re-ingest at ingest epoch 1. The retrain
-    // must read ingest epochs only.
-    import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("retrain_ns")
-    val idx = s"$root/index"
-    val vecA = Seq(0.9, 0.9, 0.9, 0.9) // original (and relabeled) vector
-    val vecB = Seq(0.1, 0.1, 0.1, 0.1) // the re-ingested truth (sorts BELOW vecA)
-    graft.tools.EtlCli.appendEpoch(
-      Seq((1L, vecA, 0L)).toDF("vec_id", "embedding", "cell"), idx, 0)
-    // split relabel at maintenance epoch 1: same (id, vec), new cell
-    graft.tools.EtlCli.appendEpoch(
-      Seq((1L, vecA, 7L)).toDF("vec_id", "embedding", "cell"),
-      s"$idx/maintenance", 1)
-    // genuine re-ingest at ingest epoch 1: the vector MOVED
-    graft.tools.EtlCli.appendEpoch(
-      Seq((1L, vecB, 0L)).toDF("vec_id", "embedding", "cell"), idx, 1)
-    graft.tools.EtlCli.retrainBinaryIvf(spark, idx, s"$root/cent",
-      s"$root/out", s"$root/base", nCells = 1, dims = 4)
-    val trained = graft.tools.EtlCli.readTable(spark, s"$root/base")
-      .select(col("embedding")).as[Seq[Double]].collect()
-    assert(trained.toSeq == Seq(vecB),
-      s"retrain corpus must hold the re-ingested vector, got $trained")
-  }
-
   test("hard-negatives CLI: graph-mined negatives equal the operator; a re-embedded corpus refuses the stale graph") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("hneg_cli")
+    val root = tempDir("hneg_cli")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"), col("label"))
     graft.tools.EtlCli.writeTable(emb, s"$root/vecs")
@@ -666,7 +754,7 @@ class EtlCliSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.operators.Similarity
-    val root = java.nio.file.Files.createTempDirectory("graph_recall")
+    val root = tempDir("graph_recall")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     EtlCli.writeTable(emb, s"$root/vecs")
@@ -710,33 +798,12 @@ class EtlCliSpec extends SparkSpec {
     assert(ex.getMessage.contains("rebuild"), ex.getMessage)
   }
 
-  test("split-hot-cells refuses a versioned (non-epoch) index with the actual remedial, not a misleading error") {
-    import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("split_refuse")
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val cent = graft.operators.Similarity.coarseCentroids(
-      emb, "vec_id", "embedding", 16)
-    graft.tools.EtlCli.writeTable(cent, s"$root/cent")
-    // a retrain / read-optimize OUTPUT: versioned flat layout, no epoch=
-    graft.tools.EtlCli.writeTable(
-      graft.operators.Similarity.binaryIvfIndexBuild(emb, "vec_id",
-        "embedding", 64, cent),
-      s"$root/idx", partitionBy = Seq("cell"))
-    val ex = intercept[RuntimeException] {
-      graft.tools.EtlCli.splitHotCells(spark, s"$root/idx", s"$root/cent",
-        maxShare = 0.5)
-    }
-    assert(ex.getMessage.contains("epoch log") &&
-      !ex.getMessage.contains("nothing ingested"), ex.getMessage)
-  }
-
   test("an unknown command's usage error names every dispatched command") {
     val src = Files.readString(java.nio.file.Paths.get("src/main/scala/graft/tools/EtlCli.scala"))
     val dispatched = "case Seq\\(\"([a-z-]+)\"".r.findAllMatchIn(src).map(_.group(1)).toSet
     val ex = intercept[RuntimeException] { EtlCli.run(spark, Seq("no-such-command")) }
     val named = ex.getMessage.stripPrefix("usage: ").takeWhile(_ != ' ').split('|').toSet
-    assert(dispatched.size >= 24 && dispatched.diff(named).isEmpty,
+    assert(dispatched.size >= 20 && dispatched.diff(named).isEmpty,
       s"usage omits: ${dispatched.diff(named).toSeq.sorted.mkString(", ")}")
   }
 }

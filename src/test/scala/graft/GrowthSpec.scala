@@ -531,7 +531,7 @@ class GrowthSpec extends SparkSpec {
     }
     def recsAt(cur: DataFrame, scale: Int): Long = {
       val recs = shuffledDuring {
-        Similarity.codebookDriftStats(baseEmb, cur, "embedding", cent, cbP,
+        Similarity.codebookDriftScenarios(Seq(("", baseEmb, cur)), "embedding", cent, cbP,
             m = 8, maxTvd = 0.1, maxQerrRatio = 1.25, maxResidRatio = 1.25)
           .collect()
         ()
@@ -596,13 +596,13 @@ class GrowthSpec extends SparkSpec {
     // ...and the monitor names it BEFORE the probe feels it: the drift
     // report against the day-0 baseline reads the concentration directly
     import spark.implicits._
-    val (shareBase, shareHot, alarm) = Similarity.quantizerDriftStats(
-        baseEmb, concentrated, "embedding", cent,
+    val (shareBase, shareHot, alarm) = Similarity.quantizerDriftScenarios(
+        Seq(("", baseEmb, concentrated)), "embedding", cent,
         maxTvd = 0.1, maxQerrRatio = 1.25)
       .select(col("max_cell_share"), col("max_cell_share"), col("drift_alarm"))
       .as[(Double, Double, Boolean)].head() match {
         case (_, s, a) =>
-          val b = Similarity.quantizerDriftStats(baseEmb, baseEmb, "embedding",
+          val b = Similarity.quantizerDriftScenarios(Seq(("", baseEmb, baseEmb)), "embedding",
               cent, maxTvd = 0.1, maxQerrRatio = 1.25)
             .select(col("max_cell_share")).as[Double].head()
           (b, s, a)
@@ -672,7 +672,7 @@ class GrowthSpec extends SparkSpec {
     // the monitor's skew axis reads the post-split occupancy: the max
     // leaf share drops from the parent's ~0.8 to the largest child
     def share(quant: DataFrame): Double =
-      Similarity.quantizerDriftStats(concentrated, concentrated, "embedding",
+      Similarity.quantizerDriftScenarios(Seq(("", concentrated, concentrated)), "embedding",
           quant, maxTvd = 0.1, maxQerrRatio = 1.25)
         .select(col("max_cell_share")).as[Double].head()
     val (shareBefore, shareAfter) = (share(cent), share(tree))

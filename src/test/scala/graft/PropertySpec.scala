@@ -314,25 +314,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("bottom-k merge law: any random partition of the input merges to the whole-input sample") {
-    import graft.operators.Sketches
-    val rows = sample(Gen.listOfN(300,
-      Gen.zip(Gen.oneOf("a", "b", "c"), Gen.chooseNum(0L, 500L))))
-      .zipWithIndex.map { case ((g, v), i) => (g, i.toLong, v) }
-    val splits = sample(Gen.listOfN(300, Gen.chooseNum(0, 2)))
-    val df = rows.toDF("grp", "id", "v")
-    val whole = Sketches.bottomKSample(df, "id", "v", Seq("grp"), k = 7)
-      .select("grp", "id", "v").as[(String, Long, Long)].collect().toSet
-    // three arbitrary parts (ScalaCheck-chosen, NOT hash-aligned)
-    val bySplit = rows.zip(splits).groupBy(_._2).values.map(_.map(_._1))
-    val partials = bySplit.map(part =>
-      Sketches.bottomKSample(part.toDF("grp", "id", "v"), "id", "v", Seq("grp"), 7))
-      .reduce(_ unionByName _)
-    val merged = Sketches.mergeBottomK(partials, "id", Seq("grp"), 7)
-      .select("grp", "id", "v").as[(String, Long, Long)].collect().toSet
-    assert(merged == whole)
-  }
-
   test("sample-quantile law: k >= group size makes every quantile the exact order statistic") {
     import graft.operators.Sketches
     val rows = sample(Gen.listOfN(120,

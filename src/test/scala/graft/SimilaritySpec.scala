@@ -610,13 +610,13 @@ class SimilaritySpec extends SparkSpec {
     assert(pick == ((2, 10)), s"picker must take the cheapest grid point: $pick")
   }
 
-  test("quantizerDriftStats: identical frames are driftless; planted shift alarms; degenerate baseline safe") {
+  test("quantizerDriftScenarios: identical frames are driftless; planted shift alarms; degenerate baseline safe") {
     val dir = "/root/testdata/sf0.001"
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val cent = Similarity.coarseCentroids(emb, "vec_id", "embedding", nCells = 8)
     def stats(base: org.apache.spark.sql.DataFrame,
               cur: org.apache.spark.sql.DataFrame) =
-      Similarity.quantizerDriftStats(base, cur, "embedding", cent,
+      Similarity.quantizerDriftScenarios(Seq(("", base, cur)), "embedding", cent,
           maxTvd = 0.1, maxQerrRatio = 1.25)
         .select(col("n_base"), col("n_cur"), col("qerr_ratio"), col("tvd"),
           col("noise_floor"), col("drift_alarm"))
@@ -648,11 +648,11 @@ class SimilaritySpec extends SparkSpec {
     // EMPTY frame (streaming delivers empty batches): under ANSI every
     // division by the zero count would THROW — the metrics must read
     // null, the counts must stay visible, and the alarm must read false
-    // (an unguarded empty batch would crash the drift sink or page the
-    // monitor and fail check-drift spuriously)
+    // (an unguarded empty batch would crash the report or page the
+    // monitor spuriously)
     def optStats(base: org.apache.spark.sql.DataFrame,
                  cur: org.apache.spark.sql.DataFrame) =
-      Similarity.quantizerDriftStats(base, cur, "embedding", cent,
+      Similarity.quantizerDriftScenarios(Seq(("", base, cur)), "embedding", cent,
           maxTvd = 0.1, maxQerrRatio = 1.25)
         .select(col("n_base"), col("n_cur"), col("qerr_ratio"), col("tvd"),
           col("noise_floor"), col("drift_alarm"))
@@ -671,7 +671,7 @@ class SimilaritySpec extends SparkSpec {
     // empty frame reads null (no concentration to report)
     def share(base: org.apache.spark.sql.DataFrame,
               cur: org.apache.spark.sql.DataFrame) =
-      Similarity.quantizerDriftStats(base, cur, "embedding", cent,
+      Similarity.quantizerDriftScenarios(Seq(("", base, cur)), "embedding", cent,
           maxTvd = 0.1, maxQerrRatio = 1.25)
         .select(col("max_cell_share")).as[Option[Double]].head()
     val oneCellId = emb.select(col("vec_id")).orderBy("vec_id").limit(1)
@@ -685,7 +685,7 @@ class SimilaritySpec extends SparkSpec {
       "empty frame must report a null hot-cell share")
   }
 
-  test("codebookDriftStats: residual-ADC axis quiet on self, alarmed by residual scale-up, empty-safe") {
+  test("codebookDriftScenarios: residual-ADC axis quiet on self, alarmed by residual scale-up, empty-safe") {
     val dir = "/root/testdata/sf0.001"
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val cent = Similarity.coarseCentroids(emb, "vec_id", "embedding", nCells = 8)
@@ -694,7 +694,7 @@ class SimilaritySpec extends SparkSpec {
       nCells = 8, m = 8, ksub = 8, iters = 1)
     def stats(base: org.apache.spark.sql.DataFrame,
               cur: org.apache.spark.sql.DataFrame) =
-      Similarity.codebookDriftStats(base, cur, "embedding", cent, cb, m = 8,
+      Similarity.codebookDriftScenarios(Seq(("", base, cur)), "embedding", cent, cb, m = 8,
           maxTvd = 0.1, maxQerrRatio = 1.25, maxResidRatio = 1.25)
         .select(col("n_cur"), col("qerr_ratio"), col("resid_base"),
           col("resid_cur"), col("resid_ratio"), col("drift_alarm"))
@@ -896,14 +896,13 @@ class SimilaritySpec extends SparkSpec {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val root = java.nio.file.Files.createTempDirectory("rrf_ann")
-    // the production loop: committed cell-partitioned index + a REAL
-    // sweep (recall measured on the fixture, quantizer-stamped), then
-    // the swept probe serves retrieval's dense arm
+    // the production loop: a cell-partitioned index + a REAL sweep
+    // (recall measured on the fixture, quantizer-stamped), then the
+    // probe at the pick serves retrieval's dense arm
     val cent = Similarity.coarseCentroids(emb, "vec_id", "embedding", 16)
     graft.tools.EtlCli.writeTable(cent, s"$root/cent")
-    graft.tools.EtlCli.writeTable(
-      Similarity.binaryIvfIndexBuild(emb, "vec_id", "embedding", 64, cent),
-      s"$root/idx", partitionBy = Seq("cell"))
+    Similarity.binaryIvfIndexBuild(emb, "vec_id", "embedding", 64, cent)
+      .write.partitionBy("cell").parquet(s"$root/idx")
     graft.tools.EtlCli.sweepBinaryIvf(spark, s"$root/idx", s"$root/cent",
       s"$root/sweep", nQueries = 3, k = 20)
     val queries = emb.filter(col("vec_id") === 0)
@@ -912,11 +911,15 @@ class SimilaritySpec extends SparkSpec {
       .withColumn("rank", row_number().over(
         Window.partitionBy(lit(0)).orderBy(desc("score"), col("doc_id"))))
       .select(col("doc_id"), col("rank"))
-    def denseAnn(minRecall: Double) =
-      graft.streaming.CorpusStreams.binaryIvfProbeWithSweep(
-          spark, s"$root/idx", s"$root/cent", s"$root/sweep", queries,
-          "vec_id", "embedding", dims = 64, minRecall = minRecall, k = 20)
+    def denseAnn(minRecall: Double) = {
+      val (nProbe, shortlist) = graft.operators.SweepFamily.binaryIvf
+        .pick(graft.tools.EtlCli.readTable(spark, s"$root/sweep"), minRecall)
+        .select(col("n_probe").cast("int"), col("shortlist").cast("int"))
+        .as[(Int, Int)].head()
+      Similarity.binaryIvfProbeIndex(spark, s"$root/idx", queries, "vec_id",
+          "embedding", dims = 64, cent, nProbe, shortlist, k = 20)
         .select(col("cid").as("doc_id"), col("rank"))
+    }
     val denseExact = Similarity.bruteForceTopK(emb, queries, "vec_id",
         "embedding", k = 20)
       .select(col("cid").as("doc_id"), col("rank"))

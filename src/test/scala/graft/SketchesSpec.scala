@@ -58,46 +58,6 @@ class SketchesSpec extends SparkSpec {
       s"missed true heavy hitters: ${truth -- hh.map(_._1).toSet}")
   }
 
-  test("bottom-k sample merges: bottom-k of a union == merge of per-part bottom-k's") {
-    import graft.operators.Sketches
-    val rows = (1L to 200L).map(i => (s"g${i % 3}", i, i * 7 % 101))
-    val df = rows.toDF("grp", "id", "v")
-    val whole = Sketches.bottomKSample(df, "id", "v", Seq("grp"), k = 16)
-      .select("grp", "id").as[(String, Long)].collect().toSet
-    // arbitrary split (NOT hash-aligned) — the rank is a row property
-    val partA = Sketches.bottomKSample(df.filter($"id" % 2 === 0), "id", "v", Seq("grp"), 16)
-    val partB = Sketches.bottomKSample(df.filter($"id" % 2 =!= 0), "id", "v", Seq("grp"), 16)
-    val merged = Sketches.mergeBottomK(partA.unionByName(partB), "id", Seq("grp"), 16)
-      .select("grp", "id").as[(String, Long)].collect().toSet
-    assert(merged == whole)
-    // every group holds exactly k rows (groups here are larger than k)
-    val perGroup = whole.groupBy(_._1).view.mapValues(_.size)
-    assert(perGroup.values.forall(_ == 16), s"per-group sizes: ${perGroup.toMap}")
-  }
-
-  test("mergeBottomK re-stamps the EFFECTIVE k so a truncating merge can't re-enter larger") {
-    import graft.operators.Sketches
-    val df = (1L to 100L).map(i => ("g", i, i)).toDF("grp", "id", "v")
-    val partial = Sketches.bottomKSample(df, "id", "v", Seq("grp"), k = 8)
-    // a merge at k=3 discards ranks 4..8 — its output must carry k=3,
-    // not the build k=8 the rows were born with
-    val truncated = Sketches.mergeBottomK(partial, "id", Seq("grp"), 3)
-    assert(truncated.select("__kmv_k").as[Int].collect().forall(_ == 3),
-      "truncating merge must downgrade the stamp to the requested k")
-    // so unioning with a fresh k=8 partial and re-merging at 8 now FAILS
-    // loudly instead of silently under-representing the truncated part
-    val fresh = Sketches.bottomKSample(
-      (200L to 300L).map(i => ("g", i, i)).toDF("grp", "id", "v"),
-      "id", "v", Seq("grp"), k = 8)
-    val e = intercept[IllegalArgumentException] {
-      Sketches.mergeBottomK(truncated.unionByName(fresh), "id", Seq("grp"), 8).collect()
-    }
-    assert(e.getMessage.contains("build k=3"), e.getMessage)
-    // while a downward re-merge of the truncated output stays legal
-    assert(Sketches.mergeBottomK(truncated.unionByName(fresh), "id", Seq("grp"), 3)
-      .count() == 3)
-  }
-
   test("sample quantiles are EXACT order statistics when the group fits in k") {
     import graft.operators.Sketches
     // 11 values, k = 32 > group size: p50 = ceil(0.5*11) = 6th smallest,

@@ -207,10 +207,6 @@ class TextAnalysisSpec extends SparkSpec {
     val prefOne = TextAnalysis.dsirPreference(raw, target, "doc_id", "text")
     assert(prefFrom.exceptAll(prefOne).isEmpty && prefOne.exceptAll(prefFrom).isEmpty,
       "DSIR preference from persisted model must equal the one-shot build")
-    val rsFrom = TextAnalysis.dsirResampleFromModel(raw, dm, "doc_id", "text")
-    val rsOne = TextAnalysis.dsirResample(raw, target, "doc_id", "text")
-    assert(rsFrom.exceptAll(rsOne).isEmpty && rsOne.exceptAll(rsFrom).isEmpty,
-      "DSIR resample from persisted model must equal the one-shot build")
   }
 
   test("bm25: tf saturation, rare-term idf dominance, non-matching docs absent") {
